@@ -2,7 +2,7 @@ package graft.cdc
 
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** SQL-query-based transformer hook.
   *
@@ -36,11 +36,5 @@ object Transformer {
     // micro-batch) must not leak one UUID-named view per attempt.
     try df.sparkSession.sql(sql.replace(SrcPlaceholder, view))
     finally df.sparkSession.catalog.dropTempView(view)
-  }
-
-  /** Convenience: run SQL over a set of named tables (registered as views). */
-  def sqlOver(spark: SparkSession, tables: Map[String, DataFrame], sql: String): DataFrame = {
-    tables.foreach { case (name, df) => df.createOrReplaceTempView(name) }
-    spark.sql(sql)
   }
 }

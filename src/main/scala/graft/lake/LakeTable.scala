@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{Filter => SFilter}
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -33,8 +33,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * therefore proportional to the touched key range, not the table size — at
   * 100 TB you raise `numBuckets` (thousands) so each bucket is one
   * task-sized file group, and a small CDC batch rewrites only a few of them.
-  * The merge itself is a hash aggregation (`max_by` over `(_ts, _seq)`),
-  * which map-side combines — no global sort, one shuffle on `_key`.
+  * The merge itself is a hash aggregation (`max_by` over `(_ts, _seq)`) —
+  * no global sort. It runs on the write's bucket layout, so a commit
+  * shuffles its rows once: into the tasks that write each bucket's files.
   *
   * == Concurrency / idempotency ==
   * Commits are atomic: the manifest is written to a temp file and published
@@ -920,18 +921,28 @@ final class LakeTable(
 
 
 
-  /** Bucket id for a key column — must match the write path exactly. */
-  def bucketOf(key: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    pmod(xxhash64(key), lit(numBuckets)).cast("int")
+  /** Bucket id for a key column — [[LakeTable.bucketOf]] at this table's width. */
+  def bucketOf(key: Column): Column = LakeTable.bucketOf(key, numBuckets)
 
   // ---- write path ---------------------------------------------------------
 
-  // The bucket-aware-agg handshake between writeCommit and the LWW merge
-  // callbacks (r22, see bucketGrouped): (partitions, salt-by-key) offered
-  // per commit attempt, acknowledged when a merge consumed it. Only ever
-  // touched inside the synchronized writeCommit, never concurrently.
-  private var offeredBucketLayout: Option[(Int, Boolean)] = None
-  private var bucketLayoutApplied: Boolean = false
+  /** A commit write's bucket layout, which both the LWW aggregation and
+    * the write repartition on: `expr` pins a row to the task that
+    * HashPartitioning(bucket) gives its bucket's group among the affected
+    * buckets, plus its key salt in [0, filesPerBucket). A bucket's rows so
+    * reach at most `filesPerBucket` tasks (files), one per salt.
+    */
+  private final class BucketLayout(val partitions: Int, val expr: Column) {
+    def apply(df: DataFrame): DataFrame = df.repartition(partitions, expr)
+  }
+
+  private def bucketLayout(affected: Int): BucketLayout = {
+    val groups = affected.max(1)
+    val task = pmod(hash(bucketOf(col(KeyCol))), lit(groups)) * filesPerBucket +
+      pmod(hash(col(KeyCol)), lit(filesPerBucket))
+    val codes = LakeTable.hashPartitionCodes(groups * filesPerBucket)
+    new BucketLayout(codes.length, element_at(typedLit(codes), task + 1))
+  }
 
   /** Merge `updates` (must contain `_key`, `_ts`) into the table:
     * last-write-wins per `_key` on `(_ts, arrival)` — an incoming row
@@ -968,38 +979,17 @@ final class LakeTable(
     * Spark prohibits hash expressions over MapType — payload columns
     * containing a map anywhere in their type go through to_json first
     * (same bytes => same hash, so the order stays deterministic).
+    * The aggregate runs on the write `layout` (its expression, a pure
+    * function of `_key`, joins the grouping keys) and outputs `_key` as
+    * the grouping attribute, so Spark sees the merged rows laid out and
+    * drops the write's own repartition — one exchange per commit.
     */
-  private def lwwMerge(old: DataFrame, upd: DataFrame): DataFrame =
-    if (mergeMode == PartialMode) partialMerge(old, upd)
-    else overwriteMerge(old, upd)
+  private def lwwMerge(old: DataFrame, upd: DataFrame, layout: BucketLayout): DataFrame =
+    if (mergeMode == PartialMode) partialMerge(old, upd, layout)
+    else overwriteMerge(old, upd, layout)
 
-  /** Bucket-aware grouping for the LWW aggregations (r22, guide §2.4):
-    * when [[writeCommit]] offers the commit's target write layout, the
-    * union is repartitioned on `bucketOf(_key)` — the exact partitioning
-    * the write needs — BEFORE the aggregation, and the bucket expression
-    * joins the grouping keys (semantics-free: it is a pure function of
-    * `_key`). HashPartitioning(bucket[, _key]) satisfies
-    * ClusteredDistribution(bucket, _key), so the agg plans NO exchange of
-    * its own and the commit write drops from 2 exchanges (hash(_key) agg
-    * + bucket repartition of the merged rows) to 1 — shuffling the union
-    * once instead of roughly twice. Callers that don't aggregate
-    * (bulkInsert's union, delete's anti-join, compact) ignore the offer
-    * and keep the classic post-merge repartition.
-    */
-  private def bucketGrouped(
-      unioned: DataFrame): org.apache.spark.sql.RelationalGroupedDataset =
-    offeredBucketLayout match {
-      case Some((n, saltByKey)) =>
-        bucketLayoutApplied = true
-        val b = bucketOf(col(KeyCol))
-        val parted =
-          if (saltByKey) unioned.repartition(n, b, col(KeyCol))
-          else unioned.repartition(n, b)
-        parted.groupBy(b, col(KeyCol))
-      case None => unioned.groupBy(col(KeyCol))
-    }
-
-  private def overwriteMerge(old: DataFrame, upd: DataFrame): DataFrame = {
+  private def overwriteMerge(
+      old: DataFrame, upd: DataFrame, layout: BucketLayout): DataFrame = {
     val oldTagged = old.withColumn(SeqCol, lit(0L))
     val updTagged = upd.withColumn(SeqCol, lit(1L))
     val unioned = oldTagged.unionByName(updTagged, allowMissingColumns = true)
@@ -1007,11 +997,13 @@ final class LakeTable(
     val hashIn = cols.map { c =>
       if (containsMap(unioned.schema(c).dataType)) to_json(col(c)) else col(c)
     }
-    bucketGrouped(unioned)
+    val payload = cols.filter(_ != KeyCol)
+    layout(unioned).groupBy(layout.expr, col(KeyCol))
       .agg(max_by(
-        struct(cols.map(col).toIndexedSeq: _*),
+        struct(payload.map(col).toIndexedSeq: _*),
         struct(col(TsCol), col(SeqCol), xxhash64(hashIn.toIndexedSeq: _*))).as("_r"))
-      .select("_r.*")
+      .select(cols.map(c =>
+        if (c == KeyCol) col(KeyCol) else col("_r").getField(c).as(c)).toIndexedSeq: _*)
   }
 
   /** `mergeMode=partial` (Hudi `PartialUpdateAvroPayload` semantics,
@@ -1036,7 +1028,8 @@ final class LakeTable(
     * not-carried (the classic partial-update caveat — Hudi shares it);
     * use the overwrite mode when null is a value.
     */
-  private def partialMerge(old: DataFrame, upd: DataFrame): DataFrame = {
+  private def partialMerge(
+      old: DataFrame, upd: DataFrame, layout: BucketLayout): DataFrame = {
     import org.apache.spark.sql.types.{LongType, MapType, StringType}
     val oldTagged = old.withColumn(SeqCol, lit(0L))
     val updTagged = upd.withColumn(SeqCol, lit(1L))
@@ -1070,7 +1063,7 @@ final class LakeTable(
           array(payload.map(c => max(when(col(c).isNotNull, fts(c)))).toIndexedSeq: _*))
           .as(PtsCol) +:
         payload.map(c => max_by(col(c), ord(c)).as(c)).toSeq
-    bucketGrouped(unioned)
+    layout(unioned).groupBy(layout.expr, col(KeyCol))
       .agg(aggs.head, aggs.tail: _*)
       .select(((KeyCol +: TsCol +: payload) :+ PtsCol).map(col).toIndexedSeq: _*)
   }
@@ -1120,8 +1113,7 @@ final class LakeTable(
       deltaRows = Some(df => df
         .withColumn(OpCol, when(col(delCol), lit(DeleteOp)).otherwise(lit(UpsertOp)))
         .drop(delCol)),
-      affectedFor = hintFor,
-      offerLayout = false) { prev => // post-agg delete anti-join (see below)
+      affectedFor = hintFor) { prev =>
       val ks = deleteKeys.select(KeyCol).distinct()
       // The bloom reflects PRE-batch state: a key this very batch upserts
       // must survive the prune, or upsert-then-delete-in-one-batch would
@@ -1133,15 +1125,17 @@ final class LakeTable(
       }
       updates.withColumn(delCol, lit(false))
         .unionByName(pruned.withColumn(delCol, lit(true)), allowMissingColumns = true)
-    } { (old, inc) =>
+    } { (old, inc, layout) =>
       val ups = inc.filter(!col(delCol)).drop(delCol)
       val ks = inc.filter(col(delCol)).select(KeyCol)
       // The delete anti-join stays POST-agg: a pre-agg drop on the union
       // gets pushed through the Union by the optimizer
       // (PushLeftSemiLeftAntiThroughUnion-style rewrites), duplicating
       // the pruned-keys broadcast subtree into BOTH branches — measured
-      // +3 broadcast-materialization jobs per commit on q113 (r22).
-      lwwMerge(old.drop(delCol), ups)
+      // +3 broadcast-materialization jobs per commit on q113. A broadcast
+      // anti-join keeps the aggregate's layout; after a shuffle join the
+      // write's own repartition stays in the plan.
+      lwwMerge(old.drop(delCol), ups, layout)
         .join(broadcastIfSmall(ks), Seq(KeyCol), "left_anti")
     }
   }
@@ -1186,7 +1180,7 @@ final class LakeTable(
     writeCommit(
       commitId, shuffle = sortMode == "partition",
       affectedFor = affectedHint.map(h => (_: Option[Manifest]) => Some(h)))(
-      _ => rows) { (old, inc) =>
+      _ => rows) { (old, inc, _) =>
       old.unionByName(inc, allowMissingColumns = true)
     }
   }
@@ -1207,7 +1201,7 @@ final class LakeTable(
       writeCommit(
         commitId, manifestDependent = true,
         affectedFor = Some(m => Some(m.map(_.allBuckets).getOrElse(Set.empty))))(
-        _ => snapshot) { (_, inc) => inc }
+        _ => snapshot) { (_, inc, _) => inc }
 
   /** Remove all rows whose `_key` appears in `keys` (a 1-column `_key` DF,
     * or any DF containing `_key`). Mirrors the reference's delete routing
@@ -1229,7 +1223,7 @@ final class LakeTable(
       deltaRows = Some(df => df.withColumn(OpCol, lit(DeleteOp)))) {
       case Some(m) => bloomPrune(keys.select(KeyCol).distinct(), m)
       case None => keys.select(KeyCol).distinct()
-    } { (old, ks) => old.join(broadcastIfSmall(ks), Seq(KeyCol), "left_anti") }
+    } { (old, ks, _) => old.join(broadcastIfSmall(ks), Seq(KeyCol), "left_anti") }
   }
 
   /** Per-bucket sidecar layers of `m`: one entry per data layer — the
@@ -1412,16 +1406,9 @@ final class LakeTable(
       // distinct-collect job, or None to fall back to computing it from
       // `inc` against this attempt's manifest (the merge hint's
       // prunable-manifest escape).
-      affectedFor: Option[Option[Manifest] => Option[Set[Int]]] = None,
-      // r22: whether the commit may run its LWW agg on the write's bucket
-      // layout (see bucketGrouped). Callers whose `merge` callback adds a
-      // post-agg join (merge()'s delete anti-join) must pass false — if
-      // that join ever planned as a shuffle join it would silently
-      // re-partition the rows off the layout the skipped write
-      // repartition relies on.
-      offerLayout: Boolean = true)(
+      affectedFor: Option[Option[Manifest] => Option[Set[Int]]] = None)(
       incomingFor: Option[Manifest] => DataFrame)(
-      merge: (DataFrame, DataFrame) => DataFrame): Unit = synchronized {
+      merge: (DataFrame, DataFrame, BucketLayout) => DataFrame): Unit = synchronized {
     // Entry idempotency scan and the incremental gates below share ONE
     // versions() snapshot: deriving scannedThrough from a LATER listing
     // would let a same-commitId commit that landed mid-scan fall between
@@ -1554,14 +1541,7 @@ final class LakeTable(
           tableType == MorType &&
           affected.forall(b =>
             prev.get.deltas.getOrElse(b, Nil).size < compactAfter)
-        // r22 bucket-aware write layout offer (see bucketGrouped): fold/cow
-        // merges repartition the UNION on the bucket id before the LWW agg
-        // and the write skips its own repartition. Not offered under
-        // zorder (the range exchange is the layout there) or sortMode=none.
-        offeredBucketLayout =
-          if (!offerLayout || asDelta || !shuffle || zorderBy.nonEmpty) None
-          else Some((affected.size.max(1) * filesPerBucket, filesPerBucket > 1))
-        bucketLayoutApplied = false
+        val layout = bucketLayout(affected.size)
         val merged0 =
           if (asDelta)
             deltaRows.get(inc).withColumn(DvCol, lit(version))
@@ -1573,9 +1553,8 @@ final class LakeTable(
                   spark.sparkContext.emptyRDD[Row],
                   inc.schema.fields.foldLeft(new StructType()) { (s, f) => s.add(f) })
             }
-            merge(old, inc)
+            merge(old, inc, layout)
           }
-        offeredBucketLayout = None // consumed (or ignored) during merge()
         // Partial tables carry `_pts` in EVERY commit's schema (null map
         // where the path didn't compose one — delta fragments, bulkInsert):
         // readers infer the partial stack collapse from the manifest
@@ -1602,11 +1581,10 @@ final class LakeTable(
           prev.map(m => DataType.fromJson(m.schemaJson).asInstanceOf[StructType]),
           prev.map(_.renames).getOrElse(Map.empty), prevRetired,
           merged.schema.fieldNames)
-        // One shuffle partition per affected bucket -> one file group per
-        // bucket per version (the Hudi bucket-index layout). Partition count
-        // scales with touched buckets, not table size. `filesPerBucket > 1`
-        // adds intra-bucket write parallelism (key-salted) for bucket sizes
-        // beyond one task — raise it together with numBuckets at scale.
+        // At most `filesPerBucket` files per bucket per version (the Hudi
+        // bucket-index layout; see BucketLayout); the partition count scales
+        // with touched buckets, not table size. `filesPerBucket > 1` adds
+        // intra-bucket write parallelism — raise it with numBuckets at scale.
         val toWrite = merged.withColumn(BucketCol, bucketOf(col(KeyCol)))
         // Optional Z-order clustering: the Morton-code sort key (in
         // UNSIGNED order — the 4-D interleave places dim-4 bit 15 at bit
@@ -1687,16 +1665,9 @@ final class LakeTable(
               .bitwiseXOR(lit(Long.MinValue)))
           case _ => None
         }
-        val partitioned = (zKey, filesPerBucket) match {
+        val partitioned = zKey match {
           case _ if !shuffle => toWrite // bulkInsert sortMode=none: task-local write
-          // r22: the LWW agg already ran on the bucket layout (see
-          // bucketGrouped) — the rows are physically clustered exactly as
-          // the repartition below would place them (same partitioning
-          // expressions, same partition count), so a second exchange here
-          // would only reshuffle identical placement.
-          case _ if bucketLayoutApplied => toWrite
-          case (_, 1) => toWrite.repartition(affected.size.max(1), col(BucketCol))
-          case (Some(z), fpb) =>
+          case Some(z) if filesPerBucket > 1 =>
             // Z-ordered multi-file buckets RANGE-partition on (bucket,
             // code): a bucket's files then TILE the Z-curve instead of
             // being hash-random row subsets, so the per-file column
@@ -1705,9 +1676,11 @@ final class LakeTable(
             // file-level stats pruning effective. Costs the range
             // exchange's sampling pass over the outgoing rows (the same
             // trade Hudi's sort-based clustering makes).
-            toWrite.repartitionByRange(affected.size.max(1) * fpb, col(BucketCol), z)
-          case (None, fpb) =>
-            toWrite.repartition(affected.size.max(1) * fpb, col(BucketCol), col(KeyCol))
+            toWrite.repartitionByRange(layout.partitions, col(BucketCol), z)
+          // Always asked for: Spark's EnsureRequirements drops this
+          // exchange when the merged rows already carry the layout (the
+          // LWW aggregate ran on it), and keeps it otherwise.
+          case _ => layout(toWrite)
         }
         // Sort rows by the Morton code within each task's file so parquet
         // row-group min/max stats prune range predicates on any clustered
@@ -1723,14 +1696,16 @@ final class LakeTable(
         // sensitive (after rename(X→Y) + re-adding X, applying Y→X while
         // the live X existed duplicated the name and bricked every later
         // write; ColumnRenameSpec pins the scenario).
-        // Diagnostic only: dump the commit write's physical plan when the
-        // env var names a file prefix (plan evidence for the optimization
-        // rounds — never set on the bench path).
+        // Diagnostic only: dump the commit write's physical plan; the table
+        // tag keeps tables (and partitions, sharing versions) apart.
         sys.env.get("GRAFT_EXPLAIN_WRITE").foreach { prefix =>
-          val f = new java.io.FileWriter(s"$prefix-v$version.txt", true)
-          try f.write(clustered.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted")) + "\n")
-          finally f.close()
+          val tag = s"${new HPath(basePath).getName}-${Integer.toHexString(basePath.hashCode)}"
+          java.nio.file.Files.writeString(
+            java.nio.file.Paths.get(s"$prefix-$tag-v$version.txt"),
+            clustered.queryExecution.explainString(
+              org.apache.spark.sql.execution.ExplainMode.fromString("formatted")) + "\n",
+            java.nio.charset.StandardCharsets.UTF_8,
+            java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
         }
         withJobDesc(s"write v$version")(
           clustered.toDF(
@@ -2799,11 +2774,11 @@ object LakeTable {
       val cols =
         if (statCols.isEmpty) Map.empty[String, ColFooter]
         else {
-          // (merged stats, total values, all row groups usable) per column
+          // (merged stats, all row groups usable) per column
           val acc = new java.util.HashMap[
             String,
             (org.apache.parquet.column.statistics.Statistics[_],
-              org.apache.parquet.schema.PrimitiveType, Long, Boolean)]()
+              org.apache.parquet.schema.PrimitiveType, Boolean)]()
           blocks.foreach(_.getColumns.asScala.foreach { cc =>
             if (cc.getPath.size == 1 && statCols.contains(cc.getPath.toDotString)) {
               val cname = cc.getPath.toDotString
@@ -2815,16 +2790,13 @@ object LakeTable {
               val merged =
                 if (prev == null || prev._1 == null) st
                 else { if (ok) mergeStatsUnsafe(prev._1, st); prev._1 }
-              acc.put(cname, (
-                merged, pt,
-                (if (prev == null) 0L else prev._3) + cc.getValueCount,
-                (if (prev == null) true else prev._4) && ok))
+              acc.put(cname, (merged, pt, (prev == null || prev._3) && ok))
             }
           })
           val b = Map.newBuilder[String, ColFooter]
           acc.forEach { (cname, t) =>
             b += cname -> ColFooter(
-              t._1, t._2, t._4 && t._1 != null && footerConvertible(t._2))
+              t._1, t._2, t._3 && t._1 != null && footerConvertible(t._2))
           }
           b.result()
         }
@@ -3012,6 +2984,28 @@ object LakeTable {
   private val BucketDirRe = (BucketCol + """=(\d+)""").r
 
   private def versionFileName(v: Long): String = "v%08d.json".format(v)
+
+  /** Bucket id of a key column — the one Spark-side bucket expression (write
+    * layout, pruning and PartitionedLakeTable's routing all call it);
+    * [[bucketOfKeyBytes]] is its driver-side mirror.
+    */
+  def bucketOf(key: Column, numBuckets: Int): Column =
+    pmod(xxhash64(key), lit(numBuckets)).cast("int")
+
+  /** `codes(p)` is an int that Spark's HashPartitioning over `n`
+    * partitions (Murmur3, seed 42) places in partition p: hashing
+    * `codes(task)` sends a row to exactly `task`.
+    */
+  private[lake] def hashPartitionCodes(n: Int): Array[Int] = {
+    val codes = Array.fill(n)(-1)
+    var (left, c) = (n, 0)
+    while (left > 0) {
+      val p = Math.floorMod(org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt(c, 42), n)
+      if (codes(p) < 0) { codes(p) = c; left -= 1 }
+      c += 1
+    }
+    codes
+  }
 
   /** Driver-side mirror of `bucketOf` (xxhash64 with Spark's default seed). */
   def bucketOfKey(key: String, numBuckets: Int): Int =

@@ -429,8 +429,7 @@ final class PartitionedLakeTable(
     */
   private def partitionBucketPairs(
       df: DataFrame, what: String): Map[String, Set[Int]] = {
-    val bucketCol = pmod(xxhash64(col(LakeTable.KeyCol)), lit(numBuckets))
-      .cast("int") // must match LakeTable.bucketOf exactly
+    val bucketCol = LakeTable.bucketOf(col(LakeTable.KeyCol), numBuckets)
     val sel = df.select((partitionCols.map(c => col(c).cast("string")) :+
       bucketCol.as("_graft_b")): _*)
     val k = partitionCols.size
@@ -492,7 +491,7 @@ final class PartitionedLakeTable(
     df.repartition(
       spark.sparkContext.defaultParallelism,
       (partitionCols.map(col) :+
-        pmod(xxhash64(col(LakeTable.KeyCol)), lit(numBuckets))): _*)
+        LakeTable.bucketOf(col(LakeTable.KeyCol), numBuckets)): _*)
 
   private def writePartitions(
       updates: DataFrame, commitId: String, dedupe: Boolean)(
@@ -620,8 +619,7 @@ final class PartitionedLakeTable(
           .select(partitionCols.map(col) :+ col("_r.*"): _*)
       }
     val leaf = "__graft_leaf"
-    val bucketCol = pmod(xxhash64(col(LakeTable.KeyCol)), lit(numBuckets))
-      .cast("int") // must match LakeTable.bucketOf exactly
+    val bucketCol = LakeTable.bucketOf(col(LakeTable.KeyCol), numBuckets)
     val tmpRel = s"_graft_initload_${java.util.UUID.randomUUID().toString.take(8)}"
     val tmpPath = io.resolve(tmpRel)
     val n = spark.sparkContext.defaultParallelism.max(fresh.size)
@@ -693,8 +691,7 @@ final class PartitionedLakeTable(
     // to ONE partition with no global deletes skips both staging
     // exchanges + persists entirely; its single commit evaluates each
     // source exactly once anyway, and the hint carries its bucket set.
-    val bucketCol = pmod(xxhash64(col(LakeTable.KeyCol)), lit(numBuckets))
-      .cast("int") // must match LakeTable.bucketOf exactly
+    val bucketCol = LakeTable.bucketOf(col(LakeTable.KeyCol), numBuckets)
     val delSel = deleteKeys
       .select(col(LakeTable.KeyCol), identityCol(deleteKeys).as("_p"))
     val sel = updates
@@ -769,7 +766,7 @@ final class PartitionedLakeTable(
       .repartition(
         spark.sparkContext.defaultParallelism,
         col("_p"),
-        pmod(xxhash64(col(LakeTable.KeyCol)), lit(numBuckets)))
+        LakeTable.bucketOf(col(LakeTable.KeyCol), numBuckets))
       .persist()
     try {
       // ONE materialization job before the concurrent routed merges race

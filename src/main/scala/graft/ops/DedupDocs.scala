@@ -298,14 +298,6 @@ object DedupDocs {
     * as hashing the raw gram, and keeps the agg input 8-byte). Deterministic
     * (fixed integer seeds), one hash-agg over the exploded shingles.
     */
-  def minhashSignatures(
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      n: Int = 3,
-      numHashes: Int = 64): DataFrame =
-    signaturesFromShingles(shingles(docs, idCol, textCol, n), idCol, numHashes)
-
   private def signaturesFromShingles(
       sh: DataFrame, idCol: String, numHashes: Int): DataFrame = {
     val aggs = (0 until numHashes).map(i => min(xxhash64(lit(i), col("shingle"))).as(s"m$i"))

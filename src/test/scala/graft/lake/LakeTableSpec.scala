@@ -525,12 +525,13 @@ class LakeTableSpec extends SparkSpec {
     assert(lt.snapshot.filter(col("_key") === "k1").select("payload").as[String].head() == "v1b")
   }
 
-  test("bucket-aware agg writes keep the file layout (r22 offerLayout contract)") {
-    // The one-exchange upsert write SKIPS its own repartition, trusting
-    // the LWW agg's bucket layout — the failure mode of a misuse is
-    // silent file-count drift (tasks x buckets small files), so pin the
-    // layout: fpb=1 leaves EXACTLY one file per bucket dir per commit,
-    // fpb=3 salts at least one bucket into multiple files.
+  test("commit writes keep the bucket file layout at fpb=1 and fpb=3") {
+    // The write's repartition is dropped by the planner when the LWW
+    // aggregate already ran on the bucket layout — the failure mode of a
+    // layout mismatch is silent file-count drift, so pin the layout:
+    // fpb=1 leaves EXACTLY one file per bucket dir per commit, fpb=3
+    // between one and three — exactly three here, since every bucket has
+    // keys of all three salts and each salt owns a task.
     import scala.jdk.CollectionConverters._
     def bucketFiles(dir: String): Seq[Int] = {
       val data = java.nio.file.Paths.get(dir, "data")
@@ -540,20 +541,18 @@ class LakeTableSpec extends SparkSpec {
         .map(b => java.nio.file.Files.list(b).iterator().asScala
           .count(_.getFileName.toString.endsWith(".parquet")))
     }
-    val d1 = tempDir("lake-layout1-").toString
-    val lt1 = new LakeTable(spark, d1, numBuckets = 4)
-    lt1.upsert((0 until 200).map(i => (s"k$i", 1L, s"v$i"))
+    def load(lt: LakeTable): Unit = lt.upsert((0 until 2000).map(i => (s"k$i", 1L, s"v$i"))
       .toDF(LakeTable.KeyCol, LakeTable.TsCol, "payload"))
+    val d1 = tempDir("lake-layout1-").toString
+    load(new LakeTable(spark, d1, numBuckets = 4))
     val f1 = bucketFiles(d1)
-    assert(f1.nonEmpty && f1.forall(_ == 1),
+    assert(f1.size == 4 && f1.forall(_ == 1),
       s"fpb=1 upsert must leave ONE file per bucket dir, got $f1")
     val d3 = tempDir("lake-layout3-").toString
-    val lt3 = new LakeTable(spark, d3, numBuckets = 2, filesPerBucket = 3)
-    lt3.upsert((0 until 200).map(i => (s"k$i", 1L, s"v$i"))
-      .toDF(LakeTable.KeyCol, LakeTable.TsCol, "payload"))
+    load(new LakeTable(spark, d3, numBuckets = 4, filesPerBucket = 3))
     val f3 = bucketFiles(d3)
-    assert(f3.exists(_ > 1),
-      s"fpb=3 upsert should salt buckets into multiple files, got $f3")
+    assert(f3.size == 4 && f3.forall(_ == 3),
+      s"fpb=3 upsert must leave 3 files per bucket dir, got $f3")
   }
 
   test("snapshotAt reads historical versions until vacuumed") {
