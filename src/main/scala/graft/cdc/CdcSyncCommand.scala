@@ -368,7 +368,11 @@ object CdcSyncCommand {
         // java.io.tmpdir: executors write the staged files, so on a real
         // cluster a driver-local file:// path would scatter partitions
         // across executor-local disks and the read-back would open an
-        // empty directory (VERDICT r5 "What's wrong" #1).
+        // empty directory. Staging on disk beats staging in memory: an
+        // in-memory staged batch (persisted winners, a local sort on
+        // (db, table), a filter per table) made the perfbench
+        // fanout_stream micro-batch 17-31% slower (4 of 4 alternating
+        // pairs on a 4-vCPU host, median 5.7 s -> 7.0 s).
         val stagingRoot = options.getOrElse(StagingPathKey, {
           val anchor = new org.apache.hadoop.fs.Path(
             configs.toSeq.sortBy(_._1).head._2.path)

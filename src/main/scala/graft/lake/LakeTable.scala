@@ -33,8 +33,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * therefore proportional to the touched key range, not the table size — at
   * 100 TB you raise `numBuckets` (thousands) so each bucket is one
   * task-sized file group, and a small CDC batch rewrites only a few of them.
-  * The merge itself is a hash aggregation (`max_by` over `(_ts, _seq)`) —
-  * no global sort. It runs on the write's bucket layout, so a commit
+  * The merge itself is one last-write-wins aggregation,
+  * [[LakeTable.overwriteCollapse]] (per column: [[LakeTable.partialCollapse]])
+  * — no global sort; merge-on-read readers collapse delta stacks with the
+  * same function. It runs on the write's bucket layout, so a commit
   * shuffles its rows once: into the tasks that write each bucket's files.
   *
   * == Concurrency / idempotency ==
@@ -788,99 +790,34 @@ final class LakeTable(
           .withColumn(OpCol, lit(UpsertOp)).withColumn(DvCol, lit(0L))
       val stacked = baseSide.unionByName(
         logicalizeMeta(spark.read.schema(physMeta).parquet(deltaPaths: _*)))
-      // Partial tables collapse per-COLUMN (newest non-null by fragment
-      // time); the mode is inferred from the manifest schema (`_pts` is
-      // reserved, so its presence <=> mergeMode=partial wrote this
-      // table), keeping reads manifest-driven whatever this handle's
+      // A delete tombstone at version v kills every upsert at version <= v
+      // whatever its `_ts` ([[merge]]'s deletes-win-in-batch rule at v
+      // itself, plain delete semantics below it); only tombstone-free
+      // later upserts survive. Tombstones live ONLY in delta files, so the
+      // delete-version aggregation is delta-sized (broadcastable).
+      val delVers = stacked.filter(col(OpCol) === DeleteOp)
+        .groupBy(col(KeyCol)).agg(max(col(DvCol)).as("_del_v"))
+      val live = stacked.filter(col(OpCol) === UpsertOp)
+        .join(broadcastIfSmall(delVers), Seq(KeyCol), "left")
+        .filter(col("_del_v").isNull || col(DvCol) > col("_del_v"))
+      // The survivors collapse with the commit fold's rule, the delta
+      // version standing in for its old/new tag (a later delta IS the
+      // later batch), so any fold cadence lands on the same state
+      // (LakeMorSpec's randomized cow≡mor equivalences). Partial tables
+      // collapse per column; the mode is inferred from the manifest schema
+      // (`_pts` is reserved, so its presence <=> mergeMode=partial wrote
+      // this table), keeping reads manifest-driven whatever this handle's
       // construction says.
+      val cols = schema.fieldNames.toSeq
       val collapsed =
-        if (schema.fieldNames.contains(PtsCol)) morPartialMerge(stacked, schema)
-        else morMerge(stacked, schema)
+        if (cols.contains(PtsCol)) partialCollapse(live, Nil, col(DvCol), cols)
+        else overwriteCollapse(live, Nil, col(DvCol), cols)
       plain.unionByName(collapsed)
     }
   } match {
     // drop is a no-op on non-partial tables (no such column)
     case out if internal => out
     case out => out.drop(PtsCol)
-  }
-
-  /** Collapse a base+delta row stack to current state — the read-side
-    * equivalent of the COW fold, row for row (the ScalaCheck equivalence
-    * property in LakeMorSpec pins it):
-    *  - the winning upsert per key is the max of `(_ts, delta version,
-    *    content hash)` — the same comparator [[lwwMerge]] applies per
-    *    commit, associatively collapsed over the stack (valid because LWW
-    *    is monotone: a row that loses to ANY stacked row can never be
-    *    state);
-    *  - a delete tombstone at version v kills every upsert at version
-    *    <= v whatever its `_ts` ([[merge]]'s deletes-win-in-batch rule at
-    *    v itself, plain delete semantics below it); only tombstone-free
-    *    later upserts survive. Tombstones live ONLY in delta files, so
-    *    the delete-version aggregation is delta-sized (broadcastable),
-    *    never corpus-sized.
-    */
-  private def morMerge(stacked: DataFrame, schema: StructType): DataFrame = {
-    val cols = schema.fieldNames.toSeq
-    val delVers = stacked.filter(col(OpCol) === DeleteOp)
-      .groupBy(col(KeyCol)).agg(max(col(DvCol)).as("_del_v"))
-    val live = stacked.filter(col(OpCol) === UpsertOp)
-      .join(broadcastIfSmall(delVers), Seq(KeyCol), "left")
-      .filter(col("_del_v").isNull || col(DvCol) > col("_del_v"))
-    val hashIn = cols.map { c =>
-      if (containsMap(schema(c).dataType)) to_json(col(c)) else col(c)
-    }
-    live
-      .groupBy(col(KeyCol))
-      .agg(max_by(
-        struct(cols.map(col).toIndexedSeq: _*),
-        struct(col(TsCol), col(DvCol), xxhash64(hashIn.toIndexedSeq: _*))).as("_r"))
-      .select("_r.*")
-  }
-
-  /** Per-column stack collapse for `mergeMode=partial` MOR tables — the
-    * read-side equivalent of [[partialMerge]], fragment for fragment:
-    * tombstones kill fragments at delta version <= theirs exactly as in
-    * [[morMerge]]; surviving fragments then compose per column, newest
-    * non-null by EFFECTIVE time winning. A fragment's effective time for
-    * column c is its recorded `_pts[c]` (base rows — they were composed
-    * at the last fold) or its own `_ts` (raw delta fragments carry a
-    * null `_pts` map — physically present since r14, stamped by every
-    * write path). Ties order by
-    * `(time, delta version, content hash)` — the same total order the
-    * write-side fold applies with its old/new `_seq` tag, since a later
-    * delta version IS the later batch; LakeMorSpec pins the randomized
-    * equivalence against a cow partial table at every version.
-    */
-  private def morPartialMerge(stacked: DataFrame, schema: StructType): DataFrame = {
-    val delVers = stacked.filter(col(OpCol) === DeleteOp)
-      .groupBy(col(KeyCol)).agg(max(col(DvCol)).as("_del_v"))
-    val live = stacked.filter(col(OpCol) === UpsertOp)
-      .join(broadcastIfSmall(delVers), Seq(KeyCol), "left")
-      .filter(col("_del_v").isNull || col(DvCol) > col("_del_v"))
-    val cols = schema.fieldNames.toSeq // includes PtsCol on partial tables
-    val payload = cols.filterNot(c => c == KeyCol || c == TsCol || c == PtsCol)
-    // Tie-break hash input, in MANIFEST-SCHEMA order — which must match
-    // partialMerge's union-column order (see the contract note there):
-    // the in-batch tie-break for same-key same-time conflicting fragments
-    // is only mor==cow-equivalent while both sides hash identical tuples.
-    val hashIn = cols.map { c =>
-      if (containsMap(schema(c).dataType)) to_json(col(c)) else col(c)
-    }
-    def fts(c: String) = coalesce(element_at(col(PtsCol), lit(c)), col(TsCol))
-    def ord(c: String) =
-      when(col(c).isNotNull,
-        struct(fts(c), col(DvCol), xxhash64(hashIn.toIndexedSeq: _*)))
-    val aggs =
-      max(col(TsCol)).as(TsCol) +:
-        map_from_arrays(
-          array(payload.map(lit).toIndexedSeq: _*),
-          array(payload.map(c => max(when(col(c).isNotNull, fts(c)))).toIndexedSeq: _*))
-          .as(PtsCol) +:
-        payload.map(c => max_by(col(c), ord(c)).as(c))
-    live
-      .groupBy(col(KeyCol))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(cols.map(col).toIndexedSeq: _*)
   }
 
   /** Widest common type for the supported widenings (or None): numeric
@@ -915,11 +852,6 @@ final class LakeTable(
       case _ => None
     }
   }
-
-  /** True iff `dt` contains a MapType anywhere (hash expressions reject it). */
-  private[lake] def containsMap(dt: DataType): Boolean = LakeTable.containsMap(dt)
-
-
 
   /** Bucket id for a key column — [[LakeTable.bucketOf]] at this table's width. */
   def bucketOf(key: Column): Column = LakeTable.bucketOf(key, numBuckets)
@@ -970,102 +902,34 @@ final class LakeTable(
       _ => updates)(lwwMerge)
   }
 
-  /** Hash-agg LWW (map-side combinable): the row with max (_ts, _seq)
-    * wins; updates beat the snapshot on equal _ts. Within-batch ties
-    * (equal _ts AND _seq) break on a row-content hash: an arbitrary but
-    * DETERMINISTIC total order, so replays and different partitionings
-    * converge to the same table state. Callers with a semantic tie-break
-    * (e.g. CdcSyncCommand's dedup.tiebreak.field) pre-dedup upstream.
-    * Spark prohibits hash expressions over MapType — payload columns
-    * containing a map anywhere in their type go through to_json first
-    * (same bytes => same hash, so the order stays deterministic).
-    * The aggregate runs on the write `layout` (its expression, a pure
-    * function of `_key`, joins the grouping keys) and outputs `_key` as
-    * the grouping attribute, so Spark sees the merged rows laid out and
-    * drops the write's own repartition — one exchange per commit.
+  /** The commit fold: stored rows (`_seq` 0) and incoming rows (`_seq` 1)
+    * collapse per `_key` with [[LakeTable.overwriteCollapse]] or, for
+    * `mergeMode=partial`, [[LakeTable.partialCollapse]] — so updates beat
+    * the snapshot on equal `_ts`. Callers with a semantic tie-break (e.g.
+    * CdcSyncCommand's dedup.tiebreak.field) pre-dedup upstream. The
+    * collapse runs on the write `layout` (its expression, a pure function
+    * of `_key`, joins the grouping keys) and outputs `_key` as the
+    * grouping attribute, so Spark sees the merged rows laid out and drops
+    * the write's own repartition — one exchange per commit.
     */
-  private def lwwMerge(old: DataFrame, upd: DataFrame, layout: BucketLayout): DataFrame =
-    if (mergeMode == PartialMode) partialMerge(old, upd, layout)
-    else overwriteMerge(old, upd, layout)
-
-  private def overwriteMerge(
-      old: DataFrame, upd: DataFrame, layout: BucketLayout): DataFrame = {
-    val oldTagged = old.withColumn(SeqCol, lit(0L))
-    val updTagged = upd.withColumn(SeqCol, lit(1L))
-    val unioned = oldTagged.unionByName(updTagged, allowMissingColumns = true)
-    val cols = unioned.columns.filter(_ != SeqCol)
-    val hashIn = cols.map { c =>
-      if (containsMap(unioned.schema(c).dataType)) to_json(col(c)) else col(c)
-    }
-    val payload = cols.filter(_ != KeyCol)
-    layout(unioned).groupBy(layout.expr, col(KeyCol))
-      .agg(max_by(
-        struct(payload.map(col).toIndexedSeq: _*),
-        struct(col(TsCol), col(SeqCol), xxhash64(hashIn.toIndexedSeq: _*))).as("_r"))
-      .select(cols.map(c =>
-        if (c == KeyCol) col(KeyCol) else col("_r").getField(c).as(c)).toIndexedSeq: _*)
-  }
-
-  /** `mergeMode=partial` (Hudi `PartialUpdateAvroPayload` semantics,
-    * strengthened): per COLUMN, the newest non-null value BY EVENT TIME
-    * wins — an update carrying only the changed columns (nulls elsewhere)
-    * composes with the stored row instead of erasing it. Same single
-    * hash-agg shape as the overwrite merge (one `max_by` per payload
-    * column, all map-side combinable in one pass); the per-column
-    * ordering nulls out where the column is null, which `max_by` skips.
-    *
-    * The stored row carries a reserved `_pts` map = each column's winning
-    * fragment time. Without it the fold is NOT associative: the merged
-    * row's single `_ts` is the max over ALL fragments, so once any column
-    * advances it, a later-arriving middle-aged fragment for a DIFFERENT
-    * column would lose to a stale stored value (measured on q85's mod-3
-    * commit split — 68/150 keys wrong). With `_pts`, any commit order
-    * converges to the same per-column winners, and `q85`'s oracle
-    * recomputes them independently per column. `_ts` remains the max
-    * across contributors — the row is as new as its newest fragment.
-    *
-    * A column holding a GENUINE null cannot be distinguished from
-    * not-carried (the classic partial-update caveat — Hudi shares it);
-    * use the overwrite mode when null is a value.
-    */
-  private def partialMerge(
-      old: DataFrame, upd: DataFrame, layout: BucketLayout): DataFrame = {
+  private def lwwMerge(old: DataFrame, upd: DataFrame, layout: BucketLayout): DataFrame = {
     import org.apache.spark.sql.types.{LongType, MapType, StringType}
-    val oldTagged = old.withColumn(SeqCol, lit(0L))
-    val updTagged = upd.withColumn(SeqCol, lit(1L))
-    val unioned0 = oldTagged.unionByName(updTagged, allowMissingColumns = true)
-    val unioned =
-      if (unioned0.columns.contains(PtsCol)) unioned0
-      else unioned0.withColumn(PtsCol, lit(null).cast(MapType(StringType, LongType)))
-    val payload = unioned.columns
-      .filter(c => c != SeqCol && c != KeyCol && c != TsCol && c != PtsCol)
-    // Tie-break hash input. COLUMN ORDER IS A CONTRACT (ADVICE r14):
-    // morPartialMerge hashes the same tuple in manifest-schema order, and
-    // the mor==cow equivalence for same-key same-time conflicting
-    // fragments inside one batch holds only while the two orders agree.
-    // They do: unioned here starts from the stored (manifest-schema-
-    // ordered) frame and unionByName appends new columns in incoming
-    // order — the same order mergedSchemaJson appends them to the
-    // manifest. Change one side only and LakeMorSpec's randomized
-    // equivalence seeds will catch it.
-    val hashIn = unioned.columns.filter(_ != SeqCol).map { c =>
-      if (containsMap(unioned.schema(c).dataType)) to_json(col(c)) else col(c)
-    }
-    // A column's effective time: its stored winning-fragment time on
-    // merged rows, the row's own _ts on incoming fragments.
-    def fts(c: String) = coalesce(element_at(col(PtsCol), lit(c)), col(TsCol))
-    def ord(c: String) =
-      when(col(c).isNotNull, struct(fts(c), col(SeqCol), xxhash64(hashIn.toIndexedSeq: _*)))
-    val aggs =
-      max(col(TsCol)).as(TsCol) +:
-        map_from_arrays(
-          array(payload.map(lit).toIndexedSeq: _*),
-          array(payload.map(c => max(when(col(c).isNotNull, fts(c)))).toIndexedSeq: _*))
-          .as(PtsCol) +:
-        payload.map(c => max_by(col(c), ord(c)).as(c)).toSeq
-    layout(unioned).groupBy(layout.expr, col(KeyCol))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(((KeyCol +: TsCol +: payload) :+ PtsCol).map(col).toIndexedSeq: _*)
+    // `tagged` keeps the stored (manifest-schema) column order with new
+    // columns appended as the manifest appends them, so the fold hashes
+    // the tuple a merge-on-read collapse of the same rows hashes.
+    val tagged = old.withColumn(SeqCol, lit(0L))
+      .unionByName(upd.withColumn(SeqCol, lit(1L)), allowMissingColumns = true)
+    val by = Seq(layout.expr, col(KeyCol))
+    if (mergeMode == PartialMode) {
+      val unioned =
+        if (tagged.columns.contains(PtsCol)) tagged
+        else tagged.withColumn(PtsCol, lit(null).cast(MapType(StringType, LongType)))
+      val cols = unioned.columns.filter(_ != SeqCol).toSeq
+      val payload = cols.filter(c => c != KeyCol && c != TsCol && c != PtsCol)
+      partialCollapse(layout(unioned), by, col(SeqCol), cols)
+        .select(((KeyCol +: TsCol +: payload) :+ PtsCol).map(col): _*)
+    } else
+      overwriteCollapse(layout(tagged), by, col(SeqCol), tagged.columns.filter(_ != SeqCol).toSeq)
   }
 
   /** Apply a batch's upserts AND deletes as ONE commit — one manifest
@@ -1745,8 +1609,10 @@ final class LakeTable(
         // sizing, or a stats sidecar whose EVERY eligible column could be
         // footer-convertible (cheap Spark-type pre-check — e.g. INT96
         // timestamps can never convert, so such commits skip the per-file
-        // footer round-trips entirely) and the escape hatch is off. A
-        // skipped-footer commit keeps correctness via the agg fallback.
+        // footer round-trips entirely) and the escape hatch
+        // `-Dgraft.lake.stats.noFooter=true` is off (FooterStatsSpec pins
+        // footer-vs-agg JSON equality through it). A skipped-footer commit
+        // keeps correctness via the agg fallback.
         val statPhys = statsColumns.map(c => newRenames.getOrElse(c, c))
         val statEligible = statPhys.filter(c =>
           writtenSchema.fields.exists(f => f.name == c && statable(f.dataType)))
@@ -1857,15 +1723,6 @@ final class LakeTable(
     } finally reused.foreach(_.unpersist(blocking = false))
   }
 
-  /** Remove data version dirs no longer referenced by the latest
-    * `keepVersions` manifests (old COW snapshots accumulate otherwise).
-    * Keeps any version dir still carrying a live bucket. Manifests whose
-    * referenced data dirs are removed are tombstoned into
-    * `_commits/_vacuumed.json` (their commitIds stay replay-proof via
-    * [[committedIds]]; `snapshotAt` on them fails with a clear
-    * "was vacuumed" error instead of a late FileNotFoundException) and
-    * deleted. Returns the number of data dirs removed.
-    */
   /** Adopt a pre-written initial-load directory as this table's FIRST
     * commit (r21 — the partitioned initial-load fast path): `srcDir`
     * holds `b=<i>` subdirs written by ONE cross-partition Spark job
@@ -1905,6 +1762,15 @@ final class LakeTable(
     }
   }
 
+  /** Remove data version dirs no longer referenced by the latest
+    * `keepVersions` manifests (old COW snapshots accumulate otherwise).
+    * Keeps any version dir still carrying a live bucket. Manifests whose
+    * referenced data dirs are removed are tombstoned into
+    * `_commits/_vacuumed.json` (their commitIds stay replay-proof via
+    * [[committedIds]]; `snapshotAt` on them fails with a clear
+    * "was vacuumed" error instead of a late FileNotFoundException) and
+    * deleted. Returns the number of data dirs removed.
+    */
   def vacuum(keepVersions: Int = 1): Int = synchronized {
     val all = versions()
     // Savepointed versions are pinned whatever the retention policy —
@@ -2203,13 +2069,11 @@ final class LakeTable(
     // usable in every file (see ColFooter). INT96 timestamps, FLBA-backed
     // decimals, or dropped/truncated binary bounds fall back to the
     // distributed agg below, which records the identical JSON.
-    // `-Dgraft.lake.stats.noFooter=true` forces the agg fallback — the
-    // equivalence spec pins footer-vs-agg JSON equality through it, and
-    // it doubles as an emergency escape hatch.
-    val footerOk = !sys.props.get("graft.lake.stats.noFooter").exists(_.toBoolean) &&
-      footers.nonEmpty && written.forall(b =>
-        footers.get(b).exists(fs => fs.nonEmpty && fs.forall(ff =>
-          eligible.forall(c => ff.cols.get(c).exists(_.usable)))))
+    // Under `-Dgraft.lake.stats.noFooter=true` writeCommit reads no
+    // footer stats, so this always takes the agg fallback.
+    val footerOk = footers.nonEmpty && written.forall(b =>
+      footers.get(b).exists(fs => fs.nonEmpty && fs.forall(ff =>
+        eligible.forall(c => ff.cols.get(c).exists(_.usable)))))
     val perBucket: Seq[(Int, NodeData, Seq[(String, NodeData)])] =
       if (footerOk) {
         written.toSeq.sorted.map { b =>
@@ -2667,6 +2531,83 @@ object LakeTable {
     case a: org.apache.spark.sql.types.ArrayType => containsMap(a.elementType)
     case _ => false
   }
+
+  /** Last-write-wins collapse — the one rule behind the commit fold, the
+    * merge-on-read stack read and the partitioned initial load (Hudi's
+    * `OverwriteWithLatestAvroPayload`): one row per (`by`, `_key`), the
+    * row with the greatest `(_ts, tag, content hash)`. `tag` orders rows
+    * of equal `_ts`: the fold's `_seq` (stored 0, incoming 1), the
+    * delta version `_dv` on read, a constant in the initial load. The
+    * content hash is an xxhash64 of `cols` in the order given — an
+    * arbitrary but DETERMINISTIC tie-break, so replays, partitionings,
+    * fold cadences and the cow and mor paths all pick the same winner.
+    * One aggregation, no global sort (Spark plans `max_by` over a struct
+    * as a sort aggregate: a local sort per task).
+    *
+    * A column `by` names is read from the group — the commit fold names
+    * `_key`, whose attribute its write layout rides on — and every other
+    * column of `cols` from the winning row. Returns the columns `by`
+    * names outside `cols`, then `cols`.
+    */
+  private[lake] def overwriteCollapse(
+      rows: DataFrame, by: Seq[Column], tag: Column, cols: Seq[String]): DataFrame = {
+    val grouped = by.flatMap(b => rows.columns.find(c => col(c) == b))
+    val winner = struct(cols.filterNot(grouped.contains).map(col): _*)
+    rows.groupBy(collapseKeys(by): _*)
+      .agg(max_by(winner, collapseOrder(col(TsCol), tag, rows, cols)).as("_r"))
+      .select((grouped.filterNot(cols.contains) ++ cols).map(c =>
+        if (grouped.contains(c)) col(c) else col("_r").getField(c).as(c)): _*)
+  }
+
+  /** [[overwriteCollapse]] per COLUMN, for `mergeMode=partial` (Hudi
+    * `PartialUpdateAvroPayload` semantics, strengthened): each payload
+    * column takes its newest non-null value BY EVENT TIME, ordered by
+    * `(column time, tag, content hash)` — so an update carrying only the
+    * changed columns (nulls elsewhere) composes with the stored row
+    * instead of erasing it. One `max_by` per payload column, all in one
+    * aggregation; the ordering is null where the column is, which
+    * `max_by` skips.
+    *
+    * A column's time is its entry in the row's reserved `_pts` map (a
+    * folded row records each column's winning fragment time there) and
+    * the row's `_ts` otherwise. Without `_pts` the fold is NOT
+    * associative: the merged row's single `_ts` is the max over ALL
+    * fragments, so once any column advances it, a later-arriving
+    * middle-aged fragment for a DIFFERENT column would lose to a stale
+    * stored value (q85's mod-3 commit split: 68/150 keys wrong). With it,
+    * any commit order converges to the same per-column winners. `_ts`
+    * is the max across contributors — the row is as new as its newest
+    * fragment. A GENUINE null cannot be told from not-carried (Hudi
+    * shares the caveat); use the overwrite mode when null is a value.
+    *
+    * Groups and hashes as [[overwriteCollapse]]; returns `cols`.
+    */
+  private[lake] def partialCollapse(
+      rows: DataFrame, by: Seq[Column], tag: Column, cols: Seq[String]): DataFrame = {
+    val payload = cols.filterNot(c => c == KeyCol || c == TsCol || c == PtsCol)
+    def time(c: String) = coalesce(element_at(col(PtsCol), lit(c)), col(TsCol))
+    val aggs =
+      max(col(TsCol)).as(TsCol) +:
+        map_from_arrays(
+          array(payload.map(lit): _*),
+          array(payload.map(c => max(when(col(c).isNotNull, time(c)))): _*)).as(PtsCol) +:
+        payload.map(c => max_by(col(c),
+          when(col(c).isNotNull, collapseOrder(time(c), tag, rows, cols))).as(c))
+    rows.groupBy(collapseKeys(by): _*)
+      .agg(aggs.head, aggs.tail: _*)
+      .select(cols.map(col): _*)
+  }
+
+  /** `by` plus `_key`, unless `by` already names it. */
+  private def collapseKeys(by: Seq[Column]): Seq[Column] =
+    if (by.contains(col(KeyCol))) by else by :+ col(KeyCol)
+
+  /** The LWW total order: `(time, tag, xxhash64(cols))`. Spark rejects
+    * hashing a map, so a column holding one anywhere in its type is
+    * hashed as its to_json (same bytes => same hash). */
+  private def collapseOrder(time: Column, tag: Column, rows: DataFrame, cols: Seq[String]) =
+    struct(time, tag, xxhash64(cols.map(c =>
+      if (containsMap(rows.schema(c).dataType)) to_json(col(c)) else col(c)): _*))
 
   /** One column's footer statistics, merged across a file's row groups
     * with parquet's OWN typed comparator (exactly the ordering the writer

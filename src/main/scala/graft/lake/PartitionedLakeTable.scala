@@ -210,8 +210,8 @@ final class PartitionedLakeTable(
     }
   }
 
-  /** The distinct probe key set, MATERIALIZED once (r18, measured with
-    * MergeScaleProbe/JobProbe): every per-partition branch filters the
+  /** The distinct probe key set, MATERIALIZED once (measured with
+    * MergeScaleProbe): every per-partition branch filters the
     * key set through ITS bloom sidecars, and Catalyst pushes that
     * deterministic filter BELOW the distinct aggregate — which makes
     * each branch's exchange canonically DIFFERENT, defeats AQE stage
@@ -553,12 +553,10 @@ final class PartitionedLakeTable(
     } finally cached.unpersist(blocking = false)
   }
 
-  /** ONE-job initial load for the FRESH partitions of a batch (r21): the
+  /** ONE-job initial load for the FRESH partitions of a batch: the
     * slice of `cached` belonging to never-written partitions is LWW-
-    * deduped per (partition, key) exactly as the per-partition commit
-    * would against its empty snapshot (same max_by comparator, same
-    * hash-input tuple in the same column order — overwriteMerge with an
-    * empty `old` and a constant seq tag), written once partitioned by
+    * deduped per (partition, key) by the per-partition commit's own
+    * collapse ([[LakeTable.overwriteCollapse]]), written once partitioned by
     * (leaf identity, bucket), and adopted per partition as a driver-side
     * move + v1 manifest publish ([[LakeTable.adoptInitialLoad]]).
     * Partitions whose adoption loses a race (or that already hold data)
@@ -592,32 +590,13 @@ final class PartitionedLakeTable(
     require(payloadCols.contains(LakeTable.TsCol),
       s"incoming data must contain a '${LakeTable.TsCol}' column")
     val slice0 = cached.filter(identityCol(cached).isin(fresh: _*))
+    // LWW within the batch, per (partition, key): exactly what each
+    // partition's commit fold picks against its EMPTY snapshot, which
+    // tags every row as incoming and hashes the payload columns in this
+    // (dropPartCols) order.
     val slice =
       if (!dedupe) slice0
-      else {
-        // LWW within the batch, per (partition identity, key): the
-        // winning row equals the per-partition overwriteMerge against an
-        // EMPTY snapshot — seq is the constant updates tag, the content-
-        // hash tie-break covers the SAME tuple (payload columns in
-        // dropPartCols order) the slow path hashes. Order alignment
-        // (VERDICT r21 #5): the slow path hashes in UNIONED-frame order,
-        // but the fast path only ever replaces FRESH-partition commits,
-        // where the slow path's union starts from the empty `old` built
-        // from inc's own schema — i.e. exactly dropPartCols order. The
-        // two tie-breaks therefore pick the SAME winner; don't reuse this
-        // dedup for non-fresh partitions without re-deriving that.
-        val hashIn = payloadCols.map { c =>
-          if (LakeTable.containsMap(slice0.schema(c).dataType)) to_json(col(c))
-          else col(c)
-        }
-        slice0
-          .groupBy((partitionCols :+ LakeTable.KeyCol).map(col): _*)
-          .agg(max_by(
-            struct(payloadCols.map(col): _*),
-            struct(col(LakeTable.TsCol), lit(1L),
-              xxhash64(hashIn: _*))).as("_r"))
-          .select(partitionCols.map(col) :+ col("_r.*"): _*)
-      }
+      else LakeTable.overwriteCollapse(slice0, partitionCols.map(col), lit(1L), payloadCols)
     val leaf = "__graft_leaf"
     val bucketCol = LakeTable.bucketOf(col(LakeTable.KeyCol), numBuckets)
     val tmpRel = s"_graft_initload_${java.util.UUID.randomUUID().toString.take(8)}"

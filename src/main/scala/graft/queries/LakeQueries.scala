@@ -138,10 +138,11 @@ object LakeQueries {
   /** q94: the q85 fragment composition on a MERGE-ON-READ table — the
     * three commits land as base + two DELTA commits (compactAfter high:
     * no fold), so the snapshot exercises the read-side per-column stack
-    * collapse (`morPartialMerge`) instead of the write-time fold. Shares
-    * q85's oracle verbatim: the per-column winners are a property of the
-    * fragment SET, independent of which side of the read/write boundary
-    * composes them — exactly the associativity the `_pts` map buys.
+    * collapse (`LakeTable.partialCollapse` over the delta stack) instead
+    * of the write-time fold. Shares q85's oracle verbatim: the per-column
+    * winners are a property of the fragment SET, independent of which
+    * side of the read/write boundary composes them — exactly the
+    * associativity the `_pts` map buys.
     */
   private def q94(spark: SparkSession, dir: String): DataFrame = {
     val lake = new LakeTable(

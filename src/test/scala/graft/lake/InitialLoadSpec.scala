@@ -43,6 +43,34 @@ class InitialLoadSpec extends SparkSpec {
     }
   }
 
+  test("fresh-partition fast path breaks same-key same-_ts ties like the slow path") {
+    // Each key's five rows share one partition and one `_ts` and differ in
+    // payload, so only the content-hash tie-break picks the winner; the
+    // map column takes the hash's to_json lane.
+    val tied = spark.range(0, 200).select(
+      concat(lit("k"), col("id") % 40).as(LakeTable.KeyCol),
+      (col("id") % 40 % 3).as(LakeTable.TsCol),
+      concat(lit("p"), col("id") % 5).as("p"),
+      col("id").as("payload"),
+      map(lit("id"), col("id")).as("attrs"))
+    val fast = new PartitionedLakeTable(spark,
+      tempDir("il-tie-fast-").resolve("t").toString, "p", numBuckets = 4,
+      bloomOnWrite = false)
+    val slow = new PartitionedLakeTable(spark,
+      tempDir("il-tie-slow-").resolve("t").toString, "p", numBuckets = 4,
+      bloomOnWrite = true)
+    fast.upsert(tied, commitId = "b1")
+    slow.upsert(tied, commitId = "b1")
+    def state(t: PartitionedLakeTable) = t.snapshot
+      .select(col(LakeTable.KeyCol), col(LakeTable.TsCol), col("p"), col("payload"),
+        col("attrs")("id"))
+      .as[(String, Long, String, Long, Long)].collect().sortBy(_._1).toSeq
+    val got = state(fast)
+    assert(got.size === 40)
+    assert(got.forall(r => r._4 == r._5)) // one winning row, not a column mix
+    assert(got === state(slow))
+  }
+
   test("replayed commitId is a no-op; later upserts merge on top") {
     val dir = tempDir("il-replay-").resolve("t").toString
     val t = new PartitionedLakeTable(spark, dir, "p", numBuckets = 4,
