@@ -141,6 +141,13 @@ final class PartitionedLakeTable(
   private def partDir(v: String): String =
     basePath + "/" + splitVals(v).map(c => PartPrefix + encode(c)).mkString("/")
 
+  /** The commitId a table-level commit records in one partition (`p=<v>`)
+    * or for its global deletes, so a replay finds each of its commits;
+    * an empty commitId stays empty (no idempotency asked for).
+    */
+  private def scoped(commitId: String, scope: String): String =
+    if (commitId.isEmpty) "" else s"$commitId:$scope"
+
   /** One cached handle per partition value: `LakeTable` caches immutable
     * per-version metadata on the handle (commit times, stats sidecars) —
     * a fresh handle per call would re-read those small files from
@@ -410,9 +417,7 @@ final class PartitionedLakeTable(
     try {
       val tasks = values.map { v =>
         new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = run(
-            partitionTable(v), v,
-            if (commitId.isEmpty) "" else s"$commitId:p=$v")
+          def call(): Unit = run(partitionTable(v), v, scoped(commitId, s"p=$v"))
         }
       }.asJava
       pool.invokeAll(tasks).asScala.foreach(_.get()) // rethrow failures
@@ -621,8 +626,7 @@ final class PartitionedLakeTable(
           .unescapePathName(d.stripPrefix(leaf + "="))
         if (freshSet.contains(v)) {
           val ok = partitionTable(v).adoptInitialLoad(
-            new HPath(tmpPath, d), schema,
-            if (commitId.isEmpty) "" else s"$commitId:p=$v")
+            new HPath(tmpPath, d), schema, scoped(commitId, s"p=$v"))
           if (ok) adopted += v
         }
       }
@@ -765,7 +769,7 @@ final class PartitionedLakeTable(
       if (hasGlobalDeletes)
         delete(
           delRows.filter(col("_p").isNull).select(LakeTable.KeyCol),
-          commitId = if (commitId.isEmpty) "" else s"$commitId:global")
+          commitId = scoped(commitId, "global"))
     } finally {
       cachedUp.unpersist(blocking = false)
       delRows.unpersist(blocking = false)
@@ -825,7 +829,7 @@ final class PartitionedLakeTable(
         delete(
           cached.filter(partitionCols.map(c => cached(c).isNull).reduce(_ || _))
             .select(LakeTable.KeyCol),
-          commitId = if (commitId.isEmpty) "" else s"$commitId:global")
+          commitId = scoped(commitId, "global"))
     } finally cached.unpersist(blocking = false)
   }
 
@@ -933,8 +937,7 @@ final class PartitionedLakeTable(
     */
   def addColumns(cols: org.apache.spark.sql.types.StructType, commitId: String = ""): Unit =
     partitions.foreach { v =>
-      partitionTable(v).addColumns(
-        cols, if (commitId.isEmpty) "" else s"$commitId:p=$v")
+      partitionTable(v).addColumns(cols, scoped(commitId, s"p=$v"))
     }
 
   /** Manifest-only type widening across every committed partition — see
@@ -947,8 +950,7 @@ final class PartitionedLakeTable(
       s"cannot change the partition column '$name' — its values are " +
         "directory names under the recorded partition type")
     partitions.foreach { v =>
-      partitionTable(v).widenColumn(
-        name, to, if (commitId.isEmpty) "" else s"$commitId:p=$v")
+      partitionTable(v).widenColumn(name, to, scoped(commitId, s"p=$v"))
     }
   }
 
@@ -966,8 +968,7 @@ final class PartitionedLakeTable(
     require(partitions.nonEmpty,
       s"empty table at $basePath — the first write defines the schema")
     partitions.foreach { v =>
-      partitionTable(v).renameColumn(
-        from, to, if (commitId.isEmpty) "" else s"$commitId:p=$v")
+      partitionTable(v).renameColumn(from, to, scoped(commitId, s"p=$v"))
     }
   }
 
@@ -981,8 +982,7 @@ final class PartitionedLakeTable(
     require(partitions.nonEmpty,
       s"empty table at $basePath — the first write defines the schema")
     partitions.foreach { v =>
-      partitionTable(v).dropColumn(
-        name, if (commitId.isEmpty) "" else s"$commitId:p=$v")
+      partitionTable(v).dropColumn(name, scoped(commitId, s"p=$v"))
     }
   }
 
@@ -992,8 +992,7 @@ final class PartitionedLakeTable(
     */
   def compact(commitId: String = ""): Unit =
     partitions.foreach { v =>
-      partitionTable(v).compact(
-        if (commitId.isEmpty) "" else s"$commitId:p=$v")
+      partitionTable(v).compact(scoped(commitId, s"p=$v"))
     }
 
   /** Full-table read (union of partitions, partition value re-attached). */
@@ -1211,7 +1210,7 @@ final class PartitionedLakeTable(
   def isCommitted(commitId: String, among: Seq[String]): Boolean =
     commitId.nonEmpty &&
       among.filter(_ != null).distinct
-        .exists(v => partitionTable(v).isCommitted(s"$commitId:p=$v"))
+        .exists(v => partitionTable(v).isCommitted(scoped(commitId, s"p=$v")))
 }
 
 object PartitionedLakeTable {

@@ -910,6 +910,73 @@ class LakeTableSpec extends SparkSpec {
     assert(lt.latestVersion.contains(7L), "6 racers + seed = 7 versions")
   }
 
+  test("manifest-only commits racing data commits all land; replays are no-ops") {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val dir = tempDir("lake-").toString
+    new LakeTable(spark, dir, numBuckets = 2).upsert(
+      Seq(("seed", 0L, "s", 7, "o")).toDF(LakeTable.KeyCol, LakeTable.TsCol, "payload", "n", "old"))
+    // Six racers on fresh handles: each other racer publishes once, so no
+    // racer loses more than MaxCommitRetries times.
+    val ops: Seq[(String, LakeTable => Unit)] =
+      (0 until 3).map(i => s"up$i" -> ((t: LakeTable) => t.upsert(rows((s"t$i", 1L, s"v$i")), s"up$i"))) ++
+        Seq(
+          "add" -> ((t: LakeTable) => { t.addColumns(StructType(Seq(StructField("added", StringType))), "add"); () }),
+          "widen" -> ((t: LakeTable) => { t.widenColumn("n", LongType, "widen"); () }),
+          "rename" -> ((t: LakeTable) => { t.renameColumn("old", "renamed", "rename"); () }))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(ops.size)
+    val results =
+      try {
+        import scala.jdk.CollectionConverters._
+        val tasks = ops.map { case (id, op) =>
+          new java.util.concurrent.Callable[Either[Throwable, String]] {
+            def call() =
+              try { op(new LakeTable(spark, dir, 2)); Right(id) }
+              catch { case e: Throwable => Left(e) }
+          }
+        }.asJava
+        pool.invokeAll(tasks).asScala.map(_.get()).toSeq
+      } finally pool.shutdown()
+    val failures = results.collect { case Left(e) => e }
+    assert(failures.isEmpty, s"every racer must retry past publish conflicts: $failures")
+    val lt = new LakeTable(spark, dir, 2)
+    assert(lt.latestVersion.contains(7L), "6 racers + seed = 7 versions")
+    val snap = lt.snapshot
+    assert(snap.select("_key").as[String].collect().toSet ==
+      Set("seed", "t0", "t1", "t2"))
+    // all three schema changes survive every re-merge on top of them
+    assert(snap.schema("n").dataType == LongType)
+    assert(snap.columns.contains("added") && snap.columns.contains("renamed"))
+    assert(!snap.columns.contains("old"))
+    assert(snap.filter(col("_key") === "seed").select("n", "renamed").as[(Long, String)]
+      .collect().toSeq == Seq((7L, "o")))
+    // a replay of every commitId, on a fresh handle, publishes nothing
+    ops.foreach { case (_, op) => op(new LakeTable(spark, dir, 2)) }
+    assert(new LakeTable(spark, dir, 2).latestVersion.contains(7L))
+  }
+
+  test("an affected-bucket hint that misses a written bucket fails the commit, no trace") {
+    val dir = tempDir("lake-").toString
+    val lt = new LakeTable(spark, dir, numBuckets = 4)
+    val byBucket = (0 until 64).map(i => s"k$i").groupBy(LakeTable.bucketOfKey(_, 4))
+    val Seq(a, b) = byBucket.keys.toSeq.sorted.take(2)
+    val Seq(ka) = byBucket(a).take(1)
+    val Seq(kb1, kb2) = byBucket(b).take(2)
+    lt.upsert(rows((ka, 1L, "a"), (kb1, 1L, "b1"), (kb2, 1L, "b2")), "seed")
+    val before = lt.snapshot.select("_key", "payload").as[(String, String)].collect().sorted
+    val v = lt.latestVersion
+    // the batch touches buckets a and b; the hint names only a
+    val e = intercept[IllegalStateException](
+      lt.upsert(rows((ka, 2L, "a'"), (kb1, 2L, "b1'")), "bad", Some(Set(a))))
+    assert(e.getMessage.contains(s"buckets $b "), e.getMessage)
+    assert(lt.latestVersion == v)
+    assert(lt.snapshot.select("_key", "payload").as[(String, String)]
+      .collect().sorted.toSeq == before.toSeq)
+    // every data dir left on disk is one the latest manifest references
+    val live = lt.readManifest(v.get).buckets.values.map(_.split("/")(1)).toSet
+    val onDisk = new java.io.File(s"$dir/${LakeTable.DataDirName}").list().toSet
+    assert(onDisk == live, s"unreferenced data dirs: ${onDisk -- live}")
+  }
+
   test("generic Hadoop-FS commit protocol: lifecycle green, double publish rejected") {
     // Force the rename-if-absent branch (the one HDFS would take) instead
     // of the local hard-link fast path; the whole lifecycle must behave
