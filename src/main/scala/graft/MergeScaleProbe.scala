@@ -1,23 +1,20 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.lake.{LakeTable, PartitionedLakeTable}
 
-/** Scale-evidence probe for the SQL-MERGE membership-probe path (r18):
+/** Scale-evidence probe for the SQL-MERGE membership-probe path:
   * the 100 TB claims are (a) probe cost scales with the BATCH, not the
   * table — blooms prove most absent keys absent and only candidate
   * buckets scan; (b) the partitioned probe resolves ALL partitions'
-  * candidate buckets in ONE driver job (r17 ran one eager job per
+  * candidate buckets in ONE driver job (not one eager job per
   * partition); (c) in-band routing shrinks even that to the partitions
   * the batch names. This probe MEASURES all three against a fixed
   * synthetic table: batch sizes 1x/4x/16x over a constant corpus for
-  * (a); a driver-job counter (SparkListener) plus wall/tasks for (b)
-  * and (c). Record the numbers in BASELINE.md (ScaleProbe protocol).
+  * (a); `BenchProbe`'s job counter plus wall/tasks for (b) and
+  * (c). Record the numbers in BASELINE.md (ScaleProbe protocol).
   *
   * Usage: `sbt "runMain graft.MergeScaleProbe"` (~2-3 min; one JSON
   * line per measurement).
@@ -34,10 +31,6 @@ object MergeScaleProbe {
     spark.sparkContext.setLogLevel("WARN")
     val probe = new org.apache.spark.graft.BenchProbe
     probe.install(spark.sparkContext)
-    val jobs = new AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    })
 
     val root = java.nio.file.Files.createTempDirectory("mergeprobe-").toString
 
@@ -50,13 +43,12 @@ object MergeScaleProbe {
 
     def measure(op: String, scale: Int, batch: Long)(run: => Long): Unit = {
       probe.harvest(spark.sparkContext)
-      jobs.set(0)
       val t0 = System.nanoTime()
       val out = run
       val wallMs = (System.nanoTime() - t0) / 1000000L
       val st = probe.harvest(spark.sparkContext)
       println(s"""{"op":"$op","scale":$scale,"batch":$batch,"out_rows":$out,""" +
-        s""""wall_ms":$wallMs,"driver_jobs":${jobs.get()},""" +
+        s""""wall_ms":$wallMs,"driver_jobs":${st("jobs")},""" +
         Seq("tasks", "shuffle_read_b", "shuffle_write_b", "spill_b")
           .map(k => s""""$k":${st(k)}""").mkString(",") + "}")
     }

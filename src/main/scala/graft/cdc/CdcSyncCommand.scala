@@ -285,31 +285,26 @@ object CdcSyncCommand {
               plake.bulkInsert(typed, commitId = commitIdFor(db, table, "upsert"))
               plake.deleteRouted(delRouted, commitId = commitIdFor(db, table, "delete"))
             } else {
-              // ONE distinct-collect of the batch's partition identities
-              // feeds both the migration probe and the merge dispatch
-              // (mergeWith) — merge would otherwise re-run the same
-              // distinct job over the decoded batch (r9 review).
-              val upParts = plake.distinctPartitionValues(typed, "updates")
               // Deterministic replay: a legacy scoped commit can only
               // live in a partition this batch's own upserts name, so
-              // the probe is bounded to the batch's partitions instead
-              // of a full history scan of every table partition.
+              // the probe is bounded to the batch's partitions (one
+              // exchange-free collect) instead of a full history scan
+              // of every table partition.
+              val upParts = plake.partitionValues(typed, "updates")
               if (plake.isCommitted(commitIdFor(db, table, "upsert"), upParts)) {
                 // MIGRATION replay: this batch (fully or partially)
                 // committed under the pre-merge two-id scheme before the
                 // upgrade. Re-running it through those ids completes or
                 // no-ops it; deriving the new ":merge" id instead would
                 // match nothing and re-apply the whole batch as a
-                // phantom commit (r9 review).
+                // phantom commit.
                 plake.upsert(typed, commitId = commitIdFor(db, table, "upsert"))
                 plake.deleteRouted(delRouted, commitId = commitIdFor(db, table, "delete"))
               } else
                 // Upserts + routed deletes in ONE commit per touched
-                // partition (one manifest publish + bloom pass per
-                // batch, VERDICT r8 #2 — previously two commit
-                // constants).
-                plake.mergeWith(
-                  typed, delRouted, commitIdFor(db, table, "merge"), upParts)
+                // partition: one manifest publish + bloom pass per batch
+                // instead of two commit constants.
+                plake.merge(typed, delRouted, commitIdFor(db, table, "merge"))
             }
             if (compactDue) plake.compact(commitIdFor(db, table, "compact"))
           case None =>
@@ -328,7 +323,7 @@ object CdcSyncCommand {
               lake.upsert(typed, commitId = commitIdFor(db, table, "upsert"))
               lake.delete(delKeys, commitId = commitIdFor(db, table, "delete"))
             } else
-              // One combined commit per table per batch (VERDICT r8 #2).
+              // One combined commit per table per batch.
               lake.merge(typed, delKeys, commitId = commitIdFor(db, table, "merge"))
             if (compactDue) lake.compact(commitIdFor(db, table, "compact"))
         }

@@ -1310,10 +1310,8 @@ final class LakeTable(
         // every manifest bucket, else a bucket whose rows are ALL
         // tombstoned yields no snapshot keys and its base+tombstone delta
         // stack would survive compaction forever.
-        // The distinct-bucket set collects via ONE exchange-free RDD
-        // aggregate (per-task BitSet, OR-merged on the driver — bounded by
-        // numBuckets bits): distinct().collect() would plan an exchange,
-        // so AQE would run 2-3 stage jobs per commit for a handful of ints.
+        // The distinct-bucket set is the routing collect's one-group case:
+        // one exchange-free job.
         val affected = hinted.getOrElse(
           withJobDesc("affected")(LakeTable.collectBuckets(
             inc.select(bucketOf(col(KeyCol)).as("b")), numBuckets)))
@@ -2406,26 +2404,38 @@ final class LakeTable(
 
 object LakeTable {
 
-  /** Distinct values of a single non-null int bucket column, collected in
-    * ONE exchange-free job (r21): each task folds its rows into a BitSet
-    * (≤ numBuckets bits), the driver ORs them. `distinct().collect()`
-    * planned an exchange, so AQE materialized 2-3 stage jobs per commit
-    * for a handful of ints — pure per-commit latency on lifecycle-heavy
-    * tables.
+  /** The one routing collect: the distinct (group, bucket) pairs of a
+    * frame of (nullable string group, non-null int bucket in
+    * [0, width)), in ONE exchange-free job. Each task folds its rows into
+    * a group → BitSet map and the driver ORs them, so the result is
+    * bounded by groups × width bits. A null group comes back as None,
+    * apart from every named group. `distinct().collect()` would plan an
+    * exchange, and AQE would run 2-3 stage jobs for a handful of ints.
+    * Unsafe rows are reused per task, so each group string is copied
+    * before the row advances.
     */
-  private[lake] def collectBuckets(df: DataFrame, numBuckets: Int): Set[Int] = {
-    val arrs = df.queryExecution.toRdd.mapPartitions { it =>
-      val seen = new java.util.BitSet(numBuckets)
-      while (it.hasNext) seen.set(it.next().getInt(0))
-      Iterator.single(seen.toLongArray)
+  private[lake] def bucketsByGroup(df: DataFrame, width: Int): Map[Option[String], Set[Int]] = {
+    val perTask = df.queryExecution.toRdd.mapPartitions { it =>
+      val m = new java.util.HashMap[String, java.util.BitSet]()
+      while (it.hasNext) {
+        val r = it.next()
+        val g = if (r.isNullAt(0)) null else r.getUTF8String(0).toString
+        m.computeIfAbsent(g, _ => new java.util.BitSet(width)).set(r.getInt(1))
+      }
+      Iterator.single(m.asScala.toSeq.map { case (g, bs) => (g, bs.toLongArray) })
     }.collect()
-    val acc = new java.util.BitSet(numBuckets)
-    arrs.foreach(a => acc.or(java.util.BitSet.valueOf(a)))
-    val out = Set.newBuilder[Int]
-    var i = acc.nextSetBit(0)
-    while (i >= 0) { out += i; i = acc.nextSetBit(i + 1) }
-    out.result()
+    perTask.flatten.groupMapReduce(p => Option(p._1))(p => java.util.BitSet.valueOf(p._2)) {
+      (a, b) => a.or(b); a
+    }.map { case (g, bs) => g -> bs.stream().toArray.toSet }
   }
+
+  /** Distinct values of a single non-null int bucket column: the routing
+    * collect with one group.
+    */
+  private[lake] def collectBuckets(df: DataFrame, numBuckets: Int): Set[Int] =
+    bucketsByGroup(df.select(lit(null).cast("string"), df.col(df.columns.head)), numBuckets)
+      .getOrElse(None, Set.empty)
+
   private[lake] def containsMap(dt: DataType): Boolean = dt match {
     case _: org.apache.spark.sql.types.MapType => true
     case s: StructType => s.fields.exists(f => containsMap(f.dataType))

@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StringType}
 
@@ -25,7 +25,7 @@ import org.apache.spark.sql.types.{DataType, StringType}
   *
   * Scale properties layer cleanly:
   *  - writes touch only the partitions present in the batch (driver loop
-  *    over a bounded distinct-collect, same as the CDC table loop);
+  *    over one bounded routing collect, [[routed]]);
   *  - within a partition, only affected key buckets rewrite;
   *  - reads with a partition predicate open only those partition dirs
   *    (partition pruning before any file I/O — composite layouts prune on
@@ -233,23 +233,21 @@ final class PartitionedLakeTable(
   private def materializedKeys(keys: DataFrame): DataFrame =
     keys.select(LakeTable.KeyCol).distinct().localCheckpoint()
 
-  /** Candidate (partition, bucket) pairs for a key set, resolved in ONE
-    * driver job across every probed partition (ADVICE r17: the
-    * per-partition probes each ran their own eager candidate collect —
-    * O(partitions) sequential driver round-trips per SQL MERGE). Each
-    * partition's key set is bloom-pruned against ITS sidecars first, so
-    * partitions provably holding none of the keys contribute nothing;
-    * the collected result is tiny (≤ partitions × numBuckets ints).
+  /** Candidate (partition, bucket) pairs for a key set, resolved by the
+    * routing collect ([[LakeTable.bucketsByGroup]]) in ONE driver job
+    * across every probed partition, instead of one eager candidate
+    * collect per partition. Each partition's key set is bloom-pruned
+    * against ITS sidecars first, so partitions provably holding none of
+    * the keys contribute nothing.
     */
   private def candidateBuckets(
       ks: DataFrame,
       targets: Seq[(String, LakeTable, LakeTable.Manifest)]): Map[String, Set[Int]] =
-    targets.map { case (v, t, m) =>
-      t.bloomPrune(ks, m)
-        .select(lit(v).as("_p"), t.bucketOf(col(LakeTable.KeyCol)).as("_b"))
-    }.reduce(_.union(_)).distinct().collect()
-      .groupBy(_.getString(0))
-      .map { case (p, rows) => p -> rows.map(_.getInt(1)).toSet }
+    LakeTable.bucketsByGroup(
+      targets.map { case (v, t, m) =>
+        t.bloomPrune(ks, m).select(lit(v), t.bucketOf(col(LakeTable.KeyCol)))
+      }.reduce(_.union(_)),
+      numBuckets).collect { case (Some(v), bs) => v -> bs }
 
   /** Exact key-membership probe (r17, for SQL MERGE's branch split on
     * partitioned targets; batched + routable + pinnable r18). `_key`
@@ -347,32 +345,31 @@ final class PartitionedLakeTable(
     writePartitions(updates, commitId, dedupe = false)(
       (lt, part, cid, hint) => lt.bulkInsert(part, cid, "partition", hint))
 
-  /** Distinct partition identities of `df`, with the null guard every
-    * dispatch path shares (and, on composite layouts, the no-`/`
-    * component guard that keeps the joined identity unambiguous).
+  /** The one driver-side check of routed partition identities: a null
+    * identity (any null component) or a composite component embedding
+    * '/' (the joined identity would be ambiguous) fails loudly. Returns
+    * the identities, sorted.
     */
-  private def partitionValues(df: DataFrame, what: String): Seq[String] =
-    df.select(partitionCols.map(c => col(c).cast("string")): _*)
-      .distinct().collect().toSeq.map { r =>
-        partitionCols.indices.map { i =>
-          val x = r.getString(i)
-          require(x != null,
-            s"null ${partitionCols(i)} in $what — partition values must be non-null")
-          require(partitionCols.size == 1 || !x.contains("/"),
-            s"partition value '$x' for ${partitionCols(i)} in $what contains " +
-              "'/' — composite partition components cannot embed the path separator")
-          x
-        }.mkString("/")
-      }
+  private def checked(ids: Iterable[Option[String]], what: String): Seq[String] =
+    ids.toSeq.map { id =>
+      require(id.isDefined,
+        s"null ${partitionCols.mkString(",")} in $what — partition values must be non-null")
+      val v = id.get
+      require(partitionCols.size == 1 || v.split("/", -1).length == partitionCols.size,
+        s"partition value '$v' for (${partitionCols.mkString(",")}) in $what has a " +
+          "component containing '/' — composite partition components cannot embed the " +
+          "path separator")
+      v
+    }.sorted
 
-  /** Public per-batch distinct-collect (CDC pre-collects ONCE to feed
-    * both the migration probe and [[mergeWith]] — r9 review).
+  /** Distinct partition identities of `df`, checked, in one exchange-free
+    * job. The CDC sink collects them once per batch for its replay probe.
     */
-  def distinctPartitionValues(df: DataFrame, what: String = "batch"): Seq[String] =
-    partitionValues(df, what)
+  def partitionValues(df: DataFrame, what: String = "batch"): Seq[String] =
+    checked(LakeTable.bucketsByGroup(df.select(identityCol(df), lit(0)), 1).keys, what)
 
   /** Rows of `df` belonging to partition identity `v`. */
-  private def partFilter(df: DataFrame, v: String): org.apache.spark.sql.Column =
+  private def partFilter(df: DataFrame, v: String): Column =
     partitionCols.zip(splitVals(v))
       .map { case (c, x) => df(c).cast("string") === x }
       .reduce(_ && _)
@@ -388,7 +385,7 @@ final class PartitionedLakeTable(
     * null (`concat_ws` would silently SKIP nulls and alias a different
     * partition), else the slash-joined components.
     */
-  private def identityCol(df: DataFrame): org.apache.spark.sql.Column = {
+  private def identityCol(df: DataFrame): Column = {
     val casts = partitionCols.map(c => df(c).cast("string"))
     if (casts.size == 1) casts.head
     else when(casts.map(_.isNull).reduce(_ || _), lit(null))
@@ -406,11 +403,11 @@ final class PartitionedLakeTable(
       values: Seq[String], commitId: String, clearTombstones: Boolean = true)(
       run: (LakeTable, String, String) => Unit): Unit = {
     if (values.isEmpty) return
-    // r21: pool size scales with the cluster (a quarter of the default
-    // parallelism, floor 4) instead of a flat 4 — per-partition commits
-    // are mostly driver/FS latency between small stage jobs, so deeper
-    // overlap back-fills executors (guide §2.6) without oversubscribing
-    // the scheduler; still bounded by the touched-partition count.
+    // The pool scales with the cluster (a quarter of the default
+    // parallelism, floor 4): per-partition commits are mostly driver/FS
+    // latency between small stage jobs, so deeper overlap back-fills
+    // executors without oversubscribing the scheduler; still bounded by
+    // the touched-partition count.
     val poolSize = (spark.sparkContext.defaultParallelism / 4).max(4)
       .min(values.length).max(1)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
@@ -425,137 +422,149 @@ final class PartitionedLakeTable(
     if (clearTombstones) clearRebornTombstones(values)
   }
 
-  /** Distinct (partition identity, bucket) pairs of `updates` in ONE job
-    * (r21): the per-partition-commit `affected` distinct-collects — one
-    * Spark job per partition, the dominant q113/q107 lifecycle cost —
-    * collapse into a single pre-pass whose per-partition slices are
-    * handed to the commits as [[LakeTable.upsert]] affected hints. Shares
-    * partitionValues' null / embedded-'/' validation.
+  /** Where a batch's rows go: partition identity (None for a null
+    * identity) → key buckets. Update rows' buckets lie in
+    * [0, numBuckets); routed delete keys' are offset by numBuckets, so
+    * one collect routes and tells apart both sides.
     */
-  private def partitionBucketPairs(
-      df: DataFrame, what: String): Map[String, Set[Int]] = {
-    val bucketCol = LakeTable.bucketOf(col(LakeTable.KeyCol), numBuckets)
-    val sel = df.select((partitionCols.map(c => col(c).cast("string")) :+
-      bucketCol.as("_graft_b")): _*)
-    val k = partitionCols.size
-    val nb = numBuckets
-    // ONE exchange-free job (r21, the collectBuckets shape): each task
-    // folds its rows into components -> BitSet; the driver merges.
-    // Bounded by touched-partitions × numBuckets bits. Unsafe rows are
-    // reused per task, so every component string materializes via
-    // toString before the row advances.
-    val perTask = sel.queryExecution.toRdd.mapPartitions { it =>
-      val m = new java.util.HashMap[Seq[String], java.util.BitSet]()
-      while (it.hasNext) {
-        val r = it.next()
-        val comps: Seq[String] = (0 until k).map(i =>
-          if (r.isNullAt(i)) null else r.getUTF8String(i).toString)
-        m.computeIfAbsent(comps, _ => new java.util.BitSet(nb)).set(r.getInt(k))
-      }
-      val b = Seq.newBuilder[(Seq[String], Array[Long])]
-      m.forEach((ks, bs) => b += ((ks, bs.toLongArray)))
-      Iterator.single(b.result())
-    }.collect()
-    val merged = new java.util.HashMap[Seq[String], java.util.BitSet]()
-    perTask.foreach(_.foreach { case (ks, arr) =>
-      merged.computeIfAbsent(ks, _ => new java.util.BitSet(nb))
-        .or(java.util.BitSet.valueOf(arr))
-    })
-    val out = Map.newBuilder[String, Set[Int]]
-    merged.forEach { (comps, bs) =>
-      val v = partitionCols.indices.map { i =>
-        val x = comps(i)
-        require(x != null,
-          s"null ${partitionCols(i)} in $what — partition values must be non-null")
-        require(partitionCols.size == 1 || !x.contains("/"),
-          s"partition value '$x' for ${partitionCols(i)} in $what contains " +
-            "'/' — composite partition components cannot embed the path separator")
-        x
-      }.mkString("/")
-      val ints = Set.newBuilder[Int]
-      var i = bs.nextSetBit(0)
-      while (i >= 0) { ints += i; i = bs.nextSetBit(i + 1) }
-      out += v -> ints.result()
-    }
-    out.result()
+  private type Routes = Map[Option[String], Set[Int]]
+
+  /** A routed delete key's partition identity column. */
+  private val RouteCol = "_p"
+
+  private def collectRoutes(ups: Option[DataFrame], dels: Option[DataFrame]): Routes = {
+    def bucket = LakeTable.bucketOf(col(LakeTable.KeyCol), numBuckets)
+    val sides = ups.map(u => u.select(identityCol(u), bucket)).toSeq ++
+      dels.map(_.select(col(RouteCol), bucket + numBuckets))
+    LakeTable.bucketsByGroup(sides.reduce(_.union(_)), 2 * numBuckets)
   }
 
-  /** The staged batch every partition's write consumes (r21): clustered
-    * on (partition columns, key bucket) so each partition's filtered scan
-    * prunes to its own cached blocks (in-memory batch stats pruning)
-    * instead of every consumer re-scanning — or worse re-COMPUTING — the
-    * whole source plan per partition. The bucket term salts the layout so
-    * a batch touching FEW partitions still spreads over the cluster
-    * (clustering by the partition columns alone collapsed a 2-leaf CDC
-    * batch into 2 fat blocks — single-threaded consumers); sized to
-    * defaultParallelism: scale-adaptive, never a constant (ADVICE r21:
-    * the initial-load fast path separately sizes to
-    * max(defaultParallelism, fresh partitions)).
+  /** The checked identities the update rows route to. */
+  private def updateTargets(r: Routes): Seq[String] =
+    checked(r.collect { case (v, bs) if bs.exists(_ < numBuckets) => v }, "updates")
+
+  /** The named identities the routed delete keys route to. */
+  private def deleteTargets(r: Routes): Seq[String] =
+    r.collect { case (Some(v), bs) if bs.exists(_ >= numBuckets) => v }.toSeq
+
+  private def hasGlobalDeletes(r: Routes): Boolean =
+    r.get(None).exists(_.exists(_ >= numBuckets))
+
+  /** `df` with an in-plan assertion that every row carries partition
+    * identity `v`, folded into the `_ts` column every commit keeps. A
+    * projection, never a filter: the optimizer may push a filter below
+    * the caller's own joins and filters, onto rows that plan drops.
     */
-  private def stagedBatch(df: DataFrame): DataFrame =
+  private def asserted(df: DataFrame, v: String): DataFrame = {
+    require(df.columns.contains(LakeTable.TsCol),
+      s"incoming data must contain a '${LakeTable.TsCol}' column")
+    df.withColumn(LakeTable.TsCol,
+      when(identityCol(df) === v, df(LakeTable.TsCol)).otherwise(raise_error(lit(
+        s"a row routed to partition '$v' of $basePath carries another partition " +
+          "value when written — partition values must be deterministic"))))
+  }
+
+  private def deleteSlice(dels: DataFrame, v: String): DataFrame =
+    dels.filter(col(RouteCol) === v).select(LakeTable.KeyCol)
+
+  /** A staged frame: clustered on (partition columns `by`, key bucket) so
+    * each partition's filtered scan prunes to its own cached blocks. The
+    * bucket term salts the layout so a batch touching FEW partitions
+    * still spreads over the cluster (clustering by the partition columns
+    * alone collapsed a 2-leaf CDC batch into 2 fat blocks); sized to
+    * defaultParallelism, never a constant (the initial-load fast path
+    * separately sizes to max(defaultParallelism, fresh partitions)).
+    */
+  private def stagedBatch(df: DataFrame, by: Seq[String]): DataFrame =
     df.repartition(
       spark.sparkContext.defaultParallelism,
-      (partitionCols.map(col) :+
-        LakeTable.bucketOf(col(LakeTable.KeyCol), numBuckets)): _*)
+      (by.map(col) :+ LakeTable.bucketOf(col(LakeTable.KeyCol), numBuckets)): _*)
+
+  /** A routed batch as its dispatch reads it: the routes, the partitions
+    * to dispatch, partition v's update rows (partition columns dropped)
+    * and delete keys, the null-identity delete keys for the global path,
+    * and a multi-target batch's staged updates.
+    */
+  private final class Routed(
+      val routes: Routes,
+      val targets: Seq[String],
+      val ups: String => DataFrame,
+      val dels: String => DataFrame,
+      val globalDels: Option[DataFrame],
+      val staged: Option[DataFrame])
+
+  /** The one staging step of every routed write: upsert and bulkInsert
+    * (updates only), merge (updates and delete keys) and routed deletes
+    * (delete keys only). `targetsOf` picks the partitions to dispatch
+    * from a routing.
+    *
+    * A batch with updates first routes its RAW frames in one
+    * exchange-free pre-pass. If it has at most one target and no global
+    * deletes, it skips the staging exchange: its slices persist lazily
+    * (one consumer, no cold-block race), because a commit plan references
+    * its source more than once (merge's update branch and in-batch
+    * semi-join, the delete prune and anti-join, a zorder commit's lane
+    * normalization, a publish-race retry) and an unstaged source would
+    * re-run in full per reference. That commit re-evaluates the raw
+    * frame, so the update slice asserts in-plan that every row still
+    * carries the routed identity: a non-deterministic partition value
+    * fails the commit instead of vanishing.
+    *
+    * Otherwise the frames are persisted once, and ONE job materializes
+    * the caches and routes from them. Materializing before the concurrent
+    * per-partition consumers start keeps them from racing on cold blocks
+    * (each racer re-runs the staging stages); routing from the caches
+    * makes dispatch follow the rows the commits read, never a separate
+    * evaluation of the batch. A batch with updates is staged first, so
+    * each partition's scans prune to its own cached blocks; a delete-only
+    * batch is a narrow key projection and persists unshuffled, so its one
+    * job runs no exchange. Batch-sized by contract; every cache is
+    * dropped before returning.
+    */
+  private def routed(ups: Option[DataFrame], dels: Option[DataFrame])(
+      targetsOf: Routes => Seq[String])(run: Routed => Unit): Unit = {
+    val raw = ups.map(_ => collectRoutes(ups, dels))
+    ups.foreach(u => writeMetaIfAbsent(partitionCols.map(c => u.schema(c).dataType)))
+    raw.filter(r => targetsOf(r).size <= 1 && !hasGlobalDeletes(r)) match {
+      case Some(r) =>
+        val one = targetsOf(r)
+        val upSlices = for (u <- ups.toSeq; v <- one) yield dropPartCols(asserted(u, v)).persist()
+        val delSlices = for (d <- dels.toSeq; v <- one) yield deleteSlice(d, v).persist()
+        try run(new Routed(r, one, _ => upSlices.head, _ => delSlices.head, None, None))
+        finally (upSlices ++ delSlices).foreach(_.unpersist(blocking = false))
+      case None =>
+        val staged = Seq(ups -> partitionCols, dels -> Seq(RouteCol)).map { case (df, by) =>
+          df.map(d => (if (ups.isEmpty) d else stagedBatch(d, by)).persist())
+        }
+        val Seq(cachedUps, cachedDels) = staged
+        try {
+          val routes = collectRoutes(cachedUps, cachedDels)
+          run(new Routed(routes, targetsOf(routes),
+            v => dropPartCols(cachedUps.get.filter(partFilter(cachedUps.get, v))),
+            v => deleteSlice(cachedDels.get, v),
+            cachedDels.filter(_ => hasGlobalDeletes(routes))
+              .map(_.filter(col(RouteCol).isNull).select(LakeTable.KeyCol)),
+            cachedUps))
+        } finally staged.flatten.foreach(_.unpersist(blocking = false))
+    }
+  }
 
   private def writePartitions(
       updates: DataFrame, commitId: String, dedupe: Boolean)(
       write: (LakeTable, DataFrame, String, Option[Set[Int]]) => Unit): Unit = {
     requirePartCols(updates, "updates")
-    // r21 (guide §2.4/§5): ONE pre-pass job collects partition values AND
-    // every partition's affected-bucket set; a multi-partition batch is
-    // then staged (repartitioned on the partition columns) and persisted
-    // ONCE. Every partition's write previously re-evaluated `updates`
-    // under its own filter as a SEPARATE action — AQE stage reuse never
-    // crosses actions — so an unpersisted batch re-ran the full source
-    // plan once per partition (q113's 15-leaf CTAS paid 15 source scans),
-    // plus one affected distinct-collect job per commit. Batch-sized by
-    // contract; the cache is dropped before returning.
-    // r22 (VERDICT r21 #6): the pre-pass runs on the RAW batch (a narrow
-    // projection) so a batch touching ONE partition skips the staging
-    // exchange + persist entirely — its single commit evaluates the
-    // source exactly once anyway, and the hint already carries its
-    // bucket set.
-    val pairs = partitionBucketPairs(updates, "updates")
-    val values = pairs.keys.toSeq
-    writeMetaIfAbsent(partitionCols.map(c => updates.schema(c).dataType))
-    if (values.size <= 1) {
-      // No staging EXCHANGE — but still persist the filtered slice
-      // (lazily: one consumer, no cold-block race): a zorder commit's
-      // lane-normalization collect and any publish-race retry re-evaluate
-      // the incoming plan, and an unstaged source would re-run in full.
-      val slices = values.map(v =>
-        v -> dropPartCols(updates.filter(partFilter(updates, v))).persist())
-      try dispatchPartitions(values, commitId) { (lt, v, cid) =>
-        write(lt, slices.find(_._1 == v).get._2, cid, pairs.get(v))
-      } finally slices.foreach(_._2.unpersist(blocking = false))
-      return
-    }
-    val cached = stagedBatch(updates).persist()
-    try {
-      // Materialize the staged cache in ONE job BEFORE the concurrent
-      // per-partition consumers race on cold blocks — each racer re-runs
-      // the staging plan's stages (r22 probe: q113 went 7 → 16 jobs per
-      // leaf when the pre-pass moved off the cache and left it lazy).
-      // count() scans the cached batches without decoding rows. Inside
-      // the try so a failing materialization still unpersists.
-      cached.count()
-      // r21 initial-load fast path: partitions with NO committed state
-      // take ONE cross-partition write job + driver-side adoption
-      // instead of one commit pipeline per partition — the dominant cost
-      // of a partitioned CTAS / first CDC batch (and the 100 TB initial
-      // load shape: one job for N partitions, not N jobs).
-      val adopted = initialLoadFastPath(cached, values, commitId, dedupe)
-      val rest = values.filterNot(adopted.contains)
-      dispatchPartitions(rest, commitId) { (lt, v, cid) =>
-        // The partition values are constant within the dir — elide the
-        // columns from the stored files (re-attached on read), like any
-        // partitioned table format.
-        write(lt, dropPartCols(cached.filter(partFilter(cached, v))), cid,
-          pairs.get(v))
+    routed(Some(updates), None)(updateTargets) { b =>
+      // A staged batch's partitions with no committed state take the
+      // one-job initial load; the rest commit one pipeline each, whose
+      // files elide the partition columns (constant within the dir,
+      // re-attached on read).
+      val adopted =
+        b.staged.fold(Set.empty[String])(initialLoadFastPath(_, b.targets, commitId, dedupe))
+      dispatchPartitions(b.targets.filterNot(adopted), commitId) { (lt, v, cid) =>
+        write(lt, b.ups(v), cid, b.routes.get(Some(v)))
       }
       if (adopted.nonEmpty) clearRebornTombstones(adopted.toSeq)
-    } finally cached.unpersist(blocking = false)
+    }
   }
 
   /** ONE-job initial load for the FRESH partitions of a batch: the
@@ -638,141 +647,26 @@ final class PartitionedLakeTable(
     * partition per batch (see [[LakeTable.merge]]). `deleteKeys` carries
     * the partition column (CDC delete envelopes include the deleted
     * row's payload): a partition named by updates and/or routed deletes
-    * gets one [[LakeTable.merge]] commit; delete keys with a NULL
-    * partition value fall back to the global bloom-pruned [[delete]]
-    * path (separate commits — the rare payload-less envelope case).
+    * gets one [[LakeTable.merge]] commit, hinted with its update ∪ delete
+    * buckets. Deleting from a partition that was never written is a
+    * no-op and dispatches nothing; a composite delete identity with an
+    * embedded '/' component cannot name an existing partition, so it is
+    * skipped the same way. Delete keys with a NULL partition value fall
+    * back to the global bloom-pruned [[delete]] path (separate commits —
+    * the rare payload-less envelope case).
     */
   def merge(updates: DataFrame, deleteKeys: DataFrame, commitId: String = ""): Unit = {
     requirePartCols(updates, "merge updates")
     requirePartCols(deleteKeys, "merge deleteKeys")
-    mergeWith(updates, deleteKeys, commitId, partitionValues(updates, "updates"))
-  }
-
-  /** [[merge]] with the updates' distinct partition values PRE-COLLECTED
-    * by the caller — CDC collects them once per batch for the migration
-    * probe, and re-collecting the same distinct inside merge would run a
-    * second job over the decoded batch for nothing.
-    */
-  def mergeWith(
-      updates: DataFrame,
-      deleteKeys: DataFrame,
-      commitId: String,
-      upVals: Seq[String]): Unit = {
-    requirePartCols(updates, "merge updates")
-    requirePartCols(deleteKeys, "merge deleteKeys")
-    require(
-      !upVals.contains(null),
-      s"null ${partitionCols.mkString(",")} in updates — partition values must be non-null")
-    // ONE pre-pass job (r21): the delete identities AND every routed
-    // partition's affected-bucket set — updates ∪ deletes per identity
-    // — feed the per-partition merges as affected hints (consumed only
-    // where the computed set would be identical; see LakeTable.merge).
-    // Exchange-free (the collectBuckets shape): per-task identity ->
-    // BitSet maps, merged on the driver.
-    // r22 (VERDICT r21 #6, same shape as writePartitions): the pre-pass
-    // runs on the RAW frames — narrow projections — so a batch routing
-    // to ONE partition with no global deletes skips both staging
-    // exchanges + persists entirely; its single commit evaluates each
-    // source exactly once anyway, and the hint carries its bucket set.
-    val bucketCol = LakeTable.bucketOf(col(LakeTable.KeyCol), numBuckets)
-    val delSel = deleteKeys
-      .select(col(LakeTable.KeyCol), identityCol(deleteKeys).as("_p"))
-    val sel = updates
-      .select(identityCol(updates).as("_p"), bucketCol.as("_b"))
-      .unionByName(delSel.select(col("_p"), bucketCol.as("_b")))
-    val nb = numBuckets
-    val perTask = sel.queryExecution.toRdd.mapPartitions { it =>
-      val m = new java.util.HashMap[String, java.util.BitSet]()
-      var sawNull = false
-      while (it.hasNext) {
-        val r = it.next()
-        if (r.isNullAt(0)) sawNull = true
-        else m.computeIfAbsent(r.getUTF8String(0).toString,
-          _ => new java.util.BitSet(nb)).set(r.getInt(1))
+    lazy val existing = partitions.toSet
+    val dels = deleteKeys.select(col(LakeTable.KeyCol), identityCol(deleteKeys).as(RouteCol))
+    routed(Some(updates), Some(dels)) { r =>
+      (updateTargets(r) ++ deleteTargets(r).filter(v => existing.contains(v))).distinct.sorted
+    } { b =>
+      dispatchPartitions(b.targets, commitId) { (lt, v, cid) =>
+        lt.merge(b.ups(v), b.dels(v), cid, b.routes.get(Some(v)).map(_.map(_ % numBuckets)))
       }
-      val b = Seq.newBuilder[(String, Array[Long])]
-      m.forEach((v, bs) => b += ((v, bs.toLongArray)))
-      Iterator.single((b.result(), sawNull))
-    }.collect()
-    val merged = new java.util.HashMap[String, java.util.BitSet]()
-    perTask.foreach(_._1.foreach { case (v, arr) =>
-      merged.computeIfAbsent(v, _ => new java.util.BitSet(nb))
-        .or(java.util.BitSet.valueOf(arr))
-    })
-    val hints: Map[String, Set[Int]] = {
-      val b = Map.newBuilder[String, Set[Int]]
-      merged.forEach { (v, bs) =>
-        val ints = Set.newBuilder[Int]
-        var i = bs.nextSetBit(0)
-        while (i >= 0) { ints += i; i = bs.nextSetBit(i + 1) }
-        b += v -> ints.result()
-      }
-      b.result()
-    }
-    val hasGlobalDeletes = perTask.exists(_._2)
-    writeMetaIfAbsent(partitionCols.map(c => updates.schema(c).dataType))
-    val existing = partitions.toSet
-    // Targets: every partition receiving updates, plus EXISTING partitions
-    // receiving only deletes (deleting from a partition that was never
-    // written is a no-op, skip the dispatch entirely). A composite delete
-    // identity with an embedded '/' component cannot name an existing
-    // partition (writes reject those components loudly), so it is
-    // filtered here exactly like any other never-written value.
-    val targets =
-      (upVals ++ hints.keys.filter(existing.contains)).distinct
-    if (targets.size <= 1 && !hasGlobalDeletes) {
-      // No staging EXCHANGE — but persist the filtered slices (lazily:
-      // one consumer, no cold-block race): merge's commit plan references
-      // the update source twice (ups branch + the in-batch semi-join) and
-      // the delete keys twice (prune + anti-join), and an unstaged source
-      // would re-run in full per reference.
-      val slices = targets.map { v =>
-        (v,
-          dropPartCols(updates.filter(partFilter(updates, v))).persist(),
-          delSel.filter(col("_p") === v).select(LakeTable.KeyCol).persist())
-      }
-      try dispatchPartitions(targets, commitId) { (lt, v, cid) =>
-        val (_, ups, dels) = slices.find(_._1 == v).get
-        lt.merge(ups, dels, cid, hints.get(v))
-      } finally slices.foreach { case (_, u, d) =>
-        u.unpersist(blocking = false); d.unpersist(blocking = false)
-      }
-      return
-    }
-    // r21: materialize both batch frames ONCE (same rationale as
-    // writePartitions — each routed partition's merge re-evaluates them
-    // as separate actions), clustered on the partition columns so each
-    // routed commit's scans prune to its own cached blocks. Both are
-    // batch-sized; unpersisted on exit.
-    val cachedUp = stagedBatch(updates).persist()
-    val delRows = delSel
-      .repartition(
-        spark.sparkContext.defaultParallelism,
-        col("_p"),
-        LakeTable.bucketOf(col(LakeTable.KeyCol), numBuckets))
-      .persist()
-    try {
-      // ONE materialization job before the concurrent routed merges race
-      // on cold cache blocks (see writePartitions): both frames under one
-      // count via a union of constant projections — each branch scans its
-      // own InMemoryRelation. Inside the try so a failing materialization
-      // still unpersists.
-      cachedUp.select(lit(1).as("c"))
-        .unionByName(delRows.select(lit(1).as("c"))).count()
-      dispatchPartitions(targets, commitId) { (lt, v, cid) =>
-        lt.merge(
-          dropPartCols(cachedUp.filter(partFilter(cachedUp, v))),
-          delRows.filter(col("_p") === v).select(LakeTable.KeyCol),
-          cid,
-          hints.get(v))
-      }
-      if (hasGlobalDeletes)
-        delete(
-          delRows.filter(col("_p").isNull).select(LakeTable.KeyCol),
-          commitId = scoped(commitId, "global"))
-    } finally {
-      cachedUp.unpersist(blocking = false)
-      delRows.unpersist(blocking = false)
+      b.globalDels.foreach(delete(_, commitId = scoped(commitId, "global")))
     }
   }
 
@@ -800,37 +694,21 @@ final class PartitionedLakeTable(
 
   /** Delete with in-band partition routing: `keys` carries the partition
     * column (CDC delete envelopes include the deleted row's payload), so
-    * dispatch visits ONLY the named partitions — the partition-value hint
-    * that replaces the global-index fan-out entirely. Rows with a null
-    * partition value fall back to the global path.
+    * dispatch visits ONLY the named partitions that exist — the
+    * partition-value hint that replaces the global-index fan-out
+    * entirely. Rows with a null partition value (any null component) fall
+    * back to the global path.
     */
   def deleteRouted(keys: DataFrame, commitId: String = ""): Unit = {
     requirePartCols(keys, "deleteRouted keys")
-    // r21: one materialization serves the identity collect AND every
-    // routed partition's filtered delete (separate actions otherwise
-    // re-run the key-set plan per routed partition); routed deletes
-    // dispatch from the shared bounded pool.
-    val cached = keys.persist()
-    try {
-      val values = cached
-        .select(identityCol(cached)).distinct().collect().map(_.getString(0))
-      if (values.isEmpty) return
-      val existing = partitions.toSet
-      val routed = values.filter(v => v != null && existing.contains(v)).toSeq
-      dispatchPartitions(routed, commitId, clearTombstones = false) {
-        (lt, v, cid) =>
-          lt.delete(
-            cached.filter(partFilter(cached, v)).select(LakeTable.KeyCol),
-            commitId = cid)
+    lazy val existing = partitions.toSet
+    val dels = keys.select(col(LakeTable.KeyCol), identityCol(keys).as(RouteCol))
+    routed(None, Some(dels))(deleteTargets(_).filter(v => existing.contains(v))) { b =>
+      dispatchPartitions(b.targets, commitId, clearTombstones = false) { (lt, v, cid) =>
+        lt.delete(b.dels(v), commitId = cid)
       }
-      // ANY null component makes the identity null (see identityCol) —
-      // those rows are unroutable and fall back to the global path.
-      if (values.contains(null))
-        delete(
-          cached.filter(partitionCols.map(c => cached(c).isNull).reduce(_ || _))
-            .select(LakeTable.KeyCol),
-          commitId = scoped(commitId, "global"))
-    } finally cached.unpersist(blocking = false)
+      b.globalDels.foreach(delete(_, commitId = scoped(commitId, "global")))
+    }
   }
 
   /** Re-attach one partition component under its stored type, validating
@@ -839,7 +717,7 @@ final class PartitionedLakeTable(
     * legacy string-partitioned dir after meta records a numeric type) would
     * otherwise cast to null silently and corrupt the partition column.
     */
-  private def reattached(v: String, dt: DataType): org.apache.spark.sql.Column = {
+  private def reattached(v: String, dt: DataType): Column = {
     val casted = org.apache.spark.sql.catalyst.expressions.Cast(
       org.apache.spark.sql.catalyst.expressions.Literal(
         org.apache.spark.unsafe.types.UTF8String.fromString(v), StringType),

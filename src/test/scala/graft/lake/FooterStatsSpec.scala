@@ -1,7 +1,7 @@
 package graft.lake
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.graft.BenchProbe
 import org.apache.spark.sql.functions._
 
 /** r22: the stats sidecar's parquet-FOOTER fast path must record JSON
@@ -71,31 +71,16 @@ class FooterStatsSpec extends SparkSpec {
     lt.upsert(df, commitId = "c1")
   }
 
-  private def statsJobs[A](f: => A): (A, Int) = {
-    val count = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val d = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-        if (d.startsWith("lake:stats")) count.incrementAndGet()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    val r = try f finally {
-      // Drain the async listener bus: poll until the count is stable for
-      // two consecutive 200 ms windows (bounded at 5 s) — a fixed sleep
-      // was timing-dependent under load.
-      var last = -1
-      var stable = 0
-      var waited = 0
-      while (stable < 2 && waited < 5000) {
-        Thread.sleep(200); waited += 200
-        val c = count.get()
-        if (c == last) stable += 1 else { stable = 0; last = c }
-      }
-      spark.sparkContext.removeSparkListener(l)
-    }
-    (r, count.get())
+  /** `f`'s result and the number of `lake:stats` jobs it ran, counted by a
+    * [[BenchProbe]] (its harvest drains the async listener bus first).
+    */
+  private def statsJobs[A](f: => A): (A, Long) = {
+    val probe = new BenchProbe
+    probe.install(spark.sparkContext)
+    try {
+      val r = f
+      (r, probe.harvest(spark.sparkContext).getOrElse("jobs.lake:stats", 0L))
+    } finally spark.sparkContext.removeSparkListener(probe)
   }
 
   test("footer-fed sidecar JSON equals the agg fallback's (all statable types)") {

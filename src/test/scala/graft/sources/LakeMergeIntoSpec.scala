@@ -333,6 +333,29 @@ class LakeMergeIntoSpec extends SparkSpec {
     assert(stateOf(globalT) === expected)
   }
 
+  test("INSERT-only MERGE on a PARTITIONED table skips matched rows of other partitions") {
+    import graft.lake.PartitionedLakeTable
+    n += 1
+    val name = s"mrg_t$n"
+    val dir = tempDir("merge-ins-").resolve("t").toString
+    val pt = new PartitionedLakeTable(spark, dir, "region", numBuckets = 2)
+    pt.upsert(Seq(("k2", 1L, 20L, "b"))
+      .toDF(LakeTable.KeyCol, LakeTable.TsCol, "amount", "region"))
+    spark.sql(s"CREATE TABLE $name USING `cdc-lake` OPTIONS (path '$dir', buckets '2')")
+    // k2 matches in partition b, so the inserts route to partition a alone
+    Seq(("k1", 5L, 11L, "a"), ("k2", 5L, 22L, "b"))
+      .toDF("id", "ts", "amt", "region").createOrReplaceTempView("srcins")
+    spark.sql(
+      s"""MERGE INTO $name t USING srcins s ON t._key = s.id
+         |WHEN NOT MATCHED THEN
+         |  INSERT (_key, _ts, amount, region) VALUES (s.id, s.ts, s.amt, s.region)"""
+        .stripMargin)
+    spark.catalog.refreshTable(name)
+    val got = spark.sql(s"SELECT _key, _ts, amount, region FROM $name")
+      .as[(String, Long, Long, String)].collect().map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+    assert(got === Map("k1" -> ((5L, 11L, "a")), "k2" -> ((1L, 20L, "b"))))
+  }
+
   test("composite-partition MERGE: routing needs ALL columns in-band; move guard per column (r20)") {
     import graft.lake.PartitionedLakeTable
     n += 1
