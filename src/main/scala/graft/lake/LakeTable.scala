@@ -10,7 +10,7 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{Filter => SFilter}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Copy-on-write lake table over Parquet — the engine's replacement for the
   * Hudi tables the reference writes into
@@ -534,101 +534,55 @@ final class LakeTable(
     }
   }
 
-  /** Incremental read: rows whose (`_key`, `_ts`) state changed after
-    * `sinceVersion` — inserts and updates since that commit (deletes are
-    * absent; diff keys via a left-anti the other way for tombstones).
-    * Only buckets REWRITTEN after `sinceVersion` are scanned on either
-    * side — carried-forward buckets cannot contain changes, so the diff
-    * cost scales with what actually changed, not table size.
+  /** Incremental read from `sinceVersion` to the latest version — see
+    * [[incrementalBetween]].
     */
   def incremental(sinceVersion: Long): DataFrame =
     incrementalBetween(sinceVersion, latestVersion.getOrElse(
       throw new IllegalArgumentException(s"empty table at $basePath")))
 
-  /** Rows changed in versions `(sinceVersion, untilVersion]` — the bounded
-    * variant backing [[graft.sources.LakeIncrementalSource]] (each
-    * micro-batch covers exactly one committed version range, so replays
-    * after a checkpoint restart are deterministic). `sinceVersion = 0`
-    * means "from the beginning": every row of `untilVersion`'s snapshot.
-    * Hard-deleted keys do not appear (copy-on-write incremental reads
-    * carry no tombstones — same contract as Hudi COW incremental
-    * queries); a vacuumed `sinceVersion` manifest fails loudly.
-    */
   /** Timestamp-bounded incremental read — Hudi's incremental query with
     * `read.begin.instanttime` AND `read.end.instanttime`: rows changed
     * in commits landing strictly after `beginMillis` up to and including
     * `endMillis`, resolved through the stamped commit times
     * ([[versionAt]] on each bound). A begin before the first commit
-    * reads from the table's birth; an end before the first commit (or
-    * begin >= end resolution) is an empty range with the stored schema.
+    * reads from the table's birth. A range holding no commit is empty
+    * and keeps the stored schema: both bounds resolve to one version,
+    * whose diff with itself is empty, or the end precedes every commit.
     */
   def incrementalBetweenTimes(beginMillis: Long, endMillis: Long): DataFrame = {
     require(beginMillis <= endMillis,
       s"begin $beginMillis is after end $endMillis")
-    val until = versionAt(endMillis)
     val since = versionAt(beginMillis).getOrElse(0L)
-    until match {
-      case Some(u) if since < u => incrementalBetween(since, u)
-      case _ => // nothing committed in range: empty, with the schema
-        latestManifest() match {
-          case Some(m) => readBuckets(m, Set.empty)
-          case None => spark.createDataFrame(
-            spark.sparkContext.emptyRDD[Row], new StructType())
-        }
+    versionAt(endMillis) match {
+      case Some(until) => incrementalBetween(since, until)
+      case None => latestManifest().fold(spark.emptyDataFrame)(readBuckets(_, Set.empty))
     }
   }
 
+  /** Rows visibly changed in versions `(sinceVersion, untilVersion]`: the
+    * rows of `untilVersion`'s snapshot that `sinceVersion`'s snapshot
+    * does not hold with every visible column equal (null-safe). It backs
+    * [[graft.sources.LakeIncrementalSource]]: each micro-batch covers
+    * exactly one committed version range, so a replay after a checkpoint
+    * restart is deterministic.
+    *
+    * `_ts` is a column like any other, not a change marker. An overwrite
+    * that keeps `_ts` (an equal-`_ts` upsert, a SQL `UPDATE` that does
+    * not assign `_ts`, a partial table's late fragment) is a change when
+    * it changes the visible row. A rewrite that leaves the row equal is
+    * not. `sinceVersion = 0` means "from the beginning": every row of
+    * `untilVersion`'s snapshot. Hard-deleted keys do not appear
+    * (copy-on-write incremental reads carry no tombstones, as in Hudi COW
+    * incremental queries; [[changesBetween]] carries them). A vacuumed
+    * version fails loudly.
+    */
   def incrementalBetween(sinceVersion: Long, untilVersion: Long): DataFrame = {
-    require(
-      versions().contains(untilVersion),
-      s"no committed version $untilVersion at $basePath")
-    val newest = readManifest(untilVersion)
-    if (sinceVersion == 0L)
-      return readBuckets(newest, newest.allBuckets)
-    require(
-      versions().contains(sinceVersion),
-      s"no committed version $sinceVersion at $basePath")
-    val old = readManifest(sinceVersion)
-    // A bucket changed if its base dir moved OR its delta stack did
-    // (merge-on-read commits change only `deltas`; a fold empties the
-    // stack and moves the base — both compare unequal here).
-    val changedBuckets = newest.allBuckets.filter { b =>
-      old.buckets.get(b) != newest.buckets.get(b) ||
-        old.deltas.getOrElse(b, Nil) != newest.deltas.getOrElse(b, Nil)
-    }
-    if (changedBuckets.isEmpty)
-      return readBuckets(newest, Set.empty) // empty, with schema
-    val cur = readBuckets(newest, changedBuckets)
-    val prevRaw = readBuckets(old, changedBuckets & old.allBuckets)
-    val newestSchema = newest.schema
-    if (!newestSchema.fieldNames.contains(PtsCol)) {
-      val prev = prevRaw.select(col(KeyCol), col(TsCol))
-      cur.join(broadcastIfSmall(prev), Seq(KeyCol, TsCol), "left_anti")
-    } else {
-      // mergeMode=partial: `_ts` is the MAX fragment time, so a
-      // late-arriving fragment (older event time) can change a column
-      // WITHOUT advancing `_ts` — a (key, _ts) diff would silently drop
-      // that row from incremental reads and the cdc-lake stream. Diff on
-      // visible row content instead: emit a current row unless the prior
-      // version holds the same key with ALL visible columns null-safe
-      // equal. (A late fragment that re-delivers identical values leaves
-      // the visible row unchanged and is correctly not re-emitted.)
-      // Prior side conforms to the newest schema first, so a widening or
-      // column-add alone (old value upcast / new column null both sides)
-      // does not mark every row changed.
-      val fields = cur.schema.fields
-      val prev = broadcastIfSmall(prevRaw.select(fields.map { f =>
-        if (prevRaw.columns.contains(f.name))
-          col("`" + f.name + "`").cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }.toSeq: _*)).as("_b")
-      val a = cur.as("_a")
-      val same = fields.map(f =>
-        col(s"_a.`${f.name}`") <=> col(s"_b.`${f.name}`"))
-        .reduce(_ && _)
-      a.join(prev, same, "left_anti")
-        .select(fields.map(f => col(s"_a.`${f.name}`").as(f.name)).toSeq: _*)
-    }
+    val (after, before) = versionDiff(sinceVersion, untilVersion)
+    val fields = after.schema.fields
+    val same = fields.map(f => comparable("_a", f) <=> comparable("_b", f)).reduce(_ && _)
+    after.as("_a").join(broadcastIfSmall(before).as("_b"), same, "left_anti")
+      .select(fields.map(f => col(s"_a.`${f.name}`").as(f.name)).toSeq: _*)
   }
 
   /** Row-level CHANGE FEED between two committed versions — the read
@@ -643,57 +597,85 @@ final class LakeTable(
     *     Hudi's cdc delete payload)
     *
     * A key whose row is identical at both versions emits nothing: the
-    * feed is the NET visible diff, collapsing intermediate flips —
-    * unlike [[incrementalBetween]] it carries tombstones, at the cost of
-    * reading the before side too.
-    *
-    * Scale shape: the same changed-bucket pruning as
-    * [[incrementalBetween]] (a carried-forward bucket cannot differ),
-    * plus before-only buckets (emptied + dropped by a delete or
-    * compaction — pure-tombstone sources). Both sides scan only those
-    * buckets, the before side conforms to the until-version schema
-    * (widening/column-add safe: a row that only gained a null column
-    * compares equal), and the diff is ONE full-outer self-join on
-    * `_key` with null-safe STRUCT equality — no per-column row
-    * explosion, no driver-side state; cost ∝ change volume, never table
-    * size.
+    * feed is the NET visible diff, collapsing intermediate flips. It is
+    * [[incrementalBetween]]'s diff joined the other way too, so it
+    * carries tombstones: ONE full-outer self-join on `_key` with
+    * null-safe STRUCT equality — no per-column row explosion, no
+    * driver-side state; cost ∝ change volume, never table size.
     */
   def changesBetween(sinceVersion: Long, untilVersion: Long): DataFrame = {
-    require(
-      versions().contains(untilVersion),
-      s"no committed version $untilVersion at $basePath")
-    require(
-      versions().contains(sinceVersion),
-      s"no committed version $sinceVersion at $basePath")
-    val newest = readManifest(untilVersion)
-    val old = readManifest(sinceVersion)
+    val (after, before) = versionDiff(sinceVersion, untilVersion)
+    val fields = after.schema.fields
+    def side(s: String, c: String) = col(s"$s.`$c`")
+    val nonKey = fields.filterNot(_.name == KeyCol)
+    val aRow = struct(nonKey.map(comparable("_a", _)).toSeq: _*)
+    val bRow = struct(nonKey.map(comparable("_b", _)).toSeq: _*)
+    val changeType = when(side("_b", KeyCol).isNull, lit("insert"))
+      .when(side("_a", KeyCol).isNull, lit("delete"))
+      .when(!(aRow <=> bRow), lit("update_postimage"))
+    after.as("_a").join(before.as("_b"), side("_a", KeyCol) === side("_b", KeyCol), "full_outer")
+      .withColumn(ChangeTypeCol, changeType)
+      .filter(col(ChangeTypeCol).isNotNull)
+      .select(col(ChangeTypeCol) +: fields.map(f =>
+        when(side("_a", KeyCol).isNull, side("_b", f.name))
+          .otherwise(side("_a", f.name)).as(f.name)).toSeq: _*)
+  }
+
+  /** The one version diff behind [[incrementalBetween]] and
+    * [[changesBetween]]: the after (`untilVersion`) and before
+    * (`sinceVersion`) sides, each read over only the buckets that changed
+    * between the two versions. A carried-forward bucket cannot differ,
+    * so the cost scales with what changed, not with table size. A bucket
+    * changed if its base dir moved or its delta stack did (a
+    * merge-on-read commit changes only the stack; a fold empties it and
+    * moves the base), or if only the before side holds it (emptied and
+    * dropped by a delete or compaction).
+    *
+    * The before side takes the after side's columns by PHYSICAL identity
+    * (the name data files store): after-side name → physical name
+    * through `untilVersion`'s renames → before-side name through
+    * `sinceVersion`'s renames, cast to the after type. So a rename alone
+    * changes no row, a widening or an added column (null on both sides)
+    * changes none, and a dropped-then-re-added column (a fresh physical
+    * name) reads null on the before side. `sinceVersion = 0` diffs
+    * against the empty table: the before side is the after side's empty
+    * image, which the optimizer folds out of both joins.
+    */
+  private def versionDiff(sinceVersion: Long, untilVersion: Long): (DataFrame, DataFrame) = {
+    val live = versions().toSet
+    def committed(v: Long): Manifest = {
+      require(live.contains(v), s"no committed version $v at $basePath")
+      readManifest(v)
+    }
+    val newest = committed(untilVersion)
+    if (sinceVersion == 0L) {
+      val all = readBuckets(newest, newest.allBuckets)
+      return (all, all.limit(0))
+    }
+    val old = committed(sinceVersion)
     val changed = newest.allBuckets.filter { b =>
       old.buckets.get(b) != newest.buckets.get(b) ||
         old.deltas.getOrElse(b, Nil) != newest.deltas.getOrElse(b, Nil)
     } ++ (old.allBuckets -- newest.allBuckets)
     val after = readBuckets(newest, changed & newest.allBuckets)
     val beforeRaw = readBuckets(old, changed & old.allBuckets)
-    val fields = after.schema.fields
-    val before = beforeRaw.select(fields.map { f =>
-      if (beforeRaw.columns.contains(f.name))
-        col("`" + f.name + "`").cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
+    val beforeName = beforeRaw.columns.map(n => old.renames.getOrElse(n, n) -> n).toMap
+    val before = beforeRaw.select(after.schema.fields.map { f =>
+      beforeName.get(newest.renames.getOrElse(f.name, f.name)) match {
+        case Some(n) => col(s"`$n`").cast(f.dataType).as(f.name)
+        case None => lit(null).cast(f.dataType).as(f.name)
+      }
     }.toSeq: _*)
-    val a = after.as("_a")
-    val b = before.as("_b")
-    def side(s: String, c: String) = col(s"$s.`$c`")
-    val nonKey = fields.map(_.name).filterNot(_ == KeyCol)
-    val aRow = struct(nonKey.map(side("_a", _)).toSeq: _*)
-    val bRow = struct(nonKey.map(side("_b", _)).toSeq: _*)
-    val changeType = when(side("_b", KeyCol).isNull, lit("insert"))
-      .when(side("_a", KeyCol).isNull, lit("delete"))
-      .when(!(aRow <=> bRow), lit("update_postimage"))
-    a.join(b, side("_a", KeyCol) === side("_b", KeyCol), "full_outer")
-      .withColumn(ChangeTypeCol, changeType)
-      .filter(col(ChangeTypeCol).isNotNull)
-      .select(col(ChangeTypeCol) +: fields.map(f =>
-        when(side("_a", KeyCol).isNull, side("_b", f.name))
-          .otherwise(side("_a", f.name)).as(f.name)).toSeq: _*)
+    (after, before)
+  }
+
+  /** Column `f` of join side `s` in a form `<=>` accepts: Spark cannot
+    * compare maps, so a column holding one anywhere in its type compares
+    * as its to_json (the same rule as the LWW content hash).
+    */
+  private def comparable(s: String, f: StructField): Column = {
+    val c = col(s"$s.`${f.name}`")
+    if (containsMap(f.dataType)) to_json(c) else c
   }
 
   /** `internal = true` keeps the partial-merge `_pts` meta column (the
@@ -1189,19 +1171,17 @@ final class LakeTable(
 
   /** Shared probe core: bloom-prune the key set, scan only the buckets
     * surviving candidates hash to, semi-join the (broadcast) candidates.
-    * The distinct key set is MATERIALIZED once (r18): the candidate
-    * collect and the semi-join are two separate ACTIONS, so AQE can
-    * never share the distinct's shuffle between them — without the
-    * checkpoint the key set shuffles twice per probe. Batch-bounded by
-    * contract; this also hardens the documented determinism seam (a
-    * nondeterministic keys plan can no longer split between the two
-    * passes).
+    * The distinct key set is MATERIALIZED once: the candidate collect
+    * and the semi-join are two separate ACTIONS, so AQE can never share
+    * the distinct's shuffle between them — without the checkpoint the
+    * key set shuffles twice per probe. Batch-bounded by contract; this
+    * also hardens the documented determinism seam (a nondeterministic
+    * keys plan can no longer split between the two passes).
     */
   private def matchingRows(keys: DataFrame, m: Manifest): DataFrame = {
     val cand = bloomPrune(keys.select(KeyCol).distinct().localCheckpoint(), m)
-    // Candidate buckets: tiny driver collect (≤ numBuckets ints).
-    val wanted = cand.select(bucketOf(col(KeyCol)).as("_b")).distinct()
-      .collect().map(_.getInt(0)).toSet
+    // Candidate buckets: the one routing collect, exchange-free.
+    val wanted = collectBuckets(cand.select(bucketOf(col(KeyCol))), numBuckets)
     if (wanted.isEmpty) readBuckets(m, Set.empty).limit(0)
     else readBuckets(m, wanted)
       .join(broadcastIfSmall(cand), Seq(KeyCol), "left_semi")
@@ -2409,7 +2389,7 @@ object LakeTable {
     * [0, width)), in ONE exchange-free job. Each task folds its rows into
     * a group → BitSet map and the driver ORs them, so the result is
     * bounded by groups × width bits. A null group comes back as None,
-    * apart from every named group. `distinct().collect()` would plan an
+    * apart from every named group. A distinct-then-collect would plan an
     * exchange, and AQE would run 2-3 stage jobs for a handful of ints.
     * Unsafe rows are reused per task, so each group string is copied
     * before the row advances.

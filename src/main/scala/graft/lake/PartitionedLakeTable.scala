@@ -355,18 +355,37 @@ final class PartitionedLakeTable(
       require(id.isDefined,
         s"null ${partitionCols.mkString(",")} in $what — partition values must be non-null")
       val v = id.get
-      require(partitionCols.size == 1 || v.split("/", -1).length == partitionCols.size,
+      require(splitsWhole(v),
         s"partition value '$v' for (${partitionCols.mkString(",")}) in $what has a " +
           "component containing '/' — composite partition components cannot embed the " +
           "path separator")
       v
     }.sorted
 
-  /** Distinct partition identities of `df`, checked, in one exchange-free
-    * job. The CDC sink collects them once per batch for its replay probe.
+  /** True iff joined identity `v` splits back into exactly its components. */
+  private def splitsWhole(v: String): Boolean =
+    partitionCols.size == 1 || v.split("/", -1).length == partitionCols.size
+
+  /** The distinct partition identities of `df`, in one exchange-free job. */
+  private def identities(df: DataFrame): Iterable[Option[String]] =
+    LakeTable.bucketsByGroup(df.select(identityCol(df), lit(0)), 1).keys
+
+  /** Distinct partition identities of `df`, checked. The CDC sink
+    * collects them once per batch for its replay probe.
     */
   def partitionValues(df: DataFrame, what: String = "batch"): Seq[String] =
-    checked(LakeTable.bucketsByGroup(df.select(identityCol(df), lit(0)), 1).keys, what)
+    checked(identities(df), what)
+
+  /** Distinct partition identities of `df`, sorted, or None when any row
+    * is unroutable: a null component, or a composite component embedding
+    * '/'. Such a partition cannot exist (writes reject it), but its key
+    * may exist elsewhere, so a caller that can fall back to a global
+    * probe takes None rather than a failure.
+    */
+  def routableValues(df: DataFrame): Option[Seq[String]] = {
+    val ids = identities(df)
+    if (ids.forall(_.exists(splitsWhole))) Some(ids.flatten.toSeq.sorted) else None
+  }
 
   /** Rows of `df` belonging to partition identity `v`. */
   private def partFilter(df: DataFrame, v: String): Column =

@@ -416,9 +416,11 @@ object LakeQueries {
   // ---- q47: incremental read (change capture since a version) ------------
 
   /** Two-batch build, then `incremental(1)`: exactly the rows whose
-    * `(_key, _ts)` state changed after version 1 — and only rewritten
+    * visible content changed after version 1 — and only rewritten
     * buckets are scanned on either side. Oracle = the (user_id, ts) diff
-    * of the final LWW state against the batch-1-only LWW state.
+    * of the final LWW state against the batch-1-only LWW state. That
+    * equals the visible-row diff on this data: no user's batch-2 winner
+    * overwrites its batch-1 row at an equal `ts`.
     */
   private def q47(spark: SparkSession, dir: String): DataFrame = {
     val lake = new LakeTable(spark, scratchDir("lake"), numBuckets = 16, bloomOnWrite = false)

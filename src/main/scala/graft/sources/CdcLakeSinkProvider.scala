@@ -573,6 +573,16 @@ class LakeSnapshotRelation(
   private[sources] def partitionColumns: Seq[String] =
     opened.left.toOption.map(_.partitionCols).getOrElse(Nil)
 
+  /** The partitions `df` names in-band, for routing a probe: the
+    * distinct partition identities of its rows, in one exchange-free job.
+    * None (probe every partition) for a plain table, when `df` lacks a
+    * partition column, or when any row is unroutable (see
+    * [[PartitionedLakeTable.routableValues]]).
+    */
+  private[sources] def routedPartitions(df: DataFrame): Option[Seq[String]] =
+    opened.left.toOption.filter(_.partitionCols.forall(p =>
+      df.columns.contains(p) && p != LakeTable.KeyCol)).flatMap(_.routableValues(df))
+
   /** True iff no version has ever committed (the CTAS Overwrite gate). */
   private[sources] def neverWritten: Boolean = pinnedEmpty
 

@@ -196,7 +196,7 @@ case class LakeMergeIntoCommand(m: MergeIntoTable) extends LeafRunnableCommand {
 
   override def run(session: SparkSession): Seq[Row] = {
     val rel = LakeMergeInto.targetRelation(m.targetTable).get
-    // WITH SCHEMA EVOLUTION (r18): additive source columns were already
+    // WITH SCHEMA EVOLUTION: additive source columns were already
     // appended at parse time (LakeSqlRewrites.evolveForMerge — Spark's
     // own resolution would otherwise drop or reject them), so by the
     // time this command exists the merge is a plain one over the
@@ -228,7 +228,7 @@ case class LakeMergeIntoCommand(m: MergeIntoTable) extends LeafRunnableCommand {
     // independent frame over the (materialized) base, so a
     // NONDETERMINISTIC condition (rand(), ...) could route one row into
     // several branches or none — rejected loudly, same determinism
-    // rationale as the source materialization below (ADVICE r17).
+    // rationale as the source materialization below.
     def deterministicOnly(c: Option[Expression], where: String): Unit =
       c.foreach(e => if (!e.deterministic) fail(
         s"nondeterministic $where condition: ${e.sql} — branch routing " +
@@ -261,8 +261,8 @@ case class LakeMergeIntoCommand(m: MergeIntoTable) extends LeafRunnableCommand {
           (i.condition, i.assignments)
         case other => fail(s"unsupported WHEN NOT MATCHED action: $other")
       }
-    // WHEN NOT MATCHED BY SOURCE (r17 — the sync-delete/sync-update
-    // shape): acts on TARGET rows whose key no source row names, so
+    // WHEN NOT MATCHED BY SOURCE (the sync-delete/sync-update shape):
+    // acts on TARGET rows whose key no source row names, so
     // conditions and values are target-only; the population is
     // inherently a full-table anti-join (documented — no probe can
     // shrink "every stored row the batch does not mention").
@@ -291,7 +291,7 @@ case class LakeMergeIntoCommand(m: MergeIntoTable) extends LeafRunnableCommand {
     val targetCols: Seq[Attribute] = m.targetTable.output
     val targetNames = targetCols.map(_.name)
     // Layout-order partition columns; empty for plain tables. Composite
-    // layouts (r20) generalize every partition-aware seam below: routing
+    // layouts generalize every partition-aware seam below: routing
     // needs ALL columns in-band, delete frames carry all of them, and
     // the move/reassignment guards apply per column.
     val partitionCols: Seq[String] = rel.partitionColumns
@@ -300,8 +300,7 @@ case class LakeMergeIntoCommand(m: MergeIntoTable) extends LeafRunnableCommand {
       case a: Attribute => a.name
       case other => fail(s"only top-level column assignment keys are supported: ${other.sql}")
     }
-    // Schema widening through the SQL route (r17, shared helper r18):
-    // see [[LakeMergeInto.unwiden]].
+    // Schema widening through the SQL route: see [[LakeMergeInto.unwiden]].
     val targetType = m.targetTable.output.map(a => a.name -> a.dataType).toMap
     def unwiden(key: String, v: Expression): Expression =
       LakeMergeInto.unwiden(targetType, key, v)
@@ -370,7 +369,7 @@ case class LakeMergeIntoCommand(m: MergeIntoTable) extends LeafRunnableCommand {
       // needs no probe. On partitioned tables the source's in-band
       // partition columns ride along when ALL are present, so the
       // dispatch routes (deleteRouted) instead of fanning out globally
-      // (r18; a partial column set cannot name a partition).
+      // (a partial column set cannot name a partition).
       case (Seq((c, Left(()))), Seq()) if c.forall(sourceOnly) =>
         val rows = c.map(cc => srcDf.filter(Exprs.column(cc))).getOrElse(srcDf)
         val inBand =
@@ -389,54 +388,36 @@ case class LakeMergeIntoCommand(m: MergeIntoTable) extends LeafRunnableCommand {
     // splits, per-action frames) — a nondeterministic SQL source (rand(),
     // a view over mutating data) would otherwise split inconsistently.
     // Also the legitimate reuse-across-different-plan-shapes case for
-    // materialization (the r6 rule).
+    // materialization.
     val stable = srcDf.localCheckpoint()
     val keyColS = Exprs.column(srcKeyExpr)
     val keysDf = stable.select(keyColS.as(LakeTable.KeyCol))
 
-    // In-band partition routing (r18, VERDICT r17 #1): when the
-    // materialized source carries the target's partition column, the
-    // membership probe visits ONLY the partitions the source names —
-    // deleteRouted's trust contract: the in-band value IS the row's
-    // placement (CDC envelopes carry the stored row's payload). A source
-    // that names the WRONG partition for an existing key routes that row
-    // to INSERT, exactly as its delete would miss under deleteRouted —
-    // sources without the placement guarantee should omit the column and
-    // pay the global (still bloom-pruned) probe. Two escapes keep the
-    // trust bounded: null values are unroutable → global probe; and a
-    // matched UPDATE that ASSIGNS the partition column disables routing
-    // entirely — the partition-move guard must compare against the
-    // stored row wherever it lives, and a routed probe would silently
-    // re-route the move to INSERT instead of raising. Cost: one bounded
-    // driver collect (distinct partition values — the same job the
-    // routed write pays again later, both over the checkpointed source).
-    // Lazy (ADVICE r18): only the matchedBase/unmatchedSrc block
-    // dereferences it, and that block is itself lazy so a
-    // by-source-only merge stays probe-free — an eager val here would
-    // pay the distinct-collect job for a statement that never consumes
-    // the membership probe.
+    // In-band partition routing: when the materialized source carries
+    // the target's partition column, the membership probe visits ONLY
+    // the partitions the source names — deleteRouted's trust contract:
+    // the in-band value IS the row's placement (CDC envelopes carry the
+    // stored row's payload). A source that names the WRONG partition for
+    // an existing key routes that row to INSERT, exactly as its delete
+    // would miss under deleteRouted — sources without the placement
+    // guarantee should omit the column and pay the global (still
+    // bloom-pruned) probe. Two escapes keep the trust bounded: an
+    // unroutable identity (a null component, or a composite component
+    // embedding '/') → global probe; and a matched UPDATE that ASSIGNS
+    // the partition column disables routing entirely — the
+    // partition-move guard must compare against the stored row wherever
+    // it lives, and a routed probe would silently re-route the move to
+    // INSERT instead of raising. Cost: one exchange-free routing collect
+    // over the checkpointed source. Lazy: only the
+    // matchedBase/unmatchedSrc block dereferences it, and that block is
+    // itself lazy so a by-source-only merge stays probe-free.
     lazy val routedParts: Option[Seq[String]] =
-      if (partitionCols.nonEmpty &&
-          partitionCols.forall(p =>
-            stable.columns.contains(p) && p != LakeTable.KeyCol) &&
-          !updMaps.exists(m => partitionCols.exists(m.contains))) {
-        val rows = stable
-          .select(partitionCols.map(p => col(p).cast("string")): _*)
-          .distinct().collect()
-        val comps = rows.map(r => partitionCols.indices.map(r.getString))
-        // unroutable shapes fall back to the global probe: any null
-        // component, or (composite layouts) a component embedding the
-        // identity separator — such a partition cannot exist (writes
-        // reject it) but the KEY may exist elsewhere, so routing on the
-        // mis-joined identity would silently re-route the row to INSERT
-        if (comps.exists(_.exists(x => x == null ||
-            (partitionCols.size > 1 && x.contains("/"))))) None
-        else Some(comps.map(_.mkString("/")).toSeq)
-      } else None
+      if (updMaps.exists(m => partitionCols.exists(m.contains))) None
+      else rel.routedPartitions(stable)
 
     // Lazy: a by-source-only merge must not pay the membership probe
     // (probeKeys runs an eager candidate-bucket job when forced).
-    // The probe RESULT is materialized (localCheckpoint — the r6
+    // The probe RESULT is materialized (localCheckpoint — the
     // reuse-across-different-plan-shapes case): every action frame and
     // the matched/unmatched splits re-evaluate their base, so without it
     // K branches re-run the bloom pass + candidate-bucket scan K times
@@ -496,7 +477,7 @@ case class LakeMergeIntoCommand(m: MergeIntoTable) extends LeafRunnableCommand {
     // NOT MATCHED BY SOURCE: target rows no source key names — the
     // pinned snapshot anti-joined with the (materialized) source keys.
     // The population is TABLE-sized by semantics (a full
-    // reconciliation), so it routes in ONE pass (r18, VERDICT r17 #3):
+    // reconciliation), so it routes in ONE pass:
     // a single case chain evaluates the first-match action id over the
     // anti-joined scan, rows matching no action drop right there (they
     // carry through by not being written), and K same-kind actions fuse

@@ -134,6 +134,39 @@ class ColumnRenameSpec extends SparkSpec {
       === Seq(("a", None), ("b", None), ("c", Some(77L))))
   }
 
+  test("version diffs match columns by physical name across a rename") {
+    val dir = tempDir("rendiff-").resolve("t").toString
+    // one bucket: the v3 upsert rewrites the bucket holding a and b
+    val lt = new LakeTable(spark, dir, numBuckets = 1)
+    lt.upsert(Seq(("a", 1L, 10L), ("b", 1L, 20L))
+      .toDF(LakeTable.KeyCol, LakeTable.TsCol, "amount")) // v1
+    lt.renameColumn("amount", "total") // v2
+    lt.upsert(Seq(("c", 2L, 30L)).toDF(LakeTable.KeyCol, LakeTable.TsCol, "total")) // v3
+    assert(lt.changesBetween(1L, 3L).select("_change_type", LakeTable.KeyCol)
+      .as[(String, String)].collect().toSeq === Seq(("insert", "c")))
+    assert(lt.incrementalBetween(1L, 3L).select(LakeTable.KeyCol)
+      .as[String].collect().toSeq === Seq("c"))
+  }
+
+  test("version diffs read a dropped-then-re-added column as null on the before side") {
+    val dir = tempDir("dropdiff-").resolve("t").toString
+    val lt = new LakeTable(spark, dir, numBuckets = 1)
+    lt.upsert(Seq(("a", 1L, 10L, "n1"), ("b", 1L, 20L, "n2"))
+      .toDF(LakeTable.KeyCol, LakeTable.TsCol, "amount", "note")) // v1
+    lt.dropColumn("amount") // v2
+    lt.addColumns(org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField(
+        "amount", org.apache.spark.sql.types.LongType)))) // v3
+    lt.upsert(Seq(("c", 2L, 77L, "n3"))
+      .toDF(LakeTable.KeyCol, LakeTable.TsCol, "amount", "note")) // v4
+    // a and b read amount = null at v4; the re-added column is a new
+    // physical column, so v1's amount is not its before image
+    assert(lt.changesBetween(1L, 4L).select("_change_type", LakeTable.KeyCol)
+      .as[(String, String)].collect().toSeq === Seq(("insert", "c")))
+    assert(lt.incrementalBetween(1L, 4L).select(LakeTable.KeyCol)
+      .as[String].collect().toSeq === Seq("c"))
+  }
+
   test("stats pruning SURVIVES a rename (sidecars are keyed physical)") {
     val dir = tempDir("renstats-").resolve("t").toString
     val lt = new LakeTable(spark, dir, numBuckets = 4,

@@ -433,6 +433,23 @@ class LakeTableSpec extends SparkSpec {
       "a pinned probe must not see keys committed after its version")
   }
 
+  test("probeKeys collects its candidate buckets in one job") {
+    val lt = new LakeTable(spark, tempDir("lake-probe-jobs-").toString, numBuckets = 8)
+    lt.upsert((0 until 100).map(i => (s"k$i", 1L, s"v$i"))
+      .toDF(LakeTable.KeyCol, LakeTable.TsCol, "payload"))
+    val probe = Seq("k7", "k42", "absent").toDF(LakeTable.KeyCol)
+    val sc = spark.sparkContext
+    val bp = new org.apache.spark.graft.BenchProbe
+    bp.install(sc)
+    try {
+      bp.harvest(sc)
+      val got = lt.probeKeys(probe)
+      // the key-set checkpoint plus one exchange-free routing collect
+      assert(bp.harvest(sc)("jobs") === 3L)
+      assert(got.as[String].collect().sorted.toSeq == Seq("k42", "k7"))
+    } finally sc.removeSparkListener(bp)
+  }
+
   test("rowsForKeys returns FULL stored rows for present keys; MOR stacks collapse (r17)") {
     // plain table: full rows, duplicates in the probe are harmless,
     // absent keys contribute nothing; empty table = zero-column empty
@@ -1396,6 +1413,33 @@ class LakeTableSpec extends SparkSpec {
       "changed rows only: updated a, inserted d; untouched c and deleted b absent")
     // incremental from latest is empty
     assert(lt.incremental(lt.latestVersion.get).count() == 0)
+  }
+
+  test("incremental read reports an equal-_ts overwrite that changes the row") {
+    val lt = new LakeTable(spark, tempDir("lake-").toString, numBuckets = 2)
+    lt.upsert(rows(("a", 1L, "a1"), ("b", 1L, "b1")))   // v1
+    // a: equal _ts, new payload, replaces the stored row; b: rewritten
+    // with an equal row
+    lt.upsert(rows(("a", 1L, "a2"), ("b", 1L, "b1")))   // v2
+    assert(lt.snapshot.select("_key", "payload").as[(String, String)]
+      .collect().sortBy(_._1).toSeq == Seq(("a", "a2"), ("b", "b1")))
+    val inc = lt.incrementalBetween(1L, 2L).select("_key", "payload")
+      .as[(String, String)].collect().toSeq
+    assert(inc == Seq(("a", "a2")), s"got $inc")
+    assert(lt.changesBetween(1L, 2L).select("_change_type", "_key")
+      .as[(String, String)].collect().toSeq == Seq(("update_postimage", "a")))
+  }
+
+  test("version diffs compare map-typed columns") {
+    val lt = new LakeTable(spark, tempDir("lake-").toString, numBuckets = 2)
+    def put(t: (String, Long, Map[String, Int])*) =
+      lt.upsert(t.toDF(LakeTable.KeyCol, LakeTable.TsCol, "attrs"))
+    put(("a", 1L, Map("x" -> 1)), ("b", 1L, Map("y" -> 2)))   // v1
+    put(("a", 1L, Map("x" -> 5)), ("b", 1L, Map("y" -> 2)))   // v2
+    assert(lt.incrementalBetween(1L, 2L).select("_key", "attrs")
+      .as[(String, Map[String, Int])].collect().toSeq == Seq(("a", Map("x" -> 5))))
+    assert(lt.changesBetween(1L, 2L).select("_change_type", "_key")
+      .as[(String, String)].collect().toSeq == Seq(("update_postimage", "a")))
   }
 
   test("partial-merge incremental catches late fragments that do not advance _ts") {

@@ -333,6 +333,31 @@ class LakeMergeIntoSpec extends SparkSpec {
     assert(stateOf(globalT) === expected)
   }
 
+  test("in-band routing falls back to the global probe on a null partition value") {
+    import graft.lake.PartitionedLakeTable
+    n += 1
+    val name = s"mrg_t$n"
+    val dir = tempDir("merge-nullroute-").resolve("t").toString
+    new PartitionedLakeTable(spark, dir, "region", numBuckets = 2)
+      .upsert(Seq(("a", 1L, 10L, "eu"), ("b", 1L, 20L, "us"))
+        .toDF(LakeTable.KeyCol, LakeTable.TsCol, "amount", "region"))
+    spark.sql(s"CREATE TABLE $name USING `cdc-lake` OPTIONS (path '$dir', buckets '2')")
+    // b is stored in 'us' but the source names no partition for it: the
+    // probe must still find it, so the row updates in place
+    Seq(("b", 5L, 21L, Option.empty[String]))
+      .toDF("id", "ts", "amt", "region").createOrReplaceTempView("srcnullroute")
+    spark.sql(
+      s"""MERGE INTO $name t USING srcnullroute s ON t._key = s.id
+         |WHEN MATCHED THEN UPDATE SET _ts = s.ts, amount = s.amt
+         |WHEN NOT MATCHED THEN
+         |  INSERT (_key, _ts, amount, region) VALUES (s.id, s.ts, s.amt, s.region)"""
+        .stripMargin)
+    spark.catalog.refreshTable(name)
+    assert(spark.sql(s"SELECT _key, _ts, amount, region FROM $name")
+      .as[(String, Long, Long, String)].collect().sortBy(_._1).toSeq ===
+      Seq(("a", 1L, 10L, "eu"), ("b", 5L, 21L, "us")))
+  }
+
   test("INSERT-only MERGE on a PARTITIONED table skips matched rows of other partitions") {
     import graft.lake.PartitionedLakeTable
     n += 1

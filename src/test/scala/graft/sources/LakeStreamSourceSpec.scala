@@ -48,6 +48,28 @@ class LakeStreamSourceSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("a SQL UPDATE that keeps _ts reaches the incremental read and the feed") {
+    val dir = tempDir("lakesrc-upd-").toString
+    val lt = new LakeTable(spark, dir, numBuckets = 2)
+    lt.upsert(rows(("a", 1L, "a1"), ("b", 1L, "b1")))
+    spark.sql(s"CREATE TABLE lakesrc_upd USING `cdc-lake` OPTIONS (path '$dir', buckets '2')")
+    val q = startFeed(dir, s"$dir/_ckpt", "lakefeed_upd")
+    try {
+      q.processAllAvailable()
+      spark.sql("UPDATE lakesrc_upd SET payload = 'a9' WHERE _key = 'a'")
+      val v = lt.latestVersion.get
+      assert(lt.incrementalBetween(v - 1, v).select("_key", "_ts", "payload")
+        .as[(String, Long, String)].collect().toSeq == Seq(("a", 1L, "a9")))
+      q.processAllAvailable()
+      val fed = spark.table("lakefeed_upd").select("_key", "payload")
+        .as[(String, String)].collect().sortBy(r => (r._1, r._2))
+      assert(fed.toSeq == Seq(("a", "a1"), ("a", "a9"), ("b", "b1")))
+    } finally {
+      q.stop()
+      spark.sql("DROP TABLE IF EXISTS lakesrc_upd")
+    }
+  }
+
   test("startingVersion/startingTimestamp skip consumed history on a fresh stream") {
     val dir = tempDir("lakesrc-").toString
     val lt = new LakeTable(spark, dir, numBuckets = 2)
