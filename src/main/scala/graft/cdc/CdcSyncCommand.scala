@@ -3,7 +3,7 @@ package graft.cdc
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.lake.LakeTable
+import graft.lake.{LakeHandle, LakeTable, PartitionedLakeTable}
 
 /** The CDC merge pipeline — the engine's equivalent of the reference's
   * whole purpose
@@ -255,8 +255,6 @@ object CdcSyncCommand {
           }
           case None => typed1
         }
-        val delKeys = mine.filter(Envelope.isDelete).select(LakeTable.KeyCol)
-
         val insertOp = cfg.operation == "insert"
         // Inline compaction cadence (ref hoodie.compact.inline.*): after
         // every Nth batch, coalesce the table's file groups. Deterministic
@@ -264,69 +262,66 @@ object CdcSyncCommand {
         // the same decision and the scoped commitId makes it a no-op.
         val compactDue =
           cfg.compactEvery > 0 && batchId >= 0 && (batchId + 1) % cfg.compactEvery == 0
-        cfg.partitionField match {
-          case Some(pf) =>
-            val plake = new graft.lake.PartitionedLakeTable(
-              spark, cfg.path, pf, cfg.numBuckets,
-              filesPerBucket = cfg.filesPerBucket, bloomOnWrite = cfg.bloomEnable,
-              zorderBy = cfg.zorderFields, tableType = cfg.tableType,
-              compactAfter = cfg.compactDeltas, mergeMode = cfg.mergeMode,
-              statsColumns = cfg.statsColumns)
-            // Deletes route by the partition value(s) decoded from the
-            // delete payload — only the named partitions are visited (null
-            // values fall back to the bloom-pruned global path inside).
-            // `pf` may be comma-separated (composite partition paths, r20).
-            val delRouted = Envelope
-              .decode(mine.filter(Envelope.isDelete), schemaJson, cfg.timestampFormat)
-              .select(col(LakeTable.KeyCol) +: plake.partitionCols.map(col): _*)
-            if (insertOp) {
-              // write.operation=insert: bulk-load fast path, no LWW merge
-              // agg (ref insert/bulk_insert routing, :172-183).
-              plake.bulkInsert(typed, commitId = commitIdFor(db, table, "upsert"))
-              plake.deleteRouted(delRouted, commitId = commitIdFor(db, table, "delete"))
-            } else {
-              // Deterministic replay: a legacy scoped commit can only
-              // live in a partition this batch's own upserts name, so
-              // the probe is bounded to the batch's partitions (one
-              // exchange-free collect) instead of a full history scan
-              // of every table partition.
-              val upParts = plake.partitionValues(typed, "updates")
-              if (plake.isCommitted(commitIdFor(db, table, "upsert"), upParts)) {
-                // MIGRATION replay: this batch (fully or partially)
-                // committed under the pre-merge two-id scheme before the
-                // upgrade. Re-running it through those ids completes or
-                // no-ops it; deriving the new ":merge" id instead would
-                // match nothing and re-apply the whole batch as a
-                // phantom commit.
-                plake.upsert(typed, commitId = commitIdFor(db, table, "upsert"))
-                plake.deleteRouted(delRouted, commitId = commitIdFor(db, table, "delete"))
-              } else
-                // Upserts + routed deletes in ONE commit per touched
-                // partition: one manifest publish + bloom pass per batch
-                // instead of two commit constants.
-                plake.merge(typed, delRouted, commitIdFor(db, table, "merge"))
-            }
-            if (compactDue) plake.compact(commitIdFor(db, table, "compact"))
-          case None =>
-            val lake = new LakeTable(
-              spark, cfg.path, cfg.numBuckets,
-              filesPerBucket = cfg.filesPerBucket, zorderBy = cfg.zorderFields,
-              bloomOnWrite = cfg.bloomEnable, tableType = cfg.tableType,
-              compactAfter = cfg.compactDeltas, mergeMode = cfg.mergeMode,
-              statsColumns = cfg.statsColumns)
-            if (insertOp) {
-              lake.bulkInsert(typed, commitId = commitIdFor(db, table, "upsert"))
-              // Deletes: key-only left-anti (ref :186-190).
-              lake.delete(delKeys, commitId = commitIdFor(db, table, "delete"))
-            } else if (lake.isCommitted(commitIdFor(db, table, "upsert"))) {
-              // Pre-merge-scheme replay — see the partitioned branch.
-              lake.upsert(typed, commitId = commitIdFor(db, table, "upsert"))
-              lake.delete(delKeys, commitId = commitIdFor(db, table, "delete"))
-            } else
-              // One combined commit per table per batch.
-              lake.merge(typed, delKeys, commitId = commitIdFor(db, table, "merge"))
-            if (compactDue) lake.compact(commitIdFor(db, table, "compact"))
+        // `partition.field` may be comma-separated (composite partition
+        // paths).
+        val lake: LakeHandle = cfg.partitionField match {
+          case Some(pf) => new PartitionedLakeTable(
+            spark, cfg.path, pf, cfg.numBuckets,
+            filesPerBucket = cfg.filesPerBucket, bloomOnWrite = cfg.bloomEnable,
+            zorderBy = cfg.zorderFields, tableType = cfg.tableType,
+            compactAfter = cfg.compactDeltas, mergeMode = cfg.mergeMode,
+            statsColumns = cfg.statsColumns)
+          case None => new LakeTable(
+            spark, cfg.path, cfg.numBuckets,
+            filesPerBucket = cfg.filesPerBucket, zorderBy = cfg.zorderFields,
+            bloomOnWrite = cfg.bloomEnable, tableType = cfg.tableType,
+            compactAfter = cfg.compactDeltas, mergeMode = cfg.mergeMode,
+            statsColumns = cfg.statsColumns)
         }
+        // Delete keys: key-only on a plain table (left-anti, ref
+        // :186-190); on a partitioned one they carry the partition
+        // value(s) decoded from the delete payload, so only the named
+        // partitions are visited (null values fall back to the
+        // bloom-pruned global path inside).
+        val delRows = mine.filter(Envelope.isDelete)
+        val dels =
+          if (lake.partitionCols.isEmpty) delRows.select(LakeTable.KeyCol)
+          else Envelope.decode(delRows, schemaJson, cfg.timestampFormat)
+            .select(col(LakeTable.KeyCol) +: lake.partitionCols.map(col): _*)
+        def delete(commitId: String): Unit = lake match {
+          case pt: PartitionedLakeTable => pt.deleteRouted(dels, commitId)
+          case t: LakeTable => t.delete(dels, commitId)
+        }
+        // MIGRATION replay: this batch (fully or partially) committed
+        // under the pre-merge two-id scheme before the upgrade. Re-running
+        // it through those ids completes or no-ops it; deriving the new
+        // ":merge" id instead would match nothing and re-apply the whole
+        // batch as a phantom commit. On a partitioned table a legacy
+        // scoped commit can only live in a partition this batch's own
+        // upserts name, so the probe is bounded to those partitions (one
+        // exchange-free collect) instead of every table partition.
+        def legacyCommitted: Boolean = {
+          val upsertId = commitIdFor(db, table, "upsert")
+          lake match {
+            case pt: PartitionedLakeTable =>
+              pt.isCommitted(upsertId, pt.partitionValues(typed, "updates"))
+            case t: LakeTable => t.isCommitted(upsertId)
+          }
+        }
+        if (insertOp) {
+          // write.operation=insert: bulk-load fast path, no LWW merge agg
+          // (ref insert/bulk_insert routing, :172-183).
+          lake.bulkInsert(typed, commitIdFor(db, table, "upsert"))
+          delete(commitIdFor(db, table, "delete"))
+        } else if (legacyCommitted) {
+          lake.upsert(typed, commitIdFor(db, table, "upsert"))
+          delete(commitIdFor(db, table, "delete"))
+        } else
+          // Upserts + deletes in ONE commit per table (per touched
+          // partition): one manifest publish + bloom pass per batch
+          // instead of two commit constants.
+          lake.merge(typed, dels, commitIdFor(db, table, "merge"))
+        if (compactDue) lake.compact(commitIdFor(db, table, "compact"))
       }
 
       // Per-table merges are independent (distinct paths); dispatch from a
@@ -336,16 +331,8 @@ object CdcSyncCommand {
         .getOrElse(4.min(metas.length)).max(1)
       def dispatch(mineOf: (String, String) => DataFrame): Unit =
         if (sinkThreads <= 1 || metas.length <= 1) metas.foreach(sinkOne(mineOf))
-        else {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(sinkThreads)
-          try {
-            import scala.jdk.CollectionConverters._
-            val tasks = metas.map { m =>
-              new java.util.concurrent.Callable[Unit] { def call(): Unit = sinkOne(mineOf)(m) }
-            }.toSeq.asJava
-            pool.invokeAll(tasks).asScala.foreach(_.get()) // rethrow failures
-          } finally pool.shutdown()
-        }
+        else graft.util.DriverPool.runAll(
+          sinkThreads, metas.toSeq.map(m => () => sinkOne(mineOf)(m)))
 
       if (metas.length <= 1) {
         // Single table: no routing needed, consume the plan directly.
@@ -429,7 +416,7 @@ object CdcSyncCommand {
       "hoodie.datasource.hive_sync.table",
       cfg.extras.getOrElse("hoodie.table.name", cfg.table))
     val ident = s"`$db`.`$tbl`"
-    // Writer config rides the registration (code-review r16 #5): SQL
+    // Writer config rides the registration: SQL
     // INSERT/MERGE open their write handle from these OPTIONS — without
     // them a SQL write would strip stats sidecars / Z-clustering / the
     // MOR delta path from every bucket it touches.
@@ -440,7 +427,7 @@ object CdcSyncCommand {
       "compactAfter" -> (if (cfg.compactDeltas != 8) cfg.compactDeltas.toString else ""),
       "statsColumns" -> cfg.statsColumns.mkString(","),
       // bloom-disabled tables must not grow sidecars through SQL writes
-      // (ADVICE r16 — writeHandle defaults bloomOnWrite=true)
+      // (writeHandle defaults bloomOnWrite=true)
       "bloomOnWrite" -> (if (!cfg.bloomEnable) "false" else ""))
       .collect { case (k, v) if v.nonEmpty => s", $k '$v'" }.mkString
     def create(): Unit = spark.sql(
@@ -455,12 +442,12 @@ object CdcSyncCommand {
       // batch's commit, and the drift check below would test the cache,
       // not the stored schema.
       spark.catalog.refreshTable(ident)
-      // Two drift signals (r19): Spark's own user-specified-vs-actual
+      // Two drift signals: Spark's own user-specified-vs-actual
       // AnalysisException (the RelationProvider branch), and the
       // relation's declared-vs-stored mismatch — since the provider is a
       // SchemaRelationProvider, catalog reads route the stored catalog
       // schema through createRelation(schema) and the mismatch raises
-      // THERE. The IAE catch is message-scoped (r19 review): a corrupt
+      // THERE. The IAE catch is message-scoped: a corrupt
       // buckets/queryType option also raises IAE, and reading THAT as
       // drift would silently drop-and-recreate the table every batch
       // instead of surfacing the misconfiguration.

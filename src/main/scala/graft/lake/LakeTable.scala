@@ -70,8 +70,11 @@ final class LakeTable(
     val tableType: String = LakeTable.CowType,
     val compactAfter: Int = 8,
     val mergeMode: String = LakeTable.OverwriteMode,
-    val statsColumns: Seq[String] = Nil) {
+    val statsColumns: Seq[String] = Nil) extends LakeHandle {
   import LakeTable._
+
+  /** A plain table has no partition columns. */
+  def partitionCols: Seq[String] = Nil
 
   require(numBuckets > 0, s"numBuckets must be positive: $numBuckets")
   require(filesPerBucket > 0, s"filesPerBucket must be positive: $filesPerBucket")
@@ -150,7 +153,7 @@ final class LakeTable(
 
   /** commitId of `version`, or None if its manifest vanished (vacuumed
     * between a listing and the read — callers fall back to vacuumedIds).
-    * Public alias [[commitIdOf]] backs `CALL show_commits` (r18).
+    * Public alias [[commitIdOf]] backs `CALL show_commits`.
     */
   def commitIdOf(version: Long): Option[String] =
     manifestCommitId(version).filter(_.nonEmpty)
@@ -160,8 +163,8 @@ final class LakeTable(
     catch { case _: java.io.FileNotFoundException => None }
 
   /** Published manifests are create-if-absent immutable ([[publish]]), so
-    * each version's parsed manifest caches on first read (r18, ADVICE r17:
-    * `isPartialTable` and the partitioned probe/stat paths re-read the
+    * each version's parsed manifest caches on first read
+    * (`isPartialTable` and the partitioned probe/stat paths re-read the
     * same small file per statement, multiplied by partition count).
     * Vacuum deletes old manifests but every vacuumed-state read is
     * guarded by its own `vacuumedIds`/`versions()` pre-check, never by
@@ -313,7 +316,8 @@ final class LakeTable(
 
   /** (version, commitTimeMs) for every committed version, ascending by
     * version — the basis for timestamp-based time travel. Driver-side,
-    * one manifest read per version. Pre-r12 manifests report 0.
+    * one manifest read per version. Manifests written before commit
+    * times were stamped report 0.
     */
   /** Published manifests are immutable, so each version's commit time is
     * cached on first read — without this, every timestamp resolution
@@ -411,7 +415,7 @@ final class LakeTable(
     * same-name/different-type source is a TYPE change, which stays with
     * the write path's widen() (int→long / float→double or loud).
     */
-  def addColumns(cols: StructType, commitId: String = ""): Long =
+  def addColumns(cols: StructType, commitId: String = ""): Unit =
     commit(commitId, "addColumns") { cur =>
       val m = existing(cur, "the first write defines the schema")
       val schema = m.schema
@@ -442,7 +446,7 @@ final class LakeTable(
     * the OLD logical name — composing them under the new name would
     * silently drop their column times).
     */
-  def renameColumn(from: String, to: String, commitId: String = ""): Long = {
+  def renameColumn(from: String, to: String, commitId: String = ""): Unit = {
     require(!ReservedCols.exists(r => r.equalsIgnoreCase(from) || r.equalsIgnoreCase(to)),
       s"cannot rename '$from' to '$to' — reserved lake column names")
     commit(commitId, "renameColumn") { cur =>
@@ -481,7 +485,7 @@ final class LakeTable(
     * column, reserved names, partial-mode tables (same `_pts` rationale
     * as rename).
     */
-  def dropColumn(name: String, commitId: String = ""): Long = {
+  def dropColumn(name: String, commitId: String = ""): Unit = {
     require(!ReservedCols.exists(_.equalsIgnoreCase(name)),
       s"cannot drop '$name' — reserved lake column name")
     commit(commitId, "dropColumn") { cur =>
@@ -510,7 +514,7 @@ final class LakeTable(
     * unknown column, narrowing, cross-kind — fails loudly. Same-type is
     * an idempotent no-op.
     */
-  def widenColumn(name: String, to: DataType, commitId: String = ""): Long = {
+  def widenColumn(name: String, to: DataType, commitId: String = ""): Unit = {
     import org.apache.spark.sql.types.{DoubleType, FloatType, IntegerType, LongType}
     def widens(from: DataType): Boolean = (from, to) match {
       case (IntegerType, LongType) | (FloatType, DoubleType) => true
@@ -708,7 +712,7 @@ final class LakeTable(
     // (int32 under a now-long column) upcast in the vectorized reader.
     // Files store PHYSICAL (birth) names — a renamed column reads under
     // its physical name and aliases back to the manifest's logical name
-    // here (r20, the one read-side seam of the rename mapping; toDF is
+    // here (the one read-side seam of the rename mapping; toDF is
     // positional, and physSchema preserves field order).
     val phys = LakeTable.physSchema(schema, m.renames)
     def logicalize(df: DataFrame): DataFrame =
@@ -836,8 +840,8 @@ final class LakeTable(
   def upsert(updates: DataFrame, commitId: String = ""): Unit =
     upsert(updates, commitId, None)
 
-  /** [[upsert]] with the affected-bucket set PRE-COLLECTED by the caller
-    * (r21): a partitioned dispatch computes every partition's bucket set
+  /** [[upsert]] with the affected-bucket set PRE-COLLECTED by the
+    * caller: a partitioned dispatch computes every partition's bucket set
     * in ONE job over the staged batch instead of one distinct-collect job
     * per partition commit. The hint must equal the distinct buckets of
     * `updates`' keys — for an upsert that IS the affected set (no pruning
@@ -886,7 +890,7 @@ final class LakeTable(
   }
 
   /** Apply a batch's upserts AND deletes as ONE commit — one manifest
-    * publish, one bloom pass, one new version (VERDICT r8 #2: the CDC
+    * publish, one bloom pass, one new version (the CDC
     * micro-batch previously paid two full commit constants per table).
     * Semantics: LWW-merge `updates` into the affected buckets, then drop
     * rows whose `_key` is in `deleteKeys` (on overlap, deletes win; the
@@ -900,7 +904,7 @@ final class LakeTable(
   def merge(updates: DataFrame, deleteKeys: DataFrame, commitId: String = ""): Unit =
     merge(updates, deleteKeys, commitId, None)
 
-  /** [[merge]] with a caller-collected affected-bucket hint (r21):
+  /** [[merge]] with a caller-collected affected-bucket hint:
     * `affectedHint` must equal the distinct buckets of `updates`' keys ∪
     * ALL of `deleteKeys`' buckets. It is consumed ONLY when the attempt's
     * manifest provably cannot bloom-prune anything (no sidecars anywhere
@@ -981,8 +985,12 @@ final class LakeTable(
       rows: DataFrame, commitId: String = "", sortMode: String = "partition"): Unit =
     bulkInsert(rows, commitId, sortMode, None)
 
+  /** [[bulkInsert]] in the default sort mode, the [[LakeHandle]] form. */
+  def bulkInsert(rows: DataFrame, commitId: String): Unit =
+    bulkInsert(rows, commitId, "partition", None)
+
   /** [[bulkInsert]] with a caller-collected affected-bucket hint — same
-    * contract as the [[upsert]] overload (r21): the hint must equal the
+    * contract as the [[upsert]] overload: the hint must equal the
     * distinct buckets of `rows`' keys.
     */
   private[graft] def bulkInsert(
@@ -1157,7 +1165,7 @@ final class LakeTable(
     * candidate-bucket broadcast-semi shape (and the same determinism
     * contract on `keys`). The read side of a read-modify-write: SQL
     * MERGE's partial `UPDATE SET` lists compose assigned columns with
-    * the stored row instead of nulling what they omit (r17). Keys are
+    * the stored row instead of nulling what they omit. Keys are
     * unique in a snapshot (the upsert invariant), so no dedup is needed
     * beyond the candidate set's own distinct. An empty (never-committed)
     * table yields a zero-column empty frame — callers conform it to
@@ -1603,7 +1611,7 @@ final class LakeTable(
   }
 
   /** Adopt a pre-written initial-load directory as this table's FIRST
-    * commit (r21 — the partitioned initial-load fast path): `srcDir`
+    * commit (the partitioned initial-load fast path): `srcDir`
     * holds `b=<i>` subdirs written by ONE cross-partition Spark job
     * (see PartitionedLakeTable.writePartitions); adoption is a
     * driver-side move + v1 manifest publish, no Spark job. Caller
@@ -1625,7 +1633,7 @@ final class LakeTable(
     if (!io.rename(srcDir, dest)) return false
     val written: Set[Int] =
       io.list(dest).collect { case BucketDirRe(b) => b.toInt }.toSet
-    // r22 (ADVICE r21): an adopted leaf with NO bucket dirs means the
+    // An adopted leaf with NO bucket dirs means the
     // staged write's layout drifted (bucket-dir naming/escape) — treating
     // it as adopted would silently drop the partition's rows with no
     // commit. Clean up and report failure so the caller re-dispatches the
@@ -1770,17 +1778,10 @@ final class LakeTable(
     if (files.isEmpty) return Map.empty
     val poolSize = (spark.sparkContext.defaultParallelism / 4).max(4)
       .min(files.size)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
-    try {
-      val tasks = files.map { case (b, f) =>
-        new java.util.concurrent.Callable[(Int, LakeTable.FileFooter)] {
-          def call(): (Int, LakeTable.FileFooter) = b -> LakeTable.readFileFooter(
-            new HPath(s"$basePath/$relDir/$BucketCol=$b/$f"), f, statCols, conf)
-        }
-      }.asJava
-      pool.invokeAll(tasks).asScala.map(_.get()).toSeq
-        .groupBy(_._1).map { case (b, s) => b -> s.map(_._2) }
-    } finally pool.shutdown()
+    graft.util.DriverPool.runAll(poolSize, files.map { case (b, f) =>
+      () => b -> LakeTable.readFileFooter(
+        new HPath(s"$basePath/$relDir/$BucketCol=$b/$f"), f, statCols, conf)
+    }).groupBy(_._1).map { case (b, s) => b -> s.map(_._2) }
   }
 
   /** Build + write per-bucket bloom sidecar files for the buckets just
@@ -1797,12 +1798,12 @@ final class LakeTable(
     if (written.isEmpty) return Map.empty
     val paths = written.toSeq.sorted.map(b => s"$basePath/$relDir/$BucketCol=$b")
     val keys = spark.read.parquet(paths: _*).select(col(KeyCol))
-    // Size for the biggest bucket (hash buckets are near-uniform). r21:
-    // the row counts come from the just-written parquet FOOTERS — exact,
+    // Size for the biggest bucket (hash buckets are near-uniform). The
+    // row counts come from the just-written parquet FOOTERS — exact,
     // driver-side, zero Spark jobs — where the old groupBy().count() agg
     // planned an exchange and cost 2-3 AQE stage jobs per bloom commit.
     // A bucket dir's rows all hash to that bucket by construction, so
-    // the per-dir footer sum IS the old per-bucket count. r22: footers
+    // the per-dir footer sum IS the old per-bucket count. Footers
     // arrive pre-read (one bounded-pool pass shared with the stats
     // sidecar).
     val maxN =
@@ -1878,7 +1879,7 @@ final class LakeTable(
   private def statable(dt: DataType): Boolean = dt match {
     case _: org.apache.spark.sql.types.NumericType => true // incl. DecimalType
     case org.apache.spark.sql.types.StringType => true
-    // r15 (VERDICT r14 #4): genuine temporal payload columns — a real CDC
+    // Genuine temporal payload columns — a real CDC
     // table's created_at/updated_at — record integer bounds (epoch micros
     // / epoch days, see statNorm) like Hudi col_stats. TimestampNTZ stays
     // un-statable: normalizing it needs a session zone, and a sidecar
@@ -1910,7 +1911,7 @@ final class LakeTable(
     * scalar collect; one JSON sidecar per commit. Returns the
     * manifest-relative path, or None when nothing statable.
     *
-    * r14: stats are computed per FILE (grouped on `input_file_name`, the
+    * Stats are computed per FILE (grouped on `input_file_name`, the
     * Hudi metadata-table col_stats granularity) and rolled up to the
     * bucket locally from the collected per-file rows — still ONE
     * distributed pass over the just-written data. With `zorderBy` +
@@ -1929,7 +1930,7 @@ final class LakeTable(
       writtenSchema: StructType,
       footers: Map[Int, Seq[LakeTable.FileFooter]]): Option[String] = {
     if (written.isEmpty) return None
-    // The just-written files carry PHYSICAL names (r20): translate the
+    // The just-written files carry PHYSICAL names: translate the
     // handle's logical statsColumns and record the sidecar keys PHYSICAL
     // too — physical names are stable across renames, so recorded stats
     // keep pruning after a rename (readers remap via logicalStats).
@@ -1941,8 +1942,8 @@ final class LakeTable(
     // Normalized per-node stats: (rows, per-eligible-column (min, max,
     // nulls)) — produced by either source below, serialized identically.
     type NodeData = (Long, Seq[(Option[Any], Option[Any], Long)])
-    // r22 footer fast path (guide §6 — the r21 bloom-sizing mechanism
-    // extended to column stats): per-file bounds come straight from the
+    // Footer fast path (the bloom-sizing mechanism extended to column
+    // stats): per-file bounds come straight from the
     // parquet FOOTERS already read for this commit — exact, ZERO Spark
     // jobs — whenever every eligible column's footer statistics are
     // usable in every file (see ColFooter). INT96 timestamps, FLBA-backed
@@ -2091,9 +2092,9 @@ final class LakeTable(
         val root = new ObjectMapper().readTree(io.readString(io.resolve(p)))
         val bNode = root.get("buckets")
         // current shape: {"rows": N, "cols": {col: {min, max, nulls}},
-        // "files": {name: {rows, cols}}}; the early-r13 shape
+        // "files": {name: {rows, cols}}}; the oldest shape
         // ({col: {min, max}} directly) still loads (bounds only, no null
-        // counts, no files), as does r13's cols-without-files.
+        // counts, no files), as does the later cols-without-files one.
         def opt(n: JsonNode): Option[JsonNode] =
           Option(n).filterNot(_.isNull)
         def parseOne(node: ObjectNode, withFiles: Boolean): LakeTable.BucketStats = {
@@ -2124,7 +2125,7 @@ final class LakeTable(
     })
 
   /** Sidecar stats are keyed by PHYSICAL column names (stable across
-    * renames, r20); pruning filters reference LOGICAL names — remap the
+    * renames); pruning filters reference LOGICAL names — remap the
     * keys through the manifest's mapping and DROP retired physical names
     * entirely (their bounds describe a dropped column's data; a re-added
     * same-named logical column reads NULL from those files, so matching
@@ -2162,13 +2163,14 @@ final class LakeTable(
           !filters.exists(f => excludes(f, st))
         }
       else {
-        // Delta-carrying bucket (r15): prunable iff EVERY layer has a
+        // Delta-carrying bucket: prunable iff EVERY layer has a
         // stats sidecar — the base (when a base dir exists) plus one per
         // stacked delta ([[Manifest.deltaStats]] aligned with `deltas`).
         // Any unknown layer could hold a matching row, so a misaligned
-        // stack (pre-r15/r16 deltas, un-statable row-carrying batch)
+        // stack (deltas written before per-delta stats, un-statable
+        // row-carrying batch)
         // never prunes. Pure-DELETE layers are recorded as
-        // [[LakeTable.EmptyStatsLayer]] sentinels (r16): they keep the
+        // [[LakeTable.EmptyStatsLayer]] sentinels: they keep the
         // stack aligned but are SKIPPED from the union — a delete can
         // only remove rows, so it adds nothing to any range. The union
         // over-covers rows tombstones have since deleted — conservative
@@ -2253,14 +2255,14 @@ final class LakeTable(
       case LessThan(a, v)           => allNull(a) || mn(a).flatMap(cmp(_, v)).exists(_ >= 0)
       case LessThanOrEqual(a, v)    => allNull(a) || mn(a).flatMap(cmp(_, v)).exists(_ > 0)
       case EqualTo(a, v) if v != null => allNull(a) || outside(a, v)
-      // null-safe equality (r16): v != null behaves exactly like EqualTo
+      // null-safe equality: v != null behaves exactly like EqualTo
       // (a null row can't <=> a non-null literal); v == null is IsNull.
       case EqualNullSafe(a, v) =>
         if (v == null) nulls(a).contains(0L) else allNull(a) || outside(a, v)
       // a != v keeps only rows PROVABLY different from v — null rows
       // evaluate to unknown and are filtered post-scan, so an all-null
       // bucket is excluded; so is a constant bucket whose entire range IS
-      // v (min == v == max: every non-null row equals v) (r16).
+      // v (min == v == max: every non-null row equals v).
       case Not(EqualTo(a, v)) if v != null =>
         allNull(a) ||
           (mn(a).flatMap(cmp(_, v)).exists(_ == 0) &&
@@ -2268,7 +2270,7 @@ final class LakeTable(
       // any string with prefix v is >= v in byte order, so max < v
       // excludes; and it is < ub(v) — v's UTF-8 bytes with the 0xFF tail
       // dropped and the last remaining byte incremented — so min >= ub(v)
-      // excludes too (r16; no ub when v is all 0xFF bytes). Both sides
+      // excludes too (no ub when v is all 0xFF bytes). Both sides
       // compare raw UTF-8 bytes, the same order the sidecar's string
       // bounds were reduced under.
       case StringStartsWith(a, v) if v != null =>
@@ -2298,7 +2300,8 @@ final class LakeTable(
     * stats: the file subsets the filters can still touch. Only buckets
     * where at least one file is provably excluded appear in the result
     * (absent = read the whole bucket dir, the conservative default —
-    * also what pre-r14 sidecars and delta-carrying buckets get). An
+    * also what sidecars without per-file stats and delta-carrying
+    * buckets get). An
     * empty surviving list is VALID: the bucket's rolled-up range can
     * straddle a filter that individually excludes every file (a value
     * in a gap between file ranges) — the bucket then contributes no
@@ -2334,7 +2337,7 @@ final class LakeTable(
   private[graft] def statsPrune(
       version: Long, filters: Seq[SFilter]): Option[DataFrame] = {
     val m = readManifest(version)
-    // deltaStats alone can prune too (r15): an all-delta MOR table — no
+    // deltaStats alone can prune too: an all-delta MOR table — no
     // base commit yet, statsFiles empty — still has per-delta sidecars.
     if ((m.statsFiles.isEmpty && m.deltaStats.isEmpty) || filters.isEmpty) return None
     val keep = statsPrunedBuckets(m, filters)
@@ -2515,7 +2518,7 @@ object LakeTable {
 
   /** A just-written parquet file's footer essentials — row count plus the
     * requested columns' [[ColFooter]]s. Read ONCE per file per commit and
-    * shared by bloom sizing and the stats sidecar (r22).
+    * shared by bloom sizing and the stats sidecar.
     */
   private[lake] final case class FileFooter(
       name: String, rows: Long, cols: Map[String, ColFooter])
@@ -2643,7 +2646,7 @@ object LakeTable {
   val BloomFileName = "_bloom"
   val StatsFileName = "_stats.json"
   /** Sentinel recorded in [[Manifest.deltaStats]] for a PURE-DELETE delta
-    * commit (r16, VERDICT r15 #3): the batch carries no payload columns,
+    * commit: the batch carries no payload columns,
     * so there is no sidecar to write — but deletes only REMOVE rows, so
     * the layer provably contributes nothing to the bucket's value ranges.
     * Recording the sentinel keeps the stack aligned with `deltas` (the
@@ -2655,7 +2658,7 @@ object LakeTable {
 
   /** The manifest schema with each renamed column under its PHYSICAL
     * (birth) name — what data files actually store; field order and
-    * types preserved (r20 rename mapping).
+    * types preserved (the rename mapping).
     */
   private[lake] def physSchema(schema: StructType, renames: Map[String, String]): StructType =
     if (renames.isEmpty) schema
@@ -2667,7 +2670,7 @@ object LakeTable {
     * PHYSICAL name (a re-added dropped column, or a new column named like
     * a renamed-away original) gets a fresh `name#N` physical — otherwise
     * `spark.read.schema(physSchema)` would resurrect the old files' data
-    * under the new column (r20).
+    * under the new column.
     */
   private[lake] def assignPhysical(
       prevSchema: Option[StructType],
@@ -2692,15 +2695,15 @@ object LakeTable {
   }
 
   /** Parsed per-column sidecar stats: min/max bounds (absent = all-null
-    * or non-finite) and the null count (absent on early-r13 sidecars). */
+    * or non-finite) and the null count (absent on the oldest sidecars). */
   private[lake] final case class ColStat(
       mn: Option[JsonNode], mx: Option[JsonNode], nulls: Option[Long])
 
-  /** Parsed per-bucket sidecar stats: row count (absent on early-r13
-    * sidecars), per-column stats, and (r14, Hudi metadata-table
+  /** Parsed per-bucket sidecar stats: row count (absent on the oldest
+    * sidecars), per-column stats, and (Hudi metadata-table
     * `col_stats` shape) per-FILE stats keyed by file name within the
     * bucket dir — each file's entry reuses this class with `files`
-    * empty. Absent on pre-r14 sidecars (bucket-level pruning only). */
+    * empty. Absent on older sidecars (bucket-level pruning only). */
   private[lake] final case class BucketStats(
       rows: Option[Long], cols: Map[String, ColStat],
       files: Map[String, BucketStats] = Map.empty)
@@ -2718,7 +2721,7 @@ object LakeTable {
     else None
 
   /** Conservative union of per-layer stats (base + delta sidecars of one
-    * bucket, r15): a column's union bounds exist only when EVERY layer
+    * bucket): a column's union bounds exist only when EVERY layer
     * either records bounds or is PROVABLY all-null in it (nulls == rows
     * — bounds can also be absent because a non-finite double bound was
     * dropped, and treating that as "no values" would un-cover real
@@ -2886,12 +2889,12 @@ object LakeTable {
       deltaBlooms: Map[Int, Seq[String]] = Map.empty,
       statsFiles: Map[Int, String] = Map.empty,
       commitTimeMs: Long = 0L,
-      // r15: per-delta-commit stats sidecars, aligned with `deltas` (one
+      // Per-delta-commit stats sidecars, aligned with `deltas` (one
       // path per stacked delta layer). A bucket prunes under a live stack
       // only when EVERY layer has stats (stack lengths equal) — see
       // statsPrunedBuckets.
       deltaStats: Map[Int, Seq[String]] = Map.empty,
-      // r20 column rename/drop (manifest name-mapping — the addColumns
+      // Column rename/drop (manifest name-mapping — the addColumns
       // precedent; Hudi/Iceberg-style logical-over-physical evolution).
       // FILES ALWAYS STORE A COLUMN'S BIRTH ("physical") NAME; the
       // manifest schema is LOGICAL. `renames` maps logical -> physical
@@ -2981,8 +2984,8 @@ object LakeTable {
         deltas = seqMap("deltas"),
         deltaBlooms = seqMap("deltaBlooms"),
         statsFiles = objMap("statsFiles"),
-        // pre-r12 manifests carry no commit time — 0 keeps them resolvable
-        // by versionAt (they sort before any stamped commit)
+        // manifests older than commit-time stamping carry none — 0 keeps
+        // them resolvable by versionAt (they sort before any stamped commit)
         commitTimeMs =
           Option(root.get("commitTimeMs")).map(_.asLong()).getOrElse(0L),
         deltaStats = seqMap("deltaStats"),

@@ -1,7 +1,5 @@
 package graft.lake
 
-import scala.jdk.CollectionConverters._
-
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -11,7 +9,7 @@ import org.apache.spark.sql.types.{DataType, StringType}
 /** Business-partitioned lake table: one bucketed [[LakeTable]] per value of
   * a partition column (`basePath/p=<value>/...`), the Hudi partition-path
   * layout over our COW core. `partitionCol` may be a COMMA-SEPARATED list
-  * (r20 — Hudi ComplexKeyGenerator partition-path parity,
+  * (Hudi ComplexKeyGenerator partition-path parity,
   * `hoodie.datasource.write.partitionpath.field` accepts the same shape;
   * reference config surface `BinlogSyncHoodieCommand.scala:128-139`): a
   * composite declaration like `"region,day"` creates the NESTED layout
@@ -48,7 +46,7 @@ final class PartitionedLakeTable(
     val tableType: String = LakeTable.CowType,
     val compactAfter: Int = 8,
     val mergeMode: String = LakeTable.OverwriteMode,
-    val statsColumns: Seq[String] = Nil) {
+    val statsColumns: Seq[String] = Nil) extends LakeHandle {
 
   /** The partition column names, in layout (nesting) order. */
   val partitionCols: Seq[String] =
@@ -65,7 +63,7 @@ final class PartitionedLakeTable(
   private val io = new LakeIO(basePath, spark.sparkContext.hadoopConfiguration)
 
   /** Identity → components. Single-column identities are the raw value
-    * (which may legitimately contain `/` — pre-r20 contract); composite
+    * (which may legitimately contain `/`); composite
     * identities split on the join separator, arity-checked loudly.
     */
   private def splitVals(v: String): Seq[String] =
@@ -91,7 +89,7 @@ final class PartitionedLakeTable(
   private def writeMetaIfAbsent(dts: Seq[DataType]): Unit = synchronized {
     if (io.exists(metaFile)) {
       // A handle whose declaration disagrees with the STORED layout must
-      // not write new dirs under a different nesting (r20 — the same
+      // not write new dirs under a different nesting (the same
       // validated-never-trusted contract LakeHandles.fromOptions applies;
       // this guard covers direct Scala construction too).
       val stored = new ObjectMapper().readTree(io.readString(metaFile))
@@ -107,7 +105,8 @@ final class PartitionedLakeTable(
     val mapper = new ObjectMapper()
     val root = mapper.createObjectNode()
     root.put("partitionCol", partitionCols.mkString(","))
-    // legacy single-column field kept for pre-r20 readers of the file
+    // legacy single-column field kept for readers that predate
+    // composite layouts
     if (dts.size == 1) root.put("partitionTypeJson", dts.head.json)
     val arr = root.putArray("partitionTypesJson")
     dts.foreach(dt => arr.add(dt.json))
@@ -152,7 +151,7 @@ final class PartitionedLakeTable(
     * per-version metadata on the handle (commit times, stats sidecars) —
     * a fresh handle per call would re-read those small files from
     * storage on every filtered scan / timestamp resolution, multiplied
-    * by partition count (the r13 review's planning-latency finding).
+    * by partition count (a planning-latency cost).
     * Handles are stateless apart from those caches, so sharing is safe.
     */
   private val handleCache =
@@ -170,10 +169,10 @@ final class PartitionedLakeTable(
   /** True iff the STORED table is mergeMode=partial — a committed
     * partition's manifest schema carries `_pts` (partitions share one
     * logical mode: the CDC sink writes them all under one table config).
-    * Same purpose as [[LakeTable.isPartialTable]] (r16). Mixed state
+    * Same purpose as [[LakeTable.isPartialTable]]. Mixed state
     * (e.g. `latchPartial` applied to only some partitions) fails LOUDLY
-    * instead of routing writes with an arbitrary first partition's mode
-    * (ADVICE r16): the probe reads one tiny manifest per partition.
+    * instead of routing writes with an arbitrary first partition's mode;
+    * the probe reads one tiny manifest per partition.
     */
   def isPartialTable: Boolean = {
     val modes = partitions.map(v => v -> partitionTable(v).isPartialTable)
@@ -192,9 +191,9 @@ final class PartitionedLakeTable(
   /** Partitions a probe addresses, with the manifest each one reads:
     * the pinned version vector's when given (no directory listing — the
     * vector is the authority, and every probe of one statement sees ONE
-    * committed state; ADVICE r17), else the committed listing at latest;
+    * committed state), else the committed listing at latest;
     * optionally restricted to in-band named values (`inPartitions` — the
-    * [[deleteRouted]] routing contract, r18). Unknown named values are
+    * [[deleteRouted]] routing contract). Unknown named values are
     * cheap no-ops, same as deleteRouted.
     */
   private def probeTargets(
@@ -249,8 +248,8 @@ final class PartitionedLakeTable(
       }.reduce(_.union(_)),
       numBuckets).collect { case (Some(v), bs) => v -> bs }
 
-  /** Exact key-membership probe (r17, for SQL MERGE's branch split on
-    * partitioned targets; batched + routable + pinnable r18). `_key`
+  /** Exact key-membership probe (for SQL MERGE's branch split on
+    * partitioned targets; batched, routable and pinnable). `_key`
     * identity is GLOBAL by default (same contract as the key-only
     * [[delete]] fan-out): every committed partition is probed — but ONE
     * candidate job decides all surviving (partition, bucket) scans, and
@@ -429,15 +428,9 @@ final class PartitionedLakeTable(
     // the touched-partition count.
     val poolSize = (spark.sparkContext.defaultParallelism / 4).max(4)
       .min(values.length).max(1)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
-    try {
-      val tasks = values.map { v =>
-        new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = run(partitionTable(v), v, scoped(commitId, s"p=$v"))
-        }
-      }.asJava
-      pool.invokeAll(tasks).asScala.foreach(_.get()) // rethrow failures
-    } finally pool.shutdown()
+    graft.util.DriverPool.runAll(poolSize, values.map { v =>
+      () => run(partitionTable(v), v, scoped(commitId, s"p=$v"))
+    })
     if (clearTombstones) clearRebornTombstones(values)
   }
 
@@ -603,7 +596,7 @@ final class PartitionedLakeTable(
       values: Seq[String],
       commitId: String,
       dedupe: Boolean): Set[String] = {
-    // r22 (ADVICE r21): also slow-path on object-store schemes (adoption
+    // also slow-path on object-store schemes (adoption
     // is a plain FileSystem rename — LakeIO's owner-token protocol never
     // renames, and on s3a/gs a directory rename is a non-atomic
     // copy+delete) and on filesPerBucket > 1 (the one-job load writes one
@@ -700,7 +693,7 @@ final class PartitionedLakeTable(
   def delete(keys: DataFrame, inPartitions: Option[Seq[String]] = None, commitId: String = ""): Unit = {
     if (keys.isEmpty) return // avoid one no-op commit check per partition
     val targets = inPartitions.getOrElse(partitions)
-    // r21: the key set is re-evaluated by EVERY partition's bloom-pruned
+    // the key set is re-evaluated by EVERY partition's bloom-pruned
     // delete (separate actions) — materialize it once, and dispatch from
     // the shared bounded pool instead of sequentially (partition tables
     // are independent; a delete never rebirths a dropped partition, so
@@ -829,7 +822,7 @@ final class PartitionedLakeTable(
   }
 
   /** Additive column evolution across every committed partition — see
-    * [[LakeTable.addColumns]] (r18). Partitions born later inherit the
+    * [[LakeTable.addColumns]]. Partitions born later inherit the
     * columns from the writes that create them.
     */
   def addColumns(cols: org.apache.spark.sql.types.StructType, commitId: String = ""): Unit =
@@ -838,7 +831,7 @@ final class PartitionedLakeTable(
     }
 
   /** Manifest-only type widening across every committed partition — see
-    * [[LakeTable.widenColumn]] (r18). The partition column itself cannot
+    * [[LakeTable.widenColumn]]. The partition column itself cannot
     * change type (its values are directory names under the recorded
     * type).
     */
@@ -852,7 +845,7 @@ final class PartitionedLakeTable(
   }
 
   /** Manifest-only column rename across every committed partition — see
-    * [[LakeTable.renameColumn]] (r20). Partition columns themselves
+    * [[LakeTable.renameColumn]]. Partition columns themselves
     * cannot rename (their values are directory names; the layout is
     * keyed by the declared names).
     */
@@ -860,7 +853,7 @@ final class PartitionedLakeTable(
     require(!partitionCols.exists(c => c.equalsIgnoreCase(from) || c.equalsIgnoreCase(to)),
       s"cannot rename the partition column '$from'/'$to' — the layout is " +
         "keyed by the declared partition column names")
-    // ADVICE r20: a declared-but-never-written table has no committed
+    // A declared-but-never-written table has no committed
     // schema — a silent no-op would report success and record nothing
     require(partitions.nonEmpty,
       s"empty table at $basePath — the first write defines the schema")
@@ -870,7 +863,7 @@ final class PartitionedLakeTable(
   }
 
   /** Manifest-only column drop across every committed partition — see
-    * [[LakeTable.dropColumn]] (r20). Partition columns cannot drop.
+    * [[LakeTable.dropColumn]]. Partition columns cannot drop.
     */
   def dropColumn(name: String, commitId: String = ""): Unit = {
     require(!partitionCols.exists(_.equalsIgnoreCase(name)),
@@ -976,12 +969,12 @@ final class PartitionedLakeTable(
     }
   }
 
-  /** Empty result with the TABLE's schema (ADVICE r8): `spark
+  /** Empty result with the TABLE's schema: `spark
     * .emptyDataFrame` is ZERO-column, and batch consumers that
     * select/union a no-partitions-matched read or a nothing-changed
     * incremental fail on the missing columns. Cost: manifest reads only
     * (the union plan is lazy and carries no rows) against the LISTING THE
-    * CALLER ALREADY HOLDS — no re-listing (r9 review); a never-written
+    * CALLER ALREADY HOLDS — no re-listing; a never-written
     * table has no schema to offer and keeps the zero-column frame.
     */
   private def emptyFrame(

@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 
 import graft.cdc.CdcSyncCommand
-import graft.lake.{LakeTable, PartitionedLakeTable}
+import graft.lake.{LakeHandle, LakeTable, PartitionedLakeTable}
 
 /** Streaming sink registration (reference operators S2/S3,
   * `/root/reference/src/main/java/org/apache/spark/sql/hudi/sources/BinlogHoodieDataSource.scala:24-35`
@@ -72,7 +72,7 @@ class CdcLakeSinkProvider extends StreamSinkProvider
     new CdcLakeSink(parameters)
   }
 
-  /** Batch write parity — TWO shapes share the format (r18):
+  /** Batch write parity — TWO shapes share the format:
     *
     *  - **CDC envelope batches** (reference E2,
     *    `BinlogSyncHoodieCommand.scala:231-234`): a single string
@@ -85,10 +85,10 @@ class CdcLakeSinkProvider extends StreamSinkProvider
     *    `INSERT INTO` semantics (null-contract guard included).
     *    `SaveMode.Overwrite` is rejected like `INSERT OVERWRITE`.
     *
-    * Anything else fails LOUDLY: the pre-r18 path parsed the FIRST
-    * column of any batch as envelope JSON, so a CTAS of plain rows
-    * dropped every "malformed" row and committed NOTHING — a
-    * successful-looking statement leaving an empty table.
+    * Anything else fails LOUDLY: parsing the FIRST column of any batch
+    * as envelope JSON would make a CTAS of plain rows drop every
+    * "malformed" row and commit NOTHING — a successful-looking statement
+    * leaving an empty table.
     */
   override def createRelation(
       sqlContext: SQLContext,
@@ -109,12 +109,12 @@ class CdcLakeSinkProvider extends StreamSinkProvider
       rel.mergeWrite(Some(data), None)
     } else if (cols.length == 1 &&
         data.schema.head.dataType == org.apache.spark.sql.types.StringType) {
-      // The BATCH envelope path defaults to STRICT parsing (ADVICE r18):
+      // The BATCH envelope path defaults to STRICT parsing:
       // the streaming sink's drop-malformed default protects a live CDC
       // feed from one poison record, but here a `CTAS ... AS SELECT name
       // FROM users` (one string column that merely LOOKS like the
       // envelope shape) would silently drop every row and commit an
-      // empty table — the same bug class the r18 shape dispatch fixed.
+      // empty table — the same bug class the shape dispatch above closes.
       // An explicit `option.onmalformed=drop` restores the lenient mode.
       val params =
         if (parameters.contains(CdcSyncCommand.OnMalformedKey)) parameters
@@ -139,7 +139,7 @@ class CdcLakeSinkProvider extends StreamSinkProvider
       parameters: Map[String, String]): BaseRelation =
     new LakeSnapshotRelation(sqlContext, parameters)
 
-  /** Schema-carrying read (r19) — what makes `CREATE TABLE t (cols...)
+  /** Schema-carrying read — what makes `CREATE TABLE t (cols...)
     * USING cdc-lake` declare an EMPTY lake table that `INSERT INTO`
     * then bootstraps: a never-written table has no stored schema to
     * infer, so without this route the declared-first lifecycle was
@@ -160,7 +160,7 @@ class CdcLakeSinkProvider extends StreamSinkProvider
 /** Current-snapshot relation over a LakeTable OR PartitionedLakeTable dir
   * (layout self-detected from `_table.json`, like the streaming source).
   *
-  * v1 `PrunedFilteredScan` (VERDICT r8 #1): Spark hands the relation the
+  * v1 `PrunedFilteredScan`: Spark hands the relation the
   * required columns and the conjunctive pushable filters, and we apply BOTH
   * to the snapshot DataFrame *before* `.rdd` — so the parquet scan under
   * the relation reads only the projected columns (`ReadSchema`) and
@@ -184,9 +184,9 @@ class LakeSnapshotRelation(
     declaredSchema: Option[StructType] = None) extends BaseRelation
     with PrunedFilteredScan with InsertableRelation {
 
-  // Case-insensitive option resolution on EVERY construction route
-  // (ADVICE r19): the DataSource routes already hand a CaseInsensitiveMap,
-  // but the time-travel parser rewrite hands the RAW catalog
+  // Case-insensitive option resolution on EVERY construction route: the
+  // DataSource routes already hand a CaseInsensitiveMap, but the
+  // time-travel parser rewrite hands the RAW catalog
   // storage.properties — without the wrap an option keyed `versionasof`
   // or `querytype` would silently not apply on that route only.
   private val parameters: Map[String, String] =
@@ -205,13 +205,11 @@ class LakeSnapshotRelation(
   // widening between planning and execution -> Row/schema mismatch at
   // runtime), and a routed read (key lookup / partition prune) resolving
   // a NEWER version than the full-scan path would let one query mix two
-  // committed states (r9 review). Every route below reads the pinned
+  // committed states. Every route below reads the pinned
   // version(s); new commits become visible to NEW relation instances
   // (catalog sync re-registers per CDC batch; ad-hoc readers
   // `REFRESH TABLE`).
-  private lazy val opened: Either[PartitionedLakeTable, LakeTable] =
-    PartitionedLakeTable.open(ctx.sparkSession, path, buckets)
-      .toLeft(new LakeTable(ctx.sparkSession, path, buckets))
+  private lazy val opened: LakeHandle = LakeHandles.open(ctx.sparkSession, path, buckets)
 
   // Time travel (Hudi's `as.of.instant` read shape): `versionAsOf` pins
   // an EXPLICIT committed version instead of latest — a version number
@@ -241,8 +239,8 @@ class LakeSnapshotRelation(
       LakeTable.parseInstantMillis(raw)
     }
 
-  private lazy val pinnedVersion: Option[Long] =
-    opened.fold(_ => None, t => requestedVersion match {
+  private lazy val pinnedVersion: Option[Long] = opened match {
+    case t: LakeTable => requestedVersion match {
       case Some(v) =>
         require(v.nonEmpty && v.forall(_.isDigit),
           s"versionAsOf on a plain lake table takes a version number, got '$v'")
@@ -251,9 +249,11 @@ class LakeSnapshotRelation(
         case Some(ts) => t.versionAt(ts) // None -> pinnedEmpty
         case None => t.latestVersion
       }
-    })
-  private lazy val pinnedVector: Map[String, Long] =
-    opened.fold(pt => requestedVersion match {
+    }
+    case _ => None
+  }
+  private lazy val pinnedVector: Map[String, Long] = opened match {
+    case pt: PartitionedLakeTable => requestedVersion match {
       case Some(v) =>
         require(v.startsWith("{"),
           "versionAsOf on a partitioned lake table takes a JSON object " +
@@ -265,15 +265,19 @@ class LakeSnapshotRelation(
         case Some(ts) => pt.versionsAt(ts)
         case None => pt.currentVersions
       }
-    }, _ => Map.empty)
+    }
+    case _ => Map.empty
+  }
 
-  // Emptiness is pinned too (r9 advice): with no committed version at
+  // Emptiness is pinned too: with no committed version at
   // relation creation there is nothing to pin a version against, and
   // falling back to resolve-latest-at-execution would let a commit landing
   // between planning and scan re-open the cross-route version-mix window
   // the pin exists to close. An empty-at-pin relation stays empty.
-  private lazy val pinnedEmpty: Boolean =
-    opened.fold(_ => pinnedVector.isEmpty, _ => pinnedVersion.isEmpty)
+  private lazy val pinnedEmpty: Boolean = opened match {
+    case _: PartitionedLakeTable => pinnedVector.isEmpty
+    case _ => pinnedVersion.isEmpty
+  }
 
   // Hudi `hoodie.datasource.query.type` shape: `snapshot` (default,
   // real-time — MOR delta stacks merged) or `read_optimized` (base file
@@ -294,7 +298,7 @@ class LakeSnapshotRelation(
         s"queryType must be snapshot|read_optimized, got '$bad'")
     }
 
-  // `snapshotMode=refresh` (r18): re-resolve the LATEST committed
+  // `snapshotMode=refresh`: re-resolve the LATEST committed
   // version on EVERY buildScan instead of pinning at relation creation —
   // the stream-static enrichment contract. A streaming query analyzes
   // its plan ONCE, so a pinned dim-side relation would join every
@@ -322,7 +326,7 @@ class LakeSnapshotRelation(
 
   private lazy val snapshot: DataFrame =
     if (pinnedEmpty)
-      // A DECLARED schema (r19, the SchemaRelationProvider route) gives
+      // A DECLARED schema (the SchemaRelationProvider route) gives
       // a never-written table its read/INSERT shape — the declare-first
       // `CREATE TABLE t (cols...)` lifecycle; undeclared empties stay
       // zero-column as before.
@@ -331,11 +335,11 @@ class LakeSnapshotRelation(
         declaredSchema.getOrElse(new StructType()))
     else {
       val stored =
-        if (readOptimized)
-          opened.fold(_.snapshotReadOptimized, _.snapshotReadOptimized)
-        else opened.fold(
-          pt => pt.snapshotAt(pinnedVector),
-          t => t.snapshotAt(pinnedVersion.get))
+        if (readOptimized) opened.snapshotReadOptimized
+        else opened match {
+          case pt: PartitionedLakeTable => pt.snapshotAt(pinnedVector)
+          case t: LakeTable => t.snapshotAt(pinnedVersion.get)
+        }
       // The STORED schema is authoritative once anything committed; a
       // same-type declaration passes (nullability-only drift tolerated —
       // catalogs flip it routinely), a different one is loud: silently
@@ -416,7 +420,7 @@ class LakeSnapshotRelation(
     // semantics) and mixing views within one relation would let a key
     // probe observe rows the full scan hides.
     val base: DataFrame = if (pinnedEmpty || readOptimized) snapshot else opened match {
-      case Right(table) =>
+      case table: LakeTable =>
         equalityValues(filters, LakeTable.KeyCol) match {
           case Some(keys) if keys.forall(_.isInstanceOf[String]) =>
             // Bucket+bloom point read (Hudi bloom-index shape), at the
@@ -432,21 +436,19 @@ class LakeSnapshotRelation(
               case None => snapshot
             }
         }
-      case Left(pt) =>
-        // Per-COMPONENT equality pruning (generalized r20 for composite
-        // layouts): each partition column with a pushed string
-        // equality/IN constrains its component of the identity — ANY
-        // constrained component prunes, a prefix is not required (the
-        // identity list is already in hand via the pinned vector, so
-        // matching is a bounded driver filter, no listing). Route only
-        // STRING pushed values: the directory name is Spark's
-        // cast-to-string of the partition value, which Java toString of
-        // a typed literal (Timestamp, Decimal) need not match — a
-        // mismatched name would silently prune matching rows away (r9
-        // review). Typed partition columns fall through to the pinned
-        // full scan; the filter still applies below. Column stats
-        // compose: within the named partitions, buckets the recorded
-        // ranges exclude are skipped too.
+      case pt: PartitionedLakeTable =>
+        // Per-COMPONENT equality pruning (composite layouts too): each
+        // partition column with a pushed string equality/IN constrains its
+        // component of the identity — ANY constrained component prunes, a
+        // prefix is not required (the identity list is already in hand via
+        // the pinned vector, so matching is a bounded driver filter, no
+        // listing). Route only STRING pushed values: the directory name is
+        // Spark's cast-to-string of the partition value, which Java toString
+        // of a typed literal (Timestamp, Decimal) need not match — a
+        // mismatched name would silently prune matching rows away. Typed
+        // partition columns fall through to the pinned full scan; the filter
+        // still applies below. Column stats compose: within the named
+        // partitions, buckets the recorded ranges exclude are skipped too.
         val perCol: Seq[Option[Set[String]]] = pt.partitionCols.map { c =>
           equalityValues(filters, c) match {
             case Some(values) if values.forall(_.isInstanceOf[String]) =>
@@ -492,7 +494,7 @@ class LakeSnapshotRelation(
       fresh.scanPlan(requiredColumns, filters).rdd
     }
 
-  /** SQL write surface (r16, a v1-expressible slice of the deferred DSv2
+  /** SQL write surface (a v1-expressible slice of the deferred DSv2
     * item): `INSERT INTO <catalog-synced cdc-lake table> ...` resolves to
     * this v1 `InsertableRelation`, and the batch runs the table's NATIVE
     * last-write-wins upsert — the same semantic Hudi gives spark-sql
@@ -519,7 +521,7 @@ class LakeSnapshotRelation(
     mergeWrite(Some(data), None)
   }
 
-  /** Config-matched write handle (code-review r16 #5): SQL writes must
+  /** Config-matched write handle: SQL writes must
     * not strip the table's writer configuration — a default handle would
     * drop statsColumns (the COW commit DELETES a touched bucket's stats
     * entry when its handle records none), Z-clustering, the MOR delta
@@ -528,13 +530,13 @@ class LakeSnapshotRelation(
     * `CREATE TABLE ... USING cdc-lake` can set them directly);
     * mergeMode is inferred from the stored manifest like every reader.
     */
-  private def writeHandle: Either[PartitionedLakeTable, LakeTable] =
+  private def writeHandle: LakeHandle =
     LakeHandles.fromOptions(ctx.sparkSession, parameters + ("path" -> path))
 
   /** Exact key-membership probe for MERGE INTO's branch split — both
-    * layouts (r17: partitioned = bloom-pruned union over partitions,
+    * layouts (partitioned = bloom-pruned union over partitions,
     * global `_key` identity like the key-only delete fan-out). Probes
-    * the relation's PINNED version(s) (ADVICE r17): matched-ness, the
+    * the relation's PINNED version(s): matched-ness, the
     * read-modify-write rows, and the NOT MATCHED BY SOURCE anti-join all
     * address ONE committed state — an out-of-band commit between relation
     * caching and execution can no longer split one MERGE across two
@@ -544,9 +546,10 @@ class LakeSnapshotRelation(
   private[sources] def probeExistingKeys(
       keys: DataFrame, inPartitions: Option[Seq[String]] = None): DataFrame =
     if (pinnedEmpty) keys.select(LakeTable.KeyCol).limit(0)
-    else opened.fold(
-      _.probeKeys(keys, inPartitions, Some(pinnedVector)),
-      _.probeKeys(keys, pinnedVersion))
+    else opened match {
+      case pt: PartitionedLakeTable => pt.probeKeys(keys, inPartitions, Some(pinnedVector))
+      case t: LakeTable => t.probeKeys(keys, pinnedVersion)
+    }
 
   /** Full target rows for a key set, conformed to the relation schema —
     * the read side of MERGE's read-modify-write (partial `UPDATE SET`
@@ -563,15 +566,15 @@ class LakeSnapshotRelation(
       if (pinnedEmpty)
         ctx.sparkSession.createDataFrame(
           ctx.sparkSession.sparkContext.emptyRDD[Row], new StructType())
-      else opened.fold(
-        _.rowsForKeys(keys, inPartitions, Some(pinnedVector)),
-        _.rowsForKeys(keys, pinnedVersion)))
+      else opened match {
+        case pt: PartitionedLakeTable => pt.rowsForKeys(keys, inPartitions, Some(pinnedVector))
+        case t: LakeTable => t.rowsForKeys(keys, pinnedVersion)
+      })
 
   /** The partition columns (layout order) when this relation is a
     * partitioned layout; empty for plain tables.
     */
-  private[sources] def partitionColumns: Seq[String] =
-    opened.left.toOption.map(_.partitionCols).getOrElse(Nil)
+  private[sources] def partitionColumns: Seq[String] = opened.partitionCols
 
   /** The partitions `df` names in-band, for routing a probe: the
     * distinct partition identities of its rows, in one exchange-free job.
@@ -579,9 +582,12 @@ class LakeSnapshotRelation(
     * partition column, or when any row is unroutable (see
     * [[PartitionedLakeTable.routableValues]]).
     */
-  private[sources] def routedPartitions(df: DataFrame): Option[Seq[String]] =
-    opened.left.toOption.filter(_.partitionCols.forall(p =>
-      df.columns.contains(p) && p != LakeTable.KeyCol)).flatMap(_.routableValues(df))
+  private[sources] def routedPartitions(df: DataFrame): Option[Seq[String]] = opened match {
+    case pt: PartitionedLakeTable
+        if pt.partitionCols.forall(p => df.columns.contains(p) && p != LakeTable.KeyCol) =>
+      pt.routableValues(df)
+    case _ => None
+  }
 
   /** True iff no version has ever committed (the CTAS Overwrite gate). */
   private[sources] def neverWritten: Boolean = pinnedEmpty
@@ -592,25 +598,23 @@ class LakeSnapshotRelation(
     * contract the CDC catalog sync keeps (a stale catalog schema makes
     * every later read fail on the user-specified-vs-actual mismatch).
     */
-  private[sources] def latestUserSchema: StructType =
-    opened.fold(_.snapshot.schema, _.snapshot.schema)
+  private[sources] def latestUserSchema: StructType = opened.snapshot.schema
 
   /** Native-write dispatch shared by SQL INSERT INTO and MERGE INTO:
-    * upserts and deletes land in ONE `merge` commit when both are
-    * present (upsert-then-delete-in-one-batch stays consistent), through
-    * a mode-matched handle. Centralizes the write guards (code-review
-    * r16 #2/#4): no writes through a pinned time-travel or
-    * read-optimized relation, and no null contract columns — an
-    * in-plan raise_error on the `_ts` projection (a NULL-filled INSERT
-    * column list, or a MERGE whose ON expression evaluates null, would
+    * upserts and deletes land in ONE `merge` commit when both are present
+    * (upsert-then-delete-in-one-batch stays consistent), through a
+    * mode-matched handle. Centralizes the write guards: no writes through a
+    * pinned time-travel or read-optimized relation, and no null contract
+    * columns — an in-plan raise_error on the `_ts` projection (a NULL-filled
+    * INSERT column list, or a MERGE whose ON expression evaluates null, would
     * otherwise silently collapse rows into one null-key LWW group).
     */
   private[sources] def mergeWrite(ups: Option[DataFrame], dels: Option[DataFrame]): Unit = {
     require(
       requestedVersion.isEmpty && requestedTimestamp.isEmpty && !readOptimized,
       "cannot write through a time-travel or read-optimized cdc-lake relation")
-    // Loud contract error BEFORE building the raise_error projection
-    // (ADVICE r16): a MERGE/INSERT whose assignments omit the contract
+    // Loud contract error BEFORE building the raise_error projection: a
+    // MERGE/INSERT whose assignments omit the contract
     // columns would otherwise die on a generic unresolved-column message.
     ups.foreach(u => require(
       u.columns.contains(LakeTable.KeyCol) && u.columns.contains(LakeTable.TsCol),
@@ -627,19 +631,17 @@ class LakeSnapshotRelation(
             "expression that evaluates null?)")))
         .otherwise(col(LakeTable.TsCol))))
     (guarded, dels) match {
-      case (Some(u), Some(d)) =>
-        writeHandle.fold(_.merge(u, d), _.merge(u, d))
-      case (Some(u), None) =>
-        writeHandle.fold(_.upsert(u), _.upsert(u))
-      case (None, Some(d)) =>
+      case (Some(u), Some(d)) => writeHandle.merge(u, d)
+      case (Some(u), None) => writeHandle.upsert(u)
+      case (None, Some(d)) => writeHandle match {
         // Partition-routed when the key set carries EVERY partition
         // column (MERGE takes them from the TARGET row) — only the named
         // partitions dispatch; otherwise the global bloom-pruned fan-out.
-        writeHandle.fold(
-          pt =>
-            if (pt.partitionCols.forall(d.columns.contains)) pt.deleteRouted(d)
-            else pt.delete(d.select(LakeTable.KeyCol)),
-          _.delete(d))
+        case pt: PartitionedLakeTable =>
+          if (pt.partitionCols.forall(d.columns.contains)) pt.deleteRouted(d)
+          else pt.delete(d.select(LakeTable.KeyCol))
+        case t: LakeTable => t.delete(d)
+      }
       case (None, None) => ()
     }
   }
@@ -652,7 +654,7 @@ object CdcLakeSinkProvider {
 /** Micro-batch dispatch (ref S3): convert the streaming DF to batch and run
   * the CDC merge command with the batch id.
   *
-  * Commit-namespace resolution (VERDICT r6 #4): a query checkpointed via
+  * Commit-namespace resolution: a query checkpointed via
   * the SESSION conf (`spark.sql.streaming.checkpointLocation` + queryName)
   * resolves its checkpoint outside the options map, so the sink never sees
   * a `checkpointLocation` option and two such streams on one table would

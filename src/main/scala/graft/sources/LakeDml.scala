@@ -11,9 +11,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.lake.LakeTable
 
-/** SQL `DELETE FROM` / `UPDATE` for catalog-synced cdc-lake tables (r17 —
-  * the remaining everyday SQL write shapes after r16's INSERT INTO +
-  * MERGE INTO). Same pattern as [[LakeMergeIntoRule]]: Spark resolves
+/** SQL `DELETE FROM` / `UPDATE` for catalog-synced cdc-lake tables (the
+  * everyday SQL write shapes besides INSERT INTO and MERGE INTO). Same
+  * pattern as [[LakeMergeIntoRule]]: Spark resolves
   * both logical plans for any relation but rewrites them only for DSv2
   * row-level-op tables (a v1 target fails checkAnalysis), so this
   * post-hoc rule replaces the resolved plan with a command routing
@@ -57,7 +57,7 @@ class LakeDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
     case c: org.apache.spark.sql.execution.datasources.InsertIntoDataSourceCommand
         if c.logicalRelation.relation.isInstanceOf[LakeSnapshotRelation] =>
       LakeInsertSyncCommand(c)
-    // ALTER TABLE ADD COLUMNS (r18): the built-in command only supports
+    // ALTER TABLE ADD COLUMNS: the built-in command only supports
     // HadoopFsRelation providers (it would alter the CATALOG schema
     // alone, which the lake's manifest-driven reads would then reject as
     // a user-specified-vs-actual mismatch) — route to the manifest-only
@@ -66,7 +66,7 @@ class LakeDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
         if LakeSqlRewrites.lakeCatalogTable(
           session, a.table.database.toSeq :+ a.table.table).isDefined =>
       LakeAddColumnsCommand(a.table, a.colsToAdd)
-    // ALTER COLUMN ... TYPE (r18): manifest-only widening for exactly the
+    // ALTER COLUMN ... TYPE: manifest-only widening for exactly the
     // pairs the write path widens — the built-in v1 command would alter
     // only the catalog schema and desync it from the manifest.
     case c: org.apache.spark.sql.execution.command.AlterTableChangeColumnCommand
@@ -95,14 +95,8 @@ case class LakeWidenColumnCommand(
           "widening (int->bigint, float->double)")
     val ct = session.sessionState.catalog.getTableMetadata(table)
     val handle = LakeHandles.fromOptions(session, LakeSqlRewrites.lakeParams(ct))
-    handle.fold(
-      _.widenColumn(columnName, newColumn.dataType),
-      t => { t.widenColumn(columnName, newColumn.dataType); () })
-    val latest = LakeMergeInto.dataSchemaOf(
-      ct, handle.fold(_.snapshot.schema, _.snapshot.schema))
-    if (latest.nonEmpty && latest != ct.dataSchema)
-      session.sessionState.catalog.alterTableDataSchema(table, latest)
-    session.catalog.refreshTable(table.quotedString)
+    handle.widenColumn(columnName, newColumn.dataType)
+    LakeMergeInto.syncCatalogSchema(session, ct, handle.snapshot.schema)
     Seq.empty
   }
 }
@@ -136,17 +130,13 @@ case class LakeAddColumnsCommand(
     if (colsToAdd.map(_.name).distinct.size != colsToAdd.size)
       fail("duplicate column names in the ADD list")
     val cols = org.apache.spark.sql.types.StructType(colsToAdd)
-    handle.fold(_.addColumns(cols), _.addColumns(cols))
-    val latest = LakeMergeInto.dataSchemaOf(
-      ct, handle.fold(_.snapshot.schema, _.snapshot.schema))
-    if (latest.nonEmpty && latest != ct.dataSchema)
-      session.sessionState.catalog.alterTableDataSchema(table, latest)
-    session.catalog.refreshTable(table.quotedString)
+    handle.addColumns(cols)
+    LakeMergeInto.syncCatalogSchema(session, ct, handle.snapshot.schema)
     Seq.empty
   }
 }
 
-/** `ALTER TABLE <lake> RENAME COLUMN a TO b` (r20) — the manifest-only
+/** `ALTER TABLE <lake> RENAME COLUMN a TO b` — the manifest-only
   * name-mapping commit ([[graft.lake.LakeTable.renameColumn]]): zero
   * data IO, files keep the column's birth name, readers alias, time
   * travel before the rename answers under the old name. Routed at PARSE
@@ -160,15 +150,13 @@ case class LakeRenameColumnCommand(
   override def run(session: SparkSession): Seq[Row] = {
     val ct = session.sessionState.catalog.getTableMetadata(table)
     val handle = LakeHandles.fromOptions(session, LakeSqlRewrites.lakeParams(ct))
-    handle.fold(
-      _.renameColumn(from, to),
-      t => { t.renameColumn(from, to); () })
-    LakeDml.syncAlteredSchema(session, table, ct, handle)
+    handle.renameColumn(from, to)
+    LakeMergeInto.syncCatalogSchema(session, ct, handle.snapshot.schema)
     Seq.empty
   }
 }
 
-/** `ALTER TABLE <lake> DROP COLUMN [IF EXISTS] c[, ...]` (r20) — the
+/** `ALTER TABLE <lake> DROP COLUMN [IF EXISTS] c[, ...]` — the
   * manifest-only drop ([[graft.lake.LakeTable.dropColumn]]): the
   * column's physical name retires so a later re-add can never resurrect
   * old file data. `IF EXISTS` skips unknown names; otherwise they are
@@ -182,43 +170,15 @@ case class LakeDropColumnsCommand(
   override def run(session: SparkSession): Seq[Row] = {
     val ct = session.sessionState.catalog.getTableMetadata(table)
     val handle = LakeHandles.fromOptions(session, LakeSqlRewrites.lakeParams(ct))
-    // case-insensitive presence (ADVICE r20: Spark's resolution is — the
-    // exact-case filter silently skipped a case-variant of a live column)
+    // case-insensitive presence, like Spark's resolution: an exact-case
+    // filter would silently skip a case-variant of a live column
     val present = ct.schema.fieldNames.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
     val targets =
       if (ifExists) columns.filter(c => present.contains(c.toLowerCase(java.util.Locale.ROOT)))
       else columns
-    targets.foreach { c =>
-      handle.fold(_.dropColumn(c), t => { t.dropColumn(c); () })
-    }
-    LakeDml.syncAlteredSchema(session, table, ct, handle)
+    targets.foreach(handle.dropColumn(_))
+    LakeMergeInto.syncCatalogSchema(session, ct, handle.snapshot.schema)
     Seq.empty
-  }
-}
-
-object LakeDml {
-  /** Shared post-ALTER catalog upkeep: re-register the (renamed/dropped/
-    * widened) data schema — partition-declared columns stripped, see
-    * [[LakeMergeInto.dataSchemaOf]] — and drop the cached version-pinned
-    * relation.
-    */
-  private[sources] def syncAlteredSchema(
-      session: SparkSession,
-      table: org.apache.spark.sql.catalyst.TableIdentifier,
-      ct: org.apache.spark.sql.catalyst.catalog.CatalogTable,
-      handle: Either[graft.lake.PartitionedLakeTable, LakeTable]): Unit = {
-    val latest = LakeMergeInto.dataSchemaOf(
-      ct, handle.fold(_.snapshot.schema, _.snapshot.schema))
-    if (latest.nonEmpty && latest != ct.dataSchema)
-      // alterTableSchema, not alterTableDataSchema: the latter REFUSES a
-      // new schema missing old fields ("we don't support dropping
-      // columns yet") — exactly what a rename/drop produces. The full
-      // schema is data + the catalog's declared partition columns.
-      session.sessionState.catalog.alterTableSchema(
-        table,
-        org.apache.spark.sql.types.StructType(
-          latest.fields ++ ct.partitionSchema.fields))
-    session.catalog.refreshTable(table.quotedString)
   }
 }
 
@@ -306,7 +266,7 @@ case class LakeUpdateCommand(u: UpdateTable) extends LeafRunnableCommand {
       case other => fail(s"only top-level column assignment keys are supported: ${other.sql}")
     }
     // Same widening unwrap as MERGE — one shared helper so the two
-    // routes cannot drift (ADVICE r17): see [[LakeMergeInto.unwiden]].
+    // routes cannot drift: see [[LakeMergeInto.unwiden]].
     def unwiden(key: String, v: Expression): Expression =
       LakeMergeInto.unwiden(targetType, key, v)
     val mkv: Map[String, Expression] =

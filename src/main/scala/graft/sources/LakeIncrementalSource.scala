@@ -106,9 +106,7 @@ class LakeIncrementalSource(
   private val buckets =
     parameters.get("buckets").map(_.toInt).getOrElse(LakeTable.DefaultNumBuckets)
 
-  private val partitioned: Option[PartitionedLakeTable] =
-    PartitionedLakeTable.open(ctx.sparkSession, path, buckets)
-  private lazy val plain = new LakeTable(ctx.sparkSession, path, buckets)
+  private val handle = LakeHandles.open(ctx.sparkSession, path, buckets)
 
   private val maxVersions: Option[Long] = {
     val mx = parameters.get("maxVersionsPerBatch").map(_.toLong)
@@ -133,23 +131,23 @@ class LakeIncrementalSource(
     sv.map { v =>
       require(v.trim.nonEmpty && v.trim.forall(_.isDigit),
         s"startingVersion takes a version number, got '$v'")
-      require(partitioned.isEmpty,
+      require(handle.partitionCols.isEmpty,
         "startingVersion is ambiguous on a partitioned table — use startingTimestamp")
       Left(v.trim.toLong)
     }.orElse(st.map(t => Right(LakeTable.parseInstantMillis(t))))
   }
 
-  private lazy val startScalar: Long = startingBase match {
-    case Some(Left(v)) =>
-      val latest = plain.latestVersion.getOrElse(0L)
+  private lazy val startScalar: Long = (startingBase, handle) match {
+    case (Some(Left(v)), t: LakeTable) =>
+      val latest = t.latestVersion.getOrElse(0L)
       require(v <= latest,
         s"startingVersion $v is beyond the latest committed version $latest")
       v
-    case Some(Right(ts)) => plain.versionAt(ts).getOrElse(0L)
-    case None => 0L
+    case (Some(Right(ts)), t: LakeTable) => t.versionAt(ts).getOrElse(0L)
+    case _ => 0L
   }
-  private lazy val startVector: Map[String, Long] = startingBase match {
-    case Some(Right(ts)) => partitioned.map(_.versionsAt(ts)).getOrElse(Map.empty)
+  private lazy val startVector: Map[String, Long] = (startingBase, handle) match {
+    case (Some(Right(ts)), pt: PartitionedLakeTable) => pt.versionsAt(ts)
     case _ => Map.empty
   }
 
@@ -160,17 +158,16 @@ class LakeIncrementalSource(
 
   // Frozen at query start (Structured Streaming requires a fixed schema
   // per query run; restart the stream to pick up a widened schema).
-  override val schema: StructType =
-    partitioned.map(_.snapshot.schema).getOrElse(plain.snapshot.schema)
+  override val schema: StructType = handle.snapshot.schema
 
   // The AvailableNow drain target: the committed state frozen at
   // prepareForTriggerAvailableNow. None outside AvailableNow runs.
   private var drainTarget: Option[Either[Map[String, Long], Long]] = None
 
   override def prepareForTriggerAvailableNow(): Unit =
-    drainTarget = Some(partitioned match {
-      case Some(p) => Left(p.currentVersions)
-      case None => Right(plain.latestVersion.getOrElse(0L))
+    drainTarget = Some(handle match {
+      case pt: PartitionedLakeTable => Left(pt.currentVersions)
+      case t: LakeTable => Right(t.latestVersion.getOrElse(0L))
     })
 
   // Admission control is internal (maxVersionsPerBatch caps inside
@@ -206,13 +203,13 @@ class LakeIncrementalSource(
     * target: commits after the freeze — and partitions born after it —
     * belong to the next run.
     */
-  private def nextEnd(prev: Option[Offset]): Option[Offset] = partitioned match {
-    case Some(p) =>
+  private def nextEnd(prev: Option[Offset]): Option[Offset] = handle match {
+    case pt: PartitionedLakeTable =>
       val prevVec = prev.map(vector).getOrElse(startVector)
-      val vec = p.nextVersions(
+      val vec = pt.nextVersions(
         prevVec, maxVersions, drainTarget.flatMap(_.left.toOption))
       if (vec.isEmpty) None else Some(VectorOffset(vec))
-    case None =>
+    case plain: LakeTable =>
       val prevScalar = prev.map(scalar).getOrElse(startScalar)
       val target = drainTarget.flatMap(_.toOption)
       plain.nextVersion(prevScalar, maxVersions, target)
@@ -236,10 +233,10 @@ class LakeIncrementalSource(
 
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
     lastEnd = Some(end)
-    val batch = partitioned match {
-      case Some(p) =>
-        p.incrementalBetweenVec(start.map(vector).getOrElse(startVector), vector(end))
-      case None =>
+    val batch = handle match {
+      case pt: PartitionedLakeTable =>
+        pt.incrementalBetweenVec(start.map(vector).getOrElse(startVector), vector(end))
+      case plain: LakeTable =>
         plain.incrementalBetween(start.map(scalar).getOrElse(startScalar), scalar(end))
     }
     StreamBatch.toStreaming(conformToFrozen(batch, end))
@@ -251,8 +248,8 @@ class LakeIncrementalSource(
     * failing: on a partitioned table, widening only rewrites partitions
     * that receive rows, so a later micro-batch covering a stale (still
     * narrow) partition deterministically carries the narrower schema and
-    * a restart would NOT help (ADVICE r8 — the throw permanently wedged
-    * the stream). Only a batch WIDER than or incompatible with the frozen
+    * a restart would NOT help (throwing would permanently wedge the
+    * stream). Only a batch WIDER than or incompatible with the frozen
     * schema throws, where a restart genuinely adopts the new schema.
     */
   private def conformToFrozen(batch: DataFrame, end: Offset): DataFrame = {

@@ -12,14 +12,15 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions.{coalesce, col, lit, raise_error, when}
 import org.apache.spark.sql.graft.{Exprs, Plans}
+import org.apache.spark.sql.types.StructType
 
 import graft.lake.LakeTable
 
-/** SQL `MERGE INTO` for catalog-synced cdc-lake tables (r16, branches
-  * generalized r17 — with SQL `INSERT INTO` / `DELETE FROM` / `UPDATE`
-  * this closes the practical SQL write surface that was deferred in r11
-  * when a DSv2 reader proved unable to carry the lake's exchange-bearing
-  * merge plans; commands don't have that limitation).
+/** SQL `MERGE INTO` for catalog-synced cdc-lake tables (with SQL
+  * `INSERT INTO` / `DELETE FROM` / `UPDATE` this is the practical SQL
+  * write surface; a DSv2 reader proved unable to carry the lake's
+  * exchange-bearing merge plans, and commands don't have that
+  * limitation).
   *
   * Spark parses and RESOLVES `MergeIntoTable` for any relation (star
   * actions expand to column-by-name assignments in ResolveReferences)
@@ -51,7 +52,7 @@ import graft.lake.LakeTable
   *  - Partial `UPDATE SET` lists are read-modify-write: unassigned
   *    columns keep the TARGET row's values (the stored rows join in
   *    through the bloom-pruned [[LakeTable.rowsForKeys]] probe), exactly
-  *    SQL UPDATE semantics — never silently nulled (ADVICE r16).
+  *    SQL UPDATE semantics — never silently nulled.
   *  - Partial INSERT column lists put SQL's NULL in unassigned payload
   *    columns; `_ts` must be assigned (the lake's precombine contract —
   *    a null `_ts` has no place in LWW ordering) and `_key` derives from
@@ -61,26 +62,26 @@ import graft.lake.LakeTable
   *    whole source upserts in one commit, stale `_ts` loses (Hudi's
   *    precombine contract for its spark-sql MERGE). All split paths keep
   *    the same LWW contract per branch frame.
-  *  - Partitioned tables are fully supported (r17):
+  *  - Partitioned tables are fully supported:
   *    [[graft.lake.PartitionedLakeTable.probeKeys]] decides matched-ness
   *    globally, deletes route by the TARGET row's partition value, and a
   *    matched UPDATE that would MOVE a row across partitions fails at
   *    runtime (partition value is part of row placement; move = delete +
   *    insert explicitly). When the SOURCE carries the partition column
   *    in-band, the probe visits ONLY the partitions the source names
-  *    (r18 — the `deleteRouted` trust contract: the in-band value is
+  *    (the `deleteRouted` trust contract: the in-band value is
   *    the row's placement; a source naming the wrong partition for an
   *    existing key routes it to INSERT). Routing disables itself when a
   *    matched UPDATE assigns the partition column (the move guard needs
   *    the stored row wherever it lives) or any value is null; omit the
   *    column for the global (still bloom-pruned) probe.
-  *  - `WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE/DELETE` (r17 —
-  *    the sync-delete/sync-update shape) acts on target rows no source
+  *  - `WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE/DELETE` (the
+  *    sync-delete/sync-update shape) acts on target rows no source
   *    key names: target-only conditions/values, first-match routing,
   *    free read-modify-write (the population is the pinned snapshot
   *    anti-joined with the source keys — inherently a full-table scan,
   *    documented).
-  *  - `WITH SCHEMA EVOLUTION` (r18): ADDITIVE source columns append to
+  *  - `WITH SCHEMA EVOLUTION`: ADDITIVE source columns append to
   *    the lake schema before resolution (parse-time manifest-only
   *    commit, [[LakeSqlRewrites]]) — star actions carry every new
   *    column, explicit lists the ones they name; type CHANGES stay with
@@ -91,7 +92,7 @@ import graft.lake.LakeTable
   */
 class LakeMergeIntoRule(session: SparkSession) extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperators {
-    // m.resolved, not childrenResolved (code-review r16 #6): a merge
+    // m.resolved, not childrenResolved: a merge
     // whose conditions/assignments still hold unresolved attributes must
     // stay a MergeIntoTable so checkAnalysis reports the proper
     // column-not-found error — wrapping it in a resolved leaf command
@@ -109,30 +110,20 @@ object LakeMergeInto {
         lr.relation.asInstanceOf[LakeSnapshotRelation]
     }
 
-  /** The DATA-schema view of a stored lake schema for a catalog entry:
-    * when the entry declares `PARTITIONED BY` columns, the catalog holds
-    * them SEPARATELY (`CatalogTable.schema` = dataSchema ++
-    * partitionSchema) — so re-registering the FULL stored schema via
-    * `alterTableDataSchema` would duplicate the partition columns
-    * (`..., prio, seg, prio, seg`) and every later resolution of the
-    * table dies on the declared-vs-stored mismatch (r20 — q113 caught
-    * it; OPTIONS-declared layouts have empty partitionColumnNames and
-    * never hit this). Every catalog-upkeep site must strip the declared
-    * partition columns before comparing with / altering the data schema.
-    */
-  def dataSchemaOf(
-      ct: CatalogTable,
-      latest: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
-    if (ct.partitionColumnNames.isEmpty) latest
-    else org.apache.spark.sql.types.StructType(latest.filterNot(f =>
-      ct.partitionColumnNames.exists(_.equalsIgnoreCase(f.name))))
-
-  /** Post-write catalog upkeep for a catalog-backed lake target (shared
-    * by MERGE INTO and the DML commands); no-op for path-only relations.
+  /** Catalog upkeep after anything that may move a catalog-synced lake
+    * table's stored schema or version: SQL writes, ALTER TABLE, MERGE
+    * schema evolution and the CALL procedures all end here.
     *
-    *  - A stored schema widened past the catalog entry re-registers it
-    *    (`alterTableDataSchema`) — otherwise every later read fails on
-    *    the user-specified-vs-actual mismatch.
+    *  - The data schema is `stored` minus the entry's declared
+    *    `PARTITIONED BY` columns: the catalog holds those separately
+    *    (`CatalogTable.schema` = dataSchema ++ partitionSchema), and
+    *    re-registering them as data columns would duplicate them. When it
+    *    differs from the entry's (a widening write, ADD COLUMNS, a rename
+    *    or drop, or a rollback to an older schema) the entry is
+    *    re-registered with `alterTableSchema(data ++ partitionSchema)`;
+    *    otherwise every later read fails on the declared-vs-stored check.
+    *    The data-schema-only catalog alter would refuse any schema that
+    *    lacks an old column, which a rename, a drop or a rollback produces.
     *  - The cached relation ALWAYS drops: the session catalog caches the
     *    resolved LogicalRelation per table and lake relations PIN their
     *    version at creation, so without the refresh the statement AFTER
@@ -140,23 +131,29 @@ object LakeMergeInto {
     *    the pre-write snapshot (a deleted row matching its predicate
     *    would silently resurrect).
     */
-  def syncCatalogSchema(
-      session: SparkSession, rel: LakeSnapshotRelation, target: LogicalPlan): Unit = {
-    val ctable = target.collectFirst {
-      case lr: LogicalRelation if lr.catalogTable.isDefined &&
-          lr.relation.isInstanceOf[LakeSnapshotRelation] => lr.catalogTable.get
-    }
-    ctable.foreach { ct =>
-      val latest = dataSchemaOf(ct, rel.latestUserSchema)
-      if (latest.nonEmpty && latest != ct.dataSchema)
-        session.sessionState.catalog.alterTableDataSchema(ct.identifier, latest)
-      session.catalog.refreshTable(ct.identifier.quotedString)
-    }
+  def syncCatalogSchema(session: SparkSession, ct: CatalogTable, stored: StructType): Unit = {
+    val data = StructType(stored.filterNot(f =>
+      ct.partitionColumnNames.exists(_.equalsIgnoreCase(f.name))))
+    if (data.nonEmpty && data != ct.dataSchema)
+      session.sessionState.catalog.alterTableSchema(
+        ct.identifier, StructType(data.fields ++ ct.partitionSchema.fields))
+    session.catalog.refreshTable(ct.identifier.quotedString)
   }
 
+  /** [[syncCatalogSchema]] after a SQL write through `rel` (MERGE INTO
+    * and the DML commands); a no-op when `target` reads a path-only
+    * relation.
+    */
+  def syncCatalogSchema(
+      session: SparkSession, rel: LakeSnapshotRelation, target: LogicalPlan): Unit =
+    target.collectFirst {
+      case lr: LogicalRelation if lr.catalogTable.isDefined &&
+          lr.relation.isInstanceOf[LakeSnapshotRelation] => lr.catalogTable.get
+    }.foreach(syncCatalogSchema(session, _, rel.latestUserSchema))
+
   /** Undo Spark's store-assignment pre-narrowing so SQL writes keep the
-    * lake's widening contract (shared by MERGE and UPDATE — ADVICE r17:
-    * the two copies must not drift): `resolveAssignments` wraps every
+    * lake's widening contract (shared by MERGE and UPDATE so the two
+    * routes cannot drift): `resolveAssignments` wraps every
     * assignment value in a cast to the STORED column type for
     * non-rewritable targets, so a wider source arrives as
     * `cast(longVal as int)` and would ANSI-overflow instead of widening
@@ -569,7 +566,7 @@ case class LakeMergeIntoCommand(m: MergeIntoTable) extends LeafRunnableCommand {
     * INSERT's null (unmatched branch; `_ts` was already required).
     * Assignment types are NOT cast to the stored column types — the
     * union + upsert coerce exactly like the DataFrame path, so a wider
-    * source widens the table (int→long / float→double), the r16 SQL
+    * source widens the table (int→long / float→double), the SQL
     * routes inheriting the lake's schema-evolution contract.
     * On partitioned tables a matched UPDATE assigning a partition value
     * different from the stored row's raises at runtime: the row's

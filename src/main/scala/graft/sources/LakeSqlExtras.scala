@@ -13,22 +13,30 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.{LongType, StringType, StructType, TimestampNTZType, TimestampType}
 
-import graft.lake.{LakeTable, PartitionedLakeTable}
+import graft.lake.{LakeHandle, LakeTable, PartitionedLakeTable}
 
 /** Shared construction of a config-matched lake handle from a cdc-lake
   * options map (the relation's `writeHandle` and the SQL `CALL`
-  * procedures route through the SAME parsing so they cannot drift —
-  * the unwiden lesson, ADVICE r17). The handle carries the table's
+  * procedures route through the SAME parsing so they cannot drift).
+  * The handle carries the table's
   * writer configuration: a default handle would drop statsColumns (a
   * COW commit DELETES a touched bucket's stats entry when its handle
   * records none), Z-clustering, the MOR delta path, and bloom sidecars.
   * mergeMode is inferred from the stored manifest like every reader.
   */
 object LakeHandles {
+  /** The table at `path` under its stored layout: partitioned when its
+    * `_table.json` says so, else plain (also when nothing is committed
+    * yet). Default writer configuration — enough for reads and probes.
+    */
+  def open(spark: SparkSession, path: String, buckets: Int): LakeHandle =
+    PartitionedLakeTable.open(spark, path, buckets)
+      .getOrElse(new LakeTable(spark, path, buckets))
+
   def fromOptions(
       spark: SparkSession,
-      parameters0: Map[String, String]): Either[PartitionedLakeTable, LakeTable] = {
-    // Case-insensitive like the DataSource relation routes (ADVICE r19):
+      parameters0: Map[String, String]): LakeHandle = {
+    // Case-insensitive like the DataSource relation routes:
     // CALL procedures and the time-travel rewrite hand this the RAW
     // catalog storage.properties, so an option keyed `zorderby` or
     // `partitioncol` was honored on writes but invisible here — two
@@ -49,15 +57,15 @@ object LakeHandles {
     val sc = csv("statsColumns")
     def mm(partial: Boolean): String =
       if (partial) LakeTable.PartialMode else LakeTable.OverwriteMode
-    // A DECLARED partition layout (r19, VERDICT r18 #1): `partitionCol`
+    // A DECLARED partition layout: `partitionCol`
     // (Hudi partitionpath.field synonym accepted) makes `CREATE TABLE
     // ... USING cdc-lake` / CTAS create the partition-path layout — the
     // reference declares per-table partitioning in config exactly like
-    // this (`BinlogSyncHoodieCommand.scala:128-139`). Before r19 the
-    // option was silently ignored and the first write made a PLAIN
-    // table — the one silent-option hole in an otherwise loud surface.
-    // r20: comma-separated declarations (Hudi ComplexKeyGenerator
-    // partition-path parity) build the nested composite layout.
+    // this (`BinlogSyncHoodieCommand.scala:128-139`). Ignoring the
+    // option would make the first write a PLAIN table — a silent-option
+    // hole in an otherwise loud surface. Comma-separated declarations
+    // (Hudi ComplexKeyGenerator partition-path parity) build the nested
+    // composite layout.
     // Against an EXISTING table the declaration is validated, never
     // trusted: a mismatched column LIST or a plain layout fails loudly.
     def normCols(s: String): Option[String] = {
@@ -72,16 +80,16 @@ object LakeHandles {
         // JSON-encoded option (DataSourceUtils.PARTITIONING_COLUMNS_KEY);
         // the catalog routes go through LakeCreateTableRule instead. A
         // zero-length array (a degenerate `.partitionBy()` call) is NO
-        // declaration, not an error (ADVICE r19).
+        // declaration, not an error.
         .orElse(parameters.get("__partition_columns").flatMap { json =>
           val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
           val cs = (0 until node.size()).map(node.get(_).asText())
           if (cs.isEmpty) None else Some(cs.mkString(","))
         })
-    PartitionedLakeTable.open(spark, path, buckets) match {
-      case Some(pt0) =>
-        // case-insensitive like Spark's own column resolution (r19
-        // review), elementwise in layout order; the STORED list stays
+    open(spark, path, buckets) match {
+      case pt0: PartitionedLakeTable =>
+        // case-insensitive like Spark's own column resolution,
+        // elementwise in layout order; the STORED list stays
         // authoritative for the layout
         declaredPartition.foreach { p =>
           val dc = p.split(",").map(_.trim)
@@ -91,33 +99,32 @@ object LakeHandles {
             s"cdc-lake table at $path is partitioned on '${pt0.partitionCol}' " +
               s"— conflicting partitionCol '$p'")
         }
-        Left(new PartitionedLakeTable(spark, path, pt0.partitionCol,
+        new PartitionedLakeTable(spark, path, pt0.partitionCol,
           buckets, filesPerBucket = fpb, bloomOnWrite = blm, zorderBy = zo,
           tableType = tt, compactAfter = ca, mergeMode = mm(pt0.isPartialTable),
-          statsColumns = sc))
-      case None =>
-        val t0 = new LakeTable(spark, path, buckets)
+          statsColumns = sc)
+      case t0: LakeTable =>
         declaredPartition match {
           case Some(p) =>
             require(t0.latestVersion.isEmpty,
               s"cdc-lake table at $path already exists as a PLAIN " +
                 s"(unpartitioned) table — partitionCol '$p' cannot " +
                 "repartition committed data")
-            Left(new PartitionedLakeTable(spark, path, p,
+            new PartitionedLakeTable(spark, path, p,
               buckets, filesPerBucket = fpb, bloomOnWrite = blm, zorderBy = zo,
               tableType = tt, compactAfter = ca, mergeMode = mm(false),
-              statsColumns = sc))
+              statsColumns = sc)
           case None =>
-            Right(new LakeTable(spark, path, buckets,
+            new LakeTable(spark, path, buckets,
               filesPerBucket = fpb, zorderBy = zo, bloomOnWrite = blm,
               tableType = tt, compactAfter = ca, mergeMode = mm(t0.isPartialTable),
-              statsColumns = sc))
+              statsColumns = sc)
         }
     }
   }
 }
 
-/** Parser extension (r18): the two SQL surfaces Spark's analyzer cannot
+/** Parser extension: the two SQL surfaces Spark's analyzer cannot
   * hand to an extension rule because its own resolution THROWS first —
   * both rewritten right after parsing, before any analysis runs.
   *
@@ -169,7 +176,7 @@ object LakeSqlRewrites {
   def rewrite(session: SparkSession, plan: LogicalPlan): LogicalPlan =
     plan match {
       // EXPLAIN parses into ExplainCommand — a LeafRunnableCommand that
-      // holds the explained plan as a FIELD, not a child (ADVICE r18) —
+      // holds the explained plan as a FIELD, not a child —
       // so without this recursion neither the time-travel rewrite nor
       // the schema-evolution pre-widening would fire and `EXPLAIN
       // SELECT ... VERSION AS OF` would surface Spark's own
@@ -193,7 +200,7 @@ object LakeSqlRewrites {
           LakeCallCommand(name, c.args)
         case _ => c
       }
-      // ALTER TABLE ... RENAME COLUMN / DROP COLUMN (r20): v2-only
+      // ALTER TABLE ... RENAME COLUMN / DROP COLUMN: v2-only
       // commands — ResolveSessionCatalog throws UNSUPPORTED_FEATURE for
       // session-catalog v1 tables before any post-hoc rule runs, so
       // (like time travel) the parser is the only seam. Both route to
@@ -215,7 +222,7 @@ object LakeSqlRewrites {
         }
       case p =>
         p match {
-          // MERGE WITH SCHEMA EVOLUTION (r18, VERDICT r17 #6): additive
+          // MERGE WITH SCHEMA EVOLUTION: additive
           // source columns must join the table schema BEFORE resolution —
           // Spark's star expansion silently drops them and its assignment
           // resolution throws UNRESOLVED_COLUMN, both inside the built-in
@@ -273,7 +280,7 @@ object LakeSqlRewrites {
       catch { case _: Exception => return }
     val resolver = session.sessionState.conf.resolver
     // the FULL schema: PARTITIONED-BY-declared columns live outside
-    // dataSchema and must not look "new" (r20)
+    // dataSchema and must not look "new"
     val existing = ct.schema.fields.map(_.name)
     def isNew(name: String): Boolean = !existing.exists(resolver(_, name))
     val actions = m.matchedActions ++ m.notMatchedActions ++ m.notMatchedBySourceActions
@@ -298,13 +305,8 @@ object LakeSqlRewrites {
       s"cdc-lake MERGE WITH SCHEMA EVOLUTION: reserved column name(s) " +
         s"${reserved.mkString(", ")} cannot be added")
     val handle = LakeHandles.fromOptions(session, lakeParams(ct))
-    val cols = StructType(wanted.toSeq)
-    handle.fold(_.addColumns(cols), _.addColumns(cols))
-    val latest = LakeMergeInto.dataSchemaOf(
-      ct, handle.fold(_.snapshot.schema, _.snapshot.schema))
-    if (latest.nonEmpty && latest != ct.dataSchema)
-      session.sessionState.catalog.alterTableDataSchema(ct.identifier, latest)
-    session.catalog.refreshTable(ct.identifier.quotedString)
+    handle.addColumns(StructType(wanted.toSeq))
+    LakeMergeInto.syncCatalogSchema(session, ct, handle.snapshot.schema)
   }
 
   /** The lake catalog entry an ALTER targets (its child is an
@@ -335,7 +337,7 @@ object LakeSqlRewrites {
     */
   private[sources] def lakeCatalogTable(
       session: SparkSession, nameParts: Seq[String]): Option[CatalogTable] = {
-    // Temp-view precedence (ADVICE r18): a temp view shadowing a
+    // Temp-view precedence: a temp view shadowing a
     // catalog-synced lake table must win for `t VERSION AS OF n` exactly
     // as it does for plain `t` — resolving past it to the catalog table
     // would read a DIFFERENT relation than the unversioned query. Pass
@@ -390,16 +392,16 @@ object LakeSqlRewrites {
 }
 
 /** `PARTITIONED BY (p)` / `DataFrameWriter.partitionBy("p")` on a
-  * cdc-lake CREATE / CTAS / saveAsTable (r19, VERDICT r18 #1): Spark
+  * cdc-lake CREATE / CTAS / saveAsTable: Spark
   * records the partitioning in the CATALOG but never hands it to a v1
-  * CreatableRelationProvider — before r19 the data path silently made a
-  * PLAIN table under a catalog entry claiming partitions. This post-hoc
+  * CreatableRelationProvider — without this rule the data path silently
+  * makes a PLAIN table under a catalog entry claiming partitions. This post-hoc
   * rule maps the declaration onto the `partitionCol` OPTION the write
   * path honors ([[LakeHandles.fromOptions]]) on the converted v1
   * commands, which BOTH routes produce — SQL text AND the programmatic
   * DataFrameWriter (which never touches the parser; a parse-time rewrite
-  * alone left that route silently plain, r19 review). Multi-column
-  * declarations map onto the comma-joined option (r20 — the nested
+  * alone left that route silently plain). Multi-column
+  * declarations map onto the comma-joined option (the nested
   * composite layout, column order = nesting order); a conflicting
   * explicit option is loud — transform partitioning is already rejected
   * by Spark's own v1 conversion.
@@ -412,7 +414,7 @@ class LakeCreateTableRule(session: SparkSession) extends Rule[LogicalPlan] {
   private def inject(table: CatalogTable): CatalogTable = {
     if (!table.provider.exists(_.equalsIgnoreCase(CdcLakeSinkProvider.ShortName)) ||
         table.partitionColumnNames.isEmpty) return table
-    // r20: multi-column PARTITIONED BY maps onto the comma-joined
+    // multi-column PARTITIONED BY maps onto the comma-joined
     // partitionCol declaration (ComplexKeyGenerator partition-path
     // parity) — column ORDER is the nesting order.
     val declared = table.partitionColumnNames.mkString(",")
@@ -441,7 +443,7 @@ class LakeCreateTableRule(session: SparkSession) extends Rule[LogicalPlan] {
 }
 
 /** SQL maintenance procedures over catalog-synced cdc-lake tables —
-  * Hudi's spark-sql `CALL` parity (r18, VERDICT r17 #4). Every
+  * Hudi's spark-sql `CALL` parity. Every
   * procedure takes `table => '<name>'` (or the table name as the one
   * positional argument) and runs the SAME Scala APIs the operational
   * docs describe, then re-syncs the catalog entry (a rollback can move
@@ -468,7 +470,7 @@ class LakeCreateTableRule(session: SparkSession) extends Rule[LogicalPlan] {
   *    `delete_savepoint(table, version => n)` / `show_savepoints(table)`
   *    — pin versions against vacuum; partitioned tables take the same
   *    JSON vector shape as rollback (`version => '{"eu": 2}'`, each
-  *    named partition pinned independently — r19) and show_savepoints
+  *    named partition pinned independently) and show_savepoints
   *    returns (partition, version) rows, partition null on plain tables.
   *  - `show_commits(table)` — (partition, version, commit_id,
   *    commit_time_ms) rows, newest first.
@@ -484,7 +486,7 @@ case class LakeCallCommand(proc: String, args: Seq[Expression])
 
   /** All-digits version strings route through here: a digit string past
     * Long range must fail the procedure contract's way, not escape as a
-    * raw NumberFormatException (ADVICE r19).
+    * raw NumberFormatException.
     */
   private def parseVersion(v: String): Long =
     try v.toLong
@@ -542,7 +544,7 @@ case class LakeCallCommand(proc: String, args: Seq[Expression])
     }
 
   /** Savepoint create/release dispatch on the `version` shape — the
-    * SAME integer-vs-JSON-vector routing as rollback_to_instant (r19):
+    * SAME integer-vs-JSON-vector routing as rollback_to_instant:
     * plain tables take an integer, partitioned tables a vector pinning
     * each named partition independently (each partition is its own
     * versioned table — a scalar cannot address one). Unknown partitions
@@ -550,13 +552,13 @@ case class LakeCallCommand(proc: String, args: Seq[Expression])
     */
   private def savepointOp(
       m: Map[String, Any],
-      handle: Either[PartitionedLakeTable, LakeTable])(
+      handle: LakeHandle)(
       op: (LakeTable, Long) => Unit): String =
     (m.get("version"), handle) match {
-      case (Some(v: Long), Right(t)) => op(t, v); v.toString
-      case (Some(v: String), Right(t)) if v.nonEmpty && v.forall(_.isDigit) =>
+      case (Some(v: Long), t: LakeTable) => op(t, v); v.toString
+      case (Some(v: String), t: LakeTable) if v.nonEmpty && v.forall(_.isDigit) =>
         op(t, parseVersion(v)); v
-      case (Some(v: String), Left(pt)) if v.trim.startsWith("{") =>
+      case (Some(v: String), pt: PartitionedLakeTable) if v.trim.startsWith("{") =>
         val vec = VectorOffset.parse(v)
         if (vec.isEmpty) fail("empty version vector")
         val missing = vec.keySet -- pt.partitions.toSet
@@ -566,9 +568,9 @@ case class LakeCallCommand(proc: String, args: Seq[Expression])
           op(pt.partitionTable(p), ver)
         }
         v
-      case (Some(_), Left(_)) => fail(
+      case (Some(_), _: PartitionedLakeTable) => fail(
         "a partitioned table takes a JSON vector: version => '{\"<partition>\": <n>}'")
-      case (Some(v), Right(_)) => fail(s"version must be an integer, got: $v")
+      case (Some(v), _) => fail(s"version must be an integer, got: $v")
       case (None, _) => fail("missing `version` argument")
     }
   private def num(m: Map[String, Any], k: String): Option[Long] =
@@ -594,7 +596,7 @@ case class LakeCallCommand(proc: String, args: Seq[Expression])
     val out: Seq[Row] = proc match {
       case "run_compaction" =>
         unknownArgs()
-        handle.fold(_.compact(), _.compact())
+        handle.compact()
         Seq(Row("compacted"))
       case "run_clustering" =>
         unknownArgs("columns")
@@ -605,7 +607,7 @@ case class LakeCallCommand(proc: String, args: Seq[Expression])
         // ONE mechanism, no second rewrite path to drift.
         val cols = str(m, "columns")
           .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-          .getOrElse(handle.fold(_.zorderBy, _.zorderBy) match {
+          .getOrElse(handle.zorderBy match {
             case Seq() => fail(
               "missing `columns` argument (2-4 numeric columns, comma-" +
                 "separated) and the table declares no zorderBy")
@@ -614,16 +616,15 @@ case class LakeCallCommand(proc: String, args: Seq[Expression])
         if (cols.size < 2 || cols.size > 4)
           fail(s"clustering takes 2-4 columns, got: ${cols.mkString(",")}")
         // duplicate lanes are silently degenerate clustering — loud, like
-        // the rest of the procedure's up-front validation (ADVICE r19)
+        // the rest of the procedure's up-front validation
         if (cols.map(_.toLowerCase(java.util.Locale.ROOT)).distinct.size != cols.size)
           fail(s"duplicate clustering columns: ${cols.mkString(",")}")
-        // Validate BEFORE the table-wide rewrite starts (r19 review —
-        // the rest of the procedure surface fails loudly up front): the
-        // Morton lanes encode numeric/timestamp/date/string (r20 — the
-        // statNorm epoch encodings + a 7-byte string prefix code); a
-        // missing or other-typed column would otherwise cluster on nulls
-        // deep inside compact().
-        val stored = handle.fold(_.snapshot.schema, _.snapshot.schema)
+        // Validate BEFORE the table-wide rewrite starts (the rest of the
+        // procedure surface fails loudly up front): the Morton lanes encode
+        // numeric/timestamp/date/string (the statNorm epoch encodings + a
+        // 7-byte string prefix code); a missing or other-typed column would
+        // otherwise cluster on nulls deep inside compact().
+        val stored = handle.snapshot.schema
         cols.foreach { c =>
           val f = stored.find(_.name.equalsIgnoreCase(c)).getOrElse(
             fail(s"unknown clustering column '$c' — table columns: " +
@@ -639,10 +640,10 @@ case class LakeCallCommand(proc: String, args: Seq[Expression])
             fail(s"clustering column '$c' is ${f.dataType.simpleString} — " +
               "Z-ordering takes numeric, timestamp, date, or string columns")
         }
-        val clusterer = LakeHandles.fromOptions(
+        LakeHandles.fromOptions(
           session,
           LakeSqlRewrites.lakeParams(ct) + ("zorderBy" -> cols.mkString(",")))
-        clusterer.fold(_.compact(), _.compact())
+          .compact()
         Seq(Row(s"clustered on ${cols.mkString(",")}"))
       case "run_vacuum" =>
         unknownArgs("keep_versions", "older_than")
@@ -651,19 +652,18 @@ case class LakeCallCommand(proc: String, args: Seq[Expression])
             fail("pass keep_versions OR older_than, not both")
           case (_, Some(instant)) =>
             val cutoff = LakeTable.parseInstantMillis(instant)
-            handle.fold(_.vacuumBefore(cutoff), _.vacuumBefore(cutoff))
+            handle.vacuumBefore(cutoff)
           case (keep, None) =>
-            val k = keep.getOrElse(1L).toInt
-            handle.fold(_.vacuum(k), _.vacuum(k))
+            handle.vacuum(keep.getOrElse(1L).toInt)
         }
         Seq(Row(removed.toLong))
       case "rollback_to_instant" =>
         unknownArgs("version")
         val restored = (m.get("version"), handle) match {
-          case (Some(v: Long), Right(t)) => t.restoreTo(v).toString
-          case (Some(v: String), Right(t)) if v.forall(_.isDigit) && v.nonEmpty =>
+          case (Some(v: Long), t: LakeTable) => t.restoreTo(v).toString
+          case (Some(v: String), t: LakeTable) if v.forall(_.isDigit) && v.nonEmpty =>
             t.restoreTo(parseVersion(v)).toString
-          case (Some(v: String), Left(pt)) if v.trim.startsWith("{") =>
+          case (Some(v: String), pt: PartitionedLakeTable) if v.trim.startsWith("{") =>
             val vec = VectorOffset.parse(v)
             if (vec.isEmpty) fail("empty version vector")
             val existing = pt.partitions.toSet
@@ -673,9 +673,9 @@ case class LakeCallCommand(proc: String, args: Seq[Expression])
             VectorOffset(
               vec.map { case (p, ver) => p -> pt.partitionTable(p).restoreTo(ver) })
               .json()
-          case (Some(_), Left(_)) => fail(
+          case (Some(_), _: PartitionedLakeTable) => fail(
             "a partitioned table takes a JSON vector: version => '{\"<partition>\": <n>}'")
-          case (Some(v), Right(_)) => fail(s"version must be an integer, got: $v")
+          case (Some(v), _) => fail(s"version must be an integer, got: $v")
           case (None, _) => fail("missing `version` argument")
         }
         Seq(Row(restored))
@@ -688,50 +688,46 @@ case class LakeCallCommand(proc: String, args: Seq[Expression])
           s"released savepoint at ${savepointOp(m, handle)(_.releaseSavepoint(_))}"))
       case "show_savepoints" =>
         unknownArgs()
-        handle.fold(
-          pt => pt.partitions.flatMap(p =>
-            pt.partitionTable(p).savepoints.map(v => Row(p, v))),
-          t => t.savepoints.sorted.map(v => Row(null, v)))
+        handle match {
+          case pt: PartitionedLakeTable => pt.partitions.flatMap(p =>
+            pt.partitionTable(p).savepoints.map(v => Row(p, v)))
+          case t: LakeTable => t.savepoints.sorted.map(v => Row(null, v))
+        }
       case "show_partitions" =>
         unknownArgs()
-        handle.fold(
-          pt => pt.partitions.map(Row(_)),
-          _ => fail("show_partitions needs a partitioned table"))
+        handle match {
+          case pt: PartitionedLakeTable => pt.partitions.map(Row(_))
+          case _ => fail("show_partitions needs a partitioned table")
+        }
       case "show_commits" =>
         unknownArgs()
-        val rows = handle.fold(
-          pt => pt.partitions.flatMap(p =>
+        val rows = handle match {
+          case pt: PartitionedLakeTable => pt.partitions.flatMap(p =>
             pt.partitionTable(p).commitTimes().map { case (v, t) =>
               Row(p, v, pt.partitionTable(p).commitIdOf(v).orNull, t)
-            }),
-          t => t.commitTimes().map { case (v, tm) =>
+            })
+          case t: LakeTable => t.commitTimes().map { case (v, tm) =>
             Row(null, v, t.commitIdOf(v).orNull, tm)
-          })
+          }
+        }
         rows.sortBy(r => (Option(r.getString(0)).getOrElse(""), -r.getLong(1)))
       case "drop_partitions" =>
         unknownArgs("partitions")
         val parts = str(m, "partitions")
           .getOrElse(fail("missing `partitions` argument"))
           .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        val dropped = handle.fold(
-          pt => pt.dropPartitions(parts),
-          _ => fail("drop_partitions needs a partitioned table"))
+        val dropped = handle match {
+          case pt: PartitionedLakeTable => pt.dropPartitions(parts)
+          case _ => fail("drop_partitions needs a partitioned table")
+        }
         Seq(Row(dropped.toLong))
       case other => fail(s"unknown procedure '$other'") // unreachable (parser gate)
     }
 
-    // Post-mutation catalog upkeep (read-only show_commits included is
-    // harmless): a rollback can move the stored schema BACKWARD, and
-    // every new version invalidates the cached version-pinned relation —
-    // same contract as the SQL write commands (LakeMergeInto.
-    // syncCatalogSchema, which needs a live relation; here the schema
-    // comes from the handle directly). PARTITIONED-BY-declared columns
-    // are stripped — the catalog holds them separately (dataSchemaOf).
-    val latest = LakeMergeInto.dataSchemaOf(
-      ct, handle.fold(_.snapshot.schema, _.snapshot.schema))
-    if (latest.nonEmpty && latest != ct.dataSchema)
-      session.sessionState.catalog.alterTableDataSchema(ident, latest)
-    session.catalog.refreshTable(ident.quotedString)
+    // Post-mutation catalog upkeep (harmless after the read-only
+    // procedures): a rollback can move the stored schema BACKWARD, and
+    // every new version invalidates the cached version-pinned relation.
+    LakeMergeInto.syncCatalogSchema(session, ct, handle.snapshot.schema)
     out
   }
 }

@@ -807,4 +807,82 @@ class CdcEndToEndSpec extends SparkSpec {
       CdcSyncCommand.run(batch.toDF("value"), options(root), batchId = 1L))
     assert(e.getMessage.contains("db.unknown.recordkey.field"))
   }
+
+  test("partitioned write.operation=insert: bulk path, routed deletes, compaction cadence, no-op replay") {
+    val root = tempDir("cdc-").toString
+    val opts = options(root) ++ Map(
+      "db.person.partition.field" -> "name",
+      "db.person.write.operation" -> "insert",
+      "db.person.compact.every" -> "2")
+    def run(id: Long, envs: String*): Unit =
+      CdcSyncCommand.run(envs.toDF("value"), opts, batchId = id)
+    val plake = new graft.lake.PartitionedLakeTable(
+      spark, s"$root/db/ods_db_person", "name", 4)
+    def state() = plake.snapshot.select("id", "name").as[(Long, String)]
+      .collect().sortBy(_._1).toSeq
+
+    run(0L, env("db", "person", personSchema, 1L, "upsert", Seq(
+      """{"id":1,"name":"ann","age":30}""",
+      """{"id":2,"name":"bob","age":40}""",
+      """{"id":3,"name":"ann","age":50}""",
+      """{"id":5,"name":"bob","age":70}""")))
+    assert(state() == Seq((1L, "ann"), (2L, "bob"), (3L, "ann"), (5L, "bob")))
+    assert(plake.currentVersions == Map("ann" -> 1L, "bob" -> 1L))
+    assert(!plake.isCommitted("b0:db.person:compact"), "batch 0 is off the cadence")
+
+    // batch 1: a bulk insert into a new partition, a delete routed by its
+    // payload's partition value, then the cadence's compaction
+    val batch1 = Seq(
+      env("db", "person", personSchema, 2L, "upsert", Seq("""{"id":4,"name":"cat","age":60}""")),
+      env("db", "person", personSchema, 3L, "delete", Seq("""{"id":2,"name":"bob","age":40}""")))
+    run(1L, batch1: _*)
+    assert(state() == Seq((1L, "ann"), (3L, "ann"), (4L, "cat"), (5L, "bob")))
+    assert(plake.partitionTable("bob").isCommitted("b1:db.person:delete:p=bob"))
+    assert(!plake.partitionTable("ann").isCommitted("b1:db.person:delete:p=ann"),
+      "the delete must visit only the partition its payload names")
+    assert(!plake.isCommitted("b1:db.person:delete:global"))
+    Seq("ann", "bob", "cat").foreach { p =>
+      assert(plake.partitionTable(p).isCommitted(s"b1:db.person:compact:p=$p"), p)
+    }
+    val after1 = plake.currentVersions
+    assert(after1 == Map("ann" -> 2L, "bob" -> 3L, "cat" -> 2L))
+
+    // replayed batch 1: neither the insert, the delete nor the
+    // compaction re-applies in any partition
+    run(1L, batch1: _*)
+    assert(plake.currentVersions == after1)
+    assert(state() == Seq((1L, "ann"), (3L, "ann"), (4L, "cat"), (5L, "bob")))
+  }
+
+  test("partitioned batch committed under the pre-merge two-id scheme replays without a merge commit") {
+    // The partitioned twin of the plain migration replay above: the
+    // legacy ':upsert' id is scoped per partition, and the replay probe
+    // only consults the partitions the batch's upserts name.
+    val root = tempDir("cdc-mig-pe-").toString
+    val opts = options(root) + ("db.person.partition.field" -> "name")
+    val plake = new graft.lake.PartitionedLakeTable(
+      spark, s"$root/db/ods_db_person", "name", 4)
+    plake.upsert(
+      Seq(("legacy-key", 1L, 7L, "ann", 1L)).toDF("_key", "_ts", "id", "name", "age"),
+      commitId = "b5:db.person:upsert")
+    assert(plake.currentVersions == Map("ann" -> 1L))
+
+    val batch = Seq(
+      env("db", "person", personSchema, 1L, "upsert", Seq("""{"id":1,"name":"ann","age":30}""")),
+      env("db", "person", personSchema, 2L, "delete", Seq("""{"id":9,"name":"zz","age":1}""")))
+    CdcSyncCommand.run(batch.toDF("value"), opts, batchId = 5L)
+    // the upsert is skipped in 'ann' (its scoped legacy id is committed)
+    // and the delete names a partition that does not exist: no version,
+    // and no ':merge' commit anywhere
+    assert(plake.currentVersions == Map("ann" -> 1L),
+      s"legacy-committed batch must not re-apply, got ${plake.currentVersions}")
+    assert(!plake.isCommitted("b5:db.person:merge"))
+    assert(plake.snapshot.select("_key").as[String].collect().toSeq == Seq("legacy-key"))
+
+    // a NEW batch id takes the merge path
+    CdcSyncCommand.run(batch.toDF("value"), opts, batchId = 6L)
+    assert(plake.isCommitted("b6:db.person:merge"))
+    assert(plake.currentVersions == Map("ann" -> 2L))
+    assert(plake.snapshot.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 7L))
+  }
 }

@@ -384,4 +384,23 @@ class LakeSqlExtrasSpec extends SparkSpec {
     assert(after === before, "partitioned clustering must not change state")
     spark.sql(s"DROP TABLE $pname")
   }
+
+  test("CALL rollback_to_instant before ALTER TABLE ADD COLUMNS narrows the catalog entry") {
+    val (name, dir, lt) = fresh("call-rb-add")
+    lt.upsert(Seq(("a", 1L, 10L)).toDF(LakeTable.KeyCol, LakeTable.TsCol, "amount")) // v1
+    register(name, dir)
+    spark.sql(s"ALTER TABLE $name ADD COLUMNS (note STRING)") // v2
+    spark.sql(s"INSERT INTO $name VALUES ('b', 2, 20, 'x')") // v3
+    assert(spark.table(name).columns.contains("note"))
+    val restored = spark.sql(s"CALL rollback_to_instant(table => '$name', version => 1)")
+      .as[String].collect().head
+    assert(restored === "4")
+    // the catalog follows the restored (narrower) stored schema, so the
+    // table still resolves and reads the pre-add rows
+    val back = spark.sql(s"SELECT * FROM $name")
+    assert(back.columns.toSeq === Seq(LakeTable.KeyCol, LakeTable.TsCol, "amount"))
+    assert(back.select(LakeTable.KeyCol, "amount").as[(String, Long)].collect().toSeq ===
+      Seq(("a", 10L)))
+    spark.sql(s"DROP TABLE $name")
+  }
 }
