@@ -368,13 +368,16 @@ object CdcSyncCommand {
         // unaligned partitioned writes fan out tasks x dirs tiny files on
         // the shared lake FS, and every micro-batch pays the per-file
         // metadata cost on read-back + cleanup).
-        winners
+        val toStage = winners
           .withColumn("_db", col(s"${Envelope.MetaCol}.databaseName"))
           .withColumn("_table", col(s"${Envelope.MetaCol}.tableName"))
-          .repartition(col("_db"), col("_table"))
+        toStage.repartition(col("_db"), col("_table"))
           .write.partitionBy("_db", "_table").parquet(stagingDir)
         try {
-          val staged = spark.read.parquet(stagingDir)
+          // Read back under the schema just written: inference would type
+          // `_table=01` as an integer (equal to tables `1` and `001`) and
+          // run a schema job per batch.
+          val staged = spark.read.schema(toStage.schema).parquet(stagingDir)
           dispatch((db, table) =>
             staged
               .filter(col("_db") === db && col("_table") === table) // dir pruning

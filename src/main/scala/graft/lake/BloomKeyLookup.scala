@@ -7,8 +7,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * a key whose bucket's sidecars all say absent is absent; a data-bearing
   * layer without a sidecar conservatively answers true.
   *
-  * A bucket's filter is LAYERED since merge-on-read (docs/MOR_DESIGN.md):
-  * one sidecar for the base file group plus one per stacked delta dir, and
+  * A bucket's filter is LAYERED (docs/MOR_DESIGN.md): one sidecar per data
+  * file of the base file group and of each stacked delta dir, and
   * might-contain composes under OR — the key might exist iff SOME layer
   * might contain it. A layer whose sidecar is missing (bloomOnWrite was
   * off for that commit, or the file vanished) makes the whole bucket
@@ -32,7 +32,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * write path's `bucketOf`) xxhash64's the same bytes — no String
   * materialization per key.
   *
-  * `layers`: bucket -> one entry per data layer; `None` = that layer has
+  * `layers`: bucket -> one entry per data file; `None` = a layer with
   * no sidecar (cannot prune the bucket). Buckets absent from the map hold
   * no data at all.
   */

@@ -1051,21 +1051,23 @@ final class LakeTable(
     } { (old, ks, _) => old.join(broadcastIfSmall(ks), Seq(KeyCol), "left_anti") }
   }
 
-  /** Per-bucket sidecar layers of `m`: one entry per data layer — the
-    * base file group (when present) plus each stacked delta dir — `None`
-    * marking a layer written without a sidecar (unprunable). The input to
+  /** Per-bucket bloom filters of `m`: one entry per data FILE of the base
+    * file group (when present) and of each stacked delta dir, `None`
+    * marking a layer written without sidecars (unprunable). The input to
     * [[BloomKeyLookup]]'s OR-composition.
     */
   private[lake] def bloomLayers(m: Manifest): Map[Int, Seq[Option[String]]] =
     m.allBuckets.iterator.map { b =>
       val base: Seq[Option[String]] =
-        if (m.buckets.contains(b)) Seq(m.bloomFiles.get(b)) else Nil
+        if (!m.buckets.contains(b)) Nil
+        else m.bloomFiles.get(b).fold(Seq(Option.empty[String]))(_.map(Some(_)))
       val nDeltas = m.deltas.getOrElse(b, Nil).size
-      val withSidecars = m.deltaBlooms.getOrElse(b, Nil).map(Option(_))
-      // deltaBlooms holds one path per sidecar-carrying delta commit; pad
+      val withSidecars = m.deltaBlooms.getOrElse(b, Nil)
+      // deltaBlooms holds one entry per sidecar-carrying delta commit; pad
       // to the stack depth so sidecar-less layers read as unprunable
       // (order is irrelevant under OR — only the count contract matters).
-      b -> (base ++ withSidecars ++ Seq.fill(nDeltas - withSidecars.size)(None))
+      b -> (base ++ withSidecars.flatten.map(Some(_)) ++
+        Seq.fill(nDeltas - withSidecars.size)(None))
     }.toMap
 
   private[lake] def bloomPrune(ks: DataFrame, m: Manifest): DataFrame =
@@ -1373,7 +1375,7 @@ final class LakeTable(
         // bit; XOR with Long.MinValue is the standard unsigned-order map,
         // a no-op reordering for the always-non-negative 3-D codes).
         // Per-type MONOTONE long lane encodings:
-        // numerics cast; timestamps/dates take the statNorm epoch
+        // numerics cast; timestamps/dates take the stats sidecar's epoch
         // encodings (micros / days — a raw long cast of a timestamp is
         // SECONDS, losing sub-second order, and a date doesn't cast at
         // all); strings take their first 7 UTF-8 bytes as a big-endian
@@ -1474,27 +1476,45 @@ final class LakeTable(
         // positional logicalize — a sequential withColumnRenamed fold is
         // map-order sensitive (after rename(X→Y) + re-adding X, applying
         // Y→X while the live X exists duplicates the name and bricks every
-        // later write; ColumnRenameSpec pins the scenario).
+        // later write; ColumnRenameSpec pins the scenario). The writer
+        // keeps one file open per task, so rows reach it sorted by bucket
+        // (the Z-ordered layout already is).
+        val renamed = clustered.toDF(
+          clustered.columns.map(c => newRenames.getOrElse(c, c)).toIndexedSeq: _*)
+        val frame = if (zKey.isDefined) renamed else renamed.sortWithinPartitions(col(BucketCol))
         // Diagnostic only: dump the commit write's physical plan; the table
         // tag keeps tables (and partitions, sharing versions) apart.
         sys.env.get("GRAFT_EXPLAIN_WRITE").foreach { prefix =>
           val tag = s"${new HPath(basePath).getName}-${Integer.toHexString(basePath.hashCode)}"
           java.nio.file.Files.writeString(
             java.nio.file.Paths.get(s"$prefix-$tag-v$version.txt"),
-            clustered.queryExecution.explainString(
+            frame.queryExecution.explainString(
               org.apache.spark.sql.execution.ExplainMode.fromString("formatted")) + "\n",
             java.nio.charset.StandardCharsets.UTF_8,
             java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
         }
-        withJobDesc(s"write v$version")(
-          clustered.toDF(
-            clustered.columns.map(c => newRenames.getOrElse(c, c)).toIndexedSeq: _*)
-            .write.partitionBy(BucketCol).mode("errorifexists")
-            .parquet(outDir))
+        // Every per-file fact the commit records comes from the write
+        // tasks (FileFactsTracker): row counts, the stat columns' bounds
+        // and, with bloomOnWrite, one bloom sidecar per data file, published
+        // by the output committer with its file. Nothing is read back.
+        val writtenSchema = LakeTable.physSchema(merged.schema, newRenames)
+        val statCols: Seq[(String, DataType)] =
+          statsColumns.map(c => newRenames.getOrElse(c, c)).flatMap(c =>
+            writtenSchema.fields.find(f => f.name == c && statable(f.dataType))
+              .map(f => c -> f.dataType))
+        val facts = new FileFactsTracker(
+          new org.apache.spark.util.SerializableConfiguration(
+            spark.sparkContext.hadoopConfiguration),
+          if (bloomOnWrite) Some(writtenSchema.fieldIndex(KeyCol)) else None,
+          statCols.map { case (c, dt) => writtenSchema.fieldIndex(c) -> dt })
+        withJobDesc(s"write v$version")(org.apache.spark.sql.graft.TrackedWrite.parquet(
+          frame, outDir, BucketCol, s"lake:write $outDir", facts))
 
-        // Buckets that ended up empty after the merge have no b=<i> dir.
+        // Buckets that ended up empty after the merge wrote no file.
         val out = new HPath(outDir)
-        val written: Set[Int] = io.list(out).collect { case BucketDirRe(b) => b.toInt }.toSet
+        val files: Map[Int, Seq[FileFacts]] =
+          facts.files.groupBy(_.bucket).map { case (b, fs) => b -> fs.sortBy(_.name) }
+        val written: Set[Int] = files.keySet
         // A written bucket outside `affected` would replace (or stack on) a
         // base whose stored rows were never merged — a caller's affected
         // hint that misses a bucket of its batch. Fail before publishing.
@@ -1506,61 +1526,25 @@ final class LakeTable(
               "outside its affected set — an affected-bucket hint missed them")
         }
 
-        // Bloom sidecars for rewritten buckets (key-pruning for lookup()),
-        // built from the parquet just written (column-pruned key read) via a
-        // distributed bloom merge — no keys ever reach the driver, and the
-        // serialized filters are written as per-bucket `_bloom` FILES beside
-        // the data by the executors that hold them (the manifest records only
-        // their paths: inlined base64 blooms would grow the single manifest
-        // JSON with buckets x bloom size — hundreds of MB at production
-        // bucket counts, re-read on the driver for every commit). Two extra
-        // jobs per commit; `bloomOnWrite = false` trades lookup pruning for
-        // write latency. One bounded-pool footer pass per commit feeds BOTH
-        // bloom sizing and the stats sidecar (see readFooters).
-        val writtenSchema = LakeTable.physSchema(merged.schema, newRenames)
-        // Read footers only when they can actually serve someone: bloom
-        // sizing, or a stats sidecar whose EVERY eligible column could be
-        // footer-convertible (cheap Spark-type pre-check — e.g. INT96
-        // timestamps can never convert, so such commits skip the per-file
-        // footer round-trips entirely) and the escape hatch
-        // `-Dgraft.lake.stats.noFooter=true` is off (FooterStatsSpec pins
-        // footer-vs-agg JSON equality through it). A skipped-footer commit
-        // keeps correctness via the agg fallback.
-        val statPhys = statsColumns.map(c => newRenames.getOrElse(c, c))
-        val statEligible = statPhys.filter(c =>
-          writtenSchema.fields.exists(f => f.name == c && statable(f.dataType)))
-        def maybeConvertible(dt: DataType): Boolean = dt match {
-          case org.apache.spark.sql.types.TimestampType =>
-            spark.sessionState.conf.parquetOutputTimestampType ==
-              org.apache.spark.sql.internal.SQLConf
-                .ParquetOutputTimestampType.TIMESTAMP_MICROS
-          case d: org.apache.spark.sql.types.DecimalType => d.precision <= 18
-          case _ => true // the other statable lanes map to INT32/INT64/FLOAT/DOUBLE/UTF-8
-        }
-        val footerStatsWanted =
-          !sys.props.get("graft.lake.stats.noFooter").exists(_.toBoolean) &&
-            statEligible.nonEmpty && statEligible.forall(c =>
-              maybeConvertible(writtenSchema.fields.find(_.name == c).get.dataType))
-        val footers =
-          if (bloomOnWrite || footerStatsWanted)
-            readFooters(relDir, written,
-              if (footerStatsWanted) statEligible.toSet else Set.empty)
-          else Map.empty[Int, Seq[LakeTable.FileFooter]]
-        val sidecars =
-          if (bloomOnWrite) writeBloomSidecars(relDir, written, footers)
-          else Map.empty[Int, String]
+        // Bloom sidecars (key pruning for lookup, probeKeys and deletes):
+        // one filter per data file, so a bucket written as several files
+        // has several filters, which readers OR like stacked layers. The
+        // manifest records only their paths: filter bytes stay beside the
+        // data, and the manifest stays KB-sized at any bucket count.
+        val sidecars: Map[Int, Seq[String]] =
+          if (!bloomOnWrite) Map.empty
+          else files.map { case (b, fs) =>
+            b -> fs.flatMap(_.bloom).map(n => s"$relDir/$BucketCol=$b/$n")
+          }
         // Column min/max stats (opt-in, like Hudi's metadata-table
-        // col_stats): ONE distributed min/max agg over just-written
-        // files, a tiny scalar collect, one _stats.json per commit dir.
-        // DELTA commits record their own sidecar too (the batch was just
-        // written — the scan is delta-sized), stacked in `deltaStats`
-        // alongside `deltas`; readers prune a delta-carrying bucket when
-        // base ∪ every-delta-layer ranges exclude the predicate, so
-        // high-churn MOR tables keep pruning between folds instead of
-        // going stats-dark.
+        // col_stats): one _stats.json per commit dir. DELTA commits record
+        // their own sidecar too, stacked in `deltaStats` alongside
+        // `deltas`; readers prune a delta-carrying bucket when base ∪
+        // every-delta-layer ranges exclude the predicate, so high-churn MOR
+        // tables keep pruning between folds instead of going stats-dark.
         val statsPath =
-          if (statsColumns.nonEmpty)
-            writeStatsSidecar(relDir, written, newRenames, writtenSchema, footers)
+          if (statCols.nonEmpty && written.nonEmpty)
+            Some(writeStatsSidecar(relDir, files, statCols))
           else None
         // A PURE-DELETE delta batch (the delete() path's shape: key + op
         // tags, no payload, no _ts — upsert/merge batches always carry
@@ -1581,11 +1565,11 @@ final class LakeTable(
         // commit keeps every base (base blooms and stats describe base
         // files) and appends its entry to each written bucket's stack; a
         // fold replaces the affected buckets' bases and resets their stacks.
-        def layer(
-            base: Manifest => Map[Int, String], stack: Manifest => Map[Int, Seq[String]],
-            entries: Map[Int, String]): (Map[Int, String], Map[Int, Seq[String]]) = {
-          val b0 = prev.fold(Map.empty[Int, String])(base)
-          val s0 = prev.fold(Map.empty[Int, Seq[String]])(stack)
+        def layer[E](
+            base: Manifest => Map[Int, E], stack: Manifest => Map[Int, Seq[E]],
+            entries: Map[Int, E]): (Map[Int, E], Map[Int, Seq[E]]) = {
+          val b0 = prev.fold(Map.empty[Int, E])(base)
+          val s0 = prev.fold(Map.empty[Int, Seq[E]])(stack)
           if (asDelta) (b0, s0 ++ entries.map { case (b, e) => b -> (s0.getOrElse(b, Nil) :+ e) })
           else ((b0 -- affected) ++ entries, s0 -- affected)
         }
@@ -1760,101 +1744,9 @@ final class LakeTable(
       root.fieldNames().asScala.map(k => k.toLong -> root.get(k).asText("")).toMap
     }
 
-  /** Footer essentials of every file in the just-written bucket dirs,
-    * read on a BOUNDED driver pool (a serial per-commit footer loop would
-    * serialize thousands of object-store round-trips at production bucket
-    * counts) — ONE footer read per file serves bloom sizing AND the stats
-    * sidecar. `statCols` = physical column names whose statistics to
-    * extract (empty for row counts only).
-    */
-  private def readFooters(
-      relDir: String, written: Set[Int],
-      statCols: Set[String]): Map[Int, Seq[LakeTable.FileFooter]] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files: Seq[(Int, String)] = written.toSeq.sorted.flatMap { b =>
-      val dir = new HPath(s"$basePath/$relDir/$BucketCol=$b")
-      io.list(dir).filter(_.endsWith(".parquet")).sorted.map(f => b -> f)
-    }
-    if (files.isEmpty) return Map.empty
-    val poolSize = (spark.sparkContext.defaultParallelism / 4).max(4)
-      .min(files.size)
-    graft.util.DriverPool.runAll(poolSize, files.map { case (b, f) =>
-      () => b -> LakeTable.readFileFooter(
-        new HPath(s"$basePath/$relDir/$BucketCol=$b/$f"), f, statCols, conf)
-    }).groupBy(_._1).map { case (b, s) => b -> s.map(_._2) }
-  }
-
-  /** Build + write per-bucket bloom sidecar files for the buckets just
-    * written; returns bucket -> manifest-relative sidecar path. Each
-    * executor writes the filters it aggregated straight to
-    * `<bucket dir>/_bloom` through the table's FileSystem — filter bytes
-    * never visit the driver (at thousands of buckets x ~MB filters a
-    * driver collect would be GBs). The `_` prefix keeps the sidecar
-    * invisible to Spark's parquet file listing.
-    */
-  private def writeBloomSidecars(
-      relDir: String, written: Set[Int],
-      footers: Map[Int, Seq[LakeTable.FileFooter]]): Map[Int, String] = {
-    if (written.isEmpty) return Map.empty
-    val paths = written.toSeq.sorted.map(b => s"$basePath/$relDir/$BucketCol=$b")
-    val keys = spark.read.parquet(paths: _*).select(col(KeyCol))
-    // Size for the biggest bucket (hash buckets are near-uniform). The
-    // row counts come from the just-written parquet FOOTERS — exact,
-    // driver-side, zero Spark jobs — where the old groupBy().count() agg
-    // planned an exchange and cost 2-3 AQE stage jobs per bloom commit.
-    // A bucket dir's rows all hash to that bucket by construction, so
-    // the per-dir footer sum IS the old per-bucket count. Footers
-    // arrive pre-read (one bounded-pool pass shared with the stats
-    // sidecar).
-    val maxN =
-      written.toSeq.map(b => footers.getOrElse(b, Nil).map(_.rows).sum)
-        .max.max(1L)
-    // Untyped udaf over a codegen'd int-bucket groupBy: the earlier typed
-    // groupByKey(row => ...) path deserialized every row through closures —
-    // measurably CPU-heavy at bench scale for zero benefit.
-    import org.apache.spark.sql.Encoders
-    val bloomUdaf = udaf(new BloomAggregator(maxN, 0.01), Encoders.STRING)
-    // Locals only in the closure (LakeTable itself is not serializable).
-    val sconf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val base = basePath
-    val bucketCol = BucketCol
-    val fileName = BloomFileName
-    withJobDesc("bloom-build")(keys
-      .groupBy(bucketOf(col(KeyCol)).as(BucketCol))
-      .agg(bloomUdaf(col(KeyCol)).as("bloom"))
-      .foreachPartition { (it: Iterator[Row]) =>
-        it.foreach { r =>
-          // Write-temp-then-rename: a raw create(overwrite) would let a
-          // speculative/zombie task attempt TRUNCATE a sidecar mid-read
-          // after the manifest was published; the rename makes each
-          // publish atomic. The correctness invariant is that every
-          // attempt of a partition produces byte-identical bloom bytes
-          // (deterministic sizing + commutative bit-OR merge), so it does
-          // not matter which attempt's file survives — note local POSIX
-          // rename REPLACES an existing target while HDFS rename fails on
-          // one; both outcomes are fine under that invariant.
-          val target = new HPath(s"$base/$relDir/$bucketCol=${r.getInt(0)}/$fileName")
-          val fs = target.getFileSystem(sconf.value)
-          val tmp = new HPath(
-            target.getParent, s".tmp-bloom-${java.util.UUID.randomUUID()}")
-          val out = fs.create(tmp, false)
-          try out.write(r.getAs[Array[Byte]](1))
-          finally out.close()
-          val renamed = fs.rename(tmp, target)
-          if (!renamed) {
-            fs.delete(tmp, false)
-            if (!fs.exists(target))
-              throw new java.io.IOException(s"failed to publish bloom sidecar $target")
-          }
-        }
-      })
-    written.map(b => b -> s"$relDir/$BucketCol=$b/$BloomFileName").toMap
-  }
-
   // ---- manifest-level column min/max stats (Hudi col_stats shape) --------
   //
-  // Opt-in via `statsColumns`: each non-delta commit records per-bucket
+  // Opt-in via `statsColumns`: each commit records per-bucket
   // min/max for the named columns in ONE `_stats.json` beside the commit's
   // data (per-commit file, not inline manifest payload — the bloom lesson:
   // the manifest stays KB-sized at any bucket count; the manifest maps
@@ -1870,8 +1762,9 @@ final class LakeTable(
   // stats compose with partition-dir pruning, each partition keeps its own
   // manifests) and for engineered key layouts, NOT for a uniformly
   // distributed column (every bucket spans the full range; stats then
-  // prune nothing and cost one narrow agg per commit). Buckets carrying a
-  // delta stack are never pruned (base stats can't speak for deltas).
+  // prune nothing and cost a min/max fold per written row). Buckets
+  // carrying a delta stack are never pruned (base stats can't speak for
+  // deltas).
 
   /** Orderable scalar types recorded/compared; everything else is skipped
     * (absent stats never prune — conservative).
@@ -1881,198 +1774,81 @@ final class LakeTable(
     case org.apache.spark.sql.types.StringType => true
     // Genuine temporal payload columns — a real CDC
     // table's created_at/updated_at — record integer bounds (epoch micros
-    // / epoch days, see statNorm) like Hudi col_stats. TimestampNTZ stays
-    // un-statable: normalizing it needs a session zone, and a sidecar
-    // written under one zone would mis-prune readers under another.
+    // / epoch days, see writeStatsSidecar) like Hudi col_stats.
+    // TimestampNTZ stays un-statable: normalizing it needs a session
+    // zone, and a sidecar written under one zone would mis-prune readers
+    // under another.
     case org.apache.spark.sql.types.TimestampType => true
     case org.apache.spark.sql.types.DateType => true
     case _ => false
   }
 
-  /** Stat-input normalization: temporal columns record INTEGER bounds —
-    * timestamp as epoch micros (`unix_micros`, instant-exact, zone-free)
-    * and date as epoch days (`unix_date`) — so the sidecar JSON stays
-    * scalar and comparisons stay exact integer arithmetic. The prune side
-    * ([[excludes]]' cmp) converts pushed Timestamp/Instant/Date/LocalDate
-    * literals through the SAME encoding; change one side only and ranges
-    * silently stop matching, so keep them paired.
-    */
-  private def statNorm(
-      qc: org.apache.spark.sql.Column,
-      dt: DataType): org.apache.spark.sql.Column = dt match {
-    case org.apache.spark.sql.types.TimestampType => unix_micros(qc)
-    case org.apache.spark.sql.types.DateType => unix_date(qc)
-    case _ => qc
-  }
-
-  /** Distributed min/max + null counts over the buckets just written
-    * (Hudi col_stats records null counts too — they buy IsNull/IsNotNull
-    * pruning and disambiguate "all null" from "not statable"); tiny
-    * scalar collect; one JSON sidecar per commit. Returns the
-    * manifest-relative path, or None when nothing statable.
+  /** One JSON sidecar per commit holding min/max + null counts of the stat
+    * columns (Hudi col_stats records null counts too — they buy
+    * IsNull/IsNotNull pruning and disambiguate "all null" from "not
+    * statable") per bucket and per FILE (the Hudi metadata-table col_stats
+    * granularity), from the facts the write tasks collected; a bucket's
+    * entry rolls its files up in the same ordering. Returns the
+    * manifest-relative path.
     *
-    * Stats are computed per FILE (grouped on `input_file_name`, the
-    * Hudi metadata-table col_stats granularity) and rolled up to the
-    * bucket locally from the collected per-file rows — still ONE
-    * distributed pass over the just-written data. With `zorderBy` +
-    * `filesPerBucket > 1` the files inside a bucket tile the Z-curve
-    * (range-partitioned write), so per-file ranges on clustered columns
-    * are near-disjoint and a range predicate skips FILES inside
-    * surviving buckets before any footer read — the pruning lane bucket
-    * hashing can't give (a uniform payload column spans every bucket).
-    * The file map is commit-atomic and complete: it is derived from
-    * exactly the files this commit published, in the same job that
-    * publishes their manifest.
+    * With `zorderBy` + `filesPerBucket > 1` the files inside a bucket tile
+    * the Z-curve (range-partitioned write), so per-file ranges on
+    * clustered columns are near-disjoint and a range predicate skips FILES
+    * inside surviving buckets before any footer read — the pruning lane
+    * bucket hashing can't give (a uniform payload column spans every
+    * bucket). The file map is commit-atomic and complete: it names exactly
+    * the files this commit published.
+    *
+    * Bounds are Spark internal values, so timestamps record epoch micros
+    * and dates epoch days — the encodings [[excludes]]' cmp converts
+    * pushed literals through; change one side only and ranges silently
+    * stop matching. Keys are PHYSICAL column names: they are stable across
+    * renames, so recorded stats keep pruning after one (readers remap via
+    * logicalStats).
     */
   private def writeStatsSidecar(
-      relDir: String, written: Set[Int],
-      renames: Map[String, String],
-      writtenSchema: StructType,
-      footers: Map[Int, Seq[LakeTable.FileFooter]]): Option[String] = {
-    if (written.isEmpty) return None
-    // The just-written files carry PHYSICAL names: translate the
-    // handle's logical statsColumns and record the sidecar keys PHYSICAL
-    // too — physical names are stable across renames, so recorded stats
-    // keep pruning after a rename (readers remap via logicalStats).
-    // Eligibility comes from the WRITTEN schema — identical to what
-    // spark.read would infer back from the same files.
-    val eligible = statsColumns.map(c => renames.getOrElse(c, c)).filter(c =>
-      writtenSchema.fields.exists(f => f.name == c && statable(f.dataType)))
-    if (eligible.isEmpty) return None
-    // Normalized per-node stats: (rows, per-eligible-column (min, max,
-    // nulls)) — produced by either source below, serialized identically.
-    type NodeData = (Long, Seq[(Option[Any], Option[Any], Long)])
-    // Footer fast path (the bloom-sizing mechanism extended to column
-    // stats): per-file bounds come straight from the
-    // parquet FOOTERS already read for this commit — exact, ZERO Spark
-    // jobs — whenever every eligible column's footer statistics are
-    // usable in every file (see ColFooter). INT96 timestamps, FLBA-backed
-    // decimals, or dropped/truncated binary bounds fall back to the
-    // distributed agg below, which records the identical JSON.
-    // Under `-Dgraft.lake.stats.noFooter=true` writeCommit reads no
-    // footer stats, so this always takes the agg fallback.
-    val footerOk = footers.nonEmpty && written.forall(b =>
-      footers.get(b).exists(fs => fs.nonEmpty && fs.forall(ff =>
-        eligible.forall(c => ff.cols.get(c).exists(_.usable)))))
-    val perBucket: Seq[(Int, NodeData, Seq[(String, NodeData)])] =
-      if (footerOk) {
-        written.toSeq.sorted.map { b =>
-          val fs = footers(b).sortBy(_.name)
-          // File-level bounds FIRST — the bucket rollup below merges (and
-          // mutates) the same statistics objects.
-          val fileNodes: Seq[(String, NodeData)] = fs.map { ff =>
-            val cols = eligible.map { c =>
-              val cf = ff.cols(c)
-              val (mn, mx) =
-                if (cf.stats.hasNonNullValue)
-                  (Option(LakeTable.footerBound(cf.stats.genericGetMin, cf.primitive)),
-                    Option(LakeTable.footerBound(cf.stats.genericGetMax, cf.primitive)))
-                else (None, None)
-              (mn, mx, cf.stats.getNumNulls)
-            }
-            ff.name -> ((ff.rows, cols))
-          }
-          // Bucket rollup via parquet's OWN typed comparators (exactly
-          // the orderings the bounds were recorded under — unsigned UTF-8
-          // bytes for strings, Float/Double.compare for the NaN lanes —
-          // the same orders Spark's min/max aggregates use). The footers
-          // map is per-commit scratch, so mutating the first file's
-          // statistics as the accumulator is safe.
-          val bucketCols = eligible.map { c =>
-            val acc = fs.head.cols(c)
-            fs.tail.foreach(f => LakeTable.mergeStatsUnsafe(acc.stats, f.cols(c).stats))
-            val (mn, mx) =
-              if (acc.stats.hasNonNullValue)
-                (Option(LakeTable.footerBound(acc.stats.genericGetMin, acc.primitive)),
-                  Option(LakeTable.footerBound(acc.stats.genericGetMax, acc.primitive)))
-              else (None, None)
-            (mn, mx, acc.stats.getNumNulls) // merge accumulated the null counts
-          }
-          (b, (fs.map(_.rows).sum, bucketCols), fileNodes)
-        }
-      } else {
-        val paths = written.toSeq.sorted.map(b => s"$basePath/$relDir/$BucketCol=$b")
-        val df = spark.read.parquet(paths: _*)
-        val aggs = eligible.flatMap { c =>
-          val dt = df.schema.fields.find(_.name == c).get.dataType
-          val qc = statNorm(col("`" + c + "`"), dt)
-          Seq(min(qc).as(s"min:$c"), max(qc).as(s"max:$c"),
-            sum(when(qc.isNull, 1L).otherwise(0L)).as(s"nulls:$c"))
-        } :+ count(lit(1)).as("rows")
-        val perFileDf = df.groupBy(
-            bucketOf(col(KeyCol)).as(BucketCol),
-            element_at(split(input_file_name(), "/"), -1).as("_file"))
-          .agg(aggs.head, aggs.drop(1): _*)
-        val fileRows = withJobDesc("stats")(perFileDf.collect())
-        // Bucket rollup over the collected per-file frame: a LOCAL tiny
-        // job (files x columns scalars), so the data is scanned once while
-        // the rollup still uses Spark's own orderings (UTF-8 string
-        // min/max — never reimplemented driver-side).
-        import scala.jdk.CollectionConverters._
-        val local = spark.createDataFrame(fileRows.toSeq.asJava, perFileDf.schema)
-        val rollups = eligible.flatMap { c =>
-          Seq(min(col(s"`min:$c`")).as(s"min:$c"), max(col(s"`max:$c`")).as(s"max:$c"),
-            sum(col(s"`nulls:$c`")).cast("long").as(s"nulls:$c"))
-        } :+ sum(col("rows")).cast("long").as("rows")
-        val rows = local.groupBy(col(BucketCol))
-          .agg(rollups.head, rollups.drop(1): _*).collect()
-        // Row layout: [..prefix.., (min,max,nulls) x eligible, rows]
-        def nodeOf(r: Row, off: Int): NodeData = (
-          r.getLong(off + eligible.size * 3),
-          eligible.indices.map(i => (
-            Option(r.get(off + i * 3)), Option(r.get(off + 1 + i * 3)),
-            r.getLong(off + 2 + i * 3))))
-        val filesByBucket = fileRows.groupBy(_.getInt(0))
-        rows.sortBy(_.getInt(0)).toSeq.map { r =>
-          val b = r.getInt(0)
-          (b, nodeOf(r, 1),
-            filesByBucket.getOrElse(b, Array.empty[Row]).sortBy(_.getString(1))
-              .toSeq.map(fr => fr.getString(1) -> nodeOf(fr, 2)))
-        }
-      }
+      relDir: String, files: Map[Int, Seq[FileFacts]],
+      cols: Seq[(String, DataType)]): String = {
     val mapper = new ObjectMapper()
     val root = mapper.createObjectNode()
     val bucketsNode = root.putObject("buckets")
     def put(node: ObjectNode, field: String, v: Any): Unit = v match {
-      case s: String => node.put(field, s)
+      case s: org.apache.spark.unsafe.types.UTF8String => node.put(field, s.toString)
       case d: java.lang.Double => node.put(field, d.doubleValue())
       case f: java.lang.Float => node.put(field, f.doubleValue()) // exact widen
-      case dec: java.math.BigDecimal => node.put(field, dec)
+      case dec: org.apache.spark.sql.types.Decimal => node.put(field, dec.toJavaBigDecimal)
       case n: java.lang.Number => node.put(field, n.longValue())
-      case other => node.put(field, other.toString)
     }
     // A non-finite double bound is not JSON-orderable: drop that column's
-    // bounds for the bucket (conservative) rather than serialize NaN.
-    def enc(v: Any): Option[Any] = v match {
-      case null => None
-      case d: java.lang.Double if !java.lang.Double.isFinite(d) => None
-      case f: java.lang.Float if !java.lang.Float.isFinite(f) => None
-      case other => Some(other)
+    // bounds for the node (conservative) rather than serialize NaN.
+    def finite(v: Any): Boolean = v match {
+      case d: java.lang.Double => java.lang.Double.isFinite(d)
+      case f: java.lang.Float => java.lang.Float.isFinite(f)
+      case _ => true
     }
-    def emit(node: ObjectNode, d: NodeData): Unit = {
-      node.put("rows", d._1)
+    def emit(node: ObjectNode, rows: Long, cs: Seq[ColFacts]): Unit = {
+      node.put("rows", rows)
       val colsNode = node.putObject("cols")
-      eligible.zipWithIndex.foreach { case (c, i) =>
-        val (mn0, mx0, nulls) = d._2(i)
+      cols.zip(cs).foreach { case ((c, _), cf) =>
         val cNode = colsNode.putObject(c)
-        cNode.put("nulls", nulls)
-        (mn0.flatMap(enc), mx0.flatMap(enc)) match {
-          case (Some(mn), Some(mx)) =>
-            put(cNode, "min", mn)
-            put(cNode, "max", mx)
-          case _ => () // all-null (or NaN-bounded) column: null count only
+        cNode.put("nulls", cf.nulls)
+        // all-null (or NaN-bounded) column: null count only
+        if (cf.min != null && finite(cf.min) && finite(cf.max)) {
+          put(cNode, "min", cf.min)
+          put(cNode, "max", cf.max)
         }
       }
     }
-    perBucket.foreach { case (b, bData, files) =>
+    files.toSeq.sortBy(_._1).foreach { case (b, fs) =>
       val bNode = bucketsNode.putObject(b.toString)
-      emit(bNode, bData)
+      emit(bNode, fs.map(_.rows).sum, cols.indices.map(i =>
+        FileFactsTracker.union(cols(i)._2, fs.map(_.cols(i)))))
       val filesNode = bNode.putObject("files")
-      files.foreach { case (fname, fd) => emit(filesNode.putObject(fname), fd) }
+      fs.foreach(f => emit(filesNode.putObject(f.name), f.rows, f.cols))
     }
     val rel = s"$relDir/$StatsFileName"
     io.replace(io.resolve(rel), mapper.writeValueAsString(root))
-    Some(rel)
+    rel
   }
 
   /** path -> bucket -> parsed stats. Sidecars are immutable once
@@ -2211,7 +1987,7 @@ final class LakeTable(
       case n: java.lang.Number if node.isNumber =>
         try Some(node.decimalValue().compareTo(new java.math.BigDecimal(n.toString)))
         catch { case _: NumberFormatException => None } // NaN/Infinity literal
-      // Temporal literals compare through the statNorm encodings (epoch
+      // Temporal literals compare through the sidecar's encodings (epoch
       // micros / epoch days) — both external-type families Spark pushes
       // (java.sql.* default, java.time.* under datetime.java8API.enabled).
       case t: java.sql.Timestamp if node.isNumber =>
@@ -2503,142 +2279,6 @@ object LakeTable {
     struct(time, tag, xxhash64(cols.map(c =>
       if (containsMap(rows.schema(c).dataType)) to_json(col(c)) else col(c)): _*))
 
-  /** One column's footer statistics, merged across a file's row groups
-    * with parquet's OWN typed comparator (exactly the ordering the writer
-    * recorded them under — for strings that is unsigned UTF-8 byte order,
-    * the same order Spark's min/max aggregate uses). `usable` = every row
-    * group recorded a null count and either real bounds or a provably
-    * all-null chunk, and the (primitive, logical) type pair maps exactly
-    * onto the value the stats-sidecar agg would have produced.
-    */
-  private[lake] final case class ColFooter(
-      stats: org.apache.parquet.column.statistics.Statistics[_],
-      primitive: org.apache.parquet.schema.PrimitiveType,
-      usable: Boolean)
-
-  /** A just-written parquet file's footer essentials — row count plus the
-    * requested columns' [[ColFooter]]s. Read ONCE per file per commit and
-    * shared by bloom sizing and the stats sidecar.
-    */
-  private[lake] final case class FileFooter(
-      name: String, rows: Long, cols: Map[String, ColFooter])
-
-  /** True iff the (primitive, logical) parquet type of `pt` converts
-    * EXACTLY to the value the stats-sidecar agg records for the matching
-    * Spark type ([[footerBound]] below): the statNorm encodings line up
-    * by construction (DATE stats are epoch days = `unix_date`;
-    * TIMESTAMP(MICROS, adjustedToUTC) stats are epoch micros =
-    * `unix_micros`). INT96 timestamps, FIXED_LEN_BYTE_ARRAY decimals,
-    * booleans and anything exotic are NOT convertible — the caller falls
-    * back to the agg job, never guesses.
-    */
-  private[lake] def footerConvertible(
-      pt: org.apache.parquet.schema.PrimitiveType): Boolean = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.LogicalTypeAnnotation._
-    val ann = pt.getLogicalTypeAnnotation
-    pt.getPrimitiveTypeName match {
-      case INT32 => ann match {
-        case null => true
-        case _: IntLogicalTypeAnnotation => true
-        case _: DateLogicalTypeAnnotation => true
-        case _: DecimalLogicalTypeAnnotation => true
-        case _ => false
-      }
-      case INT64 => ann match {
-        case null => true
-        case _: IntLogicalTypeAnnotation => true
-        case _: DecimalLogicalTypeAnnotation => true
-        case t: TimestampLogicalTypeAnnotation =>
-          t.isAdjustedToUTC &&
-            t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS
-        case _ => false
-      }
-      case FLOAT | DOUBLE => true
-      case BINARY =>
-        ann.isInstanceOf[StringLogicalTypeAnnotation]
-      case _ => false
-    }
-  }
-
-  /** A merged footer statistic's min or max as EXACTLY the Java value the
-    * stats-sidecar agg would collect for the matching Spark column (the
-    * JSON `put` then renders both identically): Integer/Long for the int
-    * and temporal lanes, Float/Double (the caller's non-finite gate drops
-    * NaN bounds on both paths — parquet's Float/Double comparators are
-    * `Float.compare`/`Double.compare`, so a NaN-containing chunk records
-    * max = NaN exactly like Spark's NaN-greatest ordering), UTF-8 String,
-    * scaled BigDecimal for int-backed decimals. Only called for
-    * [[footerConvertible]] types.
-    */
-  private[lake] def footerBound(
-      v: Any, pt: org.apache.parquet.schema.PrimitiveType): Any = {
-    import org.apache.parquet.schema.LogicalTypeAnnotation.DecimalLogicalTypeAnnotation
-    (pt.getLogicalTypeAnnotation, v) match {
-      case (d: DecimalLogicalTypeAnnotation, n: java.lang.Number) =>
-        java.math.BigDecimal.valueOf(n.longValue(), d.getScale)
-      case (_, b: org.apache.parquet.io.api.Binary) => b.toStringUsingUTF8
-      case (_, other) => other
-    }
-  }
-
-  /** Merge parquet statistics across row groups. The static type
-    * parameter is erased at runtime and `mergeStatistics` dispatches on
-    * the runtime class (same column of the same file — always
-    * compatible); the cast only satisfies the Scala compiler.
-    */
-  private def mergeStatsUnsafe(a: AnyRef, b: AnyRef): Unit =
-    a.asInstanceOf[org.apache.parquet.column.statistics.Statistics[java.lang.Long]]
-      .mergeStatistics(
-        b.asInstanceOf[org.apache.parquet.column.statistics.Statistics[java.lang.Long]])
-
-  /** Read one file's footer essentials. `statCols` names the (physical)
-    * columns whose statistics the caller wants extracted; pass empty for
-    * row counts only (bloom sizing).
-    */
-  private[lake] def readFileFooter(
-      path: HPath, name: String, statCols: Set[String],
-      conf: org.apache.hadoop.conf.Configuration): FileFooter = {
-    import scala.jdk.CollectionConverters._
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf))
-    try {
-      val blocks = r.getFooter.getBlocks.asScala.toSeq
-      val rows = blocks.map(_.getRowCount).sum
-      val cols =
-        if (statCols.isEmpty) Map.empty[String, ColFooter]
-        else {
-          // (merged stats, all row groups usable) per column
-          val acc = new java.util.HashMap[
-            String,
-            (org.apache.parquet.column.statistics.Statistics[_],
-              org.apache.parquet.schema.PrimitiveType, Boolean)]()
-          blocks.foreach(_.getColumns.asScala.foreach { cc =>
-            if (cc.getPath.size == 1 && statCols.contains(cc.getPath.toDotString)) {
-              val cname = cc.getPath.toDotString
-              val st = cc.getStatistics
-              val pt = cc.getPrimitiveType
-              val prev = acc.get(cname)
-              val ok = st != null && st.isNumNullsSet &&
-                (st.hasNonNullValue || st.getNumNulls == cc.getValueCount)
-              val merged =
-                if (prev == null || prev._1 == null) st
-                else { if (ok) mergeStatsUnsafe(prev._1, st); prev._1 }
-              acc.put(cname, (merged, pt, (prev == null || prev._3) && ok))
-            }
-          })
-          val b = Map.newBuilder[String, ColFooter]
-          acc.forEach { (cname, t) =>
-            b += cname -> ColFooter(
-              t._1, t._2, t._3 && t._1 != null && footerConvertible(t._2))
-          }
-          b.result()
-        }
-      FileFooter(name, rows, cols)
-    } finally r.close()
-  }
-
   val KeyCol = "_key"
   val TsCol = "_ts"
   val SeqCol = "_seq"
@@ -2866,27 +2506,29 @@ object LakeTable {
   }
 
   /** Manifest = one committed version: bucket -> relative data dir, plus
-    * bucket -> relative bloom SIDECAR path (`.../b=<i>/_bloom`). Filters
-    * live beside their bucket's data — the manifest stays KB-sized at any
-    * bucket count and a sidecar is fetched only when a prune actually
-    * wants it.
+    * bucket -> relative bloom SIDECAR paths, one per data file of the base
+    * (`.../b=<i>/_bloom-<task>-<n>`; manifests from before per-file filters
+    * hold one `.../b=<i>/_bloom` per bucket). Filters live beside their
+    * bucket's data — the manifest stays KB-sized at any bucket count and a
+    * sidecar is fetched only when a prune actually wants it.
     *
     * Merge-on-read additions (docs/MOR_DESIGN.md): `deltas` is the ORDERED
     * list of delta dirs layered on each bucket since its last base
     * rewrite (empty for pure-COW tables — the JSON stays additive, old
-    * manifests deserialize with no deltas), `deltaBlooms` their sidecar
-    * paths. A bucket may exist in `deltas` alone (first keys of a bucket
-    * arriving as a delta): effective presence is [[allBuckets]].
+    * manifests deserialize with no deltas), `deltaBlooms` the sidecar
+    * paths of each sidecar-carrying delta layer. A bucket may exist in
+    * `deltas` alone (first keys of a bucket arriving as a delta):
+    * effective presence is [[allBuckets]].
     */
   final case class Manifest(
       version: Long,
       commitId: String,
       numBuckets: Int,
       buckets: Map[Int, String],
-      bloomFiles: Map[Int, String],
+      bloomFiles: Map[Int, Seq[String]],
       schemaJson: String,
       deltas: Map[Int, Seq[String]] = Map.empty,
-      deltaBlooms: Map[Int, Seq[String]] = Map.empty,
+      deltaBlooms: Map[Int, Seq[Seq[String]]] = Map.empty,
       statsFiles: Map[Int, String] = Map.empty,
       commitTimeMs: Long = 0L,
       // Per-delta-commit stats sidecars, aligned with `deltas` (one
@@ -2921,20 +2563,26 @@ object LakeTable {
       root.put("numBuckets", numBuckets)
       val b = root.putObject("buckets")
       buckets.toSeq.sortBy(_._1).foreach { case (k, v) => b.put(k.toString, v) }
+      // A layer's bloom sidecars: one path as a string (the only shape
+      // before per-file filters), several as an array.
+      def bloomNode(ps: Seq[String]): JsonNode =
+        if (ps.size == 1) mapper.getNodeFactory.textNode(ps.head)
+        else { val arr = mapper.createArrayNode(); ps.foreach(arr.add); arr }
       val bl = root.putObject("bloomFiles")
-      bloomFiles.toSeq.sortBy(_._1).foreach { case (k, v) => bl.put(k.toString, v) }
+      bloomFiles.toSeq.sortBy(_._1).foreach { case (k, v) => bl.set[JsonNode](k.toString, bloomNode(v)) }
       root.put("schemaJson", schemaJson)
-      def putSeqMap(name: String, m: Map[Int, Seq[String]]): Unit =
+      def putSeqMap[E](name: String, m: Map[Int, Seq[E]])(node: E => JsonNode): Unit =
         if (m.nonEmpty) {
-          val node = root.putObject(name)
+          val obj = root.putObject(name)
           m.toSeq.sortBy(_._1).foreach { case (k, vs) =>
-            val arr = node.putArray(k.toString)
-            vs.foreach(arr.add)
+            val arr = obj.putArray(k.toString)
+            vs.foreach(v => arr.add(node(v)))
           }
         }
-      putSeqMap("deltas", deltas)
-      putSeqMap("deltaBlooms", deltaBlooms)
-      putSeqMap("deltaStats", deltaStats)
+      val text = (v: String) => mapper.getNodeFactory.textNode(v): JsonNode
+      putSeqMap("deltas", deltas)(text)
+      putSeqMap("deltaBlooms", deltaBlooms)(bloomNode)
+      putSeqMap("deltaStats", deltaStats)(text)
       if (statsFiles.nonEmpty) {
         val st = root.putObject("statsFiles")
         statsFiles.toSeq.sortBy(_._1).foreach { case (k, v) => st.put(k.toString, v) }
@@ -2964,31 +2612,37 @@ object LakeTable {
             .map(k => k.toInt -> obj.get(k).asText()).toMap
         }
       }
-      def seqMap(name: String): Map[Int, Seq[String]] = {
+      def seqMap[E](name: String)(elem: JsonNode => E): Map[Int, Seq[E]] = {
         val node = root.get(name)
         if (node == null || !node.isObject) Map.empty
         else {
           val obj = node.asInstanceOf[ObjectNode]
           obj.fieldNames().asScala.map { k =>
-            k.toInt -> obj.get(k).elements().asScala.map(_.asText()).toSeq
+            k.toInt -> obj.get(k).elements().asScala.map(elem).toSeq
           }.toMap
         }
       }
+      def paths(n: JsonNode): Seq[String] =
+        if (n.isArray) n.elements().asScala.map(_.asText()).toSeq else Seq(n.asText())
       Manifest(
         version = root.get("version").asLong(),
         commitId = root.get("commitId").asText(""),
         numBuckets = root.get("numBuckets").asInt(),
         buckets = objMap("buckets"),
-        bloomFiles = objMap("bloomFiles"),
+        bloomFiles = {
+          val node = root.get("bloomFiles")
+          if (node == null || !node.isObject) Map.empty
+          else node.fields().asScala.map(e => e.getKey.toInt -> paths(e.getValue)).toMap
+        },
         schemaJson = root.get("schemaJson").asText(),
-        deltas = seqMap("deltas"),
-        deltaBlooms = seqMap("deltaBlooms"),
+        deltas = seqMap("deltas")(_.asText()),
+        deltaBlooms = seqMap("deltaBlooms")(paths),
         statsFiles = objMap("statsFiles"),
         // manifests older than commit-time stamping carry none — 0 keeps
         // them resolvable by versionAt (they sort before any stamped commit)
         commitTimeMs =
           Option(root.get("commitTimeMs")).map(_.asLong()).getOrElse(0L),
-        deltaStats = seqMap("deltaStats"),
+        deltaStats = seqMap("deltaStats")(_.asText()),
         renames = {
           val node = root.get("renames")
           if (node == null || !node.isObject) Map.empty

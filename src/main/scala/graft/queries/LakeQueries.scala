@@ -1322,7 +1322,7 @@ object LakeQueries {
     // table clusters on (timestamp, string) — unix_micros / 7-byte-prefix
     // Morton lanes — with stats on both columns, and the read goes
     // through the relation's pushdown so the timestamp range + string
-    // equality prune buckets AND files through the statNorm epoch/UTF-8
+    // equality prune buckets AND files through the sidecar's epoch/UTF-8
     // encodings. The oracle is the plain filter over orders: clustering
     // is only a sort, so ANY wrong lane/stat encoding shows up as
     // missing rows (a wrongly-pruned bucket) — the hash check carries

@@ -621,7 +621,7 @@ case class LakeCallCommand(proc: String, args: Seq[Expression])
           fail(s"duplicate clustering columns: ${cols.mkString(",")}")
         // Validate BEFORE the table-wide rewrite starts (the rest of the
         // procedure surface fails loudly up front): the Morton lanes encode
-        // numeric/timestamp/date/string (the statNorm epoch encodings + a
+        // numeric/timestamp/date/string (epoch micros/days + a
         // 7-byte string prefix code); a missing or other-typed column would
         // otherwise cluster on nulls deep inside compact().
         val stored = handle.snapshot.schema

@@ -249,6 +249,26 @@ class CdcEndToEndSpec extends SparkSpec {
     assert(city.toSeq == Seq(("nyc", 8L), ("sf", 1L)))
   }
 
+  test("tables named 1 and 01 in one batch each merge only their own rows") {
+    // Staged under _table=1 and _table=01: read back as integers, both
+    // would equal 1 and each sink would merge the other table's changes.
+    val root = tempDir("cdc-numtab-").toString
+    val batch = Seq(
+      env("db", "1", citySchema, 1L, "upsert", Seq("""{"code":"a","pop":1}""")),
+      env("db", "01", citySchema, 1L, "upsert", Seq(
+        """{"code":"b","pop":2}""", """{"code":"c","pop":3}""")))
+    val opts = Map(
+      "option.lake.path" -> s"$root/{db}/ods_{db}_{table}",
+      "db.1.recordkey.field" -> "code", "db.1.buckets" -> "2",
+      "db.01.recordkey.field" -> "code", "db.01.buckets" -> "2")
+    CdcSyncCommand.run(batch.toDF("value"), opts, batchId = 1L)
+    def codes(table: String): Seq[String] =
+      new LakeTable(spark, s"$root/db/ods_db_$table", 2).snapshot
+        .select("code").as[String].collect().sorted.toSeq
+    assert(codes("1") == Seq("a"))
+    assert(codes("01") == Seq("b", "c"))
+  }
+
   test("within-batch LWW: delete-then-upsert and upsert-then-delete resolve by ts") {
     val root = tempDir("cdc-").toString
     val batch = Seq(

@@ -226,10 +226,13 @@ class LakeTableSpec extends SparkSpec {
     assert(manifestJson.length < 8192, s"manifest must stay small: ${manifestJson.length}B")
     val m = LakeTable.Manifest.fromJson(manifestJson)
     assert(m.bloomFiles.nonEmpty)
-    m.bloomFiles.foreach { case (b, rel) =>
-      assert(rel.endsWith(s"/${LakeTable.BloomFileName}") && rel.contains(s"b=$b"), rel)
-      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, rel)),
-        s"sidecar file must exist: $rel")
+    m.bloomFiles.foreach { case (b, rels) =>
+      assert(rels.size == 1, s"one data file, one sidecar: $rels")
+      rels.foreach { rel =>
+        assert(rel.contains(s"/b=$b/${LakeTable.BloomFileName}-"), rel)
+        assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, rel)),
+          s"sidecar file must exist: $rel")
+      }
     }
     // `_`-prefixed sidecars are invisible to the parquet reader
     assert(lt.snapshot.count() == 3)

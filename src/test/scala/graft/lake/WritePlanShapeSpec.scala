@@ -6,8 +6,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.command.DataWritingCommandExec
-import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -17,7 +15,8 @@ import graft.SparkSpec
   * write's bucket layout and outputs `_key` as its grouping attribute, so
   * Spark's EnsureRequirements drops the write's own repartition and a
   * commit shuffles the written rows once. Each commit's executed write
-  * plan is captured with a QueryExecutionListener.
+  * plan is captured with a QueryExecutionListener: the write runs as one
+  * SQL execution named `lake:write <data dir>`.
   */
 class WritePlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
@@ -33,15 +32,8 @@ class WritePlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        collectFirst(qe.executedPlan) {
-          case w: DataWritingCommandExec => w
-        }.foreach { w =>
-          w.cmd match {
-            case c: InsertIntoHadoopFsRelationCommand
-                if c.outputPath.toString.contains(dir) => plans.add(w.child)
-            case _ =>
-          }
-        }
+        if (funcName.startsWith("lake:write ") && funcName.contains(dir))
+          plans.add(qe.executedPlan)
       def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Z-order lanes on TIMESTAMP / DATE / STRING columns (r20): per-type
-  * monotone long encodings (statNorm epochs; 7-byte UTF-8 prefix) feed
+  * monotone long encodings (epoch micros/days; 7-byte UTF-8 prefix) feed
   * the Morton code, so `run_clustering` can retrofit locality onto the
   * columns users actually cluster by.
   */
