@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.datasources.{
   WriteJobStatsTracker, WriteTaskStats, WriteTaskStatsTracker}
 import org.apache.spark.sql.types.DataType
 import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -31,12 +32,16 @@ private[lake] final case class FileFacts(
   * file (or drops both); only names, counts and bounds reach the driver.
   *
   * Column indexes are positions in the written row (the data columns, in
-  * order; the bucket partition column comes last).
+  * order; the bucket partition column comes last). `filesPerBucket` is how
+  * many files this write may put in one bucket, None when every write task
+  * may write every bucket (the task-local bulk load): readers OR a bucket's
+  * per-file filters, so each is sized for 1% split over that many files.
   */
 private[lake] final class FileFactsTracker(
     conf: SerializableConfiguration,
     bloomKey: Option[Int],
-    statCols: Seq[(Int, DataType)]) extends WriteJobStatsTracker {
+    statCols: Seq[(Int, DataType)],
+    filesPerBucket: Option[Int]) extends WriteJobStatsTracker {
 
   @transient private var committed: Seq[FileFacts] = Nil
 
@@ -44,7 +49,7 @@ private[lake] final class FileFactsTracker(
   def files: Seq[FileFacts] = committed
 
   override def newTaskInstance(): WriteTaskStatsTracker =
-    new FileFactsTracker.Task(conf, bloomKey, statCols)
+    new FileFactsTracker.Task(conf, bloomKey, statCols, filesPerBucket)
 
   override def processStats(stats: Seq[WriteTaskStats], jobCommitTime: Long): Unit =
     committed = stats.flatMap { case FileFactsTracker.TaskFacts(fs) => fs; case _ => Nil }
@@ -52,8 +57,11 @@ private[lake] final class FileFactsTracker(
 
 private[lake] object FileFactsTracker {
 
-  /** Bloom sizing: n = the file's rows, 1% false positives. */
-  private val BloomFpp = 0.01
+  /** Bloom sizing: n = the file's rows, and 1% false positives over all
+    * the files one bucket may get in a write, so `files` filters ORed
+    * together stay near 1%.
+    */
+  private[lake] def bloomFpp(files: Int): Double = 0.01 / files.max(1)
 
   private final case class TaskFacts(files: Seq[FileFacts]) extends WriteTaskStats
 
@@ -80,33 +88,62 @@ private[lake] object FileFactsTracker {
     b.facts(files.map(_.nulls).sum)
   }
 
-  /** One open file: its row count, column bounds and keys, the keys packed
-    * into one growing byte buffer as (length, UTF-8 bytes) records.
+  /** A file's keys packed as (length, UTF-8 bytes) records into byte
+    * chunks: about 4 + key bytes of heap per row and no object per row.
+    * Chunks start at 4 KiB and double up to 8 MiB, so growing never copies
+    * what is stored and no single array nears the JVM's 2 GiB limit.
     */
+  private[lake] final class KeyBuffer {
+    private val full = scala.collection.mutable.ArrayBuffer.empty[(Array[Byte], Int)]
+    private var chunk = Array.emptyByteArray
+    private var used = 0
+
+    def add(k: UTF8String): Unit = {
+      val n = k.numBytes
+      if (chunk.length - used < 4L + n) {
+        if (used > 0) full += chunk -> used
+        chunk = new Array[Byte](KeyBuffer.nextChunk(chunk.length, n))
+        used = 0
+      }
+      Platform.putInt(chunk, Platform.BYTE_ARRAY_OFFSET + used, n)
+      k.writeToMemory(chunk, Platform.BYTE_ARRAY_OFFSET + used + 4)
+      used += 4 + n
+    }
+
+    /** Every key, in insertion order. */
+    def foreach(f: Array[Byte] => Unit): Unit =
+      (full :+ (chunk -> used)).foreach { case (c, end) =>
+        var off = 0
+        while (off < end) {
+          val n = Platform.getInt(c, Platform.BYTE_ARRAY_OFFSET + off)
+          f(java.util.Arrays.copyOfRange(c, off + 4, off + 4 + n))
+          off += 4 + n
+        }
+      }
+  }
+
+  private[lake] object KeyBuffer {
+    val MinChunk: Int = 4 << 10
+    val MaxChunk: Int = 8 << 20
+
+    /** The length of the chunk after one of `prev` bytes, for a record
+      * whose key has `keyBytes` bytes: double, within [MinChunk, MaxChunk],
+      * and at least the record. Long arithmetic, so it never wraps.
+      */
+    def nextChunk(prev: Int, keyBytes: Int): Int =
+      Math.toIntExact((2L * prev).max(MinChunk).min(MaxChunk).max(4L + keyBytes))
+  }
+
+  /** One open file: its row count, column bounds and keys. */
   private final class OpenFile(dts: Array[DataType], val bloomName: String) {
     var rows = 0L
     val bounds: Array[Bounds] = dts.map(new Bounds(_))
     val nulls = new Array[Long](dts.length)
-    var keys = new Array[Byte](0)
-    var keyBytes = 0
+    val keys = new KeyBuffer
 
-    def addKey(k: org.apache.spark.unsafe.types.UTF8String): Unit = {
-      val n = k.numBytes
-      if (keyBytes + 4 + n > keys.length)
-        keys = java.util.Arrays.copyOf(keys, ((keyBytes + 4 + n) * 2).max(4096))
-      Platform.putInt(keys, Platform.BYTE_ARRAY_OFFSET + keyBytes, n)
-      k.writeToMemory(keys, Platform.BYTE_ARRAY_OFFSET + keyBytes + 4)
-      keyBytes += 4 + n
-    }
-
-    def bloom(): BloomFilter = {
-      val bf = BloomFilter.create(rows.max(1L), BloomFpp)
-      var off = 0
-      while (off < keyBytes) {
-        val n = Platform.getInt(keys, Platform.BYTE_ARRAY_OFFSET + off)
-        bf.putBinary(java.util.Arrays.copyOfRange(keys, off + 4, off + 4 + n))
-        off += 4 + n
-      }
+    def bloom(fpp: Double): BloomFilter = {
+      val bf = BloomFilter.create(rows.max(1L), fpp)
+      keys.foreach(k => bf.putBinary(k))
       bf
     }
   }
@@ -114,7 +151,8 @@ private[lake] object FileFactsTracker {
   private final class Task(
       conf: SerializableConfiguration,
       bloomKey: Option[Int],
-      statCols: Seq[(Int, DataType)]) extends WriteTaskStatsTracker {
+      statCols: Seq[(Int, DataType)],
+      filesPerBucket: Option[Int]) extends WriteTaskStatsTracker {
     private val idx = statCols.map(_._1).toArray
     private val dts = statCols.map(_._2).toArray
     private val key = bloomKey.getOrElse(-1)
@@ -122,6 +160,8 @@ private[lake] object FileFactsTracker {
     // Sidecar names unique within a commit dir: the task's partition (the
     // `part-NNNNN` of its data files) and its count of files opened.
     private val task = f"${org.apache.spark.TaskContext.getPartitionId()}%05d"
+    private val fpp =
+      bloomFpp(filesPerBucket.getOrElse(org.apache.spark.TaskContext.get().numPartitions()))
     private var opened = 0
     private val done = Seq.newBuilder[FileFacts]
 
@@ -140,7 +180,7 @@ private[lake] object FileFactsTracker {
         if (row.isNullAt(idx(i))) f.nulls(i) += 1 else f.bounds(i).add(row.get(idx(i), dts(i)))
         i += 1
       }
-      if (key >= 0 && !row.isNullAt(key)) f.addKey(row.getUTF8String(key))
+      if (key >= 0 && !row.isNullAt(key)) f.keys.add(row.getUTF8String(key))
     }
 
     override def closeFile(filePath: String): Unit = {
@@ -149,7 +189,7 @@ private[lake] object FileFactsTracker {
       if (key >= 0) {
         val target = new Path(path.getParent, f.bloomName)
         val out = target.getFileSystem(conf.value).create(target, false)
-        try f.bloom().writeTo(out) finally out.close()
+        try f.bloom(fpp).writeTo(out) finally out.close()
       }
       done += FileFacts(
         path.getParent.getName.stripPrefix(LakeTable.BucketCol + "=").toInt,

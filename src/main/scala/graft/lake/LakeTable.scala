@@ -1476,14 +1476,13 @@ final class LakeTable(
         // positional logicalize — a sequential withColumnRenamed fold is
         // map-order sensitive (after rename(X→Y) + re-adding X, applying
         // Y→X while the live X exists duplicates the name and bricks every
-        // later write; ColumnRenameSpec pins the scenario). The writer
-        // keeps one file open per task, so rows reach it sorted by bucket
-        // (the Z-ordered layout already is).
-        val renamed = clustered.toDF(
+        // later write; ColumnRenameSpec pins the scenario).
+        val frame = clustered.toDF(
           clustered.columns.map(c => newRenames.getOrElse(c, c)).toIndexedSeq: _*)
-        val frame = if (zKey.isDefined) renamed else renamed.sortWithinPartitions(col(BucketCol))
-        // Diagnostic only: dump the commit write's physical plan; the table
-        // tag keeps tables (and partitions, sharing versions) apart.
+        // Diagnostic only: dump the physical plan handed to the commit
+        // write; the table tag keeps tables (and partitions, sharing
+        // versions) apart. The writer's own sort by bucket, which it adds
+        // when rows do not arrive in that order, is not in the dump.
         sys.env.get("GRAFT_EXPLAIN_WRITE").foreach { prefix =>
           val tag = s"${new HPath(basePath).getName}-${Integer.toHexString(basePath.hashCode)}"
           java.nio.file.Files.writeString(
@@ -1506,7 +1505,8 @@ final class LakeTable(
           new org.apache.spark.util.SerializableConfiguration(
             spark.sparkContext.hadoopConfiguration),
           if (bloomOnWrite) Some(writtenSchema.fieldIndex(KeyCol)) else None,
-          statCols.map { case (c, dt) => writtenSchema.fieldIndex(c) -> dt })
+          statCols.map { case (c, dt) => writtenSchema.fieldIndex(c) -> dt },
+          if (shuffle) Some(filesPerBucket) else None)
         withJobDesc(s"write v$version")(org.apache.spark.sql.graft.TrackedWrite.parquet(
           frame, outDir, BucketCol, s"lake:write $outDir", facts))
 

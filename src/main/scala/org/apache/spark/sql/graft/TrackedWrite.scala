@@ -14,9 +14,6 @@ import org.apache.spark.util.SerializableConfiguration
   * extra trackers (the shape of Delta's `DeltaJobStatisticsTracker`). It
   * runs as one SQL execution named `name` on the frame's own
   * QueryExecution, so query listeners see it like any other action.
-  *
-  * The writer keeps one file open per task, so `df` must arrive sorted
-  * within partitions by `partitionCol` (else Spark adds that sort itself).
   */
 object TrackedWrite {
 

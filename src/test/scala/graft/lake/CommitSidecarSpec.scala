@@ -6,6 +6,8 @@ import graft.SparkSpec
 import org.apache.spark.graft.BenchProbe
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Blooms and column stats come from the write tasks: a commit runs no
   * bloom or stats job and nothing after its data write, and buckets
@@ -55,6 +57,57 @@ class CommitSidecarSpec extends SparkSpec {
     assert(m.statsFiles(1) == m.statsFiles(3) && m.statsFiles(1) != m.statsFiles(0),
       "the two touched buckets share the new commit's sidecar")
     assert(lt.lookup(touched.take(1)).count() == 1)
+  }
+
+  /** Bit sizes of every filter `m` records, and of filters sized for each
+    * data file under `dir` (one commit's worth) at `fpp`, both sorted.
+    */
+  private def filterBits(dir: String, m: LakeTable.Manifest, fpp: Double): (Seq[Long], Seq[Long]) = {
+    val actual = m.bloomFiles.values.flatten.toSeq.map { rel =>
+      val in = java.nio.file.Files.newInputStream(java.nio.file.Paths.get(dir, rel))
+      try BloomFilter.readFrom(in).bitSize() finally in.close()
+    }.sorted
+    val parts = java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+      .map(_.toString).filter(p => p.endsWith(".parquet") && !p.contains("/_")).toSeq
+    val expected = parts.map(p => BloomFilter.create(spark.read.parquet(p).count(), fpp).bitSize())
+      .sorted
+    (actual, expected)
+  }
+
+  test("key buffer chunks grow without wrapping and keep every key") {
+    val kb = FileFactsTracker.KeyBuffer
+    assert(kb.nextChunk(0, 10) == kb.MinChunk)
+    assert(kb.nextChunk(kb.MinChunk, 10) == 2 * kb.MinChunk)
+    // Past 2^30 a doubling in Int arithmetic goes negative; here it caps.
+    assert(kb.nextChunk(1 << 30, 10) == kb.MaxChunk)
+    assert(kb.nextChunk(Int.MaxValue, 10) == kb.MaxChunk)
+    assert(kb.nextChunk(kb.MaxChunk, kb.MaxChunk) == kb.MaxChunk + 4, "a record always fits")
+    intercept[ArithmeticException](kb.nextChunk(0, Int.MaxValue))
+    val keys = (0 until 5000).map(i => "k" * (i % 37) + i) :+ ("x" * (3 * kb.MinChunk))
+    val buf = new FileFactsTracker.KeyBuffer
+    keys.foreach(k => buf.add(UTF8String.fromString(k)))
+    val back = Seq.newBuilder[String]
+    buf.foreach(b => back += new String(b, "UTF-8"))
+    assert(back.result() == keys)
+  }
+
+  test("per-file filters split the 1% rate over a bucket's files") {
+    val one = tempDir("sidecar-fpp1-").toString
+    new LakeTable(spark, one, numBuckets = 2).upsert(rows((0 until 400).map(i => s"k$i"), 1L))
+    val (a1, e1) = filterBits(one, new LakeTable(spark, one, numBuckets = 2).latestManifest().get,
+      FileFactsTracker.bloomFpp(1))
+    assert(a1 == e1 && a1.size == 2)
+    val two = tempDir("sidecar-fpp2-").toString
+    val lt2 = new LakeTable(spark, two, numBuckets = 2, filesPerBucket = 2)
+    lt2.upsert(rows((0 until 400).map(i => s"k$i"), 1L))
+    val (a2, e2) = filterBits(two, lt2.latestManifest().get, 0.005)
+    assert(a2 == e2 && a2.size > 2)
+    // A task-local bulk load may write every bucket from every task.
+    val bulk = tempDir("sidecar-fpp-bulk-").toString
+    val lt3 = new LakeTable(spark, bulk, numBuckets = 2)
+    lt3.bulkInsert(rows((0 until 300).map(i => s"k$i"), 1L).repartition(3), "c1", sortMode = "none")
+    val (a3, e3) = filterBits(bulk, lt3.latestManifest().get, 0.01 / 3)
+    assert(a3 == e3 && a3.size > 2)
   }
 
   /** Lookup, probeKeys and a bloom-pruned delete against `lt`, whose stored
