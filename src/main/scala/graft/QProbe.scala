@@ -74,7 +74,7 @@ object QProbe {
     val t0 = System.nanoTime()
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()
     val wall = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(300) // let trailing job-end events drain
+    org.apache.spark.graft.BenchProbe.drain(spark.sparkContext) // trailing job-end events
     val all = lines.toArray(Array.empty[String])
     all.foreach(println)
     val totalTasks = all.map(_.split("\\s+tasks")(0).split("\\s+").last.toInt).sum

@@ -36,11 +36,6 @@ object CdcSyncCommand {
   val RefRawPathKey = "option.binlog.path"
   /** "fail" = raise on malformed envelopes; default "drop" (ref behavior). */
   val OnMalformedKey = "option.onmalformed"
-  /** Driver threads dispatching per-table merges concurrently (the
-    * reference's per-table loop is sequential, SURVEY.md §3 notes the
-    * inefficiency; Spark schedules jobs from multiple driver threads).
-    */
-  val SinkParallelismKey = "option.sink.table.parallelism"
   /** Explicit multi-table staging root. Default: `_graft_staging` next to
     * the first table's path — i.e. on the SAME FileSystem the lake tables
     * use, which every executor can reach.
@@ -325,14 +320,13 @@ object CdcSyncCommand {
       }
 
       // Per-table merges are independent (distinct paths); dispatch from a
-      // bounded driver pool so table count, not table order, drives wall
-      // clock. Spark schedules jobs from concurrent driver threads fine.
-      val sinkThreads = options.get(SinkParallelismKey).map(_.toInt)
-        .getOrElse(4.min(metas.length)).max(1)
+      // driver pool of up to 4 threads so table count, not table order,
+      // drives wall clock. Spark schedules jobs from concurrent driver
+      // threads fine.
       def dispatch(mineOf: (String, String) => DataFrame): Unit =
-        if (sinkThreads <= 1 || metas.length <= 1) metas.foreach(sinkOne(mineOf))
+        if (metas.length <= 1) metas.foreach(sinkOne(mineOf))
         else graft.util.DriverPool.runAll(
-          sinkThreads, metas.toSeq.map(m => () => sinkOne(mineOf)(m)))
+          4.min(metas.length), metas.toSeq.map(m => () => sinkOne(mineOf)(m)))
 
       if (metas.length <= 1) {
         // Single table: no routing needed, consume the plan directly.

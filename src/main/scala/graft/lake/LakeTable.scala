@@ -1453,7 +1453,7 @@ final class LakeTable(
             // Z-ordered multi-file buckets RANGE-partition on (bucket,
             // code): a bucket's files then TILE the Z-curve instead of
             // being hash-random row subsets, so the per-file column
-            // stats recorded by writeStatsSidecar are near-disjoint
+            // stats ColumnStats records are near-disjoint
             // ranges on the clustered columns — the layout that makes
             // file-level stats pruning effective. Costs the range
             // exchange's sampling pass over the outgoing rows (the same
@@ -1497,10 +1497,7 @@ final class LakeTable(
         // and, with bloomOnWrite, one bloom sidecar per data file, published
         // by the output committer with its file. Nothing is read back.
         val writtenSchema = LakeTable.physSchema(merged.schema, newRenames)
-        val statCols: Seq[(String, DataType)] =
-          statsColumns.map(c => newRenames.getOrElse(c, c)).flatMap(c =>
-            writtenSchema.fields.find(f => f.name == c && statable(f.dataType))
-              .map(f => c -> f.dataType))
+        val statCols = ColumnStats.columns(statsColumns, newRenames, writtenSchema)
         val facts = new FileFactsTracker(
           new org.apache.spark.util.SerializableConfiguration(
             spark.sparkContext.hadoopConfiguration),
@@ -1536,30 +1533,13 @@ final class LakeTable(
           else files.map { case (b, fs) =>
             b -> fs.flatMap(_.bloom).map(n => s"$relDir/$BucketCol=$b/$n")
           }
-        // Column min/max stats (opt-in, like Hudi's metadata-table
-        // col_stats): one _stats.json per commit dir. DELTA commits record
-        // their own sidecar too, stacked in `deltaStats` alongside
-        // `deltas`; readers prune a delta-carrying bucket when base ∪
-        // every-delta-layer ranges exclude the predicate, so high-churn MOR
-        // tables keep pruning between folds instead of going stats-dark.
-        val statsPath =
-          if (statCols.nonEmpty && written.nonEmpty)
-            Some(writeStatsSidecar(relDir, files, statCols))
-          else None
-        // A PURE-DELETE delta batch (the delete() path's shape: key + op
-        // tags, no payload, no _ts — upsert/merge batches always carry
-        // _ts) has nothing statable, but deletes only REMOVE rows, so the
-        // layer provably adds nothing to any value range: record the
-        // EmptyStatsLayer sentinel to keep the stack aligned instead of
-        // going stats-dark until fold. Any OTHER sidecar-less delta batch
-        // (e.g. an upsert missing the stat column) leaves the stack shorter
-        // than `deltas` — the read side treats a misaligned stack as
-        // unknown (never prunes), the conservative default.
-        val deleteShaped = asDelta && merged.schema.fieldNames.forall(
-          Set(KeyCol, OpCol, DvCol, PtsCol).contains)
-        val statsLayer = statsPath.orElse(
-          if (statsColumns.nonEmpty && deleteShaped) Some(LakeTable.EmptyStatsLayer)
-          else None)
+        // Column stats (ColumnStats): one sidecar per commit, recorded for
+        // every written bucket; a delta commit stacks its own in
+        // `deltaStats`. A pure-delete delta batch (the delete() path's
+        // shape: key + op tags, no payload, no _ts) records the empty layer.
+        val statsLayer = colStats.layer(relDir, files, statCols,
+          deleteOnly = statsColumns.nonEmpty && asDelta &&
+            merged.schema.fieldNames.forall(Set(KeyCol, OpCol, DvCol, PtsCol).contains))
 
         // One base/stack rule for data dirs, blooms and stats. A delta
         // commit keeps every base (base blooms and stats describe base
@@ -1744,363 +1724,18 @@ final class LakeTable(
       root.fieldNames().asScala.map(k => k.toLong -> root.get(k).asText("")).toMap
     }
 
-  // ---- manifest-level column min/max stats (Hudi col_stats shape) --------
-  //
-  // Opt-in via `statsColumns`: each commit records per-bucket
-  // min/max for the named columns in ONE `_stats.json` beside the commit's
-  // data (per-commit file, not inline manifest payload — the bloom lesson:
-  // the manifest stays KB-sized at any bucket count; the manifest maps
-  // bucket -> stats path like `bloomFiles`). Readers prune buckets whose
-  // recorded range provably excludes a pushed predicate BEFORE any file
-  // listing or open — at 100 TB a range predicate then skips whole
-  // task-sized file groups, where parquet footer stats alone still open
-  // every file.
-  //
-  // Honest scale caveat: buckets are KEY-HASH file groups, so a payload
-  // column prunes only where its values correlate with buckets — true for
-  // partition-local recency (`_ts` on append-mostly partitioned tables:
-  // stats compose with partition-dir pruning, each partition keeps its own
-  // manifests) and for engineered key layouts, NOT for a uniformly
-  // distributed column (every bucket spans the full range; stats then
-  // prune nothing and cost a min/max fold per written row). Buckets
-  // carrying a delta stack are never pruned (base stats can't speak for
-  // deltas).
+  // ---- column min/max stats (ColumnStats) -----------------------------------
 
-  /** Orderable scalar types recorded/compared; everything else is skipped
-    * (absent stats never prune — conservative).
-    */
-  private def statable(dt: DataType): Boolean = dt match {
-    case _: org.apache.spark.sql.types.NumericType => true // incl. DecimalType
-    case org.apache.spark.sql.types.StringType => true
-    // Genuine temporal payload columns — a real CDC
-    // table's created_at/updated_at — record integer bounds (epoch micros
-    // / epoch days, see writeStatsSidecar) like Hudi col_stats.
-    // TimestampNTZ stays un-statable: normalizing it needs a session
-    // zone, and a sidecar written under one zone would mis-prune readers
-    // under another.
-    case org.apache.spark.sql.types.TimestampType => true
-    case org.apache.spark.sql.types.DateType => true
-    case _ => false
-  }
+  private val colStats = new ColumnStats(io)
 
-  /** One JSON sidecar per commit holding min/max + null counts of the stat
-    * columns (Hudi col_stats records null counts too — they buy
-    * IsNull/IsNotNull pruning and disambiguate "all null" from "not
-    * statable") per bucket and per FILE (the Hudi metadata-table col_stats
-    * granularity), from the facts the write tasks collected; a bucket's
-    * entry rolls its files up in the same ordering. Returns the
-    * manifest-relative path.
-    *
-    * With `zorderBy` + `filesPerBucket > 1` the files inside a bucket tile
-    * the Z-curve (range-partitioned write), so per-file ranges on
-    * clustered columns are near-disjoint and a range predicate skips FILES
-    * inside surviving buckets before any footer read — the pruning lane
-    * bucket hashing can't give (a uniform payload column spans every
-    * bucket). The file map is commit-atomic and complete: it names exactly
-    * the files this commit published.
-    *
-    * Bounds are Spark internal values, so timestamps record epoch micros
-    * and dates epoch days — the encodings [[excludes]]' cmp converts
-    * pushed literals through; change one side only and ranges silently
-    * stop matching. Keys are PHYSICAL column names: they are stable across
-    * renames, so recorded stats keep pruning after one (readers remap via
-    * logicalStats).
-    */
-  private def writeStatsSidecar(
-      relDir: String, files: Map[Int, Seq[FileFacts]],
-      cols: Seq[(String, DataType)]): String = {
-    val mapper = new ObjectMapper()
-    val root = mapper.createObjectNode()
-    val bucketsNode = root.putObject("buckets")
-    def put(node: ObjectNode, field: String, v: Any): Unit = v match {
-      case s: org.apache.spark.unsafe.types.UTF8String => node.put(field, s.toString)
-      case d: java.lang.Double => node.put(field, d.doubleValue())
-      case f: java.lang.Float => node.put(field, f.doubleValue()) // exact widen
-      case dec: org.apache.spark.sql.types.Decimal => node.put(field, dec.toJavaBigDecimal)
-      case n: java.lang.Number => node.put(field, n.longValue())
-    }
-    // A non-finite double bound is not JSON-orderable: drop that column's
-    // bounds for the node (conservative) rather than serialize NaN.
-    def finite(v: Any): Boolean = v match {
-      case d: java.lang.Double => java.lang.Double.isFinite(d)
-      case f: java.lang.Float => java.lang.Float.isFinite(f)
-      case _ => true
-    }
-    def emit(node: ObjectNode, rows: Long, cs: Seq[ColFacts]): Unit = {
-      node.put("rows", rows)
-      val colsNode = node.putObject("cols")
-      cols.zip(cs).foreach { case ((c, _), cf) =>
-        val cNode = colsNode.putObject(c)
-        cNode.put("nulls", cf.nulls)
-        // all-null (or NaN-bounded) column: null count only
-        if (cf.min != null && finite(cf.min) && finite(cf.max)) {
-          put(cNode, "min", cf.min)
-          put(cNode, "max", cf.max)
-        }
-      }
-    }
-    files.toSeq.sortBy(_._1).foreach { case (b, fs) =>
-      val bNode = bucketsNode.putObject(b.toString)
-      emit(bNode, fs.map(_.rows).sum, cols.indices.map(i =>
-        FileFactsTracker.union(cols(i)._2, fs.map(_.cols(i)))))
-      val filesNode = bNode.putObject("files")
-      fs.foreach(f => emit(filesNode.putObject(f.name), f.rows, f.cols))
-    }
-    val rel = s"$relDir/$StatsFileName"
-    io.replace(io.resolve(rel), mapper.writeValueAsString(root))
-    rel
-  }
+  /** Buckets of `m` the pushed filters can still touch, per its stats. */
+  private[lake] def statsPrunedBuckets(m: Manifest, filters: Seq[SFilter]): Set[Int] =
+    colStats.prunedBuckets(m, filters)
 
-  /** path -> bucket -> parsed stats. Sidecars are immutable once
-    * published — cached per handle like commit times. A missing/corrupt
-    * sidecar reads as empty (no prune, never a failure).
-    */
-  private val statsCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Map[Int, LakeTable.BucketStats]]()
-
-  private def loadStats(path: String): Map[Int, LakeTable.BucketStats] =
-    statsCache.computeIfAbsent(path, { p =>
-      // NonFatal, not just IOException: the contract is missing/corrupt/
-      // alien-shaped sidecar = NO PRUNE, never a failed scan — a
-      // non-integer bucket key or a column node without bounds must
-      // degrade the same way a missing file does.
-      try {
-        val root = new ObjectMapper().readTree(io.readString(io.resolve(p)))
-        val bNode = root.get("buckets")
-        // current shape: {"rows": N, "cols": {col: {min, max, nulls}},
-        // "files": {name: {rows, cols}}}; the oldest shape
-        // ({col: {min, max}} directly) still loads (bounds only, no null
-        // counts, no files), as does the later cols-without-files one.
-        def opt(n: JsonNode): Option[JsonNode] =
-          Option(n).filterNot(_.isNull)
-        def parseOne(node: ObjectNode, withFiles: Boolean): LakeTable.BucketStats = {
-          val colsNode = Option(node.get("cols"))
-            .filter(_.isObject).map(_.asInstanceOf[ObjectNode]).getOrElse(node)
-          val rows = Option(node.get("rows")).filter(_.isNumber).map(_.asLong())
-          val cols = colsNode.fieldNames().asScala.filter(colsNode.get(_).isObject).map { c =>
-            val cNode = colsNode.get(c)
-            c -> LakeTable.ColStat(
-              opt(cNode.get("min")), opt(cNode.get("max")),
-              Option(cNode.get("nulls")).filter(_.isNumber).map(_.asLong()))
-          }.toMap
-          val files =
-            if (!withFiles) Map.empty[String, LakeTable.BucketStats]
-            else Option(node.get("files")).filter(_.isObject)
-              .map(_.asInstanceOf[ObjectNode]).map { fn =>
-                fn.fieldNames().asScala.filter(fn.get(_).isObject).map { f =>
-                  f -> parseOne(fn.get(f).asInstanceOf[ObjectNode], withFiles = false)
-                }.toMap
-              }.getOrElse(Map.empty)
-          LakeTable.BucketStats(rows, cols, files)
-        }
-        if (bNode == null || !bNode.isObject) Map.empty
-        else bNode.asInstanceOf[ObjectNode].fieldNames().asScala.map { b =>
-          b.toInt -> parseOne(bNode.get(b).asInstanceOf[ObjectNode], withFiles = true)
-        }.toMap
-      } catch { case scala.util.control.NonFatal(_) => Map.empty }
-    })
-
-  /** Sidecar stats are keyed by PHYSICAL column names (stable across
-    * renames); pruning filters reference LOGICAL names — remap the
-    * keys through the manifest's mapping and DROP retired physical names
-    * entirely (their bounds describe a dropped column's data; a re-added
-    * same-named logical column reads NULL from those files, so matching
-    * the stale stats could e.g. wrongly exclude an `IS NULL` bucket).
-    */
-  private def logicalStats(
-      m: Manifest, st: LakeTable.BucketStats): LakeTable.BucketStats = {
-    if (m.renames.isEmpty && m.retired.isEmpty) return st
-    val inv = m.renames.map(_.swap)
-    val dead = m.retired.toSet
-    def remap(s: LakeTable.BucketStats): LakeTable.BucketStats = s.copy(
-      cols = s.cols.collect {
-        case (k, v) if !dead.contains(k) => inv.getOrElse(k, k) -> v
-      },
-      files = s.files.map { case (f, fs) => f -> remap(fs) })
-    remap(st)
-  }
-
-  /** Buckets of `m` a conjunction of pushed filters can still touch, per
-    * recorded column stats. Conservative: a bucket survives unless some
-    * filter PROVABLY excludes its whole range; buckets with delta stacks,
-    * without stats, or with un-comparable literal/stat type pairs always
-    * survive.
-    */
-  private[lake] def statsPrunedBuckets(
-      m: Manifest, filters: Seq[SFilter]): Set[Int] = {
-    if ((m.statsFiles.isEmpty && m.deltaStats.isEmpty) || filters.isEmpty)
-      return m.allBuckets
-    m.allBuckets.filter { b =>
-      val deltas = m.deltas.getOrElse(b, Nil)
-      if (deltas.isEmpty)
-        !m.statsFiles.contains(b) || {
-          val st = logicalStats(m, loadStats(m.statsFiles(b))
-            .getOrElse(b, LakeTable.BucketStats(None, Map.empty)))
-          !filters.exists(f => excludes(f, st))
-        }
-      else {
-        // Delta-carrying bucket: prunable iff EVERY layer has a
-        // stats sidecar — the base (when a base dir exists) plus one per
-        // stacked delta ([[Manifest.deltaStats]] aligned with `deltas`).
-        // Any unknown layer could hold a matching row, so a misaligned
-        // stack (deltas written before per-delta stats, un-statable
-        // row-carrying batch)
-        // never prunes. Pure-DELETE layers are recorded as
-        // [[LakeTable.EmptyStatsLayer]] sentinels: they keep the
-        // stack aligned but are SKIPPED from the union — a delete can
-        // only remove rows, so it adds nothing to any range. The union
-        // over-covers rows tombstones have since deleted — conservative
-        // by construction.
-        val dstats = m.deltaStats.getOrElse(b, Nil)
-        val baseKnown = !m.buckets.contains(b) || m.statsFiles.contains(b)
-        dstats.size != deltas.size || !baseKnown || {
-          val layers =
-            (m.statsFiles.get(b).toSeq ++
-              dstats.filterNot(_ == LakeTable.EmptyStatsLayer)).map(p =>
-              logicalStats(m,
-                loadStats(p).getOrElse(b, LakeTable.BucketStats(None, Map.empty))))
-          val st = LakeTable.unionStats(layers)
-          !filters.exists(f => excludes(f, st))
-        }
-      }
-    }
-  }
-
-  /** True iff `f` is UNSATISFIABLE on a bucket whose columns span the
-    * recorded ranges (min/max ignore nulls: a range never proves a null
-    * row absent — null-matching predicates prune only through the
-    * recorded null counts).
-    */
-  private def excludes(f: SFilter, st: LakeTable.BucketStats): Boolean = {
-    import org.apache.spark.sql.sources._
-    def cmp(node: JsonNode, v: Any): Option[Int] = v match {
-      case _ if node == null || node.isNull => None
-      // A Float literal must compare through its EXACT double widening —
-      // the write side stores f.doubleValue() (0.1f -> 0.10000000149011612)
-      // and Float.toString would yield "0.1", judging a bucket whose bound
-      // EQUALS the literal strictly outside (wrong prune). valueOf(double)
-      // goes through Double.toString, the same decimal Jackson wrote.
-      case fl: java.lang.Float if node.isNumber =>
-        if (!java.lang.Float.isFinite(fl)) None
-        else Some(node.decimalValue().compareTo(
-          java.math.BigDecimal.valueOf(fl.doubleValue())))
-      case n: java.lang.Number if node.isNumber =>
-        try Some(node.decimalValue().compareTo(new java.math.BigDecimal(n.toString)))
-        catch { case _: NumberFormatException => None } // NaN/Infinity literal
-      // Temporal literals compare through the sidecar's encodings (epoch
-      // micros / epoch days) — both external-type families Spark pushes
-      // (java.sql.* default, java.time.* under datetime.java8API.enabled).
-      case t: java.sql.Timestamp if node.isNumber =>
-        Some(node.decimalValue().compareTo(java.math.BigDecimal.valueOf(
-          Math.addExact(Math.multiplyExact(Math.floorDiv(t.getTime, 1000L),
-            1000000L), t.getNanos.toLong / 1000L))))
-      case i: java.time.Instant if node.isNumber =>
-        Some(node.decimalValue().compareTo(java.math.BigDecimal.valueOf(
-          Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L),
-            i.getNano.toLong / 1000L))))
-      case d: java.sql.Date if node.isNumber =>
-        Some(node.decimalValue().compareTo(
-          java.math.BigDecimal.valueOf(d.toLocalDate.toEpochDay)))
-      case d: java.time.LocalDate if node.isNumber =>
-        Some(node.decimalValue().compareTo(
-          java.math.BigDecimal.valueOf(d.toEpochDay)))
-      case s: String if node.isTextual =>
-        // Spark orders strings by UTF-8 BYTES (UTF8String.compareTo) —
-        // Java String.compareTo is UTF-16 code units, which disagrees for
-        // supplementary-plane characters (an emoji sorts above U+FFFF in
-        // UTF-8, below it in UTF-16). Comparing with the writer's own
-        // collation would wrongly prune buckets holding matching rows.
-        Some(java.util.Arrays.compareUnsigned(
-          node.asText().getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-      case _ => None
-    }
-    def mn(a: String): Option[JsonNode] = st.cols.get(a).flatMap(_.mn)
-    def mx(a: String): Option[JsonNode] = st.cols.get(a).flatMap(_.mx)
-    def nulls(a: String): Option[Long] = st.cols.get(a).flatMap(_.nulls)
-    // a non-null-matching predicate is unsatisfiable when every row of
-    // the bucket is null in that column (bounds are absent then, so the
-    // range tests alone can't see it)
-    def allNull(a: String): Boolean =
-      (for { n <- nulls(a); r <- st.rows } yield n == r).getOrElse(false)
-    def outside(a: String, v: Any): Boolean =
-      mn(a).flatMap(cmp(_, v)).exists(_ > 0) || mx(a).flatMap(cmp(_, v)).exists(_ < 0)
-    f match {
-      case GreaterThan(a, v)        => allNull(a) || mx(a).flatMap(cmp(_, v)).exists(_ <= 0)
-      case GreaterThanOrEqual(a, v) => allNull(a) || mx(a).flatMap(cmp(_, v)).exists(_ < 0)
-      case LessThan(a, v)           => allNull(a) || mn(a).flatMap(cmp(_, v)).exists(_ >= 0)
-      case LessThanOrEqual(a, v)    => allNull(a) || mn(a).flatMap(cmp(_, v)).exists(_ > 0)
-      case EqualTo(a, v) if v != null => allNull(a) || outside(a, v)
-      // null-safe equality: v != null behaves exactly like EqualTo
-      // (a null row can't <=> a non-null literal); v == null is IsNull.
-      case EqualNullSafe(a, v) =>
-        if (v == null) nulls(a).contains(0L) else allNull(a) || outside(a, v)
-      // a != v keeps only rows PROVABLY different from v — null rows
-      // evaluate to unknown and are filtered post-scan, so an all-null
-      // bucket is excluded; so is a constant bucket whose entire range IS
-      // v (min == v == max: every non-null row equals v).
-      case Not(EqualTo(a, v)) if v != null =>
-        allNull(a) ||
-          (mn(a).flatMap(cmp(_, v)).exists(_ == 0) &&
-            mx(a).flatMap(cmp(_, v)).exists(_ == 0))
-      // any string with prefix v is >= v in byte order, so max < v
-      // excludes; and it is < ub(v) — v's UTF-8 bytes with the 0xFF tail
-      // dropped and the last remaining byte incremented — so min >= ub(v)
-      // excludes too (no ub when v is all 0xFF bytes). Both sides
-      // compare raw UTF-8 bytes, the same order the sidecar's string
-      // bounds were reduced under.
-      case StringStartsWith(a, v) if v != null =>
-        allNull(a) || mx(a).flatMap(cmp(_, v)).exists(_ < 0) || {
-          val bs = v.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          var i = bs.length - 1
-          while (i >= 0 && bs(i) == 0xFF.toByte) i -= 1
-          i >= 0 && {
-            val ub = java.util.Arrays.copyOf(bs, i + 1)
-            ub(i) = (ub(i) + 1).toByte
-            mn(a).exists(n => n.isTextual && java.util.Arrays.compareUnsigned(
-              n.asText().getBytes(java.nio.charset.StandardCharsets.UTF_8), ub) >= 0)
-          }
-        }
-      case In(a, vs) =>
-        vs != null && vs.nonEmpty && !vs.contains(null) &&
-          (allNull(a) || vs.forall(outside(a, _)))
-      case IsNull(a)    => nulls(a).contains(0L)
-      case IsNotNull(a) => allNull(a)
-      case And(l, r) => excludes(l, st) || excludes(r, st)
-      case Or(l, r)  => excludes(l, st) && excludes(r, st)
-      case _ => false
-    }
-  }
-
-  /** For surviving non-delta buckets whose sidecar carries per-file
-    * stats: the file subsets the filters can still touch. Only buckets
-    * where at least one file is provably excluded appear in the result
-    * (absent = read the whole bucket dir, the conservative default —
-    * also what sidecars without per-file stats and delta-carrying
-    * buckets get). An
-    * empty surviving list is VALID: the bucket's rolled-up range can
-    * straddle a filter that individually excludes every file (a value
-    * in a gap between file ranges) — the bucket then contributes no
-    * scan paths at all.
-    */
+  /** Surviving buckets' surviving files, where per-file stats exclude some. */
   private[lake] def statsPrunedFiles(
-      m: Manifest, keep: Set[Int], filters: Seq[SFilter]): Map[Int, Seq[String]] = {
-    if (m.statsFiles.isEmpty || filters.isEmpty) return Map.empty
-    keep.iterator.flatMap { b =>
-      if (m.deltas.getOrElse(b, Nil).nonEmpty) None
-      else m.statsFiles.get(b).flatMap { p =>
-        val st = logicalStats(m,
-          loadStats(p).getOrElse(b, LakeTable.BucketStats(None, Map.empty)))
-        if (st.files.isEmpty) None
-        else {
-          val kept = st.files.collect {
-            case (f, fst) if !filters.exists(excludes(_, fst)) => f
-          }.toSeq.sorted
-          if (kept.size == st.files.size) None else Some(b -> kept)
-        }
-      }
-    }.toMap
-  }
+      m: Manifest, keep: Set[Int], filters: Seq[SFilter]): Map[Int, Seq[String]] =
+    colStats.prunedFiles(m, keep, filters)
 
   /** Stats-pruned snapshot at `version` for pushed filters: Some(df)
     * reading ONLY surviving buckets — and, inside surviving buckets
@@ -2334,79 +1969,6 @@ object LakeTable {
     out
   }
 
-  /** Parsed per-column sidecar stats: min/max bounds (absent = all-null
-    * or non-finite) and the null count (absent on the oldest sidecars). */
-  private[lake] final case class ColStat(
-      mn: Option[JsonNode], mx: Option[JsonNode], nulls: Option[Long])
-
-  /** Parsed per-bucket sidecar stats: row count (absent on the oldest
-    * sidecars), per-column stats, and (Hudi metadata-table
-    * `col_stats` shape) per-FILE stats keyed by file name within the
-    * bucket dir — each file's entry reuses this class with `files`
-    * empty. Absent on older sidecars (bucket-level pruning only). */
-  private[lake] final case class BucketStats(
-      rows: Option[Long], cols: Map[String, ColStat],
-      files: Map[String, BucketStats] = Map.empty)
-
-  /** Stored-bound ordering: the same families [[LakeTable.excludes]]'
-    * cmp compares (numbers by exact decimal value, strings by UTF-8
-    * bytes); None for a mixed/unknown pair — callers must treat the
-    * column as unprunable then.
-    */
-  private def cmpNodes(a: JsonNode, b: JsonNode): Option[Int] =
-    if (a.isNumber && b.isNumber) Some(a.decimalValue().compareTo(b.decimalValue()))
-    else if (a.isTextual && b.isTextual) Some(java.util.Arrays.compareUnsigned(
-      a.asText().getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      b.asText().getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    else None
-
-  /** Conservative union of per-layer stats (base + delta sidecars of one
-    * bucket): a column's union bounds exist only when EVERY layer
-    * either records bounds or is PROVABLY all-null in it (nulls == rows
-    * — bounds can also be absent because a non-finite double bound was
-    * dropped, and treating that as "no values" would un-cover real
-    * rows). Rows/nulls sum across layers (tombstoned rows stay counted —
-    * over-covering is the conservative direction for every predicate the
-    * prune side evaluates). Mixed-kind bounds (a widening changed the
-    * JSON shape between layers) drop the column.
-    */
-  private[lake] def unionStats(layers: Seq[BucketStats]): BucketStats = {
-    if (layers.isEmpty) return BucketStats(None, Map.empty)
-    val rows =
-      if (layers.forall(_.rows.isDefined)) Some(layers.flatMap(_.rows).sum) else None
-    val shared = layers.map(_.cols.keySet).reduce(_ & _)
-    val cols = shared.flatMap { c =>
-      val entries = layers.map(l => (l, l.cols(c)))
-      def known(l: BucketStats, e: ColStat): Boolean =
-        (e.mn.isDefined && e.mx.isDefined) ||
-          (for { n <- e.nulls; r <- l.rows } yield n == r).getOrElse(false)
-      if (!entries.forall((known _).tupled)) None
-      else {
-        val mns = entries.flatMap(_._2.mn)
-        val mxs = entries.flatMap(_._2.mx)
-        def reduceBy(ns: Seq[JsonNode], pick: Int => Boolean): Option[JsonNode] =
-          ns.foldLeft(Option.empty[Option[JsonNode]]) {
-            case (None, n) => Some(Some(n))
-            case (Some(None), _) => Some(None) // poisoned by a mixed pair
-            case (Some(Some(a)), n) =>
-              Some(cmpNodes(a, n).map(s => if (pick(s)) a else n))
-          }.flatten
-        val mn = reduceBy(mns, _ <= 0)
-        val mx = reduceBy(mxs, _ >= 0)
-        // a poisoned (mixed-kind) reduction drops the whole column: half-
-        // known bounds would let one-sided range tests prune wrongly
-        if ((mns.nonEmpty && mn.isEmpty) || (mxs.nonEmpty && mx.isEmpty)) None
-        else {
-          val nulls =
-            if (entries.forall(_._2.nulls.isDefined)) Some(entries.flatMap(_._2.nulls).sum)
-            else None
-          Some(c -> ColStat(mn, mx, nulls))
-        }
-      }
-    }.toMap
-    BucketStats(rows, cols, Map.empty)
-  }
-
   /** Parse a user-facing instant: epoch millis, or
     * 'yyyy-MM-dd HH:mm:ss[.SSS]' read as UTC (the `timestampAsOf` /
     * `startingTimestamp` option shape). Loud on anything else.
@@ -2534,7 +2096,7 @@ object LakeTable {
       // Per-delta-commit stats sidecars, aligned with `deltas` (one
       // path per stacked delta layer). A bucket prunes under a live stack
       // only when EVERY layer has stats (stack lengths equal) — see
-      // statsPrunedBuckets.
+      // ColumnStats.prunedBuckets.
       deltaStats: Map[Int, Seq[String]] = Map.empty,
       // Column rename/drop (manifest name-mapping — the addColumns
       // precedent; Hudi/Iceberg-style logical-over-physical evolution).

@@ -1112,18 +1112,14 @@ object PartitionedLakeTable {
   def open(
       spark: SparkSession,
       basePath: String,
-      numBuckets: Int = LakeTable.DefaultNumBuckets,
-      filesPerBucket: Int = 1,
-      bloomOnWrite: Boolean = true): Option[PartitionedLakeTable] = {
+      numBuckets: Int = LakeTable.DefaultNumBuckets): Option[PartitionedLakeTable] = {
     val io = new LakeIO(basePath, spark.sparkContext.hadoopConfiguration)
     val meta = io.resolve("_table.json")
     if (!io.exists(meta)) None
     else {
       val col = new ObjectMapper().readTree(io.readString(meta))
         .get("partitionCol").asText()
-      Some(new PartitionedLakeTable(
-        spark, basePath, col, numBuckets,
-        filesPerBucket = filesPerBucket, bloomOnWrite = bloomOnWrite))
+      Some(new PartitionedLakeTable(spark, basePath, col, numBuckets))
     }
   }
 }

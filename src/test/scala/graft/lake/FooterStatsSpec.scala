@@ -16,7 +16,9 @@ import org.apache.spark.sql.types.{DateType, TimestampType}
   * (timestamps as epoch micros, dates as epoch days), null counts and row
   * counts, serialized the way the sidecar always has been (non-finite
   * bounds dropped, floats widened exactly, decimals at their scale). The
-  * write must run no `lake:stats` job.
+  * write must run no `lake:stats` job. On the read side: every recorded
+  * bound orders pushed literals as Spark's min and max do, decimals keep
+  * every digit, and the two older sidecar shapes still prune.
   */
 class FooterStatsSpec extends SparkSpec {
 
@@ -199,5 +201,129 @@ class FooterStatsSpec extends SparkSpec {
     val keep = lt.statsPrunedBuckets(
       m, Seq(org.apache.spark.sql.sources.GreaterThanOrEqual("v", 200L)))
     assert(keep == Set(2, 3), s"expected buckets 0,1 pruned (keep 2,3), got $keep")
+  }
+
+  /** A two-bucket table whose bucket b holds `amount` values b*100 .. b*100+9,
+    * one file per bucket; returns its dir, a fresh-handle factory (each
+    * handle parses a sidecar once, so a rewritten sidecar needs a new one)
+    * and the bucket's row counts.
+    */
+  private def twoBucketAmounts(prefix: String): (String, () => LakeTable, Seq[Int]) = {
+    import spark.implicits._
+    val dir = tempDir(prefix).resolve("t").toString
+    val rows = (0 until 200).map(i => s"k$i").map { k =>
+      (k, 1L, LakeTable.bucketOfKey(k, 2) * 100L + k.drop(1).toLong % 10)
+    }
+    def handle() = new LakeTable(spark, dir, numBuckets = 2, bloomOnWrite = false,
+      statsColumns = Seq("amount"))
+    handle().upsert(rows.toDF(LakeTable.KeyCol, LakeTable.TsCol, "amount"), commitId = "c1")
+    (dir, () => handle(), Seq(0, 1).map(b => rows.count(_._3 / 100 == b)))
+  }
+
+  /** Replaces the one commit's sidecar, dropping its stale checksum file. */
+  private def rewriteSidecar(dir: String, json: String): Unit = {
+    val d = java.nio.file.Paths.get(commitDir(dir))
+    java.nio.file.Files.write(d.resolve(LakeTable.StatsFileName), json.getBytes("UTF-8"))
+    java.nio.file.Files.deleteIfExists(d.resolve(s".${LakeTable.StatsFileName}.crc"))
+  }
+
+  test("the oldest sidecar shape (bounds only) prunes ranges, never nulls or files") {
+    import org.apache.spark.sql.sources.{GreaterThanOrEqual, IsNotNull, IsNull}
+    val (dir, handle, rows) = twoBucketAmounts("fstats-oldest-")
+    val atLeast100 = Seq(GreaterThanOrEqual("amount", 100L))
+    val current = handle()
+    val m = current.latestManifest().get
+    // the current shape prunes bucket 0's file too
+    assert(current.statsPrunedFiles(m, m.allBuckets, atLeast100) == Map(0 -> Nil))
+    rewriteSidecar(dir,
+      """{"buckets":{"0":{"amount":{"min":0,"max":9}},"1":{"amount":{"min":100,"max":109}}}}""")
+    val lt = handle()
+    assert(lt.statsPrunedBuckets(m, atLeast100) == Set(1))
+    assert(lt.statsPrunedBuckets(m, Seq(GreaterThanOrEqual("amount", 110L))).isEmpty)
+    // no null or row counts: neither null predicate can be proven empty
+    assert(lt.statsPrunedBuckets(m, Seq(IsNull("amount"))) == Set(0, 1))
+    assert(lt.statsPrunedBuckets(m, Seq(IsNotNull("amount"))) == Set(0, 1))
+    // no file entries: no file is ever pruned
+    assert(lt.statsPrunedFiles(m, m.allBuckets, atLeast100).isEmpty)
+    assert(lt.statsPrune(m.version, atLeast100).get.count() == rows(1))
+  }
+
+  test("a sidecar with cols but no files prunes buckets, not files") {
+    import org.apache.spark.sql.sources.{GreaterThanOrEqual, IsNull}
+    val (dir, handle, rows) = twoBucketAmounts("fstats-nofiles-")
+    rewriteSidecar(dir, """{"buckets":{""" +
+      s""""0":{"rows":${rows(0)},"cols":{"amount":{"nulls":0,"min":0,"max":9}}},""" +
+      s""""1":{"rows":${rows(1)},"cols":{"amount":{"nulls":0,"min":100,"max":109}}}}}""")
+    val lt = handle()
+    val m = lt.latestManifest().get
+    val atLeast100 = Seq(GreaterThanOrEqual("amount", 100L))
+    assert(lt.statsPrunedBuckets(m, atLeast100) == Set(1))
+    assert(lt.statsPrunedBuckets(m, Seq(IsNull("amount"))).isEmpty)
+    assert(lt.statsPrunedFiles(m, m.allBuckets, atLeast100).isEmpty)
+    assert(lt.statsPrunedFiles(m, Set(0, 1), Seq(GreaterThanOrEqual("amount", 200L))).isEmpty)
+  }
+
+  test("decimal bounds beyond double precision keep every digit") {
+    import spark.implicits._
+    import org.apache.spark.sql.sources._
+    val dir = tempDir("fstats-dec38-").resolve("t").toString
+    val (lo, hi) = ("1.123456789012345678", "2.000000000000000001")
+    val df = Seq(("a", 1L, lo), ("b", 1L, "1.5"), ("c", 1L, hi))
+      .toDF(LakeTable.KeyCol, LakeTable.TsCol, "d")
+      .withColumn("d", col("d").cast("decimal(38,18)"))
+    val lt = new LakeTable(spark, dir, numBuckets = 1, bloomOnWrite = false,
+      statsColumns = Seq("d"))
+    lt.upsert(df, commitId = "c1")
+    val m = lt.latestManifest().get
+    def kept(f: Filter): Boolean = lt.statsPrunedBuckets(m, Seq(f)) == Set(0)
+    val (dlo, dhi) = (new java.math.BigDecimal(lo), new java.math.BigDecimal(hi))
+    // a double parse rounds lo up and hi down, which pruned these wrongly
+    assert(kept(LessThanOrEqual("d", dlo)) && kept(EqualTo("d", dlo)))
+    assert(kept(GreaterThanOrEqual("d", dhi)) && kept(EqualTo("d", dhi)))
+    assert(!kept(LessThan("d", dlo)) && !kept(GreaterThan("d", dhi)))
+  }
+
+  test("recorded bounds order pushed literals as Spark's min and max do") {
+    import spark.implicits._
+    import org.apache.spark.sql.sources._
+    val dir = tempDir("fstats-order-").resolve("t").toString
+    val nb = 3
+    val df = (0 until 90).map { i =>
+      (s"k$i", 1L, i * 7 - 300, i.toLong * -1000000007L, i * 0.1 - 4.0,
+        // U+1F600 sorts above U+FFFD in UTF-8 bytes, below it in UTF-16
+        if (i % 4 == 0) s"😀$i" else if (i % 9 == 0) "" else s"${'\uFFFD'}$i",
+        java.sql.Date.valueOf(java.time.LocalDate.of(1969, 12, 1).plusDays(i * 3L)),
+        new java.sql.Timestamp(i * 86400000L * 400 - 5000000000L + i),
+        BigDecimal(i * 37 - 1000, 2), BigDecimal(i.toLong * 1234567890123L, 18))
+    }.toDF(LakeTable.KeyCol, LakeTable.TsCol, "i", "l", "d", "s", "dt", "ts", "dec9", "dec38")
+      .withColumn("dec9", col("dec9").cast("decimal(9,2)"))
+      .withColumn("dec38", col("dec38").cast("decimal(38,18)"))
+      .withColumn("f", (col("i") / 3).cast("float"))
+      .withColumn("sh", (col("i") % 100).cast("short"))
+      .withColumn("by", (col("i") % 100).cast("byte"))
+    val cols = Seq("i", "l", "d", "s", "dt", "ts", "dec9", "dec38", "f", "sh", "by")
+    val lt = new LakeTable(spark, dir, numBuckets = nb, bloomOnWrite = false,
+      statsColumns = cols)
+    lt.upsert(df, commitId = "c1")
+    val m = lt.latestManifest().get
+    val written = spark.read.parquet(commitDir(dir))
+    val aggs = cols.flatMap(c => Seq(min(c), max(c)))
+    val bounds = written.groupBy(LakeTable.BucketCol).agg(aggs.head, aggs.tail: _*).collect()
+    assert(bounds.length == nb)
+    def kept(b: Int, f: Filter): Boolean = lt.statsPrunedBuckets(m, Seq(f)).contains(b)
+    // both external forms Spark pushes for temporal literals
+    def forms(v: Any): Seq[Any] = v match {
+      case t: java.sql.Timestamp => Seq(t, t.toInstant)
+      case d: java.sql.Date => Seq(d, d.toLocalDate)
+      case other => Seq(other)
+    }
+    for (r <- bounds; (c, i) <- cols.zipWithIndex) {
+      val b = r.getInt(0)
+      for (lo <- forms(r.get(1 + 2 * i)); hi <- forms(r.get(2 + 2 * i))) {
+        // bound == Spark's min (max): equal to it kept, strictly past it pruned
+        assert(kept(b, EqualTo(c, lo)) && !kept(b, LessThan(c, lo)), s"min of $c in bucket $b")
+        assert(kept(b, EqualTo(c, hi)) && !kept(b, GreaterThan(c, hi)), s"max of $c in bucket $b")
+      }
+    }
   }
 }
