@@ -4,21 +4,20 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main. Emits ONE JSON line:
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
   *
-  * Integrity rules (VERDICT r1 "What's wrong" #3/#4):
+  * Integrity rules:
   *  - a failed query is recorded as `-1` in `queries` and named in
   *    `"errors"` — an exception's elapsed time is never published as a
   *    timing;
   *  - results are fully materialized through the `noop` sink (a bare
   *    `count()` lets Catalyst prune columns and drop sorts, under-measuring
   *    the real query);
-  *  - each query runs three times: one warm-up (codegen/JIT, VERDICT r2
-  *    found ~45x first-run noise) and two timed runs, publishing the MIN
+  *  - each query runs three times: one warm-up (codegen/JIT; first runs
+  *    showed ~45x noise) and two timed runs, publishing the MIN
   *    of the timed runs — this host shows 2-5x run-to-run variance on
   *    identical workloads (noisy neighbor / IO), and min is the standard
   *    noise-robust benchmark statistic.
   *
-  * Round-6 additions (VERDICT r5 "Next round" #1/#4 — root-causing host
-  * regressions needs data, not timings):
+  * Diagnostics (root-causing host regressions needs data, not timings):
   *  - `"stats"` per query: task-level CPU/GC/shuffle/spill totals over the
   *    three runs, via [[org.apache.spark.graft.BenchProbe]]. GC-heavy =
   *    heap pressure; cpu << run = contention/IO; spill > 0 = memory misfit.
@@ -29,8 +28,8 @@ import org.apache.spark.sql.SparkSession
   *  - `SPARK_GRAFT_ONLY=q27,q34` runs a comma-separated subset (substring
   *    match), for fast single-query iteration.
   *
-  * Round-14 addition (VERDICT r13 #6 — three rounds of manual contention
-  * forensics): the bench ADJUDICATES ITSELF against the stored build-host
+  * Self-adjudication (manual contention forensics does not scale): the
+  * bench ADJUDICATES ITSELF against the stored build-host
   * stats (`bench_stats_build.json`, or `SPARK_GRAFT_REF_STATS`). A query
   * whose shuffle bytes and task count match the reference within 2% but
   * whose cpu_ms inflates >= 2x ran the SAME plan on a contended host —
@@ -97,21 +96,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse(
       "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // native SQL functions + the MERGE INTO post-hoc rule (q102)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Split small parquet files across cores: at bench scale every table
-      // is a single <=10MB file = one input split otherwise (size
-      // maxPartitionBytes to the SF, per the scale playbook).
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(cpus)
     val load0 = loadavg()
     val ref = refStats(sys.env.getOrElse(
       "SPARK_GRAFT_REF_STATS", "bench_stats_build.json"))
@@ -169,7 +154,7 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.collect { case (_, (Right(s), _)) => s }.sum
     val nOk = results.count(_._2._1.isRight)
-    // Self-adjudication vs the stored build-host stats (r14): identical
+    // Self-adjudication vs the stored build-host stats: identical
     // shuffle + tasks with >= 2x cpu inflation = contended host, not plan.
     val contendedQ = results.collect {
       case (k, (_, st)) if ref.get(k).exists(contendedVsRef(st, _)) => k
@@ -191,7 +176,7 @@ object Bench {
     } catch { case _: Throwable => () } // stats file is best-effort
     println(fullLine) // early line: full detail for humans reading the log
     // The compact driver-parsed line must be the process's LAST output
-    // (VERDICT r14 #1: the streaming state-store maintenance thread raced
+    // (the streaming state-store maintenance thread once raced
     // spark.stop() and dumped an RpcEnvStoppedException stack AFTER the
     // metric line, pushing it out of the driver's ~2000-char tail window).
     // So: silence logging, stop leftover streams, stop the state-store
@@ -208,5 +193,28 @@ object Bench {
         s""""errors":$errs,"contended":$contended,"n_ok":$nOk,"n_total":${names.size},"sf":"$sfDir"}""")
     System.out.flush()
     if (nOk < names.size) sys.exit(1)
+  }
+
+  /** The local session Bench, Verify and QProbe run queries in, on `cpus`
+    * cores.
+    */
+  def session(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      // native SQL functions + the MERGE INTO post-hoc rule (q102)
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      // events.parquet stores TIMESTAMP(NANOS); read as BIGINT nanos.
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // Split small parquet files across cores: at bench scale every table
+      // is a single <=10MB file = one input split otherwise (size
+      // maxPartitionBytes to the SF, per the scale playbook).
+      .config("spark.sql.files.maxPartitionBytes", "4m")
+      .config("spark.sql.files.openCostInBytes", "1m")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

@@ -1,8 +1,7 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
-/** Per-JOB breakdown of one bench query (r21 optimization round): runs a
+/** Per-JOB breakdown of one bench query: runs a
   * named SparkEntry query under the bench session confs and logs every
   * Spark job's wall time, task count, and first stage name — the data the
   * aggregate BenchProbe stats can't show (WHICH of a lifecycle query's
@@ -16,17 +15,7 @@ object QProbe {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val cpus = if (args.length > 2) args(2) else "32"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(cpus)
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Int, String, Int)]()
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     // stageId -> (cpuMs, executedTasks), attributed to the stage's first job

@@ -258,21 +258,12 @@ object CdcSyncCommand {
         val compactDue =
           cfg.compactEvery > 0 && batchId >= 0 && (batchId + 1) % cfg.compactEvery == 0
         // `partition.field` may be comma-separated (composite partition
-        // paths).
-        val lake: LakeHandle = cfg.partitionField match {
-          case Some(pf) => new PartitionedLakeTable(
-            spark, cfg.path, pf, cfg.numBuckets,
-            filesPerBucket = cfg.filesPerBucket, bloomOnWrite = cfg.bloomEnable,
-            zorderBy = cfg.zorderFields, tableType = cfg.tableType,
-            compactAfter = cfg.compactDeltas, mergeMode = cfg.mergeMode,
-            statsColumns = cfg.statsColumns)
-          case None => new LakeTable(
-            spark, cfg.path, cfg.numBuckets,
-            filesPerBucket = cfg.filesPerBucket, zorderBy = cfg.zorderFields,
-            bloomOnWrite = cfg.bloomEnable, tableType = cfg.tableType,
-            compactAfter = cfg.compactDeltas, mergeMode = cfg.mergeMode,
-            statsColumns = cfg.statsColumns)
-        }
+        // paths). The stored layout wins over it, under the rule every
+        // cdc-lake writer shares.
+        val lake = LakeHandle.forWrite(
+          spark, cfg.path, cfg.numBuckets, cfg.partitionField,
+          cfg.filesPerBucket, cfg.bloomEnable, cfg.zorderFields, cfg.tableType,
+          cfg.compactDeltas, cfg.statsColumns, Some(cfg.mergeMode))
         // Delete keys: key-only on a plain table (left-anti, ref
         // :186-190); on a partitioned one they carry the partition
         // value(s) decoded from the delete payload, so only the named

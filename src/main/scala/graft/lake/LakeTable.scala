@@ -78,9 +78,8 @@ final class LakeTable(
 
   require(numBuckets > 0, s"numBuckets must be positive: $numBuckets")
   require(filesPerBucket > 0, s"filesPerBucket must be positive: $filesPerBucket")
-  require(zorderBy.isEmpty || (zorderBy.size >= 2 && zorderBy.size <= 4),
-    s"zorderBy takes 2-4 numeric/timestamp/date/string columns, got: " +
-      zorderBy.mkString(","))
+  if (zorderBy.nonEmpty)
+    ZOrder.invalid(zorderBy).foreach(e => throw new IllegalArgumentException(s"zorderBy $e"))
   // tableType drives WRITES only — reads are manifest-driven (readBuckets
   // merges any delta stack it finds), so cow and mor handles on one table
   // interoperate: a cow commit simply folds the buckets it touches.
@@ -930,7 +929,7 @@ final class LakeTable(
       case _ => None // prunable manifest: compute per-commit (exact prune)
     })
     writeCommit(
-      commitId, manifestDependent = true,
+      commitId,
       deltaRows = Some(df => df
         .withColumn(OpCol, when(col(delCol), lit(DeleteOp)).otherwise(lit(UpsertOp)))
         .drop(delCol)),
@@ -1024,7 +1023,7 @@ final class LakeTable(
       // merged state is empty → no b=<i> dir is written → the bucket and
       // its stack drop from the manifest).
       writeCommit(
-        commitId, manifestDependent = true,
+        commitId,
         affectedFor = Some(m => Some(m.map(_.allBuckets).getOrElse(Set.empty))))(
         _ => snapshot) { (_, inc, _) => inc }
 
@@ -1044,8 +1043,7 @@ final class LakeTable(
     // attempt's manifest: re-pruning against a stale pre-race manifest
     // would let a concurrent writer's fresh inserts dodge the delete.
     writeCommit(
-      commitId, manifestDependent = true,
-      deltaRows = Some(df => df.withColumn(OpCol, lit(DeleteOp)))) {
+      commitId, deltaRows = Some(df => df.withColumn(OpCol, lit(DeleteOp)))) {
       case Some(m) => bloomPrune(keys.select(KeyCol).distinct(), m)
       case None => keys.select(KeyCol).distinct()
     } { (old, ks, _) => old.join(broadcastIfSmall(ks), Seq(KeyCol), "left_anti") }
@@ -1210,368 +1208,315 @@ final class LakeTable(
     if (threshold > 0 && estimate <= BigInt(threshold)) broadcast(df) else df
   }
 
-  /** A data commit: the attempt body [[commit]] runs against each
-    * attempt's manifest. It figures out the affected buckets, runs `merge`
-    * over (old rows of those buckets, incoming), writes only those buckets,
-    * links forward the rest and builds the next manifest.
+  /** A data commit, as the attempt [[commit]] runs against each attempt's
+    * manifest, in five named phases:
+    *  - guard: the table's recorded merge mode and the reserved columns;
+    *  - affected: which buckets the commit touches;
+    *  - merge: a merge-on-read delta of the incoming rows, or a fold of
+    *    them with the stored rows of the affected buckets;
+    *  - write: the affected buckets' new files, with their facts;
+    *  - manifest: the next manifest, from the previous one and the facts.
     *
-    * `incomingFor` derives the effective incoming rows FROM the manifest a
-    * given attempt merges against (delete uses it to bloom-prune its key
-    * set): when `manifestDependent`, it re-evaluates on every
-    * optimistic-concurrency retry, so a stale pre-race manifest can never
-    * decide what the commit touches; manifest-independent callers
-    * (upsert/bulkInsert/compact) persist their incoming ONCE and reuse it
-    * across retries — no recompute of the full incoming plan per attempt.
+    * `incomingFor` derives the incoming rows from the attempt's manifest
+    * (delete and merge bloom-prune their key sets against it, compact reads
+    * its snapshot), so a stale pre-race manifest can never decide what the
+    * commit touches. Each attempt evaluates its incoming rows once: it
+    * persists them when no affected-set hint resolves (the affected collect
+    * and the write are then two evaluations) and unpersists them before it
+    * returns. A first attempt so runs each incoming plan once, and only an
+    * attempt after a lost publish race recomputes it.
     */
   private def writeCommit(
       commitId: String,
       shuffle: Boolean = true,
-      manifestDependent: Boolean = false,
       deltaRows: Option[DataFrame => DataFrame] = None,
       // Some(buckets) overrides the per-commit affected distinct-collect
-      // job; None falls back to computing it from `inc` against this
-      // attempt's manifest (the merge hint's prunable-manifest escape).
+      // job; None falls back to computing it from the incoming rows
+      // against this attempt's manifest (the merge hint's prunable-manifest
+      // escape).
       affectedFor: Option[Option[Manifest] => Option[Set[Int]]] = None)(
       incomingFor: Option[Manifest] => DataFrame)(
-      merge: (DataFrame, DataFrame, BucketLayout) => DataFrame): Unit = {
-    var reused: Option[DataFrame] = None // persisted-once incoming (manifest-independent)
-    def attempt(prev: Option[Manifest]): Option[(Manifest, Option[HPath])] = {
-      // The table's merge mode is RECORDED state (`_pts` in the manifest
-      // schema <=> written partial), and the read side dispatches on it —
-      // so the write side must too: an overwrite-handle upsert (or fold)
-      // on a partial table would whole-row-replace composed rows (nulling
-      // previously composed columns with no error), and a partial-handle
-      // upsert on an overwrite table would flip every reader's collapse
-      // semantics for existing rows. Loud beats either silent corruption.
-      prev.foreach { m =>
-        val tablePartial = m.schema.fieldNames.contains(PtsCol)
-        require(tablePartial == (mergeMode == PartialMode),
-          if (tablePartial)
-            s"table at $basePath is mergeMode=$PartialMode (its schema carries " +
-              s"$PtsCol) but this handle was constructed mergeMode=$mergeMode — " +
-              "open the handle with mergeMode=partial"
-          else
-            s"table at $basePath is mergeMode=$OverwriteMode but this handle " +
-              s"was constructed mergeMode=$PartialMode — partial and overwrite " +
-              "histories cannot mix on one table (a partial table written " +
-              "before the _pts stamp whose history is merge-free — bulkInsert " +
-              "only — migrates via latchPartial())")
-      }
-      // A caller-provided affected set means `inc` is evaluated at
-      // most once per attempt (the write itself) AND the hinted callers
-      // stabilize their input upstream (writePartitions' staged cache) —
-      // an inner persist would re-encode every partition's slice of an
-      // already-cached batch for nothing. Unhinted commits keep the
-      // persist: `affected` + the write are two evaluations.
-      // The decision binds to whether the hint RESOLVES
-      // for THIS attempt's manifest — a hinted merge falling back to the
-      // per-commit computation (prunable manifest) evaluates `inc` twice
-      // and must persist like any unhinted commit.
-      val hinted: Option[Set[Int]] = affectedFor.flatMap(_(prev))
-      val stabilize = hinted.isEmpty
-      val inc =
-        if (manifestDependent) {
-          val d = incomingFor(prev); if (stabilize) d.persist() else d
-        } else reused.getOrElse {
-          val d = incomingFor(prev); if (stabilize) d.persist(); reused = Some(d); d
-        }
+      merge: (DataFrame, DataFrame, BucketLayout) => DataFrame): Unit =
+    commit(commitId, "commit") { prev =>
+      // A resolved hint means the incoming rows are evaluated once, by the
+      // write, and the hinted callers stabilize their input upstream
+      // (writePartitions' staged cache): a persist here would re-encode
+      // every partition's slice of an already-cached batch for nothing.
+      val hinted = affectedFor.flatMap(_(prev))
+      val inc = incomingFor(prev)
+      if (hinted.isEmpty) inc.persist()
       try {
-        require(
-          inc.columns.contains(KeyCol),
-          s"incoming data must contain a '$KeyCol' column (got ${inc.columns.mkString(",")})")
-        // The delta meta columns are RESERVED table-wide, not just on mor
-        // handles: cow and mor handles interoperate on one table, and the
-        // manifest schema never carries _op/_dv (the filter below) — a cow
-        // write with a payload column of either name would persist the
-        // column to parquet but silently drop it from every read. Loud on
-        // EVERY write path so the invariant can't depend on which handle
-        // type a batch happens to take.
-        // BucketCol ('b') is reserved too: the write path derives it
-        // with withColumn, which would silently REPLACE a payload column
-        // of that name — and partitionBy then strips it from the files,
-        // so the payload column reads back all-null. Loud beats data loss.
-        Seq(OpCol, DvCol, PtsCol, BucketCol).foreach(c => require(
-          !inc.columns.contains(c),
-          s"'$c' is a reserved lake meta column — rename the " +
-            s"payload column (incoming: ${inc.columns.mkString(",")})"))
-        // Affected buckets: tiny driver collect (≤ numBuckets ints).
-        // `affectedFor` overrides the key-derived set for commits that must
-        // touch buckets their incoming rows can't name — compact() passes
-        // every manifest bucket, else a bucket whose rows are ALL
-        // tombstoned yields no snapshot keys and its base+tombstone delta
-        // stack would survive compaction forever.
-        // The distinct-bucket set is the routing collect's one-group case:
-        // one exchange-free job.
-        val affected = hinted.getOrElse(
-          withJobDesc("affected")(LakeTable.collectBuckets(
-            inc.select(bucketOf(col(KeyCol)).as("b")), numBuckets)))
-        if (affected.isEmpty) return None // empty batch short-circuit (ref :118-120)
-        val version = prev.fold(0L)(_.version) + 1L
-        // Merge-on-read delta commit (docs/MOR_DESIGN.md): when this
-        // handle is mor, the operation is delta-eligible (upsert / merge /
-        // delete — never bulkInsert/compact), there is a base to layer on,
-        // and no affected bucket's stack has hit `compactAfter`, the
-        // commit writes ONLY the incoming rows (op-tagged, stamped with
-        // this attempt's version) and appends them to the buckets' delta
-        // stacks — O(batch) write cost, nothing read. Otherwise (cadence
-        // reached, or a cow handle touching a delta-carrying table) the
-        // commit FOLDS: `readBuckets` merges base+deltas into `old`, the
-        // normal merge runs, and the affected buckets' stacks reset.
-        // Whole-commit granularity: hash buckets receive near-uniform
-        // traffic, so per-bucket fold decisions would buy little for the
-        // complexity.
-        val asDelta = deltaRows.isDefined && prev.isDefined &&
-          tableType == MorType &&
-          affected.forall(b =>
-            prev.get.deltas.getOrElse(b, Nil).size < compactAfter)
-        val layout = bucketLayout(affected.size)
-        val merged0 =
-          if (asDelta)
-            deltaRows.get(inc).withColumn(DvCol, lit(version))
-          else {
-            val old = prev match {
-              case Some(m) => readBuckets(m, affected, internal = true)
-              case None =>
-                spark.createDataFrame(
-                  spark.sparkContext.emptyRDD[Row],
-                  inc.schema.fields.foldLeft(new StructType()) { (s, f) => s.add(f) })
-            }
-            merge(old, inc, layout)
-          }
-        // Partial tables carry `_pts` in EVERY commit's schema (null map
-        // where the path didn't compose one — delta fragments, bulkInsert):
-        // readers infer the partial stack collapse from the manifest
-        // schema, so the column must be present from the first commit
-        // whatever write path it took. Null `_pts` reads as "effective
-        // time = the row's own _ts", which is exactly right for raw rows.
-        val merged =
-          if (mergeMode == PartialMode && !merged0.columns.contains(PtsCol))
-            merged0.withColumn(PtsCol, lit(null).cast(
-              org.apache.spark.sql.types.MapType(
-                org.apache.spark.sql.types.StringType,
-                org.apache.spark.sql.types.LongType)))
-          else merged0
-
-        val relDir = s"$DataDirName/${"v%08d".format(version)}-${UUID.randomUUID().toString.take(8)}"
-        val outDir = s"$basePath/$relDir"
-        // Rename mapping, write side: carry the previous manifest's
-        // logical->physical map forward and assign fresh physical names
-        // to colliding NEW columns (see LakeTable.assignPhysical). Files
-        // are written under physical names below — the one write-side
-        // seam, mirroring readBuckets' read-side alias.
-        val prevRetired = prev.map(_.retired).getOrElse(Nil)
-        val newRenames = LakeTable.assignPhysical(
-          prev.map(_.schema), prev.map(_.renames).getOrElse(Map.empty), prevRetired,
-          merged.schema.fieldNames)
-        // At most `filesPerBucket` files per bucket per version (the Hudi
-        // bucket-index layout; see BucketLayout); the partition count scales
-        // with touched buckets, not table size. `filesPerBucket > 1` adds
-        // intra-bucket write parallelism — raise it with numBuckets at scale.
-        val toWrite = merged.withColumn(BucketCol, bucketOf(col(KeyCol)))
-        // Optional Z-order clustering: the Morton-code sort key (in
-        // UNSIGNED order — the 4-D interleave places dim-4 bit 15 at bit
-        // 63, and the 2-D code's bit 63 is the second dimension's bit 31,
-        // so a signed sort would break the curve at its most significant
-        // bit; XOR with Long.MinValue is the standard unsigned-order map,
-        // a no-op reordering for the always-non-negative 3-D codes).
-        // Per-type MONOTONE long lane encodings:
-        // numerics cast; timestamps/dates take the stats sidecar's epoch
-        // encodings (micros / days — a raw long cast of a timestamp is
-        // SECONDS, losing sub-second order, and a date doesn't cast at
-        // all); strings take their first 7 UTF-8 bytes as a big-endian
-        // non-negative long — monotone in Spark's own byte order, the
-        // same order string sidecar bounds compare under (a fixed-prefix
-        // code: ties beyond 7 bytes share a lane cell, which only blurs
-        // cluster edges — clustering is just a sort). Everything else
-        // (boolean, binary, arrays) stays invalid — run_clustering and
-        // the handle validation reject it up front.
-        def zLane(name: String): org.apache.spark.sql.Column = {
-          val c = col("`" + name.replace("`", "``") + "`")
-          merged.schema.fields.find(_.name == name).map(_.dataType) match {
-            case Some(org.apache.spark.sql.types.TimestampType) => unix_micros(c)
-            case Some(org.apache.spark.sql.types.DateType) => unix_date(c)
-            case Some(org.apache.spark.sql.types.StringType) =>
-              conv(rpad(hex(substring(encode(c, "UTF-8"), 1, 7)), 14, "0"), 16, 10)
-                .cast("long")
-            case _ => c.cast("long")
-          }
+        guard(prev, inc)
+        val affected = hinted.getOrElse(affectedBuckets(inc))
+        if (affected.isEmpty) None // empty batch short-circuit (ref :118-120)
+        else {
+          val version = prev.fold(0L)(_.version) + 1L
+          val layout = bucketLayout(affected.size)
+          val (merged, asDelta) = mergeRows(prev, inc, affected, version, layout, deltaRows, merge)
+          val w = writeRows(prev, merged, affected, version, layout, shuffle, asDelta)
+          Some(nextManifest(prev, version, affected, asDelta, w, merged.schema) -> Some(w.out))
         }
-        // Every arity scales each dimension into its Morton lane by the
-        // COMMIT's own min/max — a monotone affine map that clusters
-        // epoch-micro timestamps, string prefix codes, and small ids
-        // alike (clustering is only a sort: per-commit normalization
-        // cannot affect results). The 2-D path normalizes too (32-bit
-        // lanes) — a raw-bits interleave degenerates to a 1-D
-        // sort whenever one lane's magnitude dwarfed the other's
-        // (epoch-scale lanes have CONSTANT high bits, so the curve never
-        // tiled the temporal dimension). Costs one tiny 2N-scalar agg
-        // over the outgoing rows per commit, the trade the 3/4-D path
-        // already made.
-        def normLanes(
-            dims: Seq[String], bits: Int): Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
-          import org.apache.spark.sql.graft.Exprs
-          val maxCode = (1L << bits) - 1
-          val aggs = dims.flatMap(d =>
-            Seq(min(zLane(d)), max(zLane(d))))
-          val st = merged.agg(aggs.head, aggs.drop(1): _*).collect()(0)
-          dims.zipWithIndex.map { case (d, i) =>
-            val mn = if (st.isNullAt(2 * i)) 0L else st.getLong(2 * i)
-            val mx = if (st.isNullAt(2 * i + 1)) mn else st.getLong(2 * i + 1)
-            // range in exact arithmetic (mx - mn overflows long when the
-            // dimension spans the full signed range), scale in double
-            // (monotone; rounding collisions only blur cluster edges)
-            val range = (BigDecimal(mx) - BigDecimal(mn)).max(1).toDouble
-            Exprs.expression(greatest(
-              lit(0L),
-              least(
-                lit(maxCode),
-                floor((zLane(d).cast("double") - lit(mn.toDouble)) / lit(range) *
-                  lit(maxCode.toDouble)).cast("long"))))
-          }
-        }
-        val zKey: Option[org.apache.spark.sql.Column] = zorderBy match {
-          case Seq(a, b) if merged.columns.contains(a) && merged.columns.contains(b) =>
-            import org.apache.spark.sql.graft.Exprs
-            val n = normLanes(Seq(a, b), 32)
-            Some(Exprs.column(graft.functions.InterleaveBits(n(0), n(1)))
-              .bitwiseXOR(lit(Long.MinValue)))
-          case dims if dims.size >= 3 && dims.forall(merged.columns.contains) =>
-            // 3-D/4-D: lane width shrinks with arity (21/16 bits)
-            import org.apache.spark.sql.graft.Exprs
-            val n = normLanes(dims, if (dims.size == 3) 21 else 16)
-            Some(Exprs.column(
-              if (dims.size == 3)
-                graft.functions.InterleaveBits3(n(0), n(1), n(2))
-              else
-                graft.functions.InterleaveBits4(n(0), n(1), n(2), n(3)))
-              .bitwiseXOR(lit(Long.MinValue)))
-          case _ => None
-        }
-        val partitioned = zKey match {
-          case _ if !shuffle => toWrite // bulkInsert sortMode=none: task-local write
-          case Some(z) if filesPerBucket > 1 =>
-            // Z-ordered multi-file buckets RANGE-partition on (bucket,
-            // code): a bucket's files then TILE the Z-curve instead of
-            // being hash-random row subsets, so the per-file column
-            // stats ColumnStats records are near-disjoint
-            // ranges on the clustered columns — the layout that makes
-            // file-level stats pruning effective. Costs the range
-            // exchange's sampling pass over the outgoing rows (the same
-            // trade Hudi's sort-based clustering makes).
-            toWrite.repartitionByRange(layout.partitions, col(BucketCol), z)
-          // Always asked for: Spark's EnsureRequirements drops this
-          // exchange when the merged rows already carry the layout (the
-          // LWW aggregate ran on it), and keeps it otherwise.
-          case _ => layout(toWrite)
-        }
-        // Sort rows by the Morton code within each task's file so parquet
-        // row-group min/max stats prune range predicates on any clustered
-        // dimension.
-        val clustered = zKey match {
-          case Some(z) => partitioned.sortWithinPartitions(col(BucketCol), z)
-          case None => partitioned
-        }
-        // files store PHYSICAL names. POSITIONAL rename: each column maps
-        // through `newRenames` independently, mirroring readBuckets'
-        // positional logicalize — a sequential withColumnRenamed fold is
-        // map-order sensitive (after rename(X→Y) + re-adding X, applying
-        // Y→X while the live X exists duplicates the name and bricks every
-        // later write; ColumnRenameSpec pins the scenario).
-        val frame = clustered.toDF(
-          clustered.columns.map(c => newRenames.getOrElse(c, c)).toIndexedSeq: _*)
-        // Diagnostic only: dump the physical plan handed to the commit
-        // write; the table tag keeps tables (and partitions, sharing
-        // versions) apart. The writer's own sort by bucket, which it adds
-        // when rows do not arrive in that order, is not in the dump.
-        sys.env.get("GRAFT_EXPLAIN_WRITE").foreach { prefix =>
-          val tag = s"${new HPath(basePath).getName}-${Integer.toHexString(basePath.hashCode)}"
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$prefix-$tag-v$version.txt"),
-            frame.queryExecution.explainString(
-              org.apache.spark.sql.execution.ExplainMode.fromString("formatted")) + "\n",
-            java.nio.charset.StandardCharsets.UTF_8,
-            java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
-        }
-        // Every per-file fact the commit records comes from the write
-        // tasks (FileFactsTracker): row counts, the stat columns' bounds
-        // and, with bloomOnWrite, one bloom sidecar per data file, published
-        // by the output committer with its file. Nothing is read back.
-        val writtenSchema = LakeTable.physSchema(merged.schema, newRenames)
-        val statCols = ColumnStats.columns(statsColumns, newRenames, writtenSchema)
-        val facts = new FileFactsTracker(
-          new org.apache.spark.util.SerializableConfiguration(
-            spark.sparkContext.hadoopConfiguration),
-          if (bloomOnWrite) Some(writtenSchema.fieldIndex(KeyCol)) else None,
-          statCols.map { case (c, dt) => writtenSchema.fieldIndex(c) -> dt },
-          if (shuffle) Some(filesPerBucket) else None)
-        withJobDesc(s"write v$version")(org.apache.spark.sql.graft.TrackedWrite.parquet(
-          frame, outDir, BucketCol, s"lake:write $outDir", facts))
-
-        // Buckets that ended up empty after the merge wrote no file.
-        val out = new HPath(outDir)
-        val files: Map[Int, Seq[FileFacts]] =
-          facts.files.groupBy(_.bucket).map { case (b, fs) => b -> fs.sortBy(_.name) }
-        val written: Set[Int] = files.keySet
-        // A written bucket outside `affected` would replace (or stack on) a
-        // base whose stored rows were never merged — a caller's affected
-        // hint that misses a bucket of its batch. Fail before publishing.
-        val stray = written -- affected
-        if (stray.nonEmpty) {
-          io.deleteRecursive(out)
-          throw new IllegalStateException(
-            s"commit at $basePath wrote buckets ${stray.toSeq.sorted.mkString(",")} " +
-              "outside its affected set — an affected-bucket hint missed them")
-        }
-
-        // Bloom sidecars (key pruning for lookup, probeKeys and deletes):
-        // one filter per data file, so a bucket written as several files
-        // has several filters, which readers OR like stacked layers. The
-        // manifest records only their paths: filter bytes stay beside the
-        // data, and the manifest stays KB-sized at any bucket count.
-        val sidecars: Map[Int, Seq[String]] =
-          if (!bloomOnWrite) Map.empty
-          else files.map { case (b, fs) =>
-            b -> fs.flatMap(_.bloom).map(n => s"$relDir/$BucketCol=$b/$n")
-          }
-        // Column stats (ColumnStats): one sidecar per commit, recorded for
-        // every written bucket; a delta commit stacks its own in
-        // `deltaStats`. A pure-delete delta batch (the delete() path's
-        // shape: key + op tags, no payload, no _ts) records the empty layer.
-        val statsLayer = colStats.layer(relDir, files, statCols,
-          deleteOnly = statsColumns.nonEmpty && asDelta &&
-            merged.schema.fieldNames.forall(Set(KeyCol, OpCol, DvCol, PtsCol).contains))
-
-        // One base/stack rule for data dirs, blooms and stats. A delta
-        // commit keeps every base (base blooms and stats describe base
-        // files) and appends its entry to each written bucket's stack; a
-        // fold replaces the affected buckets' bases and resets their stacks.
-        def layer[E](
-            base: Manifest => Map[Int, E], stack: Manifest => Map[Int, Seq[E]],
-            entries: Map[Int, E]): (Map[Int, E], Map[Int, Seq[E]]) = {
-          val b0 = prev.fold(Map.empty[Int, E])(base)
-          val s0 = prev.fold(Map.empty[Int, Seq[E]])(stack)
-          if (asDelta) (b0, s0 ++ entries.map { case (b, e) => b -> (s0.getOrElse(b, Nil) :+ e) })
-          else ((b0 -- affected) ++ entries, s0 -- affected)
-        }
-        val (buckets, deltas) = layer(_.buckets, _.deltas,
-          written.iterator.map(b => b -> s"$relDir/$BucketCol=$b").toMap)
-        val (blooms, deltaBlooms) = layer(_.bloomFiles, _.deltaBlooms, sidecars)
-        val (stats, deltaStats) = layer(_.statsFiles, _.deltaStats,
-          statsLayer.fold(Map.empty[Int, String])(p => written.iterator.map(_ -> p).toMap))
-
-        // The table schema never carries the delta meta columns. Safe to
-        // strip unconditionally: the reserved-name require above rejects
-        // any PAYLOAD column with these names on every write path, so the
-        // filter only ever removes the op-tag columns a delta commit adds.
-        val schemaJson = mergedSchemaJson(prev, StructType(
-          merged.schema.fields.filterNot(f => f.name == OpCol || f.name == DvCol)))
-        Some(Manifest(
-          version, commitId, numBuckets, buckets, blooms, schemaJson,
-          deltas, deltaBlooms, stats, deltaStats = deltaStats,
-          renames = newRenames, retired = prevRetired) -> Some(out))
-      } finally if (manifestDependent && stabilize) inc.unpersist()
+      } finally if (hinted.isEmpty) inc.unpersist()
     }
-    try commit(commitId, "commit")(attempt) finally reused.foreach(_.unpersist(blocking = false))
+
+  /** Guard phase. The table's merge mode is RECORDED state (`_pts` in the
+    * manifest schema <=> written partial), and the read side dispatches on
+    * it, so the write side must too: an overwrite-handle upsert (or fold)
+    * on a partial table would whole-row-replace composed rows (nulling
+    * previously composed columns with no error), and a partial-handle
+    * upsert on an overwrite table would flip every reader's collapse
+    * semantics for existing rows. Loud beats either silent corruption.
+    *
+    * The delta meta columns are RESERVED table-wide, not just on mor
+    * handles: cow and mor handles interoperate on one table, and the
+    * manifest schema never carries _op/_dv — a cow write with a payload
+    * column of either name would persist the column to parquet but
+    * silently drop it from every read. BucketCol ('b') is reserved too:
+    * the write derives it with withColumn, which would silently REPLACE a
+    * payload column of that name, and partitionBy then strips it from the
+    * files, so it reads back all-null. Loud on EVERY write path.
+    */
+  private def guard(prev: Option[Manifest], inc: DataFrame): Unit = {
+    prev.foreach { m =>
+      val tablePartial = m.schema.fieldNames.contains(PtsCol)
+      require(tablePartial == (mergeMode == PartialMode),
+        if (tablePartial)
+          s"table at $basePath is mergeMode=$PartialMode (its schema carries " +
+            s"$PtsCol) but this handle was constructed mergeMode=$mergeMode — " +
+            "open the handle with mergeMode=partial"
+        else
+          s"table at $basePath is mergeMode=$OverwriteMode but this handle " +
+            s"was constructed mergeMode=$PartialMode — partial and overwrite " +
+            "histories cannot mix on one table (a partial table written " +
+            "before the _pts stamp whose history is merge-free — bulkInsert " +
+            "only — migrates via latchPartial())")
+    }
+    require(
+      inc.columns.contains(KeyCol),
+      s"incoming data must contain a '$KeyCol' column (got ${inc.columns.mkString(",")})")
+    Seq(OpCol, DvCol, PtsCol, BucketCol).foreach(c => require(
+      !inc.columns.contains(c),
+      s"'$c' is a reserved lake meta column — rename the " +
+        s"payload column (incoming: ${inc.columns.mkString(",")})"))
+  }
+
+  /** Affected phase without a hint: the distinct buckets of the incoming
+    * keys, a tiny driver collect (≤ numBuckets ints) — the routing
+    * collect's one-group case, one exchange-free job. Hints cover the
+    * commits that must touch buckets their incoming rows can't name:
+    * compact() passes every manifest bucket, else a bucket whose rows are
+    * ALL tombstoned yields no snapshot keys and its base+tombstone delta
+    * stack would survive compaction forever.
+    */
+  private def affectedBuckets(inc: DataFrame): Set[Int] =
+    withJobDesc("affected")(LakeTable.collectBuckets(
+      inc.select(bucketOf(col(KeyCol)).as("b")), numBuckets))
+
+  /** Merge phase: the rows to write and whether they are a delta.
+    *
+    * A merge-on-read delta commit (docs/MOR_DESIGN.md) happens when this
+    * handle is mor, the operation is delta-eligible (`deltaRows` given:
+    * upsert / merge / delete — never bulkInsert/compact), there is a base
+    * to layer on, and no affected bucket's stack has hit `compactAfter`.
+    * It writes ONLY the incoming rows (op-tagged, stamped with this
+    * version) and appends them to the buckets' delta stacks — O(batch)
+    * write cost, nothing read. Otherwise the commit FOLDS: `readBuckets`
+    * merges base+deltas into the stored rows, `merge` runs, and the
+    * affected buckets' stacks reset. Whole-commit granularity: hash
+    * buckets receive near-uniform traffic, so per-bucket fold decisions
+    * would buy little for the complexity.
+    */
+  private def mergeRows(
+      prev: Option[Manifest], inc: DataFrame, affected: Set[Int], version: Long,
+      layout: BucketLayout, deltaRows: Option[DataFrame => DataFrame],
+      merge: (DataFrame, DataFrame, BucketLayout) => DataFrame): (DataFrame, Boolean) = {
+    val asDelta = deltaRows.isDefined && prev.isDefined && tableType == MorType &&
+      affected.forall(b => prev.get.deltas.getOrElse(b, Nil).size < compactAfter)
+    val merged =
+      if (asDelta) deltaRows.get(inc).withColumn(DvCol, lit(version))
+      else {
+        val old = prev match {
+          case Some(m) => readBuckets(m, affected, internal = true)
+          case None =>
+            spark.createDataFrame(
+              spark.sparkContext.emptyRDD[Row],
+              inc.schema.fields.foldLeft(new StructType()) { (s, f) => s.add(f) })
+        }
+        merge(old, inc, layout)
+      }
+    // Partial tables carry `_pts` in EVERY commit's schema (null map where
+    // the path didn't compose one — delta fragments, bulkInsert): readers
+    // infer the partial stack collapse from the manifest schema, so the
+    // column must be present from the first commit whatever write path it
+    // took. Null `_pts` reads as "effective time = the row's own _ts",
+    // which is exactly right for raw rows.
+    val withPts =
+      if (mergeMode == PartialMode && !merged.columns.contains(PtsCol))
+        merged.withColumn(PtsCol, lit(null).cast(
+          org.apache.spark.sql.types.MapType(
+            org.apache.spark.sql.types.StringType,
+            org.apache.spark.sql.types.LongType)))
+      else merged
+    (withPts, asDelta)
+  }
+
+  /** Write phase: the affected buckets' rows as new files under a fresh
+    * version dir. At most `filesPerBucket` files per bucket per version
+    * (the Hudi bucket-index layout; see BucketLayout); the partition count
+    * scales with touched buckets, not table size. Every per-file fact the
+    * commit records comes from the write tasks (FileFactsTracker): row
+    * counts, the stat columns' bounds and, with bloomOnWrite, one bloom
+    * sidecar per data file, published by the output committer with its
+    * file. Nothing is read back. Buckets that ended up empty after the
+    * merge write no file.
+    */
+  private def writeRows(
+      prev: Option[Manifest], merged: DataFrame, affected: Set[Int], version: Long,
+      layout: BucketLayout, shuffle: Boolean, asDelta: Boolean): Written = {
+    val relDir = s"$DataDirName/${"v%08d".format(version)}-${UUID.randomUUID().toString.take(8)}"
+    val outDir = s"$basePath/$relDir"
+    // Rename mapping, write side: carry the previous manifest's
+    // logical->physical map forward and assign fresh physical names to
+    // colliding NEW columns (see LakeTable.assignPhysical). Files are
+    // written under physical names — the one write-side seam, mirroring
+    // readBuckets' read-side alias.
+    val renames = LakeTable.assignPhysical(
+      prev.map(_.schema), prev.map(_.renames).getOrElse(Map.empty),
+      prev.map(_.retired).getOrElse(Nil), merged.schema.fieldNames)
+    val clustered = cluster(merged, layout, shuffle)
+    // Files store PHYSICAL names. POSITIONAL rename: each column maps
+    // through `renames` independently, mirroring readBuckets' positional
+    // logicalize — a sequential withColumnRenamed fold is map-order
+    // sensitive (after rename(X→Y) + re-adding X, applying Y→X while the
+    // live X exists duplicates the name and bricks every later write;
+    // ColumnRenameSpec pins the scenario).
+    val frame = clustered.toDF(
+      clustered.columns.map(c => renames.getOrElse(c, c)).toIndexedSeq: _*)
+    explainWrite(frame, version)
+    val writtenSchema = LakeTable.physSchema(merged.schema, renames)
+    val statCols = ColumnStats.columns(statsColumns, renames, writtenSchema)
+    val facts = new FileFactsTracker(
+      new org.apache.spark.util.SerializableConfiguration(
+        spark.sparkContext.hadoopConfiguration),
+      if (bloomOnWrite) Some(writtenSchema.fieldIndex(KeyCol)) else None,
+      statCols.map { case (c, dt) => writtenSchema.fieldIndex(c) -> dt },
+      if (shuffle) Some(filesPerBucket) else None)
+    withJobDesc(s"write v$version")(org.apache.spark.sql.graft.TrackedWrite.parquet(
+      frame, outDir, BucketCol, s"lake:write $outDir", facts))
+
+    val out = new HPath(outDir)
+    val files: Map[Int, Seq[FileFacts]] =
+      facts.files.groupBy(_.bucket).map { case (b, fs) => b -> fs.sortBy(_.name) }
+    // A written bucket outside `affected` would replace (or stack on) a
+    // base whose stored rows were never merged — a caller's affected hint
+    // that misses a bucket of its batch. Fail before publishing.
+    val stray = files.keySet -- affected
+    if (stray.nonEmpty) {
+      io.deleteRecursive(out)
+      throw new IllegalStateException(
+        s"commit at $basePath wrote buckets ${stray.toSeq.sorted.mkString(",")} " +
+          "outside its affected set — an affected-bucket hint missed them")
+    }
+    // Column stats (ColumnStats): one sidecar per commit. A pure-delete
+    // delta batch (the delete() path's shape: key + op tags, no payload,
+    // no _ts) records the empty layer.
+    val statsLayer = colStats.layer(relDir, files, statCols,
+      deleteOnly = statsColumns.nonEmpty && asDelta &&
+        merged.schema.fieldNames.forall(Set(KeyCol, OpCol, DvCol, PtsCol).contains))
+    Written(relDir, out, files, statsLayer, renames)
+  }
+
+  /** The merged rows with the bucket column, laid out for the write and,
+    * when the table declares Z-order, sorted on the Morton key (see
+    * [[ZOrder.key]]) within each task's file, so parquet row-group min/max
+    * stats prune range predicates on any clustered dimension.
+    */
+  private def cluster(merged: DataFrame, layout: BucketLayout, shuffle: Boolean): DataFrame = {
+    val toWrite = merged.withColumn(BucketCol, bucketOf(col(KeyCol)))
+    val zKey = ZOrder.key(merged, zorderBy)
+    val partitioned = zKey match {
+      case _ if !shuffle => toWrite // bulkInsert sortMode=none: task-local write
+      case Some(z) if filesPerBucket > 1 =>
+        // Z-ordered multi-file buckets RANGE-partition on (bucket, code): a
+        // bucket's files then TILE the Z-curve instead of being hash-random
+        // row subsets, so the per-file column stats ColumnStats records are
+        // near-disjoint ranges on the clustered columns — the layout that
+        // makes file-level stats pruning effective. Costs the range
+        // exchange's sampling pass over the outgoing rows (the same trade
+        // Hudi's sort-based clustering makes).
+        toWrite.repartitionByRange(layout.partitions, col(BucketCol), z)
+      // Always asked for: Spark's EnsureRequirements drops this exchange
+      // when the merged rows already carry the layout (the LWW aggregate
+      // ran on it), and keeps it otherwise.
+      case _ => layout(toWrite)
+    }
+    zKey.fold(partitioned)(z => partitioned.sortWithinPartitions(col(BucketCol), z))
+  }
+
+  /** Diagnostic only: with GRAFT_EXPLAIN_WRITE set, append the physical
+    * plan handed to the commit write to `<prefix>-<table tag>-v<version>.txt`;
+    * the tag keeps tables (and partitions, sharing versions) apart. The
+    * writer's own sort by bucket, which it adds when rows do not arrive in
+    * that order, is not in the dump.
+    */
+  private def explainWrite(frame: DataFrame, version: Long): Unit =
+    sys.env.get("GRAFT_EXPLAIN_WRITE").foreach { prefix =>
+      val tag = s"${new HPath(basePath).getName}-${Integer.toHexString(basePath.hashCode)}"
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$prefix-$tag-v$version.txt"),
+        frame.queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")) + "\n",
+        java.nio.charset.StandardCharsets.UTF_8,
+        java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+    }
+
+  /** Manifest phase: the next manifest, a pure function of the previous
+    * one, this version, the affected set, delta-or-fold, what was written
+    * and the merged schema. [[commit]] stamps the commitId.
+    *
+    * One base/stack rule for data dirs, blooms and stats: a delta commit
+    * keeps every base (base blooms and stats describe base files) and
+    * appends its entry to each written bucket's stack; a fold replaces the
+    * affected buckets' bases and resets their stacks.
+    */
+  private def nextManifest(
+      prev: Option[Manifest], version: Long, affected: Set[Int], asDelta: Boolean,
+      w: Written, schema: StructType): Manifest = {
+    def layer[E](
+        base: Manifest => Map[Int, E], stack: Manifest => Map[Int, Seq[E]],
+        entries: Map[Int, E]): (Map[Int, E], Map[Int, Seq[E]]) = {
+      val b0 = prev.fold(Map.empty[Int, E])(base)
+      val s0 = prev.fold(Map.empty[Int, Seq[E]])(stack)
+      if (asDelta) (b0, s0 ++ entries.map { case (b, e) => b -> (s0.getOrElse(b, Nil) :+ e) })
+      else ((b0 -- affected) ++ entries, s0 -- affected)
+    }
+    val written = w.files.keySet
+    val (buckets, deltas) = layer(_.buckets, _.deltas,
+      written.iterator.map(b => b -> s"${w.relDir}/$BucketCol=$b").toMap)
+    // Bloom sidecars (key pruning for lookup, probeKeys and deletes): one
+    // filter per data file, so a bucket written as several files has
+    // several filters, which readers OR like stacked layers. The manifest
+    // records only their paths: filter bytes stay beside the data, and the
+    // manifest stays KB-sized at any bucket count.
+    val (blooms, deltaBlooms) = layer(_.bloomFiles, _.deltaBlooms,
+      if (!bloomOnWrite) Map.empty[Int, Seq[String]]
+      else w.files.map { case (b, fs) =>
+        b -> fs.flatMap(_.bloom).map(n => s"${w.relDir}/$BucketCol=$b/$n")
+      })
+    // The stats sidecar is recorded for every written bucket; a delta
+    // commit stacks it in `deltaStats`.
+    val (stats, deltaStats) = layer(_.statsFiles, _.deltaStats,
+      w.statsLayer.fold(Map.empty[Int, String])(p => written.iterator.map(_ -> p).toMap))
+    // The table schema never carries the delta meta columns. Safe to strip
+    // unconditionally: the guard rejects any PAYLOAD column with these
+    // names on every write path, so the filter only ever removes the op-tag
+    // columns a delta commit adds.
+    val schemaJson = mergedSchemaJson(prev, StructType(
+      schema.fields.filterNot(f => f.name == OpCol || f.name == DvCol)))
+    Manifest(
+      version, "", numBuckets, buckets, blooms, schemaJson,
+      deltas, deltaBlooms, stats, deltaStats = deltaStats,
+      renames = w.renames, retired = prev.map(_.retired).getOrElse(Nil))
   }
 
   /** Adopt a pre-written initial-load directory as this table's FIRST
@@ -1797,6 +1742,15 @@ final class LakeTable(
 }
 
 object LakeTable {
+
+  /** What a commit's write phase leaves for its manifest phase: the new
+    * data dir (relative and absolute), the written files' facts per
+    * bucket, the stats layer entry and the logical -> physical column
+    * names.
+    */
+  private final case class Written(
+      relDir: String, out: HPath, files: Map[Int, Seq[FileFacts]],
+      statsLayer: Option[String], renames: Map[String, String])
 
   /** The one routing collect: the distinct (group, bucket) pairs of a
     * frame of (nullable string group, non-null int bucket in

@@ -90,7 +90,7 @@ final class PartitionedLakeTable(
     if (io.exists(metaFile)) {
       // A handle whose declaration disagrees with the STORED layout must
       // not write new dirs under a different nesting (the same
-      // validated-never-trusted contract LakeHandles.fromOptions applies;
+      // validated-never-trusted contract LakeHandle.forWrite applies;
       // this guard covers direct Scala construction too).
       val stored = new ObjectMapper().readTree(io.readString(metaFile))
         .get("partitionCol").asText()

@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.{LongType, StringType, StructType, TimestampNTZType, TimestampType}
 
-import graft.lake.{LakeHandle, LakeTable, PartitionedLakeTable}
+import graft.lake.{LakeHandle, LakeTable, PartitionedLakeTable, ZOrder}
 
 /** Shared construction of a config-matched lake handle from a cdc-lake
   * options map (the relation's `writeHandle` and the SQL `CALL`
@@ -55,8 +55,6 @@ object LakeHandles {
     val tt = parameters.getOrElse("tableType", LakeTable.CowType)
     val ca = parameters.get("compactAfter").map(_.toInt).getOrElse(8)
     val sc = csv("statsColumns")
-    def mm(partial: Boolean): String =
-      if (partial) LakeTable.PartialMode else LakeTable.OverwriteMode
     // A DECLARED partition layout: `partitionCol`
     // (Hudi partitionpath.field synonym accepted) makes `CREATE TABLE
     // ... USING cdc-lake` / CTAS create the partition-path layout — the
@@ -67,7 +65,7 @@ object LakeHandles {
     // (Hudi ComplexKeyGenerator partition-path parity) build the nested
     // composite layout.
     // Against an EXISTING table the declaration is validated, never
-    // trusted: a mismatched column LIST or a plain layout fails loudly.
+    // trusted (LakeHandle.forWrite, the rule the CDC sink shares).
     def normCols(s: String): Option[String] = {
       val cs = s.split(",").map(_.trim).filter(_.nonEmpty)
       if (cs.isEmpty) None else Some(cs.mkString(","))
@@ -86,41 +84,8 @@ object LakeHandles {
           val cs = (0 until node.size()).map(node.get(_).asText())
           if (cs.isEmpty) None else Some(cs.mkString(","))
         })
-    open(spark, path, buckets) match {
-      case pt0: PartitionedLakeTable =>
-        // case-insensitive like Spark's own column resolution,
-        // elementwise in layout order; the STORED list stays
-        // authoritative for the layout
-        declaredPartition.foreach { p =>
-          val dc = p.split(",").map(_.trim)
-          require(
-            dc.length == pt0.partitionCols.size &&
-              dc.zip(pt0.partitionCols).forall { case (a, b) => a.equalsIgnoreCase(b) },
-            s"cdc-lake table at $path is partitioned on '${pt0.partitionCol}' " +
-              s"— conflicting partitionCol '$p'")
-        }
-        new PartitionedLakeTable(spark, path, pt0.partitionCol,
-          buckets, filesPerBucket = fpb, bloomOnWrite = blm, zorderBy = zo,
-          tableType = tt, compactAfter = ca, mergeMode = mm(pt0.isPartialTable),
-          statsColumns = sc)
-      case t0: LakeTable =>
-        declaredPartition match {
-          case Some(p) =>
-            require(t0.latestVersion.isEmpty,
-              s"cdc-lake table at $path already exists as a PLAIN " +
-                s"(unpartitioned) table — partitionCol '$p' cannot " +
-                "repartition committed data")
-            new PartitionedLakeTable(spark, path, p,
-              buckets, filesPerBucket = fpb, bloomOnWrite = blm, zorderBy = zo,
-              tableType = tt, compactAfter = ca, mergeMode = mm(false),
-              statsColumns = sc)
-          case None =>
-            new LakeTable(spark, path, buckets,
-              filesPerBucket = fpb, zorderBy = zo, bloomOnWrite = blm,
-              tableType = tt, compactAfter = ca, mergeMode = mm(t0.isPartialTable),
-              statsColumns = sc)
-        }
-    }
+    LakeHandle.forWrite(spark, path, buckets, declaredPartition,
+      fpb, blm, zo, tt, ca, sc, mergeMode = None)
   }
 }
 
@@ -613,30 +578,17 @@ case class LakeCallCommand(proc: String, args: Seq[Expression])
                 "separated) and the table declares no zorderBy")
             case zs => zs
           })
-        if (cols.size < 2 || cols.size > 4)
-          fail(s"clustering takes 2-4 columns, got: ${cols.mkString(",")}")
-        // duplicate lanes are silently degenerate clustering — loud, like
-        // the rest of the procedure's up-front validation
-        if (cols.map(_.toLowerCase(java.util.Locale.ROOT)).distinct.size != cols.size)
-          fail(s"duplicate clustering columns: ${cols.mkString(",")}")
+        ZOrder.invalid(cols).foreach(e => fail(s"clustering $e"))
         // Validate BEFORE the table-wide rewrite starts (the rest of the
-        // procedure surface fails loudly up front): the Morton lanes encode
-        // numeric/timestamp/date/string (epoch micros/days + a
-        // 7-byte string prefix code); a missing or other-typed column would
-        // otherwise cluster on nulls deep inside compact().
+        // procedure surface fails loudly up front): a missing or
+        // lane-less column would otherwise cluster on nulls deep inside
+        // compact().
         val stored = handle.snapshot.schema
         cols.foreach { c =>
           val f = stored.find(_.name.equalsIgnoreCase(c)).getOrElse(
             fail(s"unknown clustering column '$c' — table columns: " +
               stored.fieldNames.mkString(", ")))
-          val laneable = f.dataType match {
-            case _: org.apache.spark.sql.types.NumericType => true
-            case org.apache.spark.sql.types.TimestampType => true
-            case org.apache.spark.sql.types.DateType => true
-            case org.apache.spark.sql.types.StringType => true
-            case _ => false
-          }
-          if (!laneable)
+          if (!ZOrder.laneable(f.dataType))
             fail(s"clustering column '$c' is ${f.dataType.simpleString} — " +
               "Z-ordering takes numeric, timestamp, date, or string columns")
         }

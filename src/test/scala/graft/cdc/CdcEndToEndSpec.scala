@@ -651,6 +651,39 @@ class CdcEndToEndSpec extends SparkSpec {
     assert(ann.toSeq == Seq(1L))
   }
 
+  test("the CDC sink keeps a table's stored layout; a contradicting partition.field fails") {
+    def msgs(x: Throwable): String =
+      Iterator.iterate(x)(_.getCause).takeWhile(_ != null)
+        .map(c => Option(c.getMessage).getOrElse("")).mkString(" | ")
+    def batch(ts: Long, id: Int, name: String) = Seq(
+      env("db", "person", personSchema, ts, "upsert",
+        Seq(s"""{"id":$id,"name":"$name","age":30}"""))).toDF("value")
+    def ids(path: String): Seq[Long] =
+      graft.sources.LakeHandles.open(spark, path, 4).snapshot
+        .select("id").as[Long].collect().sorted.toSeq
+    val partitioned = "db.person.partition.field" -> "name"
+
+    // committed plain data: declaring a partition column fails, and
+    // writes no partitioned layout that would hide the plain rows
+    val root = tempDir("cdc-").toString
+    val plain = s"$root/db/ods_db_person"
+    CdcSyncCommand.run(batch(1L, 1, "ann"), options(root), batchId = 1L)
+    val e = intercept[Exception](
+      CdcSyncCommand.run(batch(2L, 2, "bob"), options(root) + partitioned, batchId = 2L))
+    assert(msgs(e).contains("PLAIN"), msgs(e))
+    assert(graft.lake.PartitionedLakeTable.open(spark, plain, 4).isEmpty)
+    assert(ids(plain) == Seq(1L))
+
+    // a partitioned table whose config drops partition.field keeps
+    // writing partitions: no plain commit log appears beside them
+    val root2 = tempDir("cdc-").toString
+    val parted = s"$root2/db/ods_db_person"
+    CdcSyncCommand.run(batch(1L, 1, "ann"), options(root2) + partitioned, batchId = 1L)
+    CdcSyncCommand.run(batch(2L, 2, "bob"), options(root2), batchId = 2L)
+    assert(new LakeTable(spark, parted, 4).latestVersion.isEmpty)
+    assert(ids(parted) == Seq(1L, 2L))
+  }
+
   test("composite partition.field routes CDC batches through the nested layout (r20)") {
     val root = tempDir("cdc-").toString
     // Hudi ComplexKeyGenerator partition-path shape: comma-separated

@@ -200,9 +200,14 @@ class CdcModulesSpec extends SparkSpec {
     val zAlias = TableConfig.resolve(
       opts + ("db1.t1.hoodie.clustering.plan.strategy.sort.columns" -> "u,v"), "db1", "t1")
     assert(zAlias.zorderFields == Seq("u", "v"))
-    val e3 = intercept[IllegalArgumentException](
-      TableConfig.resolve(opts + ("db1.t1.zorder.fields" -> "x"), "db1", "t1"))
-    assert(e3.getMessage.contains("zorder.fields"))
+    // too few columns, or one column twice (Spark resolves names
+    // case-insensitively): both rejected
+    Seq("x", "x, X").foreach { bad =>
+      val e3 = intercept[IllegalArgumentException](
+        TableConfig.resolve(opts + ("db1.t1.zorder.fields" -> bad), "db1", "t1"))
+      assert(e3.getMessage.contains("zorder.fields"), e3.getMessage)
+      assert(e3.getMessage.contains("2-4"), e3.getMessage)
+    }
     // hoodie.compact.inline.max.delta.commits aliases the MOR fold cadence
     // (its Hudi role), NOT compact.every (ADVICE r11 #4).
     val h = TableConfig.resolve(

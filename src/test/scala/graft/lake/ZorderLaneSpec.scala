@@ -61,8 +61,7 @@ class ZorderLaneSpec extends SparkSpec {
 
   test("string lane is monotone in UTF-8 prefix order; date lane in day order") {
     // the write path's lane expressions, evaluated standalone
-    val strLane = conv(rpad(hex(substring(encode(col("s"), "UTF-8"), 1, 7)), 14, "0"), 16, 10)
-      .cast("long")
+    val strLane = ZOrder.lane(col("s"), org.apache.spark.sql.types.StringType)
     val vals = Seq("", "a", "ab", "abc", "abé", "b", "z", "éa")
     val lanes = vals.toDF("s").select(col("s"), strLane.as("lane"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -71,9 +70,20 @@ class ZorderLaneSpec extends SparkSpec {
         a.getBytes("UTF-8"), b.getBytes("UTF-8")) < 0)
     val byLane = vals.sortBy(lanes)
     assert(byLane === byBytes, s"lane order $byLane != byte order $byBytes")
-    // date lane: unix_date is trivially monotone; pin the encoding shape
+    // date lane: epoch days, trivially monotone; pin the encoding shape
     val d = Seq(java.sql.Date.valueOf("2024-01-01"), java.sql.Date.valueOf("2024-01-02"))
-      .toDF("d").select(unix_date(col("d"))).as[Int].collect()
+      .toDF("d").select(ZOrder.lane(col("d"), org.apache.spark.sql.types.DateType).cast("long"))
+      .as[Long].collect()
     assert(d(1) == d(0) + 1)
+  }
+
+  test("a Z-ordered write clusters on a date column") {
+    val dir = tempDir("zlane-date-").resolve("t").toString
+    val lt = new LakeTable(spark, dir, numBuckets = 1, zorderBy = Seq("d", "x"))
+    val rows = (0 until 64).map(i =>
+      (s"k$i", 1L, java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(i % 8)),
+        (i / 8).toLong))
+    lt.upsert(rows.toDF(LakeTable.KeyCol, LakeTable.TsCol, "d", "x"))
+    assert(lt.snapshot.count() === 64)
   }
 }
